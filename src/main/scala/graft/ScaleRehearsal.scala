@@ -552,10 +552,12 @@ object ScaleRehearsal {
     spark.stop()
   }
 
-  /** Face-generic catalog-only DML tier (r19 ask #7): the r18 interop
-    * surfaces get the same measured receipt the engine paths carry. A
-    * hive-partitioned PARQUET-face table (~8M rows, 8 leaves, several
-    * parts per leaf) is driven BY NAME from an extension-free session:
+  /** Face-generic catalog DML tier (r19 ask #7): the catalog's DSv2
+    * row-level path gets the same measured receipt the engine paths
+    * carry. A hive-partitioned PARQUET-face table (~8M rows, 8 leaves,
+    * several parts per leaf) is driven through the catalog's path
+    * spelling (`graft.`/dir``) in the rehearsal's own session — graft
+    * and catalog-only sessions share that one SQL path:
     *
     *  - a partition-pruned COW DELETE must rewrite ONLY the named
     *    leaf's files (every other leaf carried through the manifest
@@ -585,66 +587,56 @@ object ScaleRehearsal {
     def snap = graft.sources.FeatherSnapshots.resolve(fs, root, None).get
     def dataFiles(s: graft.sources.FeatherSnapshots.Snapshot) =
       s.files.filterNot(_._1.contains("-empty."))
-    val plain = org.apache.spark.sql.graft.Bridge.sessionWithoutExtensions(
-      spark, Map(
-        "spark.sql.catalog.graft" -> "graft.catalog.GraftCatalog",
-        "spark.sql.catalog.graft.warehouse" -> out,
-        "spark.sql.catalog.graft_dv" -> "graft.catalog.GraftCatalog",
-        "spark.sql.catalog.graft_dv.warehouse" -> out))
-    val prior = SparkSession.getActiveSession
-    SparkSession.setActiveSession(plain)
-    try {
-      // 1. partition-pruned COW DELETE by name
-      val s0 = snap
-      var t0 = System.nanoTime()
-      plain.sql("DELETE FROM graft.events WHERE day = 3 AND id % 10 = 7")
-      val delSec = (System.nanoTime() - t0) / 1e9
-      val s1 = snap
-      val removed = dataFiles(s0).map(_._1).toSet --
-        dataFiles(s1).map(_._1).toSet
-      require(removed.nonEmpty && removed.forall(_.startsWith("day=3/")),
-        s"partition-pruned DELETE must touch ONLY day=3: $removed")
-      require(dataFiles(s0).filterNot(f => f._1.startsWith("day=3/"))
-        .forall(dataFiles(s1).contains),
-        "untouched leaves must carry through the manifest verbatim")
-      // 2. scattered merge-on-read DELETE by name: zero rewrites
-      t0 = System.nanoTime()
-      plain.sql("DELETE FROM graft_dv.events WHERE id % 1009 = 13")
-      val dvSec = (System.nanoTime() - t0) / 1e9
-      val s2 = snap
-      require(dataFiles(s2).map(_._1).toSet ==
-        dataFiles(s1).map(_._1).toSet,
-        "a delta DELETE must rewrite ZERO data files")
-      val dvBytes = s2.dvs.values.map { case (rel, _) =>
-        fs.getFileStatus(new org.apache.hadoop.fs.Path(root, rel)).getLen
-      }.sum
-      // 3. COW MERGE: update two leaves, insert a NEW partition value
-      t0 = System.nanoTime()
-      plain.sql("MERGE INTO graft.events t USING " +
-        s"(SELECT id * 16 AS id, CAST(8 AS LONG) AS day, " +
-        s"CAST(-1 AS LONG) AS v, 'merged' AS tag " +
-        s"FROM range(0, 600000)) s ON t.id = s.id " +
-        "WHEN MATCHED THEN UPDATE SET v = s.v " +
-        "WHEN NOT MATCHED THEN INSERT (id, day, v, tag) " +
-        "VALUES (s.id, s.day, s.v, s.tag)")
-      val mrgSec = (System.nanoTime() - t0) / 1e9
-      val s3 = snap
-      require(dataFiles(s3).exists(_._1.startsWith("day=8/")),
-        "NOT MATCHED inserts must route to the new day=8 leaf")
-      val count = plain.sql("SELECT count(*) FROM graft.events")
-        .head().getLong(0)
-      val expect = {
-        val afterDel = (0L until n).count(i =>
-          !(i % 8 == 3 && i % 10 == 7) && i % 1009 != 13).toLong
-        val live = (0L until n).filter(i =>
-          !(i % 8 == 3 && i % 10 == 7) && i % 1009 != 13).toSet
-        afterDel + (0L until 600000L).map(_ * 16).count(!live(_))
-      }
-      require(count == expect, s"row count $count != model $expect")
-      println(f"""{"facedml_rows":$n,"leaves":8,"files":${dataFiles(s0).size},"pruned_delete_sec":$delSec%.2f,"rewritten_files":${removed.size},"dv_delete_sec":$dvSec%.2f,"dv_bytes":$dvBytes,"merge_sec":$mrgSec%.2f,"final_rows":$count}""")
-    } finally {
-      prior.foreach(SparkSession.setActiveSession)
+    val cow = s"graft.`$path`"
+    val dv = s"graft_dv.`$path`"
+    // 1. partition-pruned COW DELETE by name
+    val s0 = snap
+    var t0 = System.nanoTime()
+    spark.sql(s"DELETE FROM $cow WHERE day = 3 AND id % 10 = 7")
+    val delSec = (System.nanoTime() - t0) / 1e9
+    val s1 = snap
+    val removed = dataFiles(s0).map(_._1).toSet --
+      dataFiles(s1).map(_._1).toSet
+    require(removed.nonEmpty && removed.forall(_.startsWith("day=3/")),
+      s"partition-pruned DELETE must touch ONLY day=3: $removed")
+    require(dataFiles(s0).filterNot(f => f._1.startsWith("day=3/"))
+      .forall(dataFiles(s1).contains),
+      "untouched leaves must carry through the manifest verbatim")
+    // 2. scattered merge-on-read DELETE by name: zero rewrites
+    t0 = System.nanoTime()
+    spark.sql(s"DELETE FROM $dv WHERE id % 1009 = 13")
+    val dvSec = (System.nanoTime() - t0) / 1e9
+    val s2 = snap
+    require(dataFiles(s2).map(_._1).toSet ==
+      dataFiles(s1).map(_._1).toSet,
+      "a delta DELETE must rewrite ZERO data files")
+    val dvBytes = s2.dvs.values.map { case (rel, _) =>
+      fs.getFileStatus(new org.apache.hadoop.fs.Path(root, rel)).getLen
+    }.sum
+    // 3. COW MERGE: update two leaves, insert a NEW partition value
+    t0 = System.nanoTime()
+    spark.sql(s"MERGE INTO $cow t USING " +
+      s"(SELECT id * 16 AS id, CAST(8 AS LONG) AS day, " +
+      s"CAST(-1 AS LONG) AS v, 'merged' AS tag " +
+      s"FROM range(0, 600000)) s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v " +
+      "WHEN NOT MATCHED THEN INSERT (id, day, v, tag) " +
+      "VALUES (s.id, s.day, s.v, s.tag)")
+    val mrgSec = (System.nanoTime() - t0) / 1e9
+    val s3 = snap
+    require(dataFiles(s3).exists(_._1.startsWith("day=8/")),
+      "NOT MATCHED inserts must route to the new day=8 leaf")
+    val count = spark.sql(s"SELECT count(*) FROM $cow")
+      .head().getLong(0)
+    val expect = {
+      val afterDel = (0L until n).count(i =>
+        !(i % 8 == 3 && i % 10 == 7) && i % 1009 != 13).toLong
+      val live = (0L until n).filter(i =>
+        !(i % 8 == 3 && i % 10 == 7) && i % 1009 != 13).toSet
+      afterDel + (0L until 600000L).map(_ * 16).count(!live(_))
     }
+    require(count == expect, s"row count $count != model $expect")
+    println(f"""{"facedml_rows":$n,"leaves":8,"files":${dataFiles(s0).size},"pruned_delete_sec":$delSec%.2f,"rewritten_files":${removed.size},"dv_delete_sec":$dvSec%.2f,"dv_bytes":$dvBytes,"merge_sec":$mrgSec%.2f,"final_rows":$count}""")
   }
 
   /** Catalog-only parquet BATCH-read tier (r19 ask #1's receipt): the
@@ -802,9 +794,9 @@ object ScaleRehearsal {
   }
 
   /** REPLACE-OVERWRITE tier (r15, PredicateMutations.replaceWhere +
-    * TableInserts dynamic partition overwrite): the backfill statements'
-    * structural claims on day-partitioned parquet tables at two scales
-    * (4×) —
+    * the catalog write's dynamic partition overwrite): the backfill
+    * statements' structural claims on day-partitioned parquet tables at
+    * two scales (4×) —
     *  (a) a leaf-aligned replaceWhere rewrites exactly the target
     *      leaf's files; every OTHER leaf is byte-identical on disk
     *      (required, not observed), so written bytes ∝ the replaced

@@ -51,40 +51,17 @@ import graft.sources.{FeatherPartitions, FeatherSnapshots}
   * the merge-on-read DML strategy by name (the catalog's initialized
   * NAME picks the face, exactly like the path spellings).
   *
-  * Reads, inserts, and DML over catalog-resolved relations are lowered
-  * by the session extension rules ([[graft.extensions]]) onto the same
-  * face-dispatched engine paths the path spellings use — the catalog
-  * resolves NAMES and serves metadata (schema, partitioning,
-  * DESCRIBE/SHOW surfaces, CREATE/ALTER/DROP/RENAME); it does not
-  * duplicate the execution tier.
+  * Every graft-table SQL statement — read, INSERT, overwrite, DELETE /
+  * UPDATE / MERGE, CREATE / REPLACE / CTAS, ALTER, DROP — resolves
+  * through this catalog and runs on its [[GraftTable]] handle, with or
+  * without the graft session extensions: the name and path spellings
+  * share one implementation.
   *
   * (Reference anchor: the reference's frames are named PYTHON objects —
   * python/cudf/cudf/core/dataframe.py instances live in the
   * interpreter's namespace — so "address a table by name" needs no
   * machinery there; a persistent distributed engine expresses the same
   * ergonomics through Spark's TableCatalog.) */
-private[graft] object GraftCatalog {
-  /** Whether the ACTIVE session carries the graft extension rules —
-    * decides which table handle [[GraftCatalog.loadTable]] returns (see
-    * the note in resolve()). Primary signal: the EXPLICIT marker conf
-    * the extension's rule builders stamp on their session
-    * ([[graft.extensions.GraftExtensions.ActiveMarker]]); touching the
-    * analyzer first forces the builders to have run. Fallback for
-    * exotically-built sessions: a compile-time instance check against
-    * the rule class itself (never a class-NAME sniff — a package rename
-    * must fail to compile here, not silently flip every catalog-only
-    * session onto the wrong handle). Conservative on any failure:
-    * assume graft, whose handle has the smaller surface. */
-  def isGraftSession: Boolean =
-    try {
-      val s = SparkSession.active
-      val rules = s.sessionState.analyzer.extendedResolutionRules
-      s.conf.get(graft.extensions.GraftExtensions.ActiveMarker,
-        "false") == "true" ||
-        rules.exists(_.isInstanceOf[graft.extensions.GraftMergeIntoRule])
-    } catch { case _: Exception => true }
-}
-
 class GraftCatalog extends TableCatalog with SupportsNamespaces
     with StagingTableCatalog with ProcedureCatalog {
 
@@ -207,28 +184,20 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val face = ConnectorFace.detect(snap.files, "loadTable", path)
     val absFiles = snap.files.map { case (rel, len) =>
       (new Path(root, rel).toString, len) }
-    val dataSchema = face.mergedSchema(spark, absFiles)
+    // every data column (and nested field) nullable: a footer's NOT NULL
+    // is an artifact of how one generation was written, not a table
+    // constraint (there is no metastore to declare one), and Spark fills
+    // a column an INSERT or MERGE INSERT list omits with NULL only when
+    // it is nullable
+    val dataSchema = graft.io.GraftFeather.looseType(
+      face.mergedSchema(spark, absFiles)).asInstanceOf[StructType]
     val discovered = FeatherSnapshots.toDiscovered(root, snap)
     val partSchema = discovered.partSchema
     val pinned = if (versionAsOf.isDefined || tsMillis.isDefined)
       Some(snap.version) else None
-    // A graft session gets the base handle: its extension rules claim
-    // every DML statement and own insert alignment (ACCEPT_ANY_SCHEMA),
-    // and the handle must NOT implement SupportsRowLevelOperations —
-    // Spark's analyzer-batch DML rewrites would otherwise claim a
-    // by-name DELETE/UPDATE/MERGE before the extension rules run,
-    // silently rerouting graft_dv merge-on-read deletes into COW
-    // rewrites and refusing partitioned targets the engine serves. A
-    // catalog-only session gets the row-level handle instead: Spark's
-    // own rewrite machinery is its ONLY DML path.
-    if (GraftCatalog.isGraftSession)
-      new GraftTable(path, s"$catalogName.$ident", dataSchema,
-        discovered.partCols, partSchema,
-        face.suffix.stripPrefix("."), snap.version, pinned, dvFace)
-    else
-      new GraftRowLevelTable(path, s"$catalogName.$ident", dataSchema,
-        discovered.partCols, partSchema,
-        face.suffix.stripPrefix("."), snap.version, pinned, dvFace)
+    new GraftTable(path, s"$catalogName.$ident", dataSchema,
+      discovered.partCols, partSchema,
+      face.suffix.stripPrefix("."), snap.version, pinned, dvFace)
   }
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
@@ -259,8 +228,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   // commitStagedChanges makes everything visible — replace keeps prior
   // versions time-travelable, and the strictest conflict contract in
   // the tier aborts on ANY concurrent commit (see FeatherStagedTable).
-  // Graft sessions reach the identical TableDdl.replaceTable commit
-  // through the extension rules instead; this is the catalog surface.
 
   override def stageCreate(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
@@ -323,7 +290,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   /** The clause refusals shared by CREATE and the staged CREATE/REPLACE
     * surfaces — silently DROPPING a clause is worse than refusing it
-    * (the GraftCreateTableRule contract, applied to the catalog). */
+    * (a clause with nowhere to persist must be heard, not dropped). */
   private def validateTableClauses(op: String, ident: Identifier,
                                    props: Map[String, String],
                                    bad: String => Nothing): Unit = {
@@ -408,9 +375,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         s"DROP TABLE $catalogName.`${ident.name}`: a path-addressed " +
           "graft table IS its directory — DROP would delete data as a " +
           "side effect of a metadata statement; delete the path " +
-          "deliberately, or use graft_expire/graft_vacuum to reclaim " +
-          "history (named warehouse tables ARE catalog-managed and do " +
-          "drop)")
+          s"deliberately, or use CALL $catalogName.system.expire / " +
+          "vacuum to reclaim history (named warehouse tables ARE " +
+          "catalog-managed and do drop)")
     val root = new Path(pathOf(ident))
     val fs = fsOf(root)
     if (!fs.exists(root) || !FeatherSnapshots.enabled(fs, root)) false
@@ -443,10 +410,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def invalidateTable(ident: Identifier): Unit = ()
 
   // ---- ProcedureCatalog ----------------------------------------------------
-  // `CALL <catalog>.system.<proc>(...)` — maintenance for catalog-only
-  // sessions (compact / expire / vacuum / analyze / restore), each
-  // delegating to the same engine implementation its graft-session TVF
-  // twin calls. See [[GraftProcedures]].
+  // `CALL <catalog>.system.<proc>(...)` — the SQL face of table
+  // maintenance (compact / expire / vacuum / analyze / restore) in every
+  // session. See [[GraftProcedures]].
 
   /** Table-address resolution for procedure arguments: the catalog's
     * two spellings (`ns.t` against THIS warehouse, or an absolute
@@ -572,28 +538,29 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 }
 
-/** The catalog's Table handle: metadata (schema, partitioning,
-  * DESCRIBE/SHOW surfaces) plus TRUNCATE. Reads and writes over it are
-  * claimed by the extension rules and lowered onto the engine's own
-  * scan/commit paths — the capabilities below exist so Spark's
-  * analyzer builds the standard logical plans (AppendData,
-  * OverwriteByExpression, OverwritePartitionsDynamic) for the rules to
-  * claim; no physical ScanBuilder/WriteBuilder ever runs.
-  * `ACCEPT_ANY_SCHEMA` keeps Spark's output resolver from re-aligning
-  * the insert query — TableInserts owns alignment (positional/BY
-  * NAME/column list under the lossless-or-exact cast rule), identical
-  * to the path spelling. */
+/** The catalog's Table handle — the ONE path every graft-table SQL
+  * statement takes, in every session: metadata (schema, partitioning,
+  * DESCRIBE/SHOW surfaces), TRUNCATE, batch/streaming reads through the
+  * face delegates, inserts and overwrites through the delegate or
+  * [[graft.sources.FaceBatchWrite]], and DELETE / UPDATE / MERGE through
+  * Spark's own row-level rewrite machinery
+  * ([[graft.sources.FeatherRowLevelOperation]] /
+  * [[graft.sources.FaceRowLevel]]). Spark's TableOutputResolver aligns
+  * inserts (no ACCEPT_ANY_SCHEMA: that capability would also set
+  * `skipSchemaResolution` on UPDATE/MERGE and strand the statement at
+  * physical planning). */
 private[graft] class GraftTable(
     val path: String, ident: String,
-    val dataSchema: StructType, val partCols: Seq[String],
-    partSchema: StructType, val face: String,
-    val headVersion: Long, val pinnedVersion: Option[Long],
-    val dvFace: Boolean)
+    dataSchema: StructType, partCols: Seq[String],
+    partSchema: StructType, face: String,
+    headVersion: Long, pinnedVersion: Option[Long],
+    dvFace: Boolean)
     extends Table with TruncatableTable
     with org.apache.spark.sql.connector.catalog.SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
-    with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
+    with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement
+    with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
 
   /** `_file` (per-split constant) and `_pos` (per-row format-local
     * position) — the engine's stable row id, served by EVERY face's
@@ -620,27 +587,22 @@ private[graft] class GraftTable(
       "format" -> s"graft/$face",
       "current-version" -> headVersion.toString).asJava
 
-  /** The feather/avro faces are full DSv2 connectors — STREAMING reads
-    * (`spark.readStream.table("graft.events")`) delegate to them, so a
-    * named table streams exactly like its `format("feather")` spelling
-    * (version-based snapshot offsets, exactly-once restarts). Batch
-    * scans never reach here in a graft session (the extension rules
-    * swap the relation for the face-dispatched snapshot read at
-    * analysis), but the delegation serves them too when only the
-    * catalog conf is set. */
+  /** The feather/avro faces are full DSv2 connectors — batch and
+    * STREAMING reads (`spark.readStream.table("graft.events")`) delegate
+    * to them, so a named table reads and streams exactly like its
+    * `format("feather")` spelling (pushdown, DV masking, version-based
+    * snapshot offsets, exactly-once restarts). */
   private lazy val delegate: Option[Table] = (face match {
     case "feather" => Some(new graft.sources.FeatherDataSource())
     case "avro" => Some(new graft.sources.AvroDataSource())
     case _ => None
   }).map { src =>
-    // the pin travels with the delegate: in a catalog-only session
-    // (no graft extensions) BATCH scans run through this builder, and
-    // a VERSION AS OF read must not silently serve the head
+    // the pin travels with the delegate: a VERSION AS OF read must not
+    // silently serve the head
     val opts = new java.util.HashMap[String, String]()
     opts.put("path", path)
     // the catalog serves the merged UNION schema — the delegate must
-    // decode leniently (older files null-fill evolved columns), exactly
-    // like the engine's own table-read spelling (TableReads)
+    // decode leniently (older files null-fill evolved columns)
     opts.put("mergeSchema", "true")
     pinnedVersion.foreach(v => opts.put("versionasof", v.toString): Unit)
     src.getTable(schema(), partitioning(), opts)
@@ -653,7 +615,13 @@ private[graft] class GraftTable(
       TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.OVERWRITE_DYNAMIC,
       TableCapability.TRUNCATE,
-      TableCapability.ACCEPT_ANY_SCHEMA)
+      // MERGE WITH SCHEMA EVOLUTION: Spark's
+      // ResolveMergeIntoSchemaEvolution keys on this capability, computes
+      // the source-minus-target additions, applies them through the
+      // catalog's alterTable (top-level nullable ADD COLUMNS — exactly
+      // the engine's evolution contract; retypes refuse there loudly),
+      // and reloads the relation before the row-level rewrite plans
+      TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
     // a time-travel pin has no streaming meaning, and the parquet face
     // streams through the face-agnostic `feather-cdf` format instead
     if (delegate.isDefined && pinnedVersion.isEmpty) {
@@ -677,10 +645,8 @@ private[graft] class GraftTable(
       case _ =>
         // faces without a DSv2 connector (parquet) read through the
         // generic ConnectorFace scan: whole-file partitions, partition/
-        // stats/bloom file skipping, DV-aware, `_file`/`_pos` served. A
-        // graft session never reaches here for batch reads (the
-        // extension rules lower them onto the vectorized engine scan);
-        // this is the catalog-only interop path.
+        // stats/bloom file skipping, DV-aware, `_file`/`_pos` served,
+        // clean snapshots on Spark's vectorized parquet reader.
         // pinnedVersion only: an unpinned handle resolves the HEAD at
         // scan time, exactly like the connector delegates
         new graft.sources.FaceScanBuilder(None,
@@ -688,12 +654,10 @@ private[graft] class GraftTable(
           pinnedVersion)
     }
 
-  /** Streaming sinks (and catalog-only batch writes) delegate like the
-    * read path — the connectors' write builders detect the manifest and
-    * commit through the snapshot protocol regardless of options, so a
-    * delegated write IS a proper table commit. In a graft session,
-    * batch INSERTs never reach here (the extension rules claim the V2
-    * write plans at analysis). */
+  /** Batch inserts and streaming sinks delegate like the read path —
+    * the connectors' write builders detect the manifest and commit
+    * through the snapshot protocol regardless of options, so a
+    * delegated write IS a proper table commit. */
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -701,23 +665,42 @@ private[graft] class GraftTable(
       throw new UnsupportedOperationException(
         s"$ident: a time-travel-pinned table is read-only")
     delegate match {
-      // flat tables on connector faces write through the delegate (the
-      // native part writers, streaming sinks included)
+      // flat tables on connector faces append and truncate through the
+      // delegate (the native part writers, streaming sinks included);
+      // predicate and dynamic overwrites take the generic write's
+      // replace logic
       case Some(t: org.apache.spark.sql.connector.catalog.SupportsWrite)
           if partCols.isEmpty =>
-        t.newWriteBuilder(info)
+        import org.apache.spark.sql.connector.write._
+        val inner = t.newWriteBuilder(info)
+        new WriteBuilder with SupportsOverwrite with SupportsDynamicOverwrite {
+          override def truncate(): WriteBuilder =
+            inner.asInstanceOf[SupportsTruncate].truncate()
+          override def overwrite(
+              filters: Array[org.apache.spark.sql.sources.Filter])
+              : WriteBuilder =
+            if (filters.forall(_.isInstanceOf[
+                org.apache.spark.sql.sources.AlwaysTrue])) truncate()
+            else genericWrite(info).overwrite(filters)
+          override def overwriteDynamicPartitions(): WriteBuilder =
+            genericWrite(info).overwriteDynamicPartitions()
+          override def build(): Write = inner.build()
+        }
       // everything else — the parquet face (no connector) and HIVE-
       // PARTITIONED tables on any face (the flat sinks refuse root
       // appends into key=value layouts) — writes through the generic
       // ConnectorFace batch write: append / truncate / static
-      // partition-equality overwrite / dynamic partition overwrite,
-      // rows routed to their leaves
-      case _ =>
-        new graft.sources.FaceBatchWrite(path,
-          graft.io.ConnectorFace.byLabel(face), dataSchema, partCols,
-          info.schema())
+      // partition-equality overwrite / predicate overwrite / dynamic
+      // partition overwrite, rows routed to their leaves
+      case _ => genericWrite(info)
     }
   }
+
+  private def genericWrite(
+      info: org.apache.spark.sql.connector.write.LogicalWriteInfo) =
+    new graft.sources.FaceBatchWrite(path,
+      graft.io.ConnectorFace.byLabel(face), dataSchema, partCols,
+      info.schema())
 
   override def truncateTable(): Boolean = {
     TableDdl.truncate(SparkSession.active, path): Unit
@@ -726,10 +709,9 @@ private[graft] class GraftTable(
 
   // ---- SupportsPartitionManagement ----------------------------------------
   // SHOW PARTITIONS (incl. the filtered PARTITION (k=v) form) runs
-  // through Spark's OWN ShowPartitionsExec — in graft and catalog-only
-  // sessions alike. Partitions DERIVE from the hive key=value layout
-  // the manifest records, so the management verbs refuse with the
-  // statement that actually does the job.
+  // through Spark's OWN ShowPartitionsExec. Partitions DERIVE from the
+  // hive key=value layout the manifest records, so the management verbs
+  // refuse with the statement that actually does the job.
 
   override def partitionSchema(): StructType = partSchema
 
@@ -793,44 +775,6 @@ private[graft] class GraftTable(
       val dt = partSchema.fields(nameIdx(j)).dataType
       java.util.Objects.equals(r.get(nameIdx(j), dt), ident0.get(j, dt))
     }).toArray
-  }
-
-}
-
-/** The catalog-only session's table handle: the base surface plus
-  * `SupportsRowLevelOperations`, so DELETE / UPDATE / MERGE run through
-  * Spark's own rewrite machinery ([[graft.sources.FeatherRowLevelOperation]]
-  * — group-based copy-on-write). Never handed to a graft session: there
-  * the extension rules own DML (pruned COW / merge-on-read, every face,
-  * partitioned layouts), and the analyzer's DML-rewrite batch would
-  * claim a row-level-capable table first. ACCEPT_ANY_SCHEMA is withheld
-  * too — nothing in a plain session re-aligns inserts (Spark's
-  * TableOutputResolver must), and the capability sets
-  * `skipSchemaResolution` on UPDATE/MERGE, which disables Spark's
-  * assignment alignment and strands the statement at physical
-  * planning. */
-private[graft] class GraftRowLevelTable(
-    path: String, ident: String, dataSchema: StructType,
-    partCols: Seq[String], partSchema: StructType, face: String,
-    headVersion: Long, pinnedVersion: Option[Long], dvFace: Boolean)
-    extends GraftTable(path, ident, dataSchema, partCols, partSchema,
-      face, headVersion, pinnedVersion, dvFace)
-    with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
-
-  override def capabilities(): java.util.Set[TableCapability] = {
-    val caps = java.util.EnumSet.copyOf(super.capabilities())
-    caps.remove(TableCapability.ACCEPT_ANY_SCHEMA): Unit
-    // MERGE WITH SCHEMA EVOLUTION parity with graft sessions: Spark's
-    // ResolveMergeIntoSchemaEvolution keys on this capability, computes
-    // the source-minus-target additions, applies them through THIS
-    // catalog's alterTable (top-level nullable ADD COLUMNS — exactly
-    // the engine's evolution contract; retypes refuse there loudly),
-    // and reloads the relation before the row-level rewrite plans.
-    // Never on the graft-session handle: the extension rules own merge
-    // evolution there (ConditionalMerge.withSchemaEvolution), and an
-    // eager analyzer-side ALTER would race their one-commit semantics.
-    caps.add(TableCapability.AUTOMATIC_SCHEMA_EVOLUTION): Unit
-    caps
   }
 
   override def newRowLevelOperationBuilder(

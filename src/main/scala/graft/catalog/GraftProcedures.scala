@@ -8,8 +8,9 @@ import org.apache.spark.sql.types._
 
 import graft.sources.FeatherSnapshots
 
-/** `CALL <catalog>.system.<procedure>(...)` — the MAINTENANCE tier for
-  * catalog-only sessions, through Spark's own DSv2 procedure machinery:
+/** `CALL <catalog>.system.<procedure>(...)` — the SQL face of the
+  * MAINTENANCE tier, in every session, through Spark's own DSv2
+  * procedure machinery:
   *
   * {{{
   *   CALL graft.system.compact('ns.events')
@@ -21,15 +22,10 @@ import graft.sources.FeatherSnapshots
   *   CALL graft.system.restore('ns.events', 4)
   * }}}
   *
-  * Extension-free sessions could already read, write, and mutate every
-  * face by name; the tables they fill still need compaction, history
-  * expiry, orphan vacuum, and stats backfill — previously reachable
-  * only through graft-session TVFs. Each procedure delegates to the
-  * SAME engine implementation its TVF twin calls
-  * ([[graft.io.Compaction.compactAny]], [[FeatherSnapshots]] expire /
-  * vacuum / restore, [[graft.io.FeatherStats.backfill]]), so semantics
-  * cannot drift between the two spellings; the one-row result mirrors
-  * the TVF's report columns.
+  * Each procedure delegates to the engine implementation the Scala API
+  * calls ([[graft.io.Compaction.compactAny]], [[FeatherSnapshots]]
+  * expire / vacuum / restore, [[graft.io.FeatherStats.backfill]]), so
+  * the two spellings cannot drift.
   *
   * The `table` argument takes the catalog's two addressings: `ns.t`
   * (dots descend namespaces — resolved against THIS catalog's

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 /** A table-maintenance action deferred to EXECUTION time.
   *
   * The maintenance table functions ([[GraftTableFunctions]]) mutate the
-  * table (restore, expire, vacuum, compaction, clustering). Running the
+  * table (clustering, z-ordering, COPY INTO ingestion). Running the
   * action while the TVF builder constructs the plan would fire it at
   * ANALYSIS — `df.explain()`, a BI tool eagerly analyzing statements, or
   * a twice-resolved CTE would each mutate the table without the
@@ -47,54 +47,6 @@ private[extensions] case class DeferredMaintenanceAction(
     s"DeferredMaintenanceAction $name"
 }
 
-/** The COMMAND twin of [[DeferredMaintenanceAction]], for the SQL DML
-  * statements (MERGE INTO / UPDATE / DELETE FROM): Spark's own
-  * MergeIntoTable/UpdateTable/DeleteFromTable are Commands, so the
-  * graft lowering must keep the Command contract — `spark.sql("DELETE
-  * FROM graft.\`/t\` ...")` executes EAGERLY, exactly ONCE, at
-  * statement issue (Delta parity; a ported ETL job that discards the
-  * returned frame must still mutate), and re-collecting the returned
-  * frame replays the CACHED one-row report, never the mutation.
-  * `EXPLAIN <statement>` still never mutates — Spark analyzes explained
-  * commands with CommandExecutionMode.SKIP. The TVF tier keeps the
-  * DEFERRED leaf above: a table function lives inside a SELECT, where
-  * eager execution at analysis would be the bug. */
-private[extensions] case class GraftDmlCommand(
-    name: String,
-    override val output: Seq[Attribute],
-    action: () => Seq[Row]) extends LeafNode
-    with org.apache.spark.sql.catalyst.plans.logical.Command {
-  override def simpleString(maxFields: Int): String =
-    s"GraftDmlCommand $name"
-}
-
-/** The one-row DML report every SQL mutation statement returns
-  * (version, files_touched, files_kept, parts_written), lowered as a
-  * [[GraftDmlCommand]] — shared by the MERGE/UPDATE/DELETE rule and the
-  * INSERT rule so the two spellings of one mutation tier report
-  * identically. */
-private[extensions] object GraftDml {
-  import org.apache.spark.sql.Row
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types._
-
-  def report(name: String)
-            (action: () => graft.io.FeatherMutations.Result): LogicalPlan = {
-    val schema = StructType(Seq(
-      StructField("version", LongType, nullable = false),
-      StructField("files_touched", IntegerType, nullable = false),
-      StructField("files_kept", IntegerType, nullable = false),
-      StructField("parts_written", IntegerType, nullable = false)))
-    GraftDmlCommand(name,
-      schema.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
-        .toSeq,
-      () => {
-        val r = action()
-        Seq(Row(r.version, r.filesTouched, r.filesKept, r.partsWritten))
-      })
-  }
-}
-
 private[extensions] case class DeferredMaintenanceActionExec(
     name: String,
     output: Seq[Attribute],
@@ -121,11 +73,6 @@ private[extensions] class DeferredActionStrategy(spark: SparkSession)
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case d: DeferredMaintenanceAction =>
       DeferredMaintenanceActionExec(d.name, d.output, d.action) :: Nil
-    case c: GraftDmlCommand =>
-      // same exec node: doExecute runs the action when the command's
-      // RDD assembles — for a Command that is commandExecuted's ONE
-      // eager executeCollect at statement issue
-      DeferredMaintenanceActionExec(c.name, c.output, c.action) :: Nil
     case _ => Nil
   }
 }

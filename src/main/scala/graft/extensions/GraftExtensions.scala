@@ -81,35 +81,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => new JaccardThresholdPruning)
 
-    // SQL MERGE INTO over graft.`/path` / graft_dv.`/path` targets:
-    // Spark's parser builds MergeIntoTable; this rule claims the graft
-    // spellings during resolution (the target stays unresolved for the
-    // catalog, so the fixpoint reaches us before checkAnalysis) and
-    // lowers onto ConditionalMerge, deferred to statement execution.
-    // The builder also stamps the EXPLICIT session marker GraftCatalog
-    // reads to pick its table handle (rule builders run exactly once per
-    // session, when its analyzer is built — strictly before any
-    // loadTable, which runs DURING analysis): stringly class-name
-    // sniffing would silently flip every catalog-only session onto the
-    // wrong handle if the package were ever renamed.
-    ext.injectResolutionRule { s =>
-      s.conf.set(GraftExtensions.ActiveMarker, "true")
-      new GraftMergeIntoRule(s)
-    }
+    // the graft-table DDL with no DSv2 hook (MSCK REPAIR adoption,
+    // DESCRIBE's face rows, the loud refusals) — every other graft-table
+    // statement runs through GraftCatalog's handle, in every session
+    ext.injectResolutionRule(s => new GraftDdlRule(s))
 
-    // SQL reads (head + VERSION/TIMESTAMP AS OF time travel) and
-    // INSERT INTO / INSERT OVERWRITE over the same graft spellings —
-    // registered AFTER the DML rule so a graft-target statement is
-    // already lowered before this rule's read-claiming runs
-    ext.injectResolutionRule(s => new GraftSqlRelationsRule(s))
-
-    // CREATE TABLE / CTAS over graft paths: POST-HOC, necessarily —
-    // Spark's DataSourceAnalysis (earlier in the same post-hoc batch)
-    // is what lowers the statement onto the claimable V1 commands
-    ext.injectPostHocResolutionRule(s => new GraftCreateTableRule(s))
-
-    // the table-maintenance tier's SQL face (CALL-style table functions:
-    // OPTIMIZE / ZORDER / VACUUM / RESTORE / expire / history / CDF)
+    // the table functions with no CALL twin (CDF read, history, vacuum
+    // preview, clustering / ZORDER, COPY INTO)
     GraftTableFunctions.register(ext)
 
     ext.injectFunction((FunctionIdentifier("graft_cosine"),
@@ -198,12 +176,4 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         graft.expressions.SimHash(args.head, intLit(args(1), "bits"))
       }))
   }
-}
-
-object GraftExtensions {
-  /** Session-conf marker stamped by the rule builders above — the
-    * explicit "this session carries the graft extension rules" signal
-    * [[graft.catalog.GraftCatalog.isGraftSession]] reads (with an
-    * instance-of fallback for sessions built before the marker landed). */
-  val ActiveMarker = "spark.graft.extensions.active"
 }

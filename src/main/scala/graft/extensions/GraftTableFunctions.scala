@@ -18,14 +18,14 @@ import graft.sources.FeatherSnapshots
   *   SELECT * FROM graft_table_changes('/t', 3, 7)      -- CDF read (lazy)
   *   SELECT * FROM graft_history('/t')                  -- version history
   *   SELECT * FROM graft_vacuum_dry_run('/t')           -- reclaim preview
-  *   SELECT * FROM graft_optimize('/t')                 -- compaction
   *   SELECT * FROM graft_cluster('/t', 'id')            -- OPTIMIZE ... BY
   *   SELECT * FROM graft_zorder('/t', 'day,cat')        -- ZORDER BY
-  *   SELECT * FROM graft_restore('/t', 4)               -- RESTORE
-  *   SELECT * FROM graft_expire('/t', 3)                -- retire history
-  *   SELECT * FROM graft_expire_older_than('/t', 86400000)
-  *   SELECT * FROM graft_vacuum('/t', 0)                -- orphan reclaim
+  *   SELECT * FROM graft_copy_into('/t', '/in', 'csv')  -- COPY INTO
   * }}}
+  *
+  * Compaction, restore, expiry, and vacuum have one SQL spelling, the
+  * catalog's `CALL graft.system.compact / restore / expire /
+  * expire_older_than / vacuum` procedures ([[graft.catalog.GraftProcedures]]).
   *
   * `graft_table_changes` returns the CDF DataFrame's own plan — it
   * executes lazily with the enclosing query, composes with
@@ -114,12 +114,6 @@ private[extensions] object GraftTableFunctions {
     (root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
   }
 
-  /** Face-dispatched compaction: feather, avro, and parquet tables all
-    * answer `graft_optimize` (one definition with the CALL procedure —
-    * [[graft.io.Compaction.compactAny]]). */
-  private def compactAny(path: String, targetBytes: Long) =
-    graft.io.Compaction.compactAny(spark, path, targetBytes)
-
   private def cols(csv: String): Seq[String] =
     csv.split(',').map(_.trim).filter(_.nonEmpty).toSeq
 
@@ -178,25 +172,6 @@ private[extensions] object GraftTableFunctions {
         StructField("path", StringType, nullable = false)))))
     }
 
-    tvf("graft_optimize",
-      "graft_optimize(path[, targetBytes]) - compact small files " +
-        "(and fold deletion vectors) into target-sized parts") { args =>
-      require(args.nonEmpty && args.size <= 2,
-        "graft_optimize(path[, targetBytes])")
-      val n = "graft_optimize"
-      val path = pathArg(n, args.head)
-      val tb = if (args.size > 1) long(n, "targetBytes", args(1))
-               else 128L << 20
-      deferred(n, StructType(Seq(
-        StructField("groups_rewritten", LongType, nullable = false),
-        StructField("files_before", LongType, nullable = false),
-        StructField("files_after", LongType, nullable = false)))) { () =>
-        val r = compactAny(path, tb)
-        Seq(r.groupsRewritten.toLong, r.filesBefore.toLong,
-          r.filesAfter.toLong)
-      }
-    }
-
     val clusterSchema = StructType(Seq(
       StructField("version", LongType, nullable = false),
       StructField("files_before", LongType, nullable = false),
@@ -241,24 +216,6 @@ private[extensions] object GraftTableFunctions {
       }
     }
 
-    tvf("graft_restore",
-      "graft_restore(path, version) - roll the head back to a retained " +
-        "version's content as a new commit") { args =>
-      require(args.size == 2, "graft_restore(path, version)")
-      val n = "graft_restore"
-      val path = pathArg(n, args(0))
-      val v = long(n, "version", args(1))
-      deferred(n, StructType(Seq(
-        StructField("new_version", LongType, nullable = false)))) { () =>
-        val (fs, root) = fsRoot(path)
-        Seq(FeatherSnapshots.restore(fs, root, v))
-      }
-    }
-
-    val expireSchema = StructType(Seq(
-      StructField("snapshots_removed", LongType, nullable = false),
-      StructField("files_removed", LongType, nullable = false)))
-
     tvf("graft_copy_into",
       "graft_copy_into(path, sourceDir, format[, pattern]) - idempotent " +
         "batch file ingestion: diff the source directory against the " +
@@ -278,54 +235,6 @@ private[extensions] object GraftTableFunctions {
         val r = graft.io.CopyInto.run(spark, path, src, fmt, pattern = pat)
         Seq(r.version, r.filesIngested.toLong, r.filesSkipped.toLong,
           r.bytesSource)
-      }
-    }
-
-    tvf("graft_expire",
-      "graft_expire(path, keepLast) - retire all but the last N " +
-        "versions and delete files only they referenced") { args =>
-      require(args.size == 2, "graft_expire(path, keepLast)")
-      val n = "graft_expire"
-      val path = pathArg(n, args(0))
-      val keep = long(n, "keepLast", args(1)).toInt
-      deferred(n, expireSchema) { () =>
-        val (fs, root) = fsRoot(path)
-        val r = FeatherSnapshots.expire(fs, root, keep)
-        Seq(r._1.toLong, r._2.toLong)
-      }
-    }
-
-    tvf("graft_expire_older_than",
-      "graft_expire_older_than(path, retentionMillis) - retire " +
-        "versions older than the retention window") { args =>
-      require(args.size == 2, "graft_expire_older_than(path, retentionMillis)")
-      val n = "graft_expire_older_than"
-      val path = pathArg(n, args(0))
-      val ret = long(n, "retentionMillis", args(1))
-      deferred(n, expireSchema) { () =>
-        val (fs, root) = fsRoot(path)
-        val r = FeatherSnapshots.expireOlderThan(fs, root, ret)
-        Seq(r._1.toLong, r._2.toLong)
-      }
-    }
-
-    tvf("graft_vacuum",
-      "graft_vacuum(path[, graceMillis]) - delete orphan files no " +
-        "retained version references") { args =>
-      require(args.nonEmpty && args.size <= 2,
-        "graft_vacuum(path[, graceMillis])")
-      val n = "graft_vacuum"
-      val path = pathArg(n, args.head)
-      val grace = if (args.size > 1) Some(long(n, "graceMillis", args(1)))
-                  else None // None = vacuumOrphans's own default window
-      deferred(n, StructType(Seq(
-        StructField("files_removed", LongType, nullable = false)))) { () =>
-        val (fs, root) = fsRoot(path)
-        val removed = grace match {
-          case Some(g) => FeatherSnapshots.vacuumOrphans(fs, root, g)
-          case None => FeatherSnapshots.vacuumOrphans(fs, root)
-        }
-        Seq(removed.toLong)
       }
     }
   }

@@ -17,9 +17,9 @@ private[graft] object Compaction {
   case class Result(leaves: Int, groupsRewritten: Int,
                     filesBefore: Int, filesAfter: Int)
 
-  /** Face-dispatched compaction — ONE definition shared by the
-    * graft-session TVF (`graft_optimize`) and the catalog-only `CALL
-    * <catalog>.system.compact` procedure: the face detects from the
+  /** Face-dispatched compaction — ONE definition behind the Scala API
+    * and the `CALL <catalog>.system.compact` procedure: the face detects
+    * from the
     * manifest's suffixes, mixed-suffix manifests fail loudly instead of
     * silently routing to the wrong compactor. */
   def compactAny(spark: SparkSession, path: String,

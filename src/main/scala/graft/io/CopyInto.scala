@@ -413,8 +413,8 @@ object CopyInto {
       }
       // the imposed schema (csv/json) and self-describing sources both
       // arrive table-named — BY NAME alignment covers every format
-      val r = TableInserts.insert(spark, path, df, overwrite = false,
-        byName = true, codec = codec, tag = s"copy-$digest-")
+      val r = TableInserts.append(spark, path, df, codec = codec,
+        tag = s"copy-$digest-")
       // ---- publish the ledger, release the intent ----------------------------
       if (!publishLedger(fs, root, k + 1, r.version, fresh.map(_._1),
           ingested ++ fresh.map(_._1)))

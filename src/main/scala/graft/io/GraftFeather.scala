@@ -334,6 +334,17 @@ object GraftFeather {
                                       files: Seq[(String, Long)]): Seq[Field] =
     readFieldsMergedConf(spark.sparkContext.hadoopConfiguration, files)
 
+  /** `dt` with every NESTED nullability flag loosened (array elements,
+    * map values, struct fields). */
+  private[graft] def looseType(dt: DataType): DataType = dt match {
+    case ArrayType(e, _) => ArrayType(looseType(e), containsNull = true)
+    case MapType(k, v, _) =>
+      MapType(looseType(k), looseType(v), valueContainsNull = true)
+    case StructType(fs) => StructType(fs.map(f =>
+      f.copy(dataType = looseType(f.dataType), nullable = true)))
+    case other => other
+  }
+
   /** [[readFieldsMerged]] off a bare Hadoop conf — callable from executor
     * code (the compaction rewriter unions its GROUP's footers there). */
   private[graft] def readFieldsMergedConf(
@@ -369,12 +380,17 @@ object GraftFeather {
         order.get(fld.getName) match {
           case None => order(fld.getName) = (fld, f, 1, fld.isNullable)
           case Some((prev, prevFile, n, anyNullable)) =>
-            require(toSparkType(prev) == toSparkType(fld),
+            val (pt, ft) = (toSparkType(prev), toSparkType(fld))
+            require(pt == ft || looseType(pt) == looseType(ft),
               s"mergeSchema: column '${fld.getName}' is " +
-                s"${toSparkType(prev).catalogString} in $prevFile but " +
-                s"${toSparkType(fld).catalogString} in $f — evolved columns " +
+                s"${pt.catalogString} in $prevFile but " +
+                s"${ft.catalogString} in $f — evolved columns " +
                 "must keep their type")
-            order(fld.getName) = (prev, prevFile, n + 1,
+            // types differing only in NESTED nullability (an array's
+            // containsNull, a struct field's nullable) are one type; the
+            // looser footer wins, for the same reason as the top level
+            val keep = if (pt != ft && looseType(ft) == ft) fld else prev
+            order(fld.getName) = (keep, prevFile, n + 1,
               anyNullable || fld.isNullable)
         }
       }

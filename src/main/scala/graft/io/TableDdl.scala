@@ -6,9 +6,10 @@ import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.sources.FeatherSnapshots
 
-/** The DDL statements a snapshot table takes by path — lowered from
-  * Spark's OWN parser plans by [[graft.extensions.GraftSqlRelationsRule]]
-  * and [[graft.extensions.GraftCreateTableRule]]:
+/** The DDL statements a snapshot table takes — reached from SQL through
+  * [[graft.catalog.GraftCatalog]] (CREATE / CTAS / REPLACE / TRUNCATE /
+  * ADD COLUMNS) and [[graft.extensions.GraftDdlRule]] (MSCK REPAIR,
+  * DESCRIBE):
   *
   * {{{
   *   CREATE TABLE graft.`/t` (id BIGINT) [USING face]
@@ -26,13 +27,7 @@ import graft.sources.FeatherSnapshots
   * writes. (Reference anchor: the reference drops all rows with a
   * boolean mask and adds columns by assignment over an in-memory
   * frame — python/cudf/cudf/core/dataframe.py `drop`, `__setitem__`;
-  * a distributed table needs the committed-metadata equivalents.)
-  *
-  * `truncate` intentionally shares its stamp+overwrite-commit shape
-  * with TableInserts' empty-static-OVERWRITE branch (both are "remove
-  * everything, keep the schema readable") — the composition is four
-  * lines over the same shared helpers (stampLeaves/commitMutation), so
-  * the drift surface is the helpers, not the call sites. */
+  * a distributed table needs the committed-metadata equivalents.) */
 object TableDdl {
   import FeatherMutations.Result
 
@@ -383,20 +378,6 @@ object TableDdl {
     val v = FeatherSnapshots.adopt(fs, root, seen.toSeq)
     val snap = FeatherSnapshots.resolve(fs, root, None).get
     Result(v, 0, snap.files.size, 0)
-  }
-
-  /** `SHOW PARTITIONS graft.`/t`` — the table's hive leaf directories,
-    * straight off the manifest (no listing), in Spark's k=v/k2=v2 row
-    * shape. Metadata-only, like DESCRIBE. */
-  def showPartitions(spark: SparkSession, path: String): Seq[String] = {
-    val r = FeatherMutations.resolveTable(spark, path, "SHOW PARTITIONS",
-      requireHive = false,
-      snapshotsHint = "SHOW PARTITIONS targets a snapshot table",
-      checkEmbedded = false)
-    require(r.partitioned,
-      s"SHOW PARTITIONS on graft.`$path`: the table is not partitioned")
-    r.snap.files.map(f => FeatherMutations.relDirOf(f._1))
-      .filter(_.nonEmpty).distinct.sorted
   }
 
   /** TRUNCATE TABLE — ONE commit removes every data file while the

@@ -39,8 +39,16 @@ object ScanParallel {
     * retry-deterministic by construction, provided `keys` are real data
     * columns (never rand()-derived — guide §2.5). Pick a high-cardinality
     * key so 32 partitions spread evenly. Identity on pre-split inputs,
-    * like widen. */
+    * like widen.
+    *
+    * @param keys at least one deterministic data column (no rand()-derived
+    *             expression); an empty list would silently fall back to
+    *             the round-robin repartition this method exists to avoid,
+    *             so it is refused */
   def widenBy(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
+    require(keys.nonEmpty,
+      "ScanParallel.widenBy needs at least one key column — use widen " +
+        "for a keyless round-robin repartition")
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target, keys: _*)
     else df

@@ -1358,12 +1358,12 @@ object IoQueries extends QueryPack {
       .orderBy("o_orderkey")
   }
 
-  // SQL MERGE INTO (extensions/GraftMergeInto): the statement CDC
-  // pipelines actually write, parsed by Spark's own grammar and lowered
-  // by the injected resolution rule onto ConditionalMerge — full clause
-  // matrix incl. WHEN NOT MATCHED BY SOURCE, executed at statement
-  // collect (the deferred maintenance contract). Same relational-CTE
-  // oracle shape as io_merge_clauses.
+  // SQL MERGE INTO (GraftCatalog → Spark's row-level MERGE rewrite over
+  // the catalog handle, FeatherRowLevelOperation): the statement CDC
+  // pipelines actually write, parsed and planned by Spark's own
+  // machinery — full clause matrix incl. WHEN NOT MATCHED BY SOURCE,
+  // executed eagerly at statement issue. Same relational-CTE oracle
+  // shape as io_merge_clauses.
   register("io_sql_merge",
     """WITH t AS (
       |  SELECT o_orderkey, o_orderpriority, CAST(o_totalprice AS DOUBLE) AS total
@@ -1420,9 +1420,9 @@ object IoQueries extends QueryPack {
       .orderBy("o_orderkey")
   }
 
-  // MERGE WITH SCHEMA EVOLUTION (ConditionalMerge.withSchemaEvolution,
-  // via the SQL modifier): the source's NEW column joins the table as
-  // nullable — untouched rows read it as null through mergeSchema,
+  // MERGE WITH SCHEMA EVOLUTION (Spark's schema-evolution analysis over
+  // the catalog handle's AUTOMATIC_SCHEMA_EVOLUTION, then the row-level
+  // MERGE rewrite): the source's NEW column joins the table as nullable — untouched rows read it as null through mergeSchema,
   // merged/inserted rows carry the source's values. The oracle builds
   // the same evolved state relationally.
   register("io_sql_merge_evolution",
@@ -1472,10 +1472,10 @@ object IoQueries extends QueryPack {
       .orderBy("o_orderkey")
   }
 
-  // SQL DELETE FROM (extensions/GraftMergeInto lowerDelete →
-  // io/PredicateMutations.deleteWhere): predicate delete, candidates
-  // pruned by stats/partition values, copy-on-write rewrite of the
-  // touched files only. Completes the SQL DML triad with MERGE/UPDATE.
+  // SQL DELETE FROM (GraftCatalog → Spark's row-level DELETE rewrite):
+  // predicate delete, candidate files pruned by the scan's pushed
+  // filters, copy-on-write rewrite of the touched files only. Completes
+  // the SQL DML triad with MERGE/UPDATE.
   register("io_sql_delete",
     """SELECT o_orderkey, o_orderpriority,
       |  CAST(o_totalprice AS DOUBLE) AS total
@@ -1501,7 +1501,7 @@ object IoQueries extends QueryPack {
       .orderBy("o_orderkey")
   }
 
-  // SQL UPDATE (lowerUpdate → PredicateMutations.updateWhere): SET
+  // SQL UPDATE (GraftCatalog → Spark's row-level UPDATE rewrite): SET
   // expressions on selected rows only, everything else carries through
   // byte-identically in the untouched files.
   register("io_sql_update",
@@ -1623,12 +1623,12 @@ object IoQueries extends QueryPack {
       .orderBy("o_orderkey")
   }
 
-  // SQL TIME TRAVEL (extensions/GraftSqlRelations → io/TableReads):
-  // `VERSION AS OF n` and the plain head read, BOTH in one statement —
-  // the v1 read anti-joins the head, returning exactly the rows the
-  // intervening DELETE removed (the audit query a takedown review runs).
-  // The version pins at plan time onto the face-dispatched snapshot
-  // read. The oracle reconstructs the diff as the delete's own
+  // SQL TIME TRAVEL (GraftCatalog.loadTable's version overload → the
+  // face's DSv2 scan): `VERSION AS OF n` and the plain head read, BOTH
+  // in one statement — the v1 read anti-joins the head, returning
+  // exactly the rows the intervening DELETE removed (the audit query a
+  // takedown review runs). The version pins when the catalog resolves
+  // the relation. The oracle reconstructs the diff as the delete's own
   // predicate over the parquet source of truth.
   register("io_sql_select_version",
     """SELECT o_orderkey, o_orderpriority,
@@ -1653,8 +1653,8 @@ object IoQueries extends QueryPack {
          |ORDER BY v.o_orderkey""".stripMargin)
   }
 
-  // SQL INSERT INTO (extensions/GraftSqlRelations → io/TableInserts)
-  // over a HIVE-PARTITIONED parquet table: the positional statement
+  // SQL INSERT INTO (GraftCatalog → sources/FaceBatchWrite) over a
+  // HIVE-PARTITIONED parquet table: the positional statement
   // routes each row to the leaf its LAST column names; the static
   // `PARTITION (k=v)` spelling pins the partition for every row. Both
   // commit as blind appends. The oracle is the UNION ALL
@@ -1760,11 +1760,11 @@ object IoQueries extends QueryPack {
   }
 
   // SQL INSERT OVERWRITE under Spark's OWN dynamic partitionOverwriteMode
-  // (io/TableInserts): with the conf set to `dynamic`, OVERWRITE replaces
+  // (GraftCatalog → sources/FaceBatchWrite): with the conf set to `dynamic`, OVERWRITE replaces
   // exactly the leaves the query's rows land in — the re-run-one-day's-job
   // backfill contract — instead of truncating the table (the `static`
   // default, pinned by ReplaceOverwriteSpec). Victims derive from the
-  // WRITTEN leaf dirs, zero extra jobs. The oracle derives the replaced
+  // WRITTEN leaves' typed partition values, zero extra jobs. The oracle derives the replaced
   // leaf-set from the source itself (a CTE DISTINCT) so the comparison is
   // robust at every testdata SF, including leaves the source happens to
   // produce no rows for (which stay, per Spark's dynamic-mode semantics).
@@ -1868,7 +1868,7 @@ object IoQueries extends QueryPack {
       .orderBy("o_orderkey")
   }
 
-  // SQL DDL (io/TableDdl via GraftSqlRelationsRule): TRUNCATE TABLE +
+  // SQL DDL (io/TableDdl via GraftCatalog): TRUNCATE TABLE +
   // ALTER TABLE ADD COLUMNS, chained with INSERTs — truncate empties in
   // one manifest commit (schema survives via stamps), the ALTER evolves
   // without touching data (pre-evolution rows read the new column as
@@ -1910,10 +1910,10 @@ object IoQueries extends QueryPack {
       .orderBy("o_orderkey")
   }
 
-  // SQL CREATE TABLE + CTAS (io/TableDdl via GraftCreateTableRule):
-  // the statement set's birth end — a CTAS through the V2 claim path
-  // (USING feather, a DSv2 provider) and a plain CREATE through the V1
-  // claim path (the default provider), each then taking INSERTs. The
+  // SQL CREATE TABLE + CTAS (io/TableDdl via GraftCatalog's staged and
+  // plain create): the statement set's birth end — a CTAS (USING
+  // feather) and a plain CREATE (the default provider), each then
+  // taking INSERTs. The
   // oracle is the UNION reconstruction of both tables' content.
   register("io_sql_create",
     """SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS total
@@ -1949,7 +1949,7 @@ object IoQueries extends QueryPack {
   }
 
   // NAME-based addressing through the DSv2 GraftCatalog
-  // (catalog/GraftCatalog.scala + the extension rules' V2 claims):
+  // (catalog/GraftCatalog.scala and its table handle):
   // CREATE by catalog name under the warehouse, INSERT, MERGE, and a
   // VERSION AS OF read all resolve the NAME through Spark's public
   // catalog machinery — no path spelled anywhere. The pinned version is

@@ -11,11 +11,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats, GraftFeather, GraftHadoop}
 
-/** FACE-GENERIC DSv2 row-level machinery — what lifts the r17
-  * feather-only, flat-only restrictions off the catalog-only DML path:
-  * DELETE / UPDATE / MERGE by name in an extension-free session now run
-  * on EVERY face (feather / parquet / avro) and on hive-partitioned
-  * layouts, through one scan/write pair programmed against
+/** FACE-GENERIC DSv2 row-level machinery — the SQL DML path for every
+  * graft table that is not flat feather: DELETE / UPDATE / MERGE, in
+  * every session, run on EVERY face (feather / parquet / avro) and on
+  * hive-partitioned layouts, through one scan/write pair programmed against
   * [[graft.io.ConnectorFace]] (the same per-format adapter the
   * maintenance tier uses).
   *
@@ -29,9 +28,9 @@ import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats,
   * row must flow through the rewrite); for the batch-read fallback it
   * just means Spark re-filters rows above the scan. Whole-file
   * granularity is deliberate: a row-level rewrite is file-granular
-  * anyway, and this is the third-party interop surface — the graft
-  * session's engine paths (vectorized parquet scan, split avro reads)
-  * stay the performance path.
+  * anyway. Plain batch READS of the parquet face do not come here —
+  * [[FaceScanBuilder]] hands a clean snapshot to Spark's vectorized
+  * parquet reader.
   *
   * The WRITES land each task's rows as TMP FEATHER parts (the engine's
   * one universal task-side row writer), and the driver-side commit
@@ -111,9 +110,9 @@ private class FaceDeltaOperation(cmd: Command, path: String,
 // ---------------------------------------------------------------------------
 
 /** `host = Some(op)`: a row-level read (records the scan state the write
-  * commits against). `host = None`: the catalog-only BATCH-read fallback
-  * for faces without a DSv2 delegate (the parquet face) — same reader,
-  * optional time-travel pin. */
+  * commits against). `host = None`: the catalog's BATCH read for faces
+  * without a DSv2 delegate (the parquet face) — optional time-travel
+  * pin. */
 private[graft] class FaceScanBuilder(host: Option[FeatherRowLevelHost],
                                      face: ConnectorFace, path: String,
                                      fullSchema: StructType,

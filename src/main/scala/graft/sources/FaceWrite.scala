@@ -4,17 +4,18 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.StructType
 
-import graft.io.{ConnectorFace, FeatherMutations, FeatherStats, GraftHadoop}
+import graft.io.{ConnectorFace, FeatherMutations, FeatherStats, GraftFeather, GraftHadoop}
 
-/** FACE-GENERIC catalog-only batch WRITE — the insert half of the r18
-  * interop surface ([[FaceScanBuilder]] is the read half): what lets an
-  * extension-free session run `INSERT INTO` / `INSERT OVERWRITE` by name
-  * against tables the connector delegates cannot serve — the parquet
-  * face (no DSv2 connector) and HIVE-PARTITIONED tables on any face
-  * (the flat connector sinks refuse root appends into key=value
-  * layouts; this write routes each row to the leaf its partition values
-  * name, through the engine's shared
-  * [[FeatherMutations.routePartitionedInserts]]).
+/** FACE-GENERIC catalog batch WRITE — the insert half of the catalog
+  * surface ([[FaceScanBuilder]] is the read half): what runs SQL
+  * `INSERT INTO` / `INSERT OVERWRITE` (and DataFrameWriterV2 appends
+  * and overwrites) against tables the connector delegates cannot serve
+  * — the parquet face (no DSv2 connector) and HIVE-PARTITIONED tables
+  * on any face (the flat connector sinks refuse root appends into
+  * key=value layouts; this write routes each row to the leaf its
+  * partition values name, through the engine's shared
+  * [[FeatherMutations.routePartitionedInserts]]) — plus predicate and
+  * dynamic overwrites of flat connector-face tables.
   *
   * Task rows land as tmp feather parts (the engine's universal task
   * writer) and ONE driver-side conversion pass turns them into final
@@ -28,14 +29,15 @@ import graft.io.{ConnectorFace, FeatherMutations, FeatherStats, GraftHadoop}
   *  - static partition overwrite (`INSERT OVERWRITE ... PARTITION
   *    (k=v)`): the filters Spark hands down are EqualTo on partition
   *    columns — leaves whose values match are replaced, everything else
-  *    carries through verbatim. Any other filter shape refuses loudly
-  *    (deleting by a non-partition predicate is the row-level DML
-  *    tier's job, not the insert sink's).
-  *  - dynamic partition overwrite: only the leaf directories the query's
-  *    rows actually land in are replaced (Spark/Hive dynamic semantics).
-  *
-  * In a graft session none of this runs — the extension rules claim the
-  * insert plans at analysis and lower onto the engine's own paths. */
+  *    carries through verbatim.
+  *  - predicate overwrite (`writeTo(t).overwrite(condition)` with any
+  *    other filter): exactly replaceWhere — the filter's rows are deleted
+  *    and the written rows inserted in one predicate-scoped commit
+  *    ([[graft.io.PredicateMutations.replaceWhere]]).
+  *  - dynamic partition overwrite (only under
+  *    `spark.sql.sources.partitionOverwriteMode=dynamic`): only the
+  *    leaves the query's rows actually land in are replaced
+  *    (Spark/Hive dynamic semantics). */
 private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
                                     dataSchema: StructType,
                                     partCols: Seq[String],
@@ -45,13 +47,23 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
     with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite {
   FaceConvert.requireFeatherMappable(writeSchema)
 
-  /** append | truncate | static (with leaf-equality filters) | dynamic */
+  /** append | truncate | static (leaf-equality filters) | predicate |
+    * dynamic */
   private var mode: String = "append"
   private var staticFilters: Seq[(String, Any)] = Seq.empty
+  private var predicate: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty
 
   override def truncate(): WriteBuilder = { mode = "truncate"; this }
 
   override def overwriteDynamicPartitions(): WriteBuilder = {
+    if (!SparkSession.active.conf.get(
+        "spark.sql.sources.partitionOverwriteMode", "static")
+        .equalsIgnoreCase("dynamic"))
+      throw new UnsupportedOperationException(
+        s"overwritePartitions on graft table $path: set " +
+          "spark.sql.sources.partitionOverwriteMode=dynamic — dynamic " +
+          "overwrites are scoped by that conf (the SQL INSERT OVERWRITE " +
+          "spelling arrives here only when it is already set)")
     mode = "dynamic"; this
   }
 
@@ -60,17 +72,46 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
     import org.apache.spark.sql.sources.{AlwaysTrue, EqualNullSafe, EqualTo}
     if (filters.forall(_.isInstanceOf[AlwaysTrue])) return truncate()
     // Spark spells a static PARTITION (k=v) spec as EqualNullSafe
-    staticFilters = filters.toSeq.map {
+    val leafEq = filters.toSeq.collect {
       case EqualTo(a, v) if partCols.contains(a) => (a, v)
       case EqualNullSafe(a, v) if partCols.contains(a) => (a, v)
-      case other => throw new UnsupportedOperationException(
-        s"INSERT OVERWRITE on $path: overwrite filter $other is not a " +
-          "partition-column equality — a predicate-scoped overwrite " +
-          "belongs to the row-level DML tier (DELETE + INSERT, or MERGE)" +
-          "; the insert sink replaces whole tables or whole partitions")
     }
-    mode = "static"
+    if (leafEq.size == filters.length) {
+      staticFilters = leafEq
+      mode = "static"
+    } else {
+      predicate = filters.toSeq
+      mode = "predicate"
+    }
     this
+  }
+
+  /** A pushed-down overwrite filter as a Column over the table's names. */
+  private def toColumn(f: org.apache.spark.sql.sources.Filter)
+      : org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.sources._
+    f match {
+      case EqualTo(a, v) => col(a) === lit(v)
+      case EqualNullSafe(a, v) => col(a) <=> lit(v)
+      case GreaterThan(a, v) => col(a) > lit(v)
+      case GreaterThanOrEqual(a, v) => col(a) >= lit(v)
+      case LessThan(a, v) => col(a) < lit(v)
+      case LessThanOrEqual(a, v) => col(a) <= lit(v)
+      case In(a, vs) => col(a).isin(vs.toSeq: _*)
+      case IsNull(a) => col(a).isNull
+      case IsNotNull(a) => col(a).isNotNull
+      case StringStartsWith(a, v) => col(a).startsWith(v)
+      case StringEndsWith(a, v) => col(a).endsWith(v)
+      case StringContains(a, v) => col(a).contains(v)
+      case And(l, r) => toColumn(l) && toColumn(r)
+      case Or(l, r) => toColumn(l) || toColumn(r)
+      case Not(c) => !toColumn(c)
+      case AlwaysTrue() => lit(true)
+      case AlwaysFalse() => lit(false)
+      case other => throw new UnsupportedOperationException(
+        s"overwrite on $path: filter $other has no column form")
+    }
   }
 
   override def build(): Write = this
@@ -96,6 +137,22 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
       try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
       catch { case _: Exception => () }
     }
+    if (mode == "predicate") {
+      // replaceWhere reads the written rows back as one frame and owns
+      // the whole commit; the tmp parts are never published themselves
+      try {
+        val rows =
+          if (data.isEmpty) spark.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            writeSchema)
+          else GraftFeather.readFiles(spark, data.toSeq.map(m =>
+            (new org.apache.hadoop.fs.Path(path, m.tmpName).toString,
+              m.bytes)))
+        graft.io.PredicateMutations.replaceWhere(spark, path, rows,
+          predicate.map(toColumn).reduce(_ && _)): Unit
+      } finally abort(messages)
+      return
+    }
     val snap = FeatherSnapshots.resolve(fs, root, None).getOrElse(
       throw new IllegalStateException(
         s"insert on $path: no snapshot manifest (catalog tables always " +
@@ -114,17 +171,24 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
     val removeRel: Set[String] = mode match {
       case "append" => Set.empty
       case "truncate" => snap.files.map(_._1).toSet
+      case "dynamic" if parts.isEmpty => Set.empty
       case "dynamic" =>
-        // Spark/Hive dynamic semantics: only the leaf dirs the new rows
-        // actually landed in are replaced
-        val touched = parts.map { case (rel, _) =>
-          val i = rel.lastIndexOf('/')
-          if (i < 0) "" else rel.substring(0, i)
-        }.toSet
-        snap.files.map(_._1).filter { rel =>
-          val i = rel.lastIndexOf('/')
-          touched(if (i < 0) "" else rel.substring(0, i))
-        }.toSet
+        // Spark/Hive dynamic semantics: only the leaves the new rows
+        // actually landed in are replaced — matched by TYPED partition
+        // value, not directory spelling (an existing `day=07` leaf IS the
+        // partition a fresh `day=7` part lands in)
+        val ps = FeatherSnapshots.toDiscovered(root, snap).partSchema
+        def typed(files: Seq[(String, Long)]) =
+          FeatherSnapshots.toDiscovered(root,
+              snap.copy(files = files, dvs = Map.empty)).files
+            .map(l => l.file -> l.values.map { case (c, raw) =>
+              scala.util.Try(FeatherPartitions.castValue(raw,
+                ps(c).dataType)).getOrElse(raw) })
+        val touched = typed(parts).map(_._2).toSet
+        val relOfAbs = snap.files.map { case (rel, _) =>
+          new org.apache.hadoop.fs.Path(root, rel).toString -> rel }.toMap
+        typed(snap.files).collect {
+          case (abs, vs) if touched(vs) => relOfAbs(abs) }.toSet
       case "static" =>
         // leaves whose partition VALUES equal every static filter value
         // (a partition column is constant per leaf, so equality decides

@@ -12,16 +12,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats, GraftFeather, GraftHadoop}
 
 /** DELTA-based (merge-on-read) DSv2 row-level operations for feather
-  * snapshot tables — the `graft_dv` catalog's DML strategy in a session
-  * with ONLY the catalog conf. Where the group-based sibling
+  * snapshot tables — the `graft_dv` catalog's SQL DML strategy. Where the group-based sibling
   * ([[FeatherRowLevelOperation]]) REWRITES whole files, this one routes
   * DELETE / UPDATE / MERGE through Spark's delta rewrite
   * (`SupportsDelta`): every deleted or pre-update row arrives as a
   * `delete(_, rowId)` callback carrying the engine's stable row id
   * `(_file, _pos)`, and the commit persists those positions as deletion-
   * vector sidecars ([[graft.io.DeletionVectors]]) bound in the manifest —
-  * bytes written scale with DELETED ROWS, not touched files, the same
-  * merge-on-read parity the graft-session `graft_dv` spelling has.
+  * bytes written scale with DELETED ROWS, not touched files — the
+  * merge-on-read parity of the engine's `deleteWhereDV` / `executeDV`.
   * Inserted rows (MERGE NOT MATCHED, the insert half of an UPDATE) land
   * as ordinary new parts in the SAME atomic manifest commit.
   *

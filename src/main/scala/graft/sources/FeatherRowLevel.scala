@@ -9,16 +9,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.io.{ConnectorFace, FeatherStats, GraftFeather, GraftHadoop}
 
-/** Group-based (copy-on-write) DSv2 row-level operations for feather
-  * snapshot tables — what lets a session configured with ONLY
-  * `spark.sql.catalog.graft` (no graft extensions) run DELETE / UPDATE /
-  * MERGE against `graft.<ns>.<table>` through Spark's OWN rewrite
-  * machinery (`RewriteDeleteFromTable` / `RewriteUpdateTable` /
-  * `RewriteMergeIntoTable` → ReplaceData). In a graft session the
-  * extension resolution rules claim these statements first (the engine's
-  * pruned COW / merge-on-read DML paths, which also serve hive-partitioned
-  * tables and every face); this module is the third-party-session
-  * interop path.
+/** Group-based (copy-on-write) DSv2 row-level operations for flat
+  * feather snapshot tables — how SQL DELETE / UPDATE / MERGE against
+  * `graft.<ns>.<table>` (or `graft.`/path``) run, in every session,
+  * through Spark's OWN rewrite machinery (`RewriteDeleteFromTable` /
+  * `RewriteUpdateTable` / `RewriteMergeIntoTable` → ReplaceData).
+  * Hive-partitioned tables and the other faces take [[FaceRowLevel]].
   *
   * THE GROUP CONTRACT (what makes copy-on-write correct here):
   *

@@ -55,16 +55,23 @@ class FeatherDataSource extends TableProvider with DataSourceRegister
     // split sweep runs once, at scan time. With mergeSchema=true the
     // inference unions EVERY footer (bounded-pool reads) — the
     // schema-evolution read over heterogeneous file generations.
+    // The first footer's nullability speaks for ONE file only — another
+    // generation (a SQL INSERT or MERGE that left a column NULL) may hold
+    // nulls in a column the first file declares NOT NULL, and codegen
+    // elides null checks off the read schema. So that read is nullable
+    // throughout, like Spark's own file sources; the merged union keeps
+    // the exact every-file answer.
     val spark = SparkSession.active
     val disc = FeatherDiscovery.discover(spark, pathOf(options),
       pinnedVersion(options, pathOf(options)))
+    val merge = Option(options.get("mergeschema")).exists(_.toBoolean)
     val fields =
-      if (Option(options.get("mergeschema")).exists(_.toBoolean))
+      if (merge)
         GraftFeather.readFieldsMerged(spark,
           disc.files.map(l => (l.file, l.len)))
       else GraftFeather.readFields(spark, disc.files.head.file)
     StructType(fields.map(f => org.apache.spark.sql.types.StructField(
-      f.getName, GraftFeather.toSparkType(f), f.isNullable)) ++
+      f.getName, GraftFeather.toSparkType(f), f.isNullable || !merge)) ++
       disc.partSchema.fields)
   }
 
@@ -761,11 +768,22 @@ private class FeatherWrite(st: StructType, path: String, truncate: Boolean,
     val spark = SparkSession.active
     val out = new org.apache.hadoop.fs.Path(path)
     val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = messages.collect { case m: FeatherCommitMessage => m }
+    val all = messages.collect { case m: FeatherCommitMessage => m }
     // snapshot mode: requested on this write, or the table already carries
     // a _snapshots directory (once snapshotted, every commit must publish
     // a manifest or manifest-planned reads would miss it)
     val snapMode = snapshotsOpt || FeatherSnapshots.enabled(fs, out)
+    // a snapshot APPEND keeps only the parts that hold rows, and a
+    // zero-row append publishes no version at all (replay-clean, like
+    // every other append path of the table tier)
+    val tableAppend = !truncate && FeatherSnapshots.enabled(fs, out)
+    val (committed, empty) =
+      if (tableAppend) all.partition(m =>
+        graft.io.FeatherStats.fromJson(m.statsJson).nonEmpty)
+      else (all, Array.empty[FeatherCommitMessage])
+    empty.foreach(m =>
+      fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false))
+    if (tableAppend && committed.isEmpty) return
     // refuse a root-level append into a hive layout BEFORE renaming any
     // part — failing after the renames would leave orphan residue at the
     // root that a later adopt() would mix into an unreadable manifest

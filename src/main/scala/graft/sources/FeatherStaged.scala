@@ -7,8 +7,8 @@ import org.apache.spark.sql.types.StructType
 
 import graft.io.{GraftFeather, TableDdl}
 
-/** The STAGED table behind `StagingTableCatalog` — what gives a
-  * catalog-only session atomic `CREATE OR REPLACE TABLE [AS SELECT]`,
+/** The STAGED table behind `StagingTableCatalog` — what gives SQL
+  * atomic `CREATE OR REPLACE TABLE [AS SELECT]`,
   * `REPLACE TABLE`, and atomic CTAS by name, on EVERY face, partitioned
   * layouts included (rows route to their key=value leaves through the
   * engine's shared insert routing; a partitioned REPLACE swaps the old
@@ -20,8 +20,8 @@ import graft.io.{GraftFeather, TableDdl}
   * calls [[commitStagedChanges]], which reads the tmp parts back as one
   * frame and hands the publish to the ENGINE's own DDL lowering —
   * [[TableDdl.createTableAs]] / [[TableDdl.createTable]] /
-  * [[TableDdl.replaceTable]] — so a catalog-only statement gets exactly
-  * the graft session's semantics: face-dispatched final parts (USING
+  * [[TableDdl.replaceTable]] — so a SQL statement gets exactly the
+  * Scala API's semantics: face-dispatched final parts (USING
   * feather/parquet/avro), partitioned leaf routing on every face,
   * schema stamps for empty results, prior versions time-travelable with
   * RESTORE undoing a replace, and the strictest conflict contract in the

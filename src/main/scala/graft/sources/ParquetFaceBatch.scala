@@ -7,9 +7,8 @@ import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.io.ConnectorFace
 
-/** The parquet face's catalog-only BATCH read — `SELECT ... FROM
-  * <catalog>.t` in an extension-free session — on the ENGINE's read
-  * plan instead of the generic row-converter scan.
+/** The parquet face's SQL BATCH read — `SELECT ... FROM <catalog>.t` —
+  * on the ENGINE's read plan instead of the generic row-converter scan.
   *
   * The generic [[FaceScan]] is the right plan for the row-level scans
   * (whole-file partitions are the group contract, a rewrite is
@@ -34,10 +33,9 @@ import graft.io.ConnectorFace
   * partitions (the per-row reader applies sidecar masks natively):
   * Spark refuses mixed columnar/row partitions inside one scan, and at
   * head DV-bound files are a compacted-away minority by design. The
-  * graft-session engine path reads DV tables vectorized through the
-  * anti-join plan ([[graft.io.GraftParquet.readFiles]]); a catalog-only
-  * session that wants that plan compacts first (`graft_compact`, or
-  * `CALL <catalog>.system.compact`). */
+  * Scala API ([[graft.io.ParquetTable.read]]) reads DV tables vectorized
+  * through the anti-join plan ([[graft.io.GraftParquet.readFiles]]); SQL
+  * that wants that plan compacts first (`CALL <catalog>.system.compact`). */
 private[sources] class ParquetFaceBatchScan(
     face: ConnectorFace, path: String, required: StructType,
     fileFilters: Seq[org.apache.spark.sql.sources.Filter],

@@ -40,11 +40,9 @@ object Bridge {
       df.queryExecution.toRdd, df.schema, isStreaming = true)
   }
 
-  /** LogicalPlan → DataFrame (classic `Dataset.ofRows` is private[sql]).
-    * The MERGE INTO resolution rule needs the statement's SOURCE subtree
-    * as a frame to hand [[graft.io.ConditionalMerge]]; building the
-    * Dataset runs that subtree through the analyzer independently, which
-    * is exactly what a free-standing USING clause means. */
+  /** LogicalPlan → DataFrame (classic `Dataset.ofRows` is private[sql]):
+    * rebinds a plan onto a (cloned) session, running it through that
+    * session's analyzer. */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : org.apache.spark.sql.DataFrame =
@@ -74,8 +72,8 @@ object Bridge {
     * `spark.sql.catalog.graft` in its own conf looks like. The builder
     * cannot produce this in-JVM (it re-applies `spark.sql.extensions`
     * from the shared SparkContext conf to every new session), so interop
-    * tests proving the catalog surface works WITHOUT the graft rules
-    * (DSv2 row-level DML, delegated reads/writes) construct it here.
+    * tests proving the catalog surface works WITHOUT the graft extensions
+    * construct it here.
     * `options` are the session's initial SQL confs (catalog + warehouse
     * overrides). */
   def sessionWithoutExtensions(parent: org.apache.spark.sql.SparkSession,
@@ -106,7 +104,7 @@ object Bridge {
     org.apache.spark.sql.execution.datasources.DataSourceStrategy
       .translateFilter(e, supportNestedPredicatePushdown = false)
 
-  // ---- catalog-only parquet-face batch reads --------------------------------
+  // ---- catalog parquet-face batch reads -------------------------------------
   // The pieces that let the graft catalog's DSv2 batch scan hand parquet
   // decoding to Spark's OWN reader factory (vectorized columnar batches,
   // intra-file byte-range splits, executor-side row-group pruning)

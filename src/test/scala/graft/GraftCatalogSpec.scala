@@ -256,7 +256,7 @@ class GraftCatalogSpec extends AnyFunSuite {
       .collect(): Unit
     val hist = spark.sql("SELECT * FROM graft_history('maint')").collect()
     assert(hist.length === 3, s"create + 2 inserts: ${hist.length}")
-    val opt = spark.sql("SELECT * FROM graft_optimize('maint')").collect()
+    val opt = spark.sql("CALL graft.system.compact('maint')").collect()
     assert(opt.length === 1)
     assert(spark.sql("SELECT count(*) AS n FROM graft.maint")
       .head().getLong(0) === 20L)

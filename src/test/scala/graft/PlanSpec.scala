@@ -414,4 +414,17 @@ class PlanSpec extends AnyFunSuite {
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
+
+  test("ScanParallel.widenBy refuses an empty key list and hash-widens " +
+       "a single-partition input by its keys") {
+    val one = spark.range(0, 1000).toDF().coalesce(1)
+    intercept[IllegalArgumentException] {
+      graft.ops.ScanParallel.widenBy(one)
+    }
+    val p = graft.ops.ScanParallel.widenBy(one,
+      org.apache.spark.sql.functions.col("id"))
+      .queryExecution.executedPlan.toString
+    assert(p.contains("hashpartitioning(id"), p)
+    assert(!p.contains("RoundRobinPartitioning"), p)
+  }
 }

@@ -213,13 +213,13 @@ class PredicateMutationsSpec extends AnyFunSuite {
       .collect()
     assert(FeatherSnapshots.resolve(fsOf(path), new Path(path), None)
       .get.version === 1L, "EXPLAIN must not mutate")
-    // the statement executes eagerly, once; collect replays the report
+    // the statement executes eagerly, once; collect replays Spark's
+    // cached command result
     val df = spark.sql(
       s"DELETE FROM graft.`$path` t WHERE t.id % 100 = 0")
     assert(FeatherSnapshots.resolve(fsOf(path), new Path(path), None)
       .get.version === 2L, "spark.sql must execute the delete eagerly")
-    val rep = df.collect(); df.collect()
-    assert(rep.head.getAs[Long]("version") === 2L)
+    df.collect(); df.collect()
     assert(FeatherSnapshots.resolve(fsOf(path), new Path(path), None)
       .get.version === 2L, "re-collect must not re-run")
     assert(readAll(path).count() === 396)
@@ -236,11 +236,16 @@ class PredicateMutationsSpec extends AnyFunSuite {
     val snap = FeatherSnapshots.resolve(fsOf(dvP), new Path(dvP), None).get
     assert(snap.dvs.nonEmpty)
     assert(readAll(dvP).count() === 399)
-    // UPDATE has no DV strategy
-    val e = intercept[IllegalArgumentException] {
-      spark.sql(s"UPDATE graft_dv.`$dvP` SET amt = 0 WHERE id = 1")
-    }
-    assert(e.getMessage.contains("merge-on-read"))
+    // UPDATE on the DV spelling is merge-on-read too: the old row is
+    // masked and the new one inserted, no data file rewritten
+    val dataFiles = snap.files.map(_._1).toSet
+    spark.sql(s"UPDATE graft_dv.`$dvP` SET amt = 0 WHERE id = 1").collect()
+    val after = FeatherSnapshots.resolve(fsOf(dvP), new Path(dvP), None).get
+    assert(dataFiles.subsetOf(after.files.map(_._1).toSet),
+      "a DV update rewrites no data file")
+    assert(readAll(dvP).count() === 399)
+    assert(readAll(dvP).where(col("id") === 1).collect()
+      .map(_.getAs[Double]("amt")).toSeq === Seq(0.0))
   }
 
   test("partitioned UPDATE: a SET on the partition column MOVES rows; " +

@@ -9,7 +9,7 @@ import graft.sources.FeatherSnapshots
 
 /** replaceWhere (predicate-scoped atomic overwrite,
   * io/PredicateMutations.replaceWhere) and DYNAMIC partition overwrite
-  * for SQL INSERT OVERWRITE (io/TableInserts under Spark's own
+  * for SQL INSERT OVERWRITE (the catalog handle's write under Spark's own
   * partitionOverwriteMode conf): the backfill statements — swap one
   * slice atomically, leave every other file untouched. */
 class ReplaceOverwriteSpec extends AnyFunSuite {
@@ -355,5 +355,26 @@ class ReplaceOverwriteSpec extends AnyFunSuite {
     spark.sql(s"INSERT INTO graft.`$flat` " +
       "SELECT 9999L, rand()").collect(): Unit
     assert(spark.read.format("feather").load(flat).count() === 401)
+  }
+
+  test("a FLAT feather table takes predicate and dynamic overwrites " +
+       "through the catalog write: overwrite(condition) is replaceWhere, " +
+       "overwritePartitions replaces the whole table") {
+    import spark.implicits._
+    val path = tmp("flat_overwrite")
+    (1 to 10).map(i => (i.toLong, s"p$i")).toDF("id", "pay")
+      .write.format("feather").mode("overwrite")
+      .option("snapshots", "true").save(path)
+    Seq((100L, "new")).toDF("id", "pay")
+      .writeTo(s"graft.`$path`").overwrite(col("id") > 5)
+    assert(headVersion(path) === 2L, "one commit")
+    assert(spark.sql(s"SELECT id FROM graft.`$path` ORDER BY id").collect()
+      .map(_.getLong(0)).toSeq === Seq(1L, 2L, 3L, 4L, 5L, 100L))
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try Seq((7L, "dyn")).toDF("id", "pay")
+      .writeTo(s"graft.`$path`").overwritePartitions()
+    finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    assert(spark.sql(s"SELECT id, pay FROM graft.`$path`").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq === Seq((7L, "dyn")))
   }
 }

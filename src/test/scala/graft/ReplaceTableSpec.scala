@@ -41,7 +41,7 @@ class ReplaceTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect()
     assert(old.length == 10 && old.head.getDouble(1) == 0.0)
     // RESTORE undoes the replace entirely (schema AND content)
-    spark.sql(s"SELECT * FROM graft_restore('$path', 1)").collect(): Unit
+    spark.sql(s"CALL graft.system.restore('$path', 1)").collect(): Unit
     assert(spark.sql(s"SELECT id, v FROM graft.`$path`").count() == 10L)
   }
 

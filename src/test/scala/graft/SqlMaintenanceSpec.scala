@@ -7,9 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.io.FeatherMutations
 import graft.sources.FeatherSnapshots
 
-/** The table-maintenance tier driven entirely through SQL
-  * (extensions/GraftTableFunctions): every action the Scala API exposes
-  * answers to a CALL-style table function. */
+/** The table-maintenance tier driven entirely through SQL: every action
+  * the Scala API exposes answers to a table function
+  * (extensions/GraftTableFunctions) or, for compaction, restore, expiry
+  * and vacuum, to a `CALL graft.system.*` procedure
+  * (catalog/GraftProcedures). */
 class SqlMaintenanceSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -64,7 +66,7 @@ class SqlMaintenanceSpec extends AnyFunSuite {
   test("graft_optimize compacts through SQL and reports the rewrite") {
     val path = tmp("sql_optimize")
     writeTable(path, 300, 6) // six small parts
-    val r = spark.sql(s"SELECT * FROM graft_optimize('$path')").head()
+    val r = spark.sql(s"CALL graft.system.compact('$path')").head()
     assert(r.getAs[Long]("groups_rewritten") >= 1L)
     assert(r.getAs[Long]("files_after") < r.getAs[Long]("files_before"))
     assert(spark.read.format("feather").load(path).count() === 300)
@@ -93,17 +95,19 @@ class SqlMaintenanceSpec extends AnyFunSuite {
     import spark.implicits._
     writeTable(path, 200, 2) // v1
     FeatherMutations.deleteByKey(spark, path, Seq(7L).toDF("id"), Seq("id")) // v2
-    val rv = spark.sql(s"SELECT * FROM graft_restore('$path', 1)").head()
+    val rv = spark.sql(s"CALL graft.system.restore('$path', 1)").head()
     assert(rv.getAs[Long]("new_version") === 3L)
     assert(spark.read.format("feather").load(path).count() === 200)
     // dry run first, then expire history
     val preview = spark.sql(
       s"SELECT * FROM graft_vacuum_dry_run('$path', 0)").count()
-    val ex = spark.sql(s"SELECT * FROM graft_expire('$path', 1)").head()
+    val ex = spark.sql(
+      s"CALL graft.system.expire('$path', keep_last => 1)").head()
     assert(ex.getAs[Long]("snapshots_removed") === 2L)
     assert(spark.read.format("feather").load(path).count() === 200)
     // orphan vacuum answers too (nothing left to reclaim is fine)
-    val vac = spark.sql(s"SELECT * FROM graft_vacuum('$path', 0)").head()
+    val vac = spark.sql(
+      s"CALL graft.system.vacuum('$path', grace_ms => 0)").head()
     assert(vac.getAs[Long]("files_removed") >= 0L)
     assert(preview >= 0L)
   }
@@ -115,12 +119,12 @@ class SqlMaintenanceSpec extends AnyFunSuite {
     FeatherMutations.deleteByKey(spark, path, Seq(3L).toDF("id"), Seq("id"))
     // everything is younger than a day: nothing retires
     val keep = spark.sql(
-      s"SELECT * FROM graft_expire_older_than('$path', ${86400L * 1000})")
+      s"CALL graft.system.expire_older_than('$path', ${86400L * 1000})")
       .head()
     assert(keep.getAs[Long]("snapshots_removed") === 0L)
     // zero retention: all but the head retire
     val drop = spark.sql(
-      s"SELECT * FROM graft_expire_older_than('$path', 0)").head()
+      s"CALL graft.system.expire_older_than('$path', 0)").head()
     assert(drop.getAs[Long]("snapshots_removed") === 1L)
     assert(spark.read.format("feather").load(path).count() === 99)
   }
@@ -135,21 +139,23 @@ class SqlMaintenanceSpec extends AnyFunSuite {
       spark.sparkContext.hadoopConfiguration)
     def head(): Long =
       FeatherSnapshots.latestVersion(fs, new Path(path)).get
-    // building + fully PLANNING the statement must not run the restore —
-    // a BI tool EXPLAINing, or a twice-analyzed statement, must be inert
-    val df = spark.sql(s"SELECT * FROM graft_restore('$path', 1)")
-    df.queryExecution.executedPlan // force analysis + physical planning
-    assert(head() === 2L, "planning graft_restore must not run it")
+    // EXPLAINing the statement must not run the restore — a BI tool
+    // EXPLAINing must be inert
+    spark.sql(s"EXPLAIN CALL graft.system.restore('$path', 1)").collect()
+    assert(head() === 2L, "EXPLAIN CALL restore must not run it")
     assert(spark.read.format("feather").load(path).count() === 199)
-    // executing the SAME statement performs it exactly once
+    // the statement performs it exactly once: at issue, not per collect
+    val df = spark.sql(s"CALL graft.system.restore('$path', 1)")
     assert(df.head().getAs[Long]("new_version") === 3L)
+    df.collect(): Unit
     assert(head() === 3L)
     assert(spark.read.format("feather").load(path).count() === 200)
-    // same deferral for the rewrite family
-    val dfc = spark.sql(s"SELECT * FROM graft_optimize('$path')")
-    dfc.queryExecution.executedPlan
-    assert(head() === 3L, "planning graft_optimize must not run it")
+    // same for the rewrite family
+    spark.sql(s"EXPLAIN CALL graft.system.compact('$path')").collect()
+    assert(head() === 3L, "EXPLAIN CALL compact must not run it")
+    val dfc = spark.sql(s"CALL graft.system.compact('$path')")
     assert(dfc.head().getAs[Long]("files_before") >= 1L)
+    dfc.collect(): Unit
     assert(head() === 4L)
   }
 
@@ -185,8 +191,8 @@ class SqlMaintenanceSpec extends AnyFunSuite {
     assert(e.getMessage.contains("literal") ||
       e.getMessage.toLowerCase.contains("unresolved"))
     val e2 = intercept[Exception] {
-      spark.sql("SELECT * FROM graft_restore('/nope')").collect()
+      spark.sql("CALL graft.system.restore('/nope')").collect()
     }
-    assert(e2.getMessage.contains("graft_restore(path, version)"))
+    assert(e2.getMessage.contains("version"), e2.getMessage)
   }
 }
