@@ -30,6 +30,11 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // INSERT / UPDATE SET / MERGE assignments apply only exact types and
+      // lossless up-casts (the mutation tier's rule, ConditionalMerge's
+      // checkExpr): Spark's default ANSI policy would silently truncate
+      // 15.5 into a BIGINT column and corrupt the written rows
+      .config("spark.sql.storeAssignmentPolicy", "STRICT")
       // Deliberately NOT set here: spark.sql.parquet.outputTimestampType.
       // The parquet TABLE tier pins TIMESTAMP_MICROS per write inside
       // GraftParquet.withOutputMicros (footer stats stay usable, parts

@@ -20,6 +20,7 @@ import graft.catalog.GraftTable
   * {{{
   *   MSCK REPAIR TABLE graft.`/dir`      -- adopt a plain directory
   *   SELECT * FROM graft.`/plain/dir`    -- refused: says how to adopt
+  *                                        (or names the missing catalog conf)
   *   REPLACE TABLE graft.`/missing` ...  -- refused: names OR CREATE
   *   DESCRIBE [EXTENDED] graft.t         -- + Face / Data Files rows
   *   TRUNCATE TABLE graft.t PARTITION (...), ANALYZE TABLE graft.t,
@@ -54,13 +55,15 @@ private[extensions] class GraftDdlRule(spark: SparkSession)
     case _ => None
   }
 
-  /** A `graft.`/path`` relation the catalog could not resolve. */
-  private def unresolvedRelationPath(t: LogicalPlan): Option[String] =
+  /** A `graft.`/path`` relation the catalog could not resolve, as
+    * (catalog name, path). */
+  private def unresolvedRelationPath(t: LogicalPlan)
+      : Option[(String, String)] =
     t match {
       case UnresolvedRelation(parts, _, _)
           if parts.length == 2 && Faces(parts.head.toLowerCase) &&
             (parts(1).startsWith("/") || parts(1).contains("://")) =>
-        Some(parts(1))
+        Some((parts.head, parts(1)))
       case _ => None
     }
 
@@ -117,7 +120,7 @@ private[extensions] class GraftDdlRule(spark: SparkSession)
       // unresolved plan can hold one — resolved plans skip the walk)
       if (!other.resolved)
         other.foreachWithSubqueries(n =>
-          unresolvedRelationPath(n).foreach(refusePlainDir))
+          unresolvedRelationPath(n).foreach((refusePlainDir _).tupled))
       other
   }
 
@@ -126,7 +129,16 @@ private[extensions] class GraftDdlRule(spark: SparkSession)
       s"REPLACE TABLE $name: no snapshot table at this path — REPLACE " +
         "TABLE requires one (CREATE OR REPLACE TABLE creates it)")
 
-  private def refusePlainDir(path: String): Unit = {
+  private def refusePlainDir(catalog: String, path: String): Unit = {
+    // every graft-table statement resolves through the catalog: a
+    // session that loaded the extensions but registered no catalog
+    // under this name can only fail later with "cannot be found"
+    if (spark.conf.getOption(s"spark.sql.catalog.$catalog").isEmpty)
+      throw new IllegalArgumentException(
+        s"$catalog.`$path`: this session has no catalog named " +
+          s"'$catalog' — graft-table SQL runs through the catalog; set " +
+          s"spark.sql.catalog.$catalog=graft.catalog.GraftCatalog " +
+          "(graft.GraftSession sets it)")
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(root) && !graft.sources.FeatherSnapshots.enabled(fs, root))

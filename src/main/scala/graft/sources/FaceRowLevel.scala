@@ -29,8 +29,8 @@ import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats,
   * just means Spark re-filters rows above the scan. Whole-file
   * granularity is deliberate: a row-level rewrite is file-granular
   * anyway. Plain batch READS of the parquet face do not come here —
-  * [[FaceScanBuilder]] hands a clean snapshot to Spark's vectorized
-  * parquet reader.
+  * [[FaceScanBuilder]] hands them to Spark's vectorized parquet reader
+  * ([[ParquetFaceBatchScan]], DV-bound snapshots as masked rows).
   *
   * The WRITES land each task's rows as TMP FEATHER parts (the engine's
   * one universal task-side row writer), and the driver-side commit

@@ -1,11 +1,13 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics}
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-import graft.io.ConnectorFace
+import graft.io.{ConnectorFace, DeletionVectors, GraftHadoop}
 
 /** The parquet face's SQL BATCH read — `SELECT ... FROM <catalog>.t` —
   * on the ENGINE's read plan instead of the generic row-converter scan.
@@ -29,13 +31,12 @@ import graft.io.ConnectorFace
   * position encoding ([[graft.io.GraftParquet]]) — so `(_file, _pos)`
   * reads identically on both plans.
   *
-  * DV-BOUND snapshots fall back to the generic whole-file scan for ALL
-  * partitions (the per-row reader applies sidecar masks natively):
-  * Spark refuses mixed columnar/row partitions inside one scan, and at
-  * head DV-bound files are a compacted-away minority by design. The
-  * Scala API ([[graft.io.ParquetTable.read]]) reads DV tables vectorized
-  * through the anti-join plan ([[graft.io.GraftParquet.readFiles]]); SQL
-  * that wants that plan compacts first (`CALL <catalog>.system.compact`). */
+  * DV-BOUND snapshots keep the parquet reader factory but read ROWS
+  * (Spark refuses mixed columnar/row partitions inside one scan): the
+  * vectorized reader still decodes each batch, the row-index generator
+  * supplies every row's file position, and [[DvMaskedReaderFactory]]
+  * drops the positions each file's sidecar names — the anti-join plan
+  * of [[graft.io.GraftParquet.readFiles]] without the join. */
 private[sources] class ParquetFaceBatchScan(
     face: ConnectorFace, path: String, required: StructType,
     fileFilters: Seq[org.apache.spark.sql.sources.Filter],
@@ -74,15 +75,18 @@ private[sources] class ParquetFaceBatchScan(
 
   /** `_pos` → Spark's row-index generator field, position preserved
     * (rows and batches carry no names — only the factory's requested
-    * schema needs the temporary spelling). */
-  private val readDataSchema: StructType = StructType(dataSection.map(f =>
+    * schema needs the temporary spelling). A DV-bound read that did not
+    * ask for `_pos` appends the generator field LAST in the data
+    * section; the masking reader strips it again. */
+  private lazy val readDataSchema: StructType = StructType(dataSection.map(f =>
     if (metaPos && f.name == GraftMetaColumns.PosName)
       org.apache.spark.sql.graft.Bridge.rowIndexField
-    else f))
+    else f) ++ (if (anyDv && !metaPos)
+      Seq(org.apache.spark.sql.graft.Bridge.rowIndexField) else Nil))
 
   // ONE planning pass (snapshot + kept files + DVs as one consistent
-  // view) shared with the generic scan — the fallback executes through
-  // this same instance, so both plans see identical file sets
+  // view), the generic scan's own, so this read and the row-level scans
+  // prune files identically
   private val generic = new FaceScan(None, face, path, readSchema(),
     fileFilters, partSchema, pinnedVersion, owned)
 
@@ -93,45 +97,124 @@ private[sources] class ParquetFaceBatchScan(
 
   override def toBatch: Batch = this
   override def description(): String =
-    s"graft parquet face batch scan `$path` (vectorized, DV fallback)" +
+    s"graft parquet face batch scan `$path` " +
+      (if (anyDv) "(vectorized, DV-masked rows)" else "(vectorized)") +
       (if (fileFilters.nonEmpty)
         s", FileSkipFilters: ${fileFilters.mkString(", ")}" else "")
 
-  override def planInputPartitions(): Array[InputPartition] =
-    if (anyDv) generic.planInputPartitions()
+  override def planInputPartitions(): Array[InputPartition] = {
+    val toCatalyst = partSection.map(f =>
+      CatalystTypeConverters.createToCatalystConverter(f.dataType))
+    val splits = org.apache.spark.sql.graft.Bridge.parquetFilePartitions(
+      SparkSession.active,
+      keptParts.map { p =>
+        val raw = p.partValues.toMap
+        val pv = new org.apache.spark.sql.catalyst.expressions
+          .GenericInternalRow(partSection.zipWithIndex.map {
+            case (f, i) => toCatalyst(i)(FeatherPartitions.castValue(
+              raw.getOrElse(f.name, null), f.dataType))
+          }.toArray)
+        (p.file, p.len, pv: org.apache.spark.sql.catalyst.InternalRow)
+      })
+    if (!anyDv) splits
     else {
-      val toCatalyst = partSection.map(f =>
-        CatalystTypeConverters.createToCatalystConverter(f.dataType))
-      org.apache.spark.sql.graft.Bridge.parquetFilePartitions(
-        SparkSession.active,
-        keptParts.map { p =>
-          val raw = p.partValues.toMap
-          val pv = new org.apache.spark.sql.catalyst.expressions
-            .GenericInternalRow(partSection.zipWithIndex.map {
-              case (f, i) => toCatalyst(i)(FeatherPartitions.castValue(
-                raw.getOrElse(f.name, null), f.dataType))
-            }.toArray)
-          (p.file, p.len, pv: org.apache.spark.sql.catalyst.InternalRow)
-        })
+      // keyed by the split's own spelling of its path (the splits were
+      // built from these same absolute strings)
+      val dvByFile = keptParts.flatMap(p => p.dvPath.map(d =>
+        org.apache.spark.paths.SparkPath.fromPathString(p.file).urlEncoded
+          -> d)).toMap
+      splits.map { s =>
+        val fp = s.asInstanceOf[FilePartition]
+        DvMaskedPartition(fp, fp.files.toSeq.flatMap(f =>
+          dvByFile.get(f.urlEncodedPath).map(f.urlEncodedPath -> _)).toMap)
+      }
     }
+  }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    if (anyDv) generic.createReaderFactory()
+  override def createReaderFactory(): PartitionReaderFactory = {
+    // row-group pruning wants data-column filters only: partition and
+    // metadata predicates already pruned whole leaves/files at
+    // planning, and no parquet footer can answer them
+    val dataNames = dataSchema.fieldNames.toSet
+    val spark = SparkSession.active
+    val inner = org.apache.spark.sql.graft.Bridge.parquetReaderFactory(
+      spark, dataSchema, readDataSchema, StructType(partSection),
+      fileFilters.filter(_.references.forall(dataNames)).toArray)
+    if (!anyDv) inner
     else {
-      // row-group pruning wants data-column filters only: partition and
-      // metadata predicates already pruned whole leaves/files at
-      // planning, and no parquet footer can answer them
-      val dataNames = dataSchema.fieldNames.toSet
-      org.apache.spark.sql.graft.Bridge.parquetReaderFactory(
-        SparkSession.active, dataSchema, readDataSchema,
-        StructType(partSection),
-        fileFilters.filter(_.references.forall(dataNames)).toArray)
+      val posAt = readDataSchema.fieldNames.indexOf(
+        org.apache.spark.sql.graft.Bridge.rowIndexField.name)
+      new DvMaskedReaderFactory(inner,
+        (readDataSchema.fields ++ partSection).map(_.dataType).toSeq,
+        posAt, dropPos = !metaPos, GraftHadoop.confBroadcast(spark))
     }
+  }
 
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong =
       java.util.OptionalLong.of(generic.planned._3)
     override def numRows(): java.util.OptionalLong =
       java.util.OptionalLong.empty()
+  }
+}
+
+/** One read task of a DV-bound batch scan: Spark's packed splits plus
+  * the sidecar of every split file that has one. */
+private[sources] case class DvMaskedPartition(
+    files: FilePartition, dvs: Map[String, String]) extends InputPartition {
+  override def preferredLocations(): Array[String] =
+    files.preferredLocations()
+}
+
+/** Row reads over the parquet reader factory, one split at a time,
+  * dropping every row whose file position (the row-index column at
+  * `posAt`, ascending within a split) its file's sidecar names. A
+  * generator column the query did not ask for (`dropPos`) is projected
+  * away from the emitted rows. */
+private class DvMaskedReaderFactory(
+    inner: PartitionReaderFactory, outTypes: Seq[DataType], posAt: Int,
+    dropPos: Boolean,
+    confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]])
+    extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition)
+      : PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[DvMaskedPartition]
+    val execConf = GraftHadoop.execConf(confMap)
+    val strip: InternalRow => InternalRow =
+      if (!dropPos) identity
+      else {
+        val proj = UnsafeProjection.create(outTypes.indices
+          .filter(_ != posAt)
+          .map(i => BoundReference(i, outTypes(i), nullable = true)))
+        proj(_)
+      }
+    new PartitionReader[InternalRow] {
+      private val splits = p.files.files.iterator
+      private var reader: PartitionReader[InternalRow] = _
+      private var mask: DeletionVectors.Cursor = _
+      private var row: InternalRow = _
+      override def next(): Boolean = {
+        while (reader != null || splits.hasNext) {
+          if (reader == null) {
+            val f = splits.next()
+            reader = inner.createReader(
+              FilePartition(p.files.index, Array(f)))
+            mask = p.dvs.get(f.urlEncodedPath).map(d =>
+              new DeletionVectors.Cursor(DeletionVectors.read(execConf, d),
+                keep = false)).orNull
+          }
+          if (reader.next()) {
+            row = reader.get()
+            if (mask == null || mask.admit(row.getLong(posAt))) return true
+          } else {
+            reader.close()
+            reader = null
+          }
+        }
+        false
+      }
+      override def get(): InternalRow = strip(row)
+      override def close(): Unit = if (reader != null) reader.close()
+    }
   }
 }

@@ -75,7 +75,10 @@ object Bridge {
     * tests proving the catalog surface works WITHOUT the graft extensions
     * construct it here.
     * `options` are the session's initial SQL confs (catalog + warehouse
-    * overrides). */
+    * overrides). Store assignment starts at Spark's default policy: the
+    * lossless-or-exact rule is a graft-session setting
+    * ([[graft.GraftSession]]) that the shared context conf would
+    * otherwise carry over. */
   def sessionWithoutExtensions(parent: org.apache.spark.sql.SparkSession,
                                options: Map[String, String])
       : org.apache.spark.sql.SparkSession = {
@@ -89,7 +92,10 @@ object Bridge {
       .getOrElse(sys.error("classic SparkSession primary constructor " +
         "not found — Spark version drift"))
     ctor.newInstance(p.sparkContext, Some(p.sharedState), None,
-      new org.apache.spark.sql.SparkSessionExtensions, options,
+      new org.apache.spark.sql.SparkSessionExtensions,
+      Map(org.apache.spark.sql.internal.SQLConf.STORE_ASSIGNMENT_POLICY.key ->
+        org.apache.spark.sql.internal.SQLConf.STORE_ASSIGNMENT_POLICY
+          .defaultValueString) ++ options,
       Map.empty[String, String])
       .asInstanceOf[org.apache.spark.sql.SparkSession]
   }

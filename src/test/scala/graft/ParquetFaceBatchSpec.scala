@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The parquet face's catalog-only BATCH reads ride the engine's read
   * plan (ParquetFaceBatchScan): vectorized columnar decode, intra-file
   * byte-range splits, `_file`/`_pos` metadata parity with the other
-  * faces, DV-bound snapshots falling back to the masked row scan, and
+  * faces, DV-bound snapshots masked on the vectorized reader's rows, and
   * table-owned `_pos`/`_file` columns keeping precedence. This is the
   * r18 judge's one `weak` — "the first plan a real third-party user
   * gets" — pinned as plan + value receipts. */
@@ -115,6 +115,7 @@ class ParquetFaceBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (plan, columnar) = planOf("SELECT id FROM graft.pq.dv")
     assert(plan.contains("graft parquet face batch scan"), plan)
     assert(!columnar, "a DV-bound snapshot must take the row fallback")
+    assert(plan.contains("DV-masked"), plan)
     val ids = plain.sql("SELECT id FROM graft.pq.dv").collect()
       .map(_.getLong(0)).toSet
     assert(ids == (0L until 1000L).filter(_ % 10 != 3).toSet)
@@ -130,6 +131,37 @@ class ParquetFaceBatchSpec extends AnyFunSuite with BeforeAndAfterAll {
       val ps = rs.map(_.getLong(1)).sorted
       assert(ps.distinct.length == ps.length)
       assert(ps.last >= ps.length - 1) // holes shift the max up, never down
+    }
+  }
+
+  test("DV masks apply per split and per partition leaf") {
+    plain.sql("CREATE TABLE graft.pq.dvbig USING parquet " +
+      "PARTITIONED BY (day) AS SELECT id, " +
+      "concat('payload-', id, '-', repeat('x', 64)) AS p, id % 2 AS day " +
+      "FROM range(0, 200000)")
+    plain.sql("DELETE FROM graft_dv.pq.dvbig " +
+      "WHERE id % 1000 = 7 OR id BETWEEN 50000 AND 50999")
+    val expect = (0L until 200000L)
+      .filter(i => i % 1000 != 7 && !(i >= 50000 && i <= 50999))
+      .map(i => i -> i % 2)
+    plain.conf.set("spark.sql.files.maxPartitionBytes", "65536")
+    plain.conf.set("spark.sql.files.openCostInBytes", "0")
+    try {
+      val df = plain.sql("SELECT id, day FROM graft.pq.dvbig")
+      assert(df.rdd.getNumPartitions >= 4)
+      val (plan, columnar) = planOf("SELECT id, day FROM graft.pq.dvbig")
+      assert(plan.contains("DV-masked") && !columnar, plan)
+      assert(df.collect().map(r => r.getLong(0) -> r.getLong(1)).sorted
+        .toSeq == expect)
+      assert(plain.sql("SELECT count(*) FROM graft.pq.dvbig WHERE day = 1")
+        .head().getLong(0) == expect.count(_._2 == 1).toLong)
+      // the masked payload column decodes alongside the mask
+      assert(plain.sql("SELECT p FROM graft.pq.dvbig WHERE id = 50999 " +
+        "OR id = 51000").collect().map(_.getString(0)).toSeq ==
+        Seq("payload-51000-" + "x" * 64))
+    } finally {
+      plain.conf.unset("spark.sql.files.maxPartitionBytes")
+      plain.conf.unset("spark.sql.files.openCostInBytes")
     }
   }
 

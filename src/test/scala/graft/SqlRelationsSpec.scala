@@ -155,6 +155,21 @@ class SqlRelationsSpec extends AnyFunSuite {
       e4.getMessage.toLowerCase.contains("cannot be found"))
   }
 
+  test("a session with the extensions but no graft catalog conf: the " +
+       "path spelling names the missing conf") {
+    val path = tmp("no_catalog")
+    spark.range(3).write.format("feather").mode("overwrite")
+      .option("snapshots", "true").save(path)
+    val bare = spark.newSession()
+    bare.conf.unset("spark.sql.catalog.graft")
+    val e = intercept[Exception] {
+      bare.sql(s"SELECT * FROM graft.`$path`").collect()
+    }
+    assert(e.getMessage.contains("spark.sql.catalog.graft="), e.getMessage)
+    // the same statement resolves in the session that registers it
+    assert(spark.sql(s"SELECT * FROM graft.`$path`").count() === 3L)
+  }
+
   test("INSERT INTO: positional append; column list fills NULL; " +
        "BY NAME matches names; the report row carries the version") {
     val path = tmp("ins_flat")
@@ -176,20 +191,24 @@ class SqlRelationsSpec extends AnyFunSuite {
     assert(back(10).getString(1) === "p_11")
     assert(back(11).isNullAt(1) && back(11).getDouble(2) === 12.0)
     assert(back(12).isNullAt(1) && back(12).getDouble(2) === 13.0)
-    // lossless-or-exact is Spark's STRICT store assignment: an int
-    // widens to long/double; a decimal into a long column refuses and
-    // the table is untouched
-    spark.conf.set("spark.sql.storeAssignmentPolicy", "STRICT")
-    try {
-      spark.sql(s"INSERT INTO graft.`$path` SELECT 14, 'p_14', 14")
-        .collect()
-      val v = version(path)
-      val e = intercept[Exception] {
-        spark.sql(s"INSERT INTO graft.`$path` SELECT 15.5, 'p_15', 15.0D")
-      }
-      assert(e.getMessage.contains("CANNOT_SAFELY_CAST"), e.getMessage)
-      assert(version(path) === v)
-    } finally spark.conf.unset("spark.sql.storeAssignmentPolicy")
+    // lossless-or-exact (the session's STRICT store assignment): an int
+    // widens to long/double; a decimal into a long column refuses under
+    // Spark's up-cast error class and the table is untouched — in an
+    // INSERT, an UPDATE SET and a MERGE assignment alike
+    spark.sql(s"INSERT INTO graft.`$path` SELECT 14, 'p_14', 14").collect()
+    val v = version(path)
+    val lossy = Seq(
+      s"INSERT INTO graft.`$path` SELECT 15.5, 'p_15', 15.0D",
+      s"UPDATE graft.`$path` SET id = 15.5 WHERE id = 1",
+      s"MERGE INTO graft.`$path` t USING (SELECT 1L AS k) s ON t.id = s.k " +
+        "WHEN MATCHED THEN UPDATE SET id = 15.5")
+    lossy.foreach { stmt =>
+      val e = intercept[Exception](spark.sql(stmt).collect())
+      assert(e.getMessage.contains("CANNOT_SAFELY_CAST") ||
+        e.getMessage.contains("CANNOT_UP_CAST"), s"$stmt: ${e.getMessage}")
+    }
+    assert(version(path) === v)
+    assert(spark.read.format("feather").load(path).count() === 14L)
   }
 
   test("INSERT INTO routes partitioned rows to their leaves; a static " +

@@ -13,6 +13,8 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // GraftSession's lossless-or-exact store assignment
+      .config("spark.sql.storeAssignmentPolicy", "STRICT")
       .config("spark.sql.warehouse.dir",
         s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_warehouse")
       // the engine's deliberate tiny-relation global windows partition
