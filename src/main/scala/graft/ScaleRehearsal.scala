@@ -913,7 +913,11 @@ object ScaleRehearsal {
     *      deleted rows (data files untouched) where the COW spelling
     *      rewrites every part — the reason both strategies exist. The
     *      scattered predicate is deliberately UNTRANSLATABLE (modulo),
-    *      so this also rehearses the no-pruning worst case. */
+    *      so this also rehearses the no-pruning worst case;
+    *  (c) the SQL spelling of the same shapes through the catalog
+    *      (`graft.`/dir`` / `graft_dv.`/dir``): a banded COW DELETE
+    *      touches ≤2 parts, a scattered graft_dv DELETE rewrites no
+    *      data bytes, and each statement prints its wall time. */
   def predDmlTier(spark: SparkSession, out: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -969,16 +973,53 @@ object ScaleRehearsal {
       // NEW bytes the rewrite wrote (retired parts stay on disk for
       // time travel until expire() — total dir size would double-count)
       val cowNewBytes = dataBytes(cowDir) - cowBefore
+      // (c) the same shapes as SQL DML through the catalog's path
+      // spelling (Spark's row-level rewrite): a banded COW delete, a
+      // banded and a scattered merge-on-read delete, on one table
+      val sqlDir = s"$out/pd_sql_$n"
+      build(sqlDir, n, parts)
+      val sqlRoot = new org.apache.hadoop.fs.Path(sqlDir)
+      def liveFiles = graft.sources.FeatherSnapshots
+        .resolve(fs, sqlRoot, None).get.files.map(_._1).toSet
+      def timed(sql: String): Double = {
+        val t = System.nanoTime()
+        spark.sql(sql)
+        (System.nanoTime() - t) / 1e9
+      }
+      val f0 = liveFiles
+      val sqlCowSec = timed(s"DELETE FROM graft.`$sqlDir` " +
+        s"WHERE id BETWEEN $lo AND ${lo + 49999L}")
+      val sqlCowTouched = (f0 -- liveFiles).size
+      require(sqlCowTouched <= 2,
+        s"banded SQL delete must touch <=2 of $parts range parts: " +
+          s"$sqlCowTouched")
+      val lo2 = n / 4
+      val sqlDvSec = timed(s"DELETE FROM graft_dv.`$sqlDir` " +
+        s"WHERE id BETWEEN $lo2 AND ${lo2 + 49999L}")
+      val sqlBefore = dataBytes(sqlDir)
+      val sqlScatterSec = timed(s"DELETE FROM graft_dv.`$sqlDir` " +
+        "WHERE id % 1999 = 0")
+      require(dataBytes(sqlDir) == sqlBefore,
+        "scattered graft_dv SQL delete must not rewrite data files")
+      def banded(i: Long) = (i >= lo && i <= lo + 49999L) ||
+        (i >= lo2 && i <= lo2 + 49999L)
+      val sqlLive = n - 100000L - (0L until n by 1999L).count(!banded(_))
+      require(spark.read.format("feather").load(sqlDir).count() == sqlLive,
+        s"SQL deletes must leave $sqlLive rows")
       (n, delSec, updSec, dvSec, dvSidecars, cowSec, cowNewBytes,
-        cowBefore, rc.filesTouched)
+        cowBefore, rc.filesTouched, (sqlCowSec, sqlCowTouched, sqlDvSec,
+          sqlScatterSec))
     }
     println("PREDDML tier (banded COW ∝ selectivity; scattered DV " +
       "bytes ∝ deleted rows vs COW full rewrite):")
-    results.foreach { case (n, d, u, dv, dvB, cw, cwB, before, cowTouched) =>
+    results.foreach { case (n, d, u, dv, dvB, cw, cwB, before, cowTouched,
+                            (sc, scT, sd, ss)) =>
       println(f"  n=$n%8d bandedDelete=$d%6.2fs bandedUpdate=$u%6.2fs " +
         f"scatteredDV=$dv%6.2fs dvSidecarBytes=$dvB%9d " +
         f"scatteredCOW=$cw%6.2fs cowNewBytes=$cwB%11d " +
         f"(table $before%11d, touched $cowTouched)")
+      println(f"  n=$n%8d sqlBandedDelete=$sc%6.2fs (touched $scT) " +
+        f"sqlBandedDvDelete=$sd%6.2fs sqlScatteredDvDelete=$ss%6.2fs")
     }
   }
 

@@ -543,12 +543,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   * DESCRIBE/SHOW surfaces), TRUNCATE, batch/streaming reads through the
   * face delegates, inserts and overwrites through the delegate or
   * [[graft.sources.FaceBatchWrite]], and DELETE / UPDATE / MERGE through
-  * Spark's own row-level rewrite machinery
-  * ([[graft.sources.FeatherRowLevelOperation]] /
-  * [[graft.sources.FaceRowLevel]]). Spark's TableOutputResolver aligns
-  * inserts (no ACCEPT_ANY_SCHEMA: that capability would also set
-  * `skipSchemaResolution` on UPDATE/MERGE and strand the statement at
-  * physical planning). */
+  * Spark's own row-level rewrite machinery, one operation pair for every
+  * face and layout ([[graft.sources.FaceRowLevel]]). Spark's
+  * TableOutputResolver aligns inserts (no ACCEPT_ANY_SCHEMA: that
+  * capability would also set `skipSchemaResolution` on UPDATE/MERGE and
+  * strand the statement at physical planning). */
 private[graft] class GraftTable(
     val path: String, ident: String,
     dataSchema: StructType, partCols: Seq[String],
@@ -790,11 +789,9 @@ private[graft] class GraftTable(
       // path spellings: graft = group-based copy-on-write rewrite,
       // graft_dv = delta rewrite producing deletion-vector sidecars
       // (bytes ∝ deleted rows — the merge-on-read parity the graft_dv
-      // spelling promises). Flat feather tables take the feather-native
-      // operations (split scans, direct part writes); every other
-      // face/layout takes the ConnectorFace-generic pair (whole-file
-      // scans, tmp-feather tasks converted to face parts at commit,
-      // hive rows routed to their key=value leaves).
+      // spelling promises). Every face and layout takes the one
+      // FaceRowLevel pair; what differs per face (feather batch splits,
+      // zero-copy flat-feather inserts, hive routing) is chosen inside it.
       // A table that OWNS a `_pos` or `_file` column (data or hive
       // partition) shadows the engine's metadata columns — Spark hides
       // a conflicting metadata column, so the delta rowId (`_file`,
@@ -811,17 +808,9 @@ private[graft] class GraftTable(
           n == graft.sources.GraftMetaColumns.PosName)
       override def build()
           : org.apache.spark.sql.connector.write.RowLevelOperation =
-        if (face == "feather" && partCols.isEmpty) {
-          if (dvFace && !ownsRowId)
-            new graft.sources.FeatherDeltaOperation(
-              info.command(), path, schema(), 128L << 20)
-          else
-            new graft.sources.FeatherRowLevelOperation(
-              info.command(), path, schema(), 128L << 20)
-        } else
-          graft.sources.FaceRowLevel.operation(info.command(), path,
-            graft.io.ConnectorFace.byLabel(face), dataSchema, partCols,
-            partSchema, delta = dvFace && !ownsRowId)
+        graft.sources.FaceRowLevel.operation(info.command(), path,
+          graft.io.ConnectorFace.byLabel(face), dataSchema, partCols,
+          partSchema, delta = dvFace && !ownsRowId)
     }
   }
 }

@@ -27,11 +27,17 @@ import org.apache.spark.sql.functions._
   * blocks, not plans. Every round is therefore materialized into a
   * persisted RDD and re-wrapped as a LogicalRDD leaf (the same truncation
   * Dataset.checkpoint performs), which keeps an explicit handle for
-  * cleanup: each round unpersists its predecessor, so storage stays
+  * cleanup: each round unpersists its predecessor, so round storage stays
   * O(one round), not O(rounds) — Dataset.checkpoint offers no public
   * release and reliable checkpoint files are never auto-deleted under the
   * default cleaner config. Same discipline as GraphX's Pregel
   * checkpointer, which likewise unpersists superseded rounds eagerly.
+  * The undirected EDGE list is the one other persisted relation: a
+  * DataFrame cache every round reads, held for the whole loop. Both
+  * caches are released on EVERY exit path (try/finally): the edges
+  * always, the live round unless it is the returned labels (the caller
+  * owns those), so a failed or cancelled job mid-iteration leaks no
+  * block.
   *
   * The round cap still exists and hitting it FAILS LOUDLY: silently
   * returning partially-propagated labels would under-merge clusters and
@@ -58,11 +64,14 @@ object ConnectedComponents {
       : (DataFrame, () => Unit, Option[java.math.BigDecimal]) = {
     val rdd = df.rdd.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val release = () => { rdd.unpersist(false); () }
     val out = df.sparkSession.createDataFrame(rdd, df.schema)
-    val s = Option(out.agg(
-        sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-      .head.getDecimal(0))
-    (out, () => { rdd.unpersist(false); () }, s)
+    val s =
+      try Option(out.agg(
+          sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
+        .head.getDecimal(0))
+      catch { case e: Throwable => release(); throw e }
+    (out, release, s)
   }
 
   /** Rounds the last [[minLabel]] call ON THIS THREAD took to converge —
@@ -157,52 +166,62 @@ object ConnectedComponents {
         struct(col("d2").as("d1"), col("d1").as("d2")))).as("e"))
       .select(col("e.d1").as("d1"), col("e.d2").as("d2"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val releaseEdges = () => { edges.unpersist(false); () }
-    // round 1 for free: from identity labels, one propagation step is just
-    // min(neighbor) vs self over the raw edge list — a single aggregation
-    // instead of a full loop-body round
-    var (labels, releasePrev, prevSum) = materializedSum(
-      edges.groupBy(col("d1"))
-        .agg(min(col("d2")).as("nmin"))
-        .select(col("d1").as("doc_id"), least(col("d1"), col("nmin")).as("label")))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      // ONE join + ONE aggregate per round: the label relation rides along
-      // as PSEUDO-EDGES (v → L(v)), so min-of-joined-labels over
-      // edges ∪ pseudo yields min(min_{u∈N(v)} L(u), L(L(v))) in a single
-      // equi-join — the pointer-doubling shortcut (L(L(v))) that used to be
-      // a separate labels×labels self-join, and the old-label carry join,
-      // both fold away. L(L(v)) ≤ L(v) keeps the per-vertex minimum
-      // non-increasing (which the sum probe relies on), every vertex has a
-      // pseudo-edge (no vertex drops out), and labels are always vertex ids
-      // of the same component, so the inner join resolves every row. The
-      // label progression is identical to the former
-      // least(L(v), nbrMin, shortcut) round — same round counts.
-      val g = edges.union(
-        labels.select(col("doc_id").as("d1"), col("label").as("d2")))
-      val (round, releaseRound, roundSum) = materializedSum(g
-        .join(labels.select(col("doc_id").as("d2"), col("label").as("nl")),
-          Seq("d2"))
-        .groupBy(col("d1").as("doc_id")).agg(min(col("nl")).as("label")))
-      converged = roundSum == prevSum
-      prevSum = roundSum
-      releasePrev() // superseded round's blocks freed immediately
-      releasePrev = releaseRound
-      labels = round
-      iter += 1
+    // the live round's release handle: every exit but the successful
+    // return frees it (the caller owns the returned labels)
+    var releaseLive: () => Unit = () => ()
+    var returned = false
+    try {
+      // round 1 for free: from identity labels, one propagation step is
+      // just min(neighbor) vs self over the raw edge list — a single
+      // aggregation instead of a full loop-body round
+      val (first, releaseFirst, firstSum) = materializedSum(
+        edges.groupBy(col("d1"))
+          .agg(min(col("d2")).as("nmin"))
+          .select(col("d1").as("doc_id"),
+            least(col("d1"), col("nmin")).as("label")))
+      releaseLive = releaseFirst
+      var labels = first
+      var prevSum = firstSum
+      var converged = false
+      var iter = 0
+      while (!converged && iter < maxIters) {
+        // ONE join + ONE aggregate per round: the label relation rides
+        // along as PSEUDO-EDGES (v → L(v)), so min-of-joined-labels over
+        // edges ∪ pseudo yields min(min_{u∈N(v)} L(u), L(L(v))) in a
+        // single equi-join — the pointer-doubling shortcut (L(L(v))) that
+        // used to be a separate labels×labels self-join, and the old-label
+        // carry join, both fold away. L(L(v)) ≤ L(v) keeps the per-vertex
+        // minimum non-increasing (which the sum probe relies on), every
+        // vertex has a pseudo-edge (no vertex drops out), and labels are
+        // always vertex ids of the same component, so the inner join
+        // resolves every row. The label progression is identical to the
+        // former least(L(v), nbrMin, shortcut) round — same round counts.
+        val g = edges.union(
+          labels.select(col("doc_id").as("d1"), col("label").as("d2")))
+        val (round, releaseRound, roundSum) = materializedSum(g
+          .join(labels.select(col("doc_id").as("d2"), col("label").as("nl")),
+            Seq("d2"))
+          .groupBy(col("d1").as("doc_id")).agg(min(col("nl")).as("label")))
+        converged = roundSum == prevSum
+        prevSum = roundSum
+        releaseLive() // superseded round's blocks freed immediately
+        releaseLive = releaseRound
+        labels = round
+        iter += 1
+      }
+      lastRoundsTl.set(iter)
+      if (!converged)
+        throw new IllegalStateException(
+          s"connected components did not converge within $maxIters rounds — " +
+            "with pointer doubling that covers components of ~2^" + maxIters +
+            " vertices, so this is a data or logic bug, not a deep graph. " +
+            "Returning the partial labels would under-merge clusters " +
+            "(duplicates would pass the dedup gate).")
+      returned = true
+      labels
+    } finally {
+      edges.unpersist(false)
+      if (!returned) releaseLive()
     }
-    lastRoundsTl.set(iter)
-    releaseEdges()
-    if (!converged) {
-      releasePrev()
-      throw new IllegalStateException(
-        s"connected components did not converge within $maxIters rounds — " +
-          "with pointer doubling that covers components of ~2^" + maxIters +
-          " vertices, so this is a data or logic bug, not a deep graph. " +
-          "Returning the partial labels would under-merge clusters " +
-          "(duplicates would pass the dedup gate).")
-    }
-    labels
   }
 }

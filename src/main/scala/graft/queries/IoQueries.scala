@@ -1359,7 +1359,7 @@ object IoQueries extends QueryPack {
   }
 
   // SQL MERGE INTO (GraftCatalog → Spark's row-level MERGE rewrite over
-  // the catalog handle, FeatherRowLevelOperation): the statement CDC
+  // the catalog handle, FaceRowLevel's COW operation): the statement CDC
   // pipelines actually write, parsed and planned by Spark's own
   // machinery — full clause matrix incl. WHEN NOT MATCHED BY SOURCE,
   // executed eagerly at statement issue. Same relational-CTE oracle

@@ -717,73 +717,12 @@ private class AvroReaderFactory(
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[AvroInputPartition]
-    new PartitionReader[InternalRow] {
-      private val execConf = {
-        val c = new org.apache.hadoop.conf.Configuration(false)
-        confMap.value.foreach { case (k, v) => c.set(k, v) }
-        c
-      }
-      private var open: Option[AutoCloseable] = None
-      private val toInternal =
-        CatalystTypeConverters.createToCatalystConverter(readSchema)
-      // partition columns come from the directory chain, not the file
-      // (see FeatherReaderFactory — same splice)
-      private val partRaw = p.partValues.toMap
-      private val partAt: Map[Int, Any] =
-        readSchema.fields.zipWithIndex.collect {
-          case (f, i) if partRaw.contains(f.name) =>
-            i -> FeatherPartitions.castValue(partRaw(f.name), f.dataType)
-        }.toMap
-      private val posIdx: Int =
-        p.posName.map(readSchema.fieldIndex).getOrElse(-1)
-      private val dataNames =
-        readSchema.fieldNames.filterNot(n =>
-          partRaw.contains(n) || p.posName.contains(n)).toSeq
-      // release a half-constructed reader (schema-resolution throw) —
-      // Spark only close()es readers whose construction succeeded
-      private val all: Iterator[(Long, org.apache.spark.sql.Row)] =
-        try {
-          // deletion vector: loaded once per split (tiny file), applied
-          // as a position filter on the block-relative row coordinates
-          val dv = p.dvPath
-            .map(graft.io.DeletionVectors.read(execConf, _)).orNull
-          if (posIdx >= 0)
-            GraftAvro.splitRowsPos(
-              execConf, schemaJson, p.file, p.start, p.end,
-              Some(dataNames),
-              r => open = Some(r), _ => open = None, dv = dv)
-          else
-            GraftAvro.splitRows(
-              execConf, schemaJson, p.file, p.start, p.end,
-              Some(dataNames), // Some(Nil) = count(*) shape
-              r => open = Some(r), _ => open = None, dv = dv)
-              .map((0L, _))
-        } catch { case e: Throwable =>
-          open.foreach(r => try r.close() catch { case _: Exception => () })
-          throw e
-        }
-      private val rows = if (limit >= 0) all.take(limit) else all
-      private var current: InternalRow = _
-      private def splice(pos: Long, dataRow: org.apache.spark.sql.Row)
-          : org.apache.spark.sql.Row =
-        if (partAt.isEmpty && posIdx < 0) dataRow
-        else {
-          var di = 0
-          org.apache.spark.sql.Row.fromSeq(
-            readSchema.fields.indices.map { i =>
-              if (i == posIdx) pos
-              else partAt.getOrElse(i, { val v = dataRow.get(di); di += 1; v })
-            })
-        }
-      override def next(): Boolean =
-        if (rows.hasNext) {
-          val (pos, r) = rows.next()
-          current = toInternal(splice(pos, r)).asInstanceOf[InternalRow]
-          true
-        } else false
-      override def get(): InternalRow = current
-      override def close(): Unit =
-        open.foreach(r => try r.close() catch { case _: Exception => () })
-    }
+    // positions are only encoded when `_pos` or the DV cursor needs them
+    // (see GraftAvro.splitRows)
+    new SplicedRowReader(readSchema, p.partValues, p.posName, p.dvPath, limit,
+      confMap)((conf, cols, withPos, dv, track, untrack) =>
+      GraftAvro.splitRowsPos(conf, schemaJson, p.file, p.start, p.end,
+        Some(cols), track, untrack, dv = dv,
+        needPos = withPos || dv != null))
   }
 }

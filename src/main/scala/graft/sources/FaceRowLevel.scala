@@ -11,43 +11,61 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats, GraftFeather, GraftHadoop}
 
-/** FACE-GENERIC DSv2 row-level machinery — the SQL DML path for every
-  * graft table that is not flat feather: DELETE / UPDATE / MERGE, in
-  * every session, run on EVERY face (feather / parquet / avro) and on
-  * hive-partitioned layouts, through one scan/write pair programmed against
-  * [[graft.io.ConnectorFace]] (the same per-format adapter the
-  * maintenance tier uses).
+/** The DSv2 row-level machinery — the ONE SQL DML path for every graft
+  * table: DELETE / UPDATE / MERGE, in every session, on EVERY face
+  * (feather / parquet / avro) and layout (flat or hive-partitioned),
+  * through Spark's OWN rewrite machinery (`RewriteDeleteFromTable` /
+  * `RewriteUpdateTable` / `RewriteMergeIntoTable` → ReplaceData for the
+  * `graft` catalog, WriteDelta for `graft_dv`) and one scan/write pair
+  * programmed against [[graft.io.ConnectorFace]] (the same per-format
+  * adapter the maintenance tier uses). What differs per face and layout
+  * is selected here from the face and layout — never a user setting:
   *
-  * The SCAN ([[FaceScan]]) plans one InputPartition per kept data file:
-  * partition-directory pruning (conservative tri-state over the pushed
-  * filters), whole-file stats pruning, then the face's own row iterator
-  * with the file's deletion vector applied; hive partition values,
-  * `_file`, and the per-row `_pos` splice in exactly like the feather
-  * connector's reader. Every pushed filter returns as residual — for the
-  * GROUP (COW) operation that is the group contract (a kept file's every
-  * row must flow through the rewrite); for the batch-read fallback it
-  * just means Spark re-filters rows above the scan. Whole-file
-  * granularity is deliberate: a row-level rewrite is file-granular
-  * anyway. Plain batch READS of the parquet face do not come here —
-  * [[FaceScanBuilder]] hands them to Spark's vectorized parquet reader
-  * ([[ParquetFaceBatchScan]], DV-bound snapshots as masked rows).
+  *  - SPLITS: the feather face plans record-batch splits from the IPC
+  *    footers ([[GraftFeather.planReadFiles]], [[MaxSplitBytes]]) and
+  *    reads through the feather connector's reader; the other faces read
+  *    one partition per file through [[ConnectorFace.fileRowsPos]].
+  *  - BATCH SKIPPING: delta scans drop stats-empty feather batches INSIDE
+  *    kept files (positions are batch-absolute, so skipping never shifts
+  *    them); COW scans stay whole-file (the group contract below).
+  *  - INSERTS: each task lands its rows as a TMP FEATHER part (the
+  *    engine's one universal task-side row writer). Flat feather tables
+  *    rename those parts in place — zero copy, the tmp format IS the
+  *    final format. Other faces convert them into final face parts in one
+  *    distributed pass ([[ConnectorFace.writeParts]]), and hive layouts
+  *    route rows to the leaf their partition VALUES name
+  *    ([[FeatherMutations.routePartitionedInserts]] — an UPDATE that
+  *    changes a partition column moves the row between leaves inside the
+  *    one atomic commit).
   *
-  * The WRITES land each task's rows as TMP FEATHER parts (the engine's
-  * one universal task-side row writer), and the driver-side commit
-  * converts them into final face parts in one distributed pass —
-  * [[ConnectorFace.writeParts]] for flat tables,
-  * [[FeatherMutations.routePartitionedInserts]] for hive layouts (rows
-  * route to the leaf their partition VALUES name, so an UPDATE that
-  * changes a partition column moves the row between leaves inside the
-  * one atomic commit). The manifest commit then swaps groups (COW) or
-  * binds deletion vectors (delta) exactly like the feather-only paths;
-  * tmp parts are deleted either way, and a failed commit unwinds the
-  * converted parts and fresh DV sidecars.
+  * THE GROUP CONTRACT (what makes copy-on-write correct): the scan
+  * defines the replacement granularity — whatever FILES it reads are the
+  * "groups" the commit atomically replaces with the rewrite query's
+  * output. Spark's planning rule (GroupBasedRowLevelOperationScanPlanning)
+  * pushes the command's condition into the scan builder; the scan uses it
+  * ONLY to prune whole files (partition directories, stats sidecars
+  * proving every batch empty, blooms excluding every point lookup),
+  * NEVER to drop rows or batches inside a kept file — they would silently
+  * vanish from the rewritten table. Every pushed filter returns as
+  * residual, so Spark re-evaluates the predicate row by row.
   *
-  * Cost honesty: rewritten/inserted rows are written twice (tmp feather,
-  * then the face part). Bytes ∝ the statement's own output — never the
-  * table — and the conversion is one extra job per STATEMENT, not per
-  * file. */
+  * The scan and the write share one operation instance: the scan records
+  * the snapshot it planned against and the files it kept
+  * ([[RowLevelScanState]]); the commit publishes through
+  * [[FeatherSnapshots.commitMutation]] with readRel = those files — the
+  * read-set optimistic-concurrency contract (a concurrent rewrite of a
+  * READ file aborts loudly; disjoint mutations and blind appends
+  * commute). A statement that neither reads a group nor writes a row
+  * publishes NO version. The manifest commit swaps groups (COW) or binds
+  * deletion vectors (delta); tmp parts are deleted either way, and a
+  * failed commit unwinds the final parts and fresh DV sidecars.
+  *
+  * Cost honesty: on the converting faces rewritten/inserted rows are
+  * written twice (tmp feather, then the face part) — bytes ∝ the
+  * statement's own output, never the table, and the conversion is one
+  * extra job per STATEMENT, not per file. Plain batch READS of the
+  * parquet face do not come here — [[FaceScanBuilder]] hands them to
+  * Spark's vectorized parquet reader ([[ParquetFaceBatchScan]]). */
 private[graft] object FaceRowLevel {
   /** One operation per (command, strategy): group-based COW for the
     * `graft` catalog, delta (DV sidecars) for `graft_dv`. */
@@ -58,22 +76,48 @@ private[graft] object FaceRowLevel {
       new FaceDeltaOperation(cmd, path, face, dataSchema, partCols, partSchema)
     else
       new FaceCowOperation(cmd, path, face, dataSchema, partCols, partSchema)
+
+  /** Feather split size for row-level scans — the connector's default. */
+  val MaxSplitBytes: Long = 128L << 20
 }
 
 // ---------------------------------------------------------------------------
 // operations
 // ---------------------------------------------------------------------------
 
+/** What the row-level SCAN hands the row-level WRITE: both operations
+  * host one scan-state slot, set by the scan at planning time and read by
+  * the write at commit. One operation instance serves one statement
+  * execution (Spark holds it in a RowLevelOperationTable), and the scan
+  * plans strictly before the write commits. */
+private[sources] trait RowLevelHost {
+  def command(): Command
+  /** Delta scans may skip batches inside kept files; COW scans may not. */
+  def batchSkip: Boolean
+  @volatile private[sources] var scanState: Option[RowLevelScanState] = None
+}
+
+/** What the row-level scan read: the snapshot it planned against and the
+  * root-relative names of the files it kept (= the groups a COW commit
+  * replaces, the read set of either commit). */
+private[sources] final case class RowLevelScanState(
+    snap: FeatherSnapshots.Snapshot, keptRel: Set[String])
+
 private class FaceCowOperation(cmd: Command, path: String,
                                face: ConnectorFace, dataSchema: StructType,
                                partCols: Seq[String], partSchema: StructType)
-    extends RowLevelOperation with FeatherRowLevelHost {
+    extends RowLevelOperation with RowLevelHost {
   override def command(): Command = cmd
+  override def batchSkip: Boolean = false
   override def description(): String =
     s"graft COW $cmd on $path (${face.label} face)"
-  // puts Spark's write pipeline into data+metadata mode so the plan's
-  // bookkeeping columns strip before rows reach the part writer (the
-  // feather COW operation's contract)
+  /** `_file` rides the rewrite plan: a metadata attribute puts Spark's
+    * write pipeline into data+metadata mode
+    * (DataAndMetadataWritingSparkTask), which projects the plan's
+    * bookkeeping columns (`__row_operation`, `_file`) AWAY before rows
+    * reach the part writer. Without one Spark hands the writer the RAW
+    * query output, operation column included, which no fixed-schema
+    * writer can decode. */
   override def requiredMetadataAttributes(): Array[NamedReference] =
     Array(Expressions.column(GraftMetaColumns.FileName))
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -83,13 +127,20 @@ private class FaceCowOperation(cmd: Command, path: String,
     new FaceCowWrite(this, info.schema(), path, face, dataSchema, partCols)
 }
 
+/** Merge-on-read: every deleted or pre-update row arrives as a
+  * `delete(_, rowId)` callback carrying the engine's stable row id
+  * `(_file, _pos)`, and the commit persists those positions as
+  * deletion-vector sidecars bound in the manifest — bytes written scale
+  * with DELETED ROWS, not touched files. Updates split into DELETE +
+  * INSERT (an in-place update of an immutable part does not exist). */
 private class FaceDeltaOperation(cmd: Command, path: String,
                                  face: ConnectorFace, dataSchema: StructType,
                                  partCols: Seq[String], partSchema: StructType)
     extends RowLevelOperation
     with org.apache.spark.sql.connector.write.SupportsDelta
-    with FeatherRowLevelHost {
+    with RowLevelHost {
   override def command(): Command = cmd
+  override def batchSkip: Boolean = true
   override def description(): String =
     s"graft delta (merge-on-read) $cmd on $path (${face.label} face)"
   override def rowId(): Array[NamedReference] =
@@ -113,7 +164,7 @@ private class FaceDeltaOperation(cmd: Command, path: String,
   * commits against). `host = None`: the catalog's BATCH read for faces
   * without a DSv2 delegate (the parquet face) — optional time-travel
   * pin. */
-private[graft] class FaceScanBuilder(host: Option[FeatherRowLevelHost],
+private[graft] class FaceScanBuilder(host: Option[RowLevelHost],
                                      face: ConnectorFace, path: String,
                                      fullSchema: StructType,
                                      partSchema: StructType,
@@ -147,7 +198,7 @@ private[graft] class FaceScanBuilder(host: Option[FeatherRowLevelHost],
         pinnedVersion, owned = fullSchema.fieldNames.toSet)
 }
 
-private[sources] class FaceScan(host: Option[FeatherRowLevelHost],
+private[sources] class FaceScan(host: Option[RowLevelHost],
                                 face: ConnectorFace, path: String,
                                 readSchema0: StructType,
                                 fileFilters: Seq[org.apache.spark.sql.sources.Filter],
@@ -155,17 +206,20 @@ private[sources] class FaceScan(host: Option[FeatherRowLevelHost],
                                 pinnedVersion: Option[Long],
                                 owned: Set[String] = Set.empty)
     extends Scan with Batch with SupportsReportStatistics {
+  private val feather = face eq ConnectorFace.FeatherFace
+  private val batchSkip = host.exists(_.batchSkip)
   override def readSchema(): StructType = readSchema0
   override def description(): String =
     s"graft ${face.label} face scan `$path`" + (if (fileFilters.nonEmpty)
       s", FileSkipFilters: ${fileFilters.mkString(", ")}" else "")
   override def toBatch: Batch = this
 
-  // resolved ONCE per scan instance: snapshot + kept files + their DVs
-  // must be one consistent view (the feather COW scan's memo rule);
-  // private[sources]: the parquet batch scan reuses this exact planning
+  // resolved ONCE per scan instance: the snapshot, the kept files, their
+  // DVs and splits must be one consistent view — re-resolving per call
+  // could straddle a concurrent commit. private[sources]: the parquet
+  // batch scan reuses this exact planning
   private[sources] lazy val planned
-      : (FeatherCowState, Array[InputPartition], Long) = {
+      : (RowLevelScanState, Array[InputPartition], Long) = {
     val spark = SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
@@ -176,9 +230,12 @@ private[sources] class FaceScan(host: Option[FeatherRowLevelHost],
     val disc = FeatherSnapshots.toDiscovered(root, snap)
     val relOfAbs: Map[String, String] = snap.files.map { case (rel, _) =>
       new org.apache.hadoop.fs.Path(root, rel).toString -> rel }.toMap
-    // partition-DIRECTORY pruning first (free), then stats-first
-    // whole-file pruning, then blooms for point lookups — the same
-    // O(directories)+O(kept) planning discipline the feather scans keep
+    // partition-DIRECTORY pruning first (free), then STATS-FIRST
+    // whole-file pruning, then blooms for point lookups, footers only
+    // for survivors: the sidecars are length-validated (a present entry
+    // covers exactly this file's every batch) and loads are merged-first
+    // — O(directories) + O(kept) planning, never O(files) footer fetches
+    // for a narrow statement over a wide table
     val leafKept =
       if (disc.partCols.isEmpty || fileFilters.isEmpty) disc.files
       else disc.files.filter(
@@ -197,24 +254,59 @@ private[sources] class FaceScan(host: Option[FeatherRowLevelHost],
         graft.io.FeatherBloom.excludesFile(conf, abs, len, pointFilters)
     // schema stamps (`<prefix>-empty.<ext>`) hold ZERO rows by the
     // engine's reserved naming — never a group (a no-op statement must
-    // publish NO version, the feather twin's contract), never scanned
-    val kept = leafKept.filterNot(l =>
+    // publish NO version), never scanned
+    val candidates = leafKept.filterNot(l =>
       l.file.endsWith(s"-empty${face.suffix}") ||
         statsEmpty(l.file) || bloomExcluded(l.file, l.len))
-    val state = FeatherCowState(snap, kept.map(l => relOfAbs(l.file)).toSet)
-    val parts = kept.map { l =>
+    // (file, batch indices) per partition: Nil = the whole file
+    val splits: Seq[(FeatherPartitions.LeafFile, Seq[Int])] =
+      if (!feather) candidates.map(l => (l, Nil))
+      else featherSplits(spark, candidates, statsByFile)
+    val kept = splits.map(_._1).distinct
+    val state = RowLevelScanState(snap, kept.map(l => relOfAbs(l.file)).toSet)
+    val parts = splits.map { case (l, idxs) =>
+      // `_file` splices per split exactly like a partition value; `_pos`
+      // rides per row; the DV binding rides every split of its file
       val pv = l.values ++
         GraftMetaColumns.fileValue(readSchema0, l.file, l.values, owned)
-      FaceInputPartition(l.file, l.len, pv,
-        // LeafFile.dv already carries the ROOT-RESOLVED sidecar path
-        // (toDiscovered) — re-resolving doubled the prefix for relative
-        // roots (absolute roots silently absorbed it: Path(parent, abs)
-        // = abs), caught by the pqread scale receipt
-        l.dv.map(_._1),
-        GraftMetaColumns.posName(readSchema0, l.values, owned))
-        : InputPartition
+      // LeafFile.dv already carries the ROOT-RESOLVED sidecar path
+      // (toDiscovered) — re-resolving doubled the prefix for relative
+      // roots (absolute roots silently absorbed it: Path(parent, abs)
+      // = abs), caught by the pqread scale receipt
+      val dv = l.dv.map(_._1)
+      val pos = GraftMetaColumns.posName(readSchema0, l.values, owned)
+      (if (feather) FeatherInputPartition(l.file, l.len, idxs, pv, dv, pos)
+       else FaceInputPartition(l.file, l.len, pv, dv, pos)): InputPartition
     }.toArray
     (state, parts, kept.map(_.len).sum)
+  }
+
+  /** Footer-planned record-batch splits of the surviving feather files. A
+    * file no larger than one split whose stats sidecar covers it needs no
+    * footer read: the sidecar holds one entry per record batch. A file
+    * the plan gives ZERO batches can never produce a row — never a group.
+    * Delta scans also drop stats-empty batches inside kept files. */
+  private def featherSplits(
+      spark: SparkSession, files: Seq[FeatherPartitions.LeafFile],
+      statsByFile: Map[String, Option[Seq[Map[String, FeatherStats.ColStat]]]])
+      : Seq[(FeatherPartitions.LeafFile, Seq[Int])] = {
+    def statsOf(f: String) = statsByFile.getOrElse(f, None)
+    val (covered, footered) = files.partition(l =>
+      l.len <= FaceRowLevel.MaxSplitBytes && statsOf(l.file).isDefined)
+    val byFile = files.map(l => l.file -> l).toMap
+    val planned = covered.map(l => (l.file, statsOf(l.file).get.indices)) ++
+      (if (footered.isEmpty) Nil
+       else GraftFeather.planReadFiles(spark,
+         footered.map(l => (l.file, l.len)), FaceRowLevel.MaxSplitBytes)._2
+         .map { case (f, _, idxs) => (f, idxs) })
+    planned.flatMap { case (f, idxs) =>
+      val keep = statsOf(f) match {
+        case Some(stats) if batchSkip => idxs.filterNot(i => i < stats.size &&
+          FeatherStats.batchProvablyEmpty(stats(i), fileFilters))
+        case _ => idxs
+      }
+      if (keep.isEmpty) None else Some((byFile(f), keep))
+    }
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
@@ -225,6 +317,11 @@ private[sources] class FaceScan(host: Option[FeatherRowLevelHost],
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = SparkSession.active
+    // lenient decode: an evolved table's older files null-fill the
+    // columns an ALTER added (the catalog serves the merged union schema)
+    if (feather)
+      return new FeatherReaderFactory(readSchema0, -1,
+        GraftHadoop.confBroadcast(spark), mergeSchema = true)
     val (state, _, _) = planned
     val root = new org.apache.hadoop.fs.Path(path)
     val keptAbs = state.keptRel.toSeq.map(rel =>
@@ -252,6 +349,7 @@ private[sources] case class FaceInputPartition(
     dvPath: Option[String], posName: Option[String])
     extends InputPartition
 
+/** Whole-file rows of a non-feather face through [[SplicedRowReader]]. */
 private class FaceReaderFactory(
     face: ConnectorFace, readSchema: StructType, readerJson: String,
     confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]])
@@ -259,70 +357,173 @@ private class FaceReaderFactory(
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[FaceInputPartition]
-    new PartitionReader[InternalRow] {
-      // per-JVM cached rebuild — O(entries) once per executor, not per
-      // partition (the 10⁵-partition lens)
-      private val execConf = GraftHadoop.execConf(confMap)
-      private val open =
-        scala.collection.mutable.Set.empty[AutoCloseable]
-      private val toInternal =
-        CatalystTypeConverters.createToCatalystConverter(readSchema)
-      private val partRaw = p.partValues.toMap
-      private val partAt: Map[Int, Any] =
-        readSchema.fields.zipWithIndex.collect {
-          case (f, i) if partRaw.contains(f.name) =>
-            i -> FeatherPartitions.castValue(partRaw(f.name), f.dataType)
-        }.toMap
-      private val posIdx: Int =
-        p.posName.map(readSchema.fieldIndex).getOrElse(-1)
-      private val dataNames = readSchema.fieldNames.filterNot(n =>
-        partRaw.contains(n) || p.posName.contains(n)).toSeq
-      private val rows: Iterator[(Long, org.apache.spark.sql.Row)] =
-        try {
-          val dv = p.dvPath
-            .map(DeletionVectors.read(execConf, _)).orNull
-          face.fileRowsPos(execConf, readerJson, p.file, p.len, dataNames,
-            dv, open.add(_), open.remove(_))
-        } catch { case e: Throwable =>
-          open.foreach(r => try r.close() catch { case _: Exception => () })
-          throw e
-        }
-      private var current: InternalRow = _
-      private def splice(pos: Long, dataRow: org.apache.spark.sql.Row)
-          : org.apache.spark.sql.Row =
-        if (partAt.isEmpty && posIdx < 0) dataRow
-        else {
-          var di = 0
-          org.apache.spark.sql.Row.fromSeq(
-            readSchema.fields.indices.map { i =>
-              if (i == posIdx) pos
-              else partAt.getOrElse(i, { val v = dataRow.get(di); di += 1; v })
-            })
-        }
-      override def next(): Boolean =
-        if (rows.hasNext) {
-          val (pos, r) = rows.next()
-          current = toInternal(splice(pos, r)).asInstanceOf[InternalRow]
-          true
-        } else false
-      override def get(): InternalRow = current
-      override def close(): Unit =
-        open.foreach(r => try r.close() catch { case _: Exception => () })
-    }
+    new SplicedRowReader(readSchema, p.partValues, p.posName, p.dvPath, -1,
+      confMap)((conf, cols, _, dv, track, untrack) =>
+      face.fileRowsPos(conf, readerJson, p.file, p.len, cols, dv, track,
+        untrack))
   }
+}
+
+/** The engine's DSv2 metadata columns, served by EVERY face's scans:
+  *
+  *  - `_file` — the absolute data-file path of each row (Spark's
+  *    `_metadata.file_path` parity for the connector). A per-split
+  *    CONSTANT, spliced exactly like the hive partition values.
+  *  - `_pos` — the row's format-local stable position inside its file.
+  *    The ENCODING is face-specific (each face's DV position axis):
+  *    feather packs `(recordBatch << 32) | rowInBatch`
+  *    ([[graft.io.DeletionVectors.featherPos]]), avro packs
+  *    `(blockSyncOffset << 24) | recordInBlock`, parquet serves the
+  *    file-wide row ordinal (Spark's `_metadata.row_index`). All three
+  *    are split-plan-invariant, so `(_file, _pos)` is the stable row id
+  *    the DELTA row-level operations key their deletion vectors on;
+  *    `SELECT _pos` serves it too — compare positions only within one
+  *    face, never across faces. */
+private[graft] object GraftMetaColumns {
+  val FileName = "_file"
+  val PosName = "_pos"
+
+  val columns: Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    Array(
+      new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name(): String = FileName
+        override def dataType(): org.apache.spark.sql.types.DataType =
+          org.apache.spark.sql.types.StringType
+        override def isNullable: Boolean = false
+        override def comment(): String =
+          "absolute path of the data file holding the row"
+      },
+      new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name(): String = PosName
+        override def dataType(): org.apache.spark.sql.types.DataType =
+          org.apache.spark.sql.types.LongType
+        override def isNullable: Boolean = false
+        override def comment(): String =
+          "format-local stable row position inside the data file " +
+            "(encoding varies by face: feather packs batch<<32|row, " +
+            "avro packs block offset|record, parquet is the row ordinal)"
+      })
+
+  /** `_pos` splice request for a split — mirrors [[fileValue]]'s
+    * shadowing rule: a table-owned `_pos` (hive partition OR data
+    * column) wins, because Spark hides a conflicting metadata column and
+    * the reference is then the table column. */
+  def posName(readSchema: StructType,
+              existing: Seq[(String, String)] = Seq.empty,
+              owned: Set[String] = Set.empty): Option[String] =
+    if (readSchema.fieldNames.contains(PosName) &&
+        !existing.exists(_._1 == PosName) && !owned.contains(PosName))
+      Some(PosName)
+    else None
+
+  /** The (name, value) splice entry for a split of file `f` — empty when
+    * the projected schema never asked for `_file`, and empty when the
+    * TABLE already owns a `_file` column (a hive partition value in
+    * `existing`, or a data/partition column in `owned` — the table's own
+    * schema): Spark hides a conflicting metadata column
+    * (canRenameConflictingMetadataColumns = false), so the reference is
+    * the table column and the splice must not shadow its value. */
+  def fileValue(readSchema: StructType, f: String,
+                existing: Seq[(String, String)] = Seq.empty,
+                owned: Set[String] = Set.empty)
+      : Seq[(String, String)] =
+    if (readSchema.fieldNames.contains(FileName) &&
+        !existing.exists(_._1 == FileName) && !owned.contains(FileName))
+      Seq(FileName -> f)
+    else Seq.empty
+}
+
+/** What a reader factory supplies to [[SplicedRowReader]]: the split's
+  * DATA rows (the `dataNames` columns, in order), each with its `_pos`
+  * coordinate when `withPos` (or 0 — the splice ignores it), the deletion
+  * vector (null = none) applied, and every opened resource reported to
+  * `track` (and to `untrack` once the iterator released it). */
+private[sources] trait SplitRows {
+  def apply(conf: org.apache.hadoop.conf.Configuration,
+            dataNames: Seq[String], withPos: Boolean, dv: Array[Long],
+            track: AutoCloseable => Unit, untrack: AutoCloseable => Unit)
+      : Iterator[(Long, org.apache.spark.sql.Row)]
+}
+
+/** The ONE partition reader every row-producing scan shares (the feather
+  * and avro connectors, the non-feather row-level faces): partition
+  * columns come from the directory chain, not the file — their (projected
+  * position → typed value) splice is precomputed once per split; `_file`
+  * arrives as one more split constant in `partValues`; `_pos` splices
+  * per ROW from the source's coordinate; the deletion vector loads once
+  * per split (executor-side, tiny file). A throw AFTER a resource opened
+  * but BEFORE construction finished (missing column, corrupt footer)
+  * means Spark never gets a reader to close() — released here, or the fd
+  * and its buffers leak per retry. */
+private[sources] final class SplicedRowReader(
+    readSchema: StructType, partValues: Seq[(String, String)],
+    posName: Option[String], dvPath: Option[String], limit: Int,
+    confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]])(
+    source: SplitRows)
+    extends PartitionReader[InternalRow] {
+  // per-JVM cached rebuild — O(entries) once per executor, not per
+  // partition (the 10⁵-partition lens)
+  private val execConf = GraftHadoop.execConf(confMap)
+  private val open = scala.collection.mutable.Set.empty[AutoCloseable]
+  private val toInternal =
+    CatalystTypeConverters.createToCatalystConverter(readSchema)
+  private val partRaw = partValues.toMap
+  private val partAt: Map[Int, Any] =
+    readSchema.fields.zipWithIndex.collect {
+      case (f, i) if partRaw.contains(f.name) =>
+        i -> FeatherPartitions.castValue(partRaw(f.name), f.dataType)
+    }.toMap
+  private val posIdx: Int = posName.map(readSchema.fieldIndex).getOrElse(-1)
+  private val dataNames = readSchema.fieldNames.filterNot(n =>
+    partRaw.contains(n) || posName.contains(n)).toSeq
+  private val rows: Iterator[(Long, org.apache.spark.sql.Row)] = {
+    val all =
+      try {
+        val dv = dvPath.map(DeletionVectors.read(execConf, _)).orNull
+        source(execConf, dataNames, posIdx >= 0, dv, open.add(_),
+          open.remove(_))
+      } catch { case e: Throwable => close(); throw e }
+    if (limit >= 0) all.take(limit) else all
+  }
+  private var current: InternalRow = _
+  private def splice(pos: Long, dataRow: org.apache.spark.sql.Row)
+      : org.apache.spark.sql.Row =
+    if (partAt.isEmpty && posIdx < 0) dataRow
+    else {
+      var di = 0
+      org.apache.spark.sql.Row.fromSeq(
+        readSchema.fields.indices.map { i =>
+          if (i == posIdx) pos
+          else partAt.getOrElse(i, { val v = dataRow.get(di); di += 1; v })
+        })
+    }
+  override def next(): Boolean =
+    if (rows.hasNext) {
+      val (pos, r) = rows.next()
+      current = toInternal(splice(pos, r)).asInstanceOf[InternalRow]
+      true
+    } else false
+  override def get(): InternalRow = current
+  override def close(): Unit =
+    open.foreach(r => try r.close() catch { case _: Exception => () })
 }
 
 // ---------------------------------------------------------------------------
 // writes
 // ---------------------------------------------------------------------------
 
-/** Shared driver-side conversion: read the tasks' tmp feather parts and
-  * land them as FINAL face parts (flat: one writeParts pass; hive: rows
-  * route to the leaf their partition values name). Returns the (rel
-  * name, len) parts plus the flat parts' merged-stats fold input —
-  * the CALLER upserts after its manifest commit. Tmp parts are deleted
-  * here, success or not (they were never visible). */
-private object FaceConvert {
+/** Driver-side insert finalization shared by both writes (and the unwind
+  * the generic batch write borrows): land the tasks' tmp feather parts as
+  * FINAL face parts — flat feather renames them in place (zero copy: the
+  * tmp format is the final format), other flat faces convert in one
+  * writeParts pass, hive layouts route rows to the leaf their partition
+  * values name. Returns the (rel name, len) parts plus the flat parts'
+  * merged-stats fold input — the CALLER upserts only AFTER its manifest
+  * commit succeeds, so a lost conflict check never strands cache entries
+  * for parts that were never published (per-part sidecars cover readers
+  * in the window; merged is a planning cache). Converted tmp parts are
+  * deleted here, success or not (they were never visible). */
+private[sources] object FaceConvert {
   def toFaceParts(op: String, face: ConnectorFace,
                   fs: org.apache.hadoop.fs.FileSystem, path: String,
                   tmpMsgs: Seq[FeatherCommitMessage],
@@ -331,6 +532,10 @@ private object FaceConvert {
       : (Seq[(String, Long)],
          Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])]) = {
     if (tmpMsgs.isEmpty) return (Seq.empty, Map.empty)
+    if ((face eq ConnectorFace.FeatherFace) && partCols.isEmpty) {
+      val renamed = renameParts(fs, path, tmpMsgs)
+      return (renamed.map { case (n, (len, _)) => (n, len) }.toSeq, renamed)
+    }
     val spark = SparkSession.active
     val root = new org.apache.hadoop.fs.Path(path)
     val tmpFiles = tmpMsgs.map(m =>
@@ -361,6 +566,49 @@ private object FaceConvert {
     }
   }
 
+  /** Rename tmp feather parts to gen-tagged finals + write their per-part
+    * stats sidecars; returns final name → (bytes, batch stats), the
+    * upsertMerged input shape. ZERO-ROW parts (empty batch stats — a task
+    * every row bypassed) are deleted, not renamed: publishing them would
+    * add one junk file per idle task to the manifest. */
+  private def renameParts(fs: org.apache.hadoop.fs.FileSystem, path: String,
+                          committed: Seq[FeatherCommitMessage])
+      : Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])] = {
+    // the append sink's naming: the gen tag keeps these parts
+    // collision-free beside retained generations
+    val gen = f"-g${System.nanoTime()}%x"
+    committed.flatMap { m =>
+      val stats = FeatherStats.fromJson(m.statsJson)
+      val tmp = new org.apache.hadoop.fs.Path(path, m.tmpName)
+      if (stats.isEmpty) {
+        try fs.delete(tmp, false) catch { case _: Exception => () }
+        None
+      } else {
+        val fin = new org.apache.hadoop.fs.Path(path,
+          f"part-${m.partitionId}%05d-${java.util.UUID.nameUUIDFromBytes(
+            m.tmpName.getBytes("UTF-8"))}$gen.feather")
+        require(fs.rename(tmp, fin), s"commit rename $tmp -> $fin failed")
+        val sc = fs.create(new org.apache.hadoop.fs.Path(path,
+          fin.getName + ".stats.json"), true)
+        try sc.write(m.statsJson.getBytes("UTF-8")) finally sc.close()
+        Some(fin.getName -> (m.bytes, stats))
+      }
+    }.toMap
+  }
+
+  /** Failure-path unwind: delete finalized parts and their sidecars — a
+    * manifest commit that threw never made them visible. */
+  def deleteFinalized(fs: org.apache.hadoop.fs.FileSystem, path: String,
+                      names: Seq[String]): Unit =
+    names.foreach { n =>
+      try {
+        fs.delete(new org.apache.hadoop.fs.Path(path, n), false)
+        fs.delete(new org.apache.hadoop.fs.Path(path, n + ".stats.json"),
+          false)
+      } catch { case _: Exception => () }
+      ()
+    }
+
   /** Unwind twin of the routed inserts' per-leaf merged-stats fold —
     * ONE definition in [[FeatherMutations.unpublishLeafStats]], shared
     * with the partitioned REPLACE/CTAS commits. No-op for the flat path
@@ -376,30 +624,16 @@ private object FaceConvert {
       GraftFeather.toArrowField(f.name, f.dataType, f.nullable))
 }
 
-/** Group-based COW write — ONE commit protocol for the feather-native
-  * and face-generic paths (finalize first: a MERGE into a fully-pruned
+/** Group-based COW write (finalize first: a MERGE into a fully-pruned
   * table still publishes its NOT MATCHED inserts; no-read no-write
-  * statements publish NO version; unwind on a lost conflict check).
-  * Only [[finalizeInserts]] differs per path: the generic one converts
-  * tmp feathers to face parts, [[FeatherCowWrite]] renames them in
-  * place (zero-copy — flat feather tables never pay the conversion). */
-private[sources] class FaceCowWrite(op: FeatherRowLevelHost,
+  * statements publish NO version; unwind on a lost conflict check). */
+private class FaceCowWrite(op: RowLevelHost,
                                     st: StructType,
                                     path: String, face: ConnectorFace,
                                     dataSchema: StructType,
                                     partCols: Seq[String])
     extends WriteBuilder with Write with BatchWrite {
   FaceConvert.requireFeatherMappable(st)
-
-  /** tmp-part messages (zero-row ones already dropped by the caller) →
-    * (final parts, the DEFERRED flat merged-stats fold input). */
-  protected def finalizeInserts(fs: org.apache.hadoop.fs.FileSystem,
-                                msgs: Seq[FeatherCommitMessage],
-                                opName: String, targetV: Long)
-      : (Seq[(String, Long)],
-         Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])]) =
-    FaceConvert.toFaceParts(opName, face, fs, path, msgs, dataSchema,
-      partCols, targetV)
 
   override def build(): Write = this
   override def toBatch: BatchWrite = this
@@ -430,7 +664,8 @@ private[sources] class FaceCowWrite(op: FeatherRowLevelHost,
     if (state.keptRel.isEmpty && data.isEmpty) return
     val opName = s"rowlevel_${op.command().toString.toLowerCase}"
     val targetV = state.snap.version + 1
-    val (parts, flatStats) = finalizeInserts(fs, data.toSeq, opName, targetV)
+    val (parts, flatStats) = FaceConvert.toFaceParts(opName, face, fs, path,
+      data.toSeq, dataSchema, partCols, targetV)
     val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     added ++= parts
     if (added.isEmpty &&
@@ -443,7 +678,7 @@ private[sources] class FaceCowWrite(op: FeatherRowLevelHost,
         removeRel = state.keptRel, add = added.toSeq,
         readRel = Some(state.keptRel)): Unit
     catch { case e: Throwable =>
-      FeatherDsvWrites.deleteFinalized(fs, path, added.toSeq.map(_._1))
+      FaceConvert.deleteFinalized(fs, path, added.toSeq.map(_._1))
       FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
       throw e
     }
@@ -461,15 +696,16 @@ private[sources] class FaceCowWrite(op: FeatherRowLevelHost,
   }
 }
 
-/** Delta write — ONE commit protocol for the feather-native and
-  * face-generic merge-on-read paths: deleted rows → DV sidecars
-  * (per-face position encodings ride [[ConnectorFace.fileRowsPos]] on
-  * the way in and the faces' DV-aware reads on the way out), inserted
-  * rows → final parts through [[finalizeInserts]] (generic: tmp-feather
-  * conversion; [[FeatherDeltaWrite]]: zero-copy rename), one atomic
-  * manifest commit, full unwind (parts, sidecars, fresh DVs, leaf-stats
-  * entries) when the conflict check loses. */
-private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
+/** Delta write: deleted rows → DV sidecars (per-face position encodings
+  * ride the scans' `_pos` on the way in and the faces' DV-aware reads on
+  * the way out), inserted rows → final parts through
+  * [[FaceConvert.toFaceParts]], one atomic manifest commit, full unwind
+  * (parts, sidecars, fresh DVs, leaf-stats entries) when the conflict
+  * check loses. A file whose UNION'd vector covers every row
+  * (stats-proven) is dropped from the manifest instead of carrying a
+  * full mask — shared with the engine path through
+  * [[FeatherMutations.bindDvs]]. */
+private class FaceDeltaWrite(op: RowLevelHost,
                                       info: LogicalWriteInfo,
                                       path: String, face: ConnectorFace,
                                       dataSchema: StructType,
@@ -482,14 +718,6 @@ private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
       s"delta ${op.command()} on $path: Spark supplied no rowId schema"))
   FaceConvert.requireFeatherMappable(rowSchema)
 
-  protected def finalizeInserts(fs: org.apache.hadoop.fs.FileSystem,
-                                msgs: Seq[FeatherCommitMessage],
-                                opName: String, targetV: Long)
-      : (Seq[(String, Long)],
-         Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])]) =
-    FaceConvert.toFaceParts(opName, face, fs, path, msgs, dataSchema,
-      partCols, targetV)
-
   override def build(): DeltaWrite = this
   override def toBatch(): DeltaBatchWrite = this
   override def description(): String =
@@ -498,7 +726,7 @@ private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
   override def createBatchWriterFactory(pinfo: PhysicalWriteInfo)
       : DeltaWriterFactory = {
     val spark = SparkSession.active
-    new FeatherDeltaWriterFactory(rowSchema, rowIdSchema, path,
+    new FaceDeltaWriterFactory(rowSchema, rowIdSchema, path,
       GraftHadoop.confBroadcast(spark))
   }
 
@@ -510,7 +738,7 @@ private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
     val state = op.scanState.getOrElse(throw new IllegalStateException(
       s"delta ${op.command()} on $path: write committed before the scan " +
         "planned — the touched-file set is unknown"))
-    val msgs = messages.collect { case m: FeatherDeltaCommitMessage => m }
+    val msgs = messages.collect { case m: FaceDeltaCommitMessage => m }
     val relOfAbs: Map[String, String] = state.snap.files.map {
       case (rel, _) =>
         new org.apache.hadoop.fs.Path(root, rel).toString -> rel }.toMap
@@ -532,13 +760,13 @@ private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
       catch { case _: Exception => () }
     }
     // nothing deleted, nothing inserted: a no-match statement publishes
-    // NO version (replay-clean, the COW sibling's contract)
+    // NO version (replay-clean, the COW contract)
     if (byFid.isEmpty && insertMsgs.isEmpty) return
     val targetV = state.snap.version + 1
     val opName =
       s"rowlevel_delta_${op.command().toString.toLowerCase}"
-    val (parts, flatStats) =
-      finalizeInserts(fs, insertMsgs, opName, targetV)
+    val (parts, flatStats) = FaceConvert.toFaceParts(opName, face, fs, path,
+      insertMsgs, dataSchema, partCols, targetV)
     // exact row counts (stats sidecars) let fully-masked files DROP from
     // the manifest instead of carrying a 100%-coverage vector — loads
     // are bounded by the TOUCHED file set, not the table
@@ -571,7 +799,7 @@ private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
       // the publish failed (conflict): parts, stamps, leaf-stats
       // entries, AND the freshly written DV sidecars were never
       // visible — delete them all
-      FeatherDsvWrites.deleteFinalized(fs, path, added.toSeq.map(_._1))
+      FaceConvert.deleteFinalized(fs, path, added.toSeq.map(_._1))
       FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
       bindings.values.foreach { case (dvRel, _) =>
         try fs.delete(new org.apache.hadoop.fs.Path(root, dvRel), false)
@@ -587,10 +815,69 @@ private[sources] class FaceDeltaWrite(op: FeatherRowLevelHost,
     val spark = SparkSession.active
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    messages.collect { case m: FeatherDeltaCommitMessage => m }
+    messages.collect { case m: FaceDeltaCommitMessage => m }
       .flatMap(_.insert).foreach { m =>
         try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
         catch { case _: Exception => () }
       }
+  }
+}
+
+/** One task's delta output: at most one insert part (tmp name + stats)
+  * plus its deleted positions grouped by ABSOLUTE data-file path. */
+private case class FaceDeltaCommitMessage(
+    insert: Option[FeatherCommitMessage],
+    deletes: Map[String, Array[Long]]) extends WriterCommitMessage
+
+private class FaceDeltaWriterFactory(
+    rowSchema: StructType, rowIdSchema: StructType, path: String,
+    confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]])
+    extends DeltaWriterFactory {
+
+  override def createWriter(partitionId: Int, taskId: Long)
+      : DeltaWriter[InternalRow] = new DeltaWriter[InternalRow] {
+    private val fileIdx = rowIdSchema.fieldIndex(GraftMetaColumns.FileName)
+    private val posIdx = rowIdSchema.fieldIndex(GraftMetaColumns.PosName)
+    // deleted positions per absolute file path — memory ∝ rows THIS task
+    // deletes (the same driver-side bound the engine's DV delete has,
+    // sharded across tasks here)
+    private val deletes = scala.collection.mutable.HashMap
+      .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
+    // the insert part writer opens lazily: a pure DELETE never creates
+    // a tmp file at all
+    private var insertPw
+        : org.apache.spark.sql.connector.write.DataWriter[InternalRow] = null
+    private def insertWriter = {
+      if (insertPw == null)
+        insertPw = FeatherSourceWriters.dataWriter(rowSchema, path,
+          f".part-$partitionId%05d-task-$taskId.feather.tmp",
+          "lz4", 4096, partitionId, confMap)
+      insertPw
+    }
+
+    override def delete(meta: InternalRow, id: InternalRow): Unit = {
+      // the id row is a reused projection — copy the file path out
+      val f = id.getUTF8String(fileIdx).toString
+      deletes.getOrElseUpdate(f,
+        scala.collection.mutable.ArrayBuffer.empty[Long]) += id.getLong(posIdx)
+      ()
+    }
+
+    override def insert(row: InternalRow): Unit = insertWriter.write(row)
+
+    // unreachable with representUpdateAsDeleteAndInsert = true; kept
+    // total so a Spark behavior change degrades to the same semantics
+    override def update(meta: InternalRow, id: InternalRow,
+                        row: InternalRow): Unit = {
+      delete(meta, id); insert(row)
+    }
+
+    override def commit(): WriterCommitMessage =
+      FaceDeltaCommitMessage(
+        Option(insertPw).map(_.commit().asInstanceOf[FeatherCommitMessage]),
+        deletes.view.mapValues(_.toArray).toMap)
+
+    override def abort(): Unit = if (insertPw != null) insertPw.abort()
+    override def close(): Unit = ()
   }
 }

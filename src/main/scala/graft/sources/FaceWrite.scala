@@ -229,7 +229,7 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
         removeRel = removeRel, add = added.toSeq,
         readRel = Some(removeRel)): Unit
     catch { case e: Throwable =>
-      FeatherDsvWrites.deleteFinalized(fs, path, added.toSeq.map(_._1))
+      FaceConvert.deleteFinalized(fs, path, added.toSeq.map(_._1))
       FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
       throw e
     }

@@ -1015,76 +1015,12 @@ private class FeatherReaderFactory(
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[FeatherInputPartition]
-    new PartitionReader[InternalRow] {
-      private val execConf = {
-        val c = new org.apache.hadoop.conf.Configuration(false)
-        confMap.value.foreach { case (k, v) => c.set(k, v) }
-        c
-      }
-      private var open: Option[AutoCloseable] = None
-      private val toInternal =
-        CatalystTypeConverters.createToCatalystConverter(readSchema)
-      // partition columns come from the directory chain, not the file:
-      // precompute their (projected-schema position → typed value) splice;
-      // the file decode projects only the remaining (data) columns
-      private val partRaw = p.partValues.toMap
-      private val partAt: Map[Int, Any] =
-        readSchema.fields.zipWithIndex.collect {
-          case (f, i) if partRaw.contains(f.name) =>
-            i -> FeatherPartitions.castValue(partRaw(f.name), f.dataType)
-        }.toMap
-      // `_pos` metadata column: per-ROW (unlike the per-split `_file`
-      // splice) — the decode switches to the position-carrying iterator
-      // and the splice injects each row's batch-absolute coordinate
-      private val posIdx: Int =
-        p.posName.map(readSchema.fieldIndex).getOrElse(-1)
-      private val dataNames =
-        readSchema.fieldNames.filterNot(n =>
-          partRaw.contains(n) || p.posName.contains(n)).toSeq
-      // a throw AFTER the reader opened but BEFORE construction finishes
-      // (missing column, corrupt footer) means Spark never gets a reader
-      // to close() — release here or the fd + Arrow buffers leak per retry
-      private val all: Iterator[(Long, org.apache.spark.sql.Row)] =
-        try {
-          // deletion vector: loaded once per split (executor-side, tiny
-          // file), applied as a position filter inside the decode
-          val dv = p.dvPath
-            .map(graft.io.DeletionVectors.read(execConf, _)).orNull
-          if (posIdx >= 0)
-            GraftFeather.splitRowsPos(
-              execConf, p.file, p.len, p.batchIdxs,
-              dataNames, r => open = Some(r), lenient = mergeSchema, dv = dv)
-          else
-            GraftFeather.splitRows(
-              execConf, p.file, p.len, p.batchIdxs,
-              dataNames, r => open = Some(r), lenient = mergeSchema, dv = dv)
-              .map((0L, _))
-        } catch { case e: Throwable =>
-          open.foreach(r => try r.close() catch { case _: Exception => () })
-          throw e
-        }
-      private val rows = if (limit >= 0) all.take(limit) else all
-      private var current: InternalRow = _
-      private def splice(pos: Long, dataRow: org.apache.spark.sql.Row)
-          : org.apache.spark.sql.Row =
-        if (partAt.isEmpty && posIdx < 0) dataRow
-        else {
-          var di = 0
-          org.apache.spark.sql.Row.fromSeq(
-            readSchema.fields.indices.map { i =>
-              if (i == posIdx) pos
-              else partAt.getOrElse(i, { val v = dataRow.get(di); di += 1; v })
-            })
-        }
-      override def next(): Boolean =
-        if (rows.hasNext) {
-          val (pos, r) = rows.next()
-          current = toInternal(splice(pos, r)).asInstanceOf[InternalRow]
-          true
-        } else false
-      override def get(): InternalRow = current
-      override def close(): Unit =
-        open.foreach(r => try r.close() catch { case _: Exception => () })
-    }
+    // the position-carrying decode serves both shapes: positions are
+    // batch-absolute and free to compute, the splice ignores them when
+    // `_pos` was not asked for
+    new SplicedRowReader(readSchema, p.partValues, p.posName, p.dvPath, limit,
+      confMap)((conf, cols, _, dv, track, _) =>
+      GraftFeather.splitRowsPos(conf, p.file, p.len, p.batchIdxs, cols, track,
+        lenient = mergeSchema, dv = dv))
   }
 }

@@ -57,4 +57,42 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("did not converge"))
   }
+
+  test("a run that fails mid-iteration releases its edge and round " +
+       "caches") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // a deep chain without contraction runs ~9 rounds, each at least one
+    // job: cancel every job of this run from the fourth on, so the
+    // failure lands inside the round loop with the edge cache and a live
+    // round persisted (a cancel that loses the race to a short job just
+    // hits the next one)
+    val chain = (0L until 499L).map(i => (i, i + 1)).toDF("d1", "d2")
+    val group = s"cc-fail-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val canceller = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group &&
+            jobs.incrementAndGet() >= 4)
+          sc.cancelJob(js.jobId)
+    }
+    val before = sc.getPersistentRDDs.size
+    sc.addSparkListener(canceller)
+    sc.setJobGroup(group, "connected components failure injection")
+    try {
+      val e = intercept[Exception] {
+        ConnectedComponents.minLabel(chain, localContract = false)
+      }
+      assert(Option(e.getMessage).exists(_.contains("cancel")),
+        s"expected a cancelled job, got: $e")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(canceller)
+    }
+    assert(jobs.get() >= 4)
+    assert(sc.getPersistentRDDs.size == before,
+      s"persisted RDDs leaked: ${sc.getPersistentRDDs.values.map(_.name)}")
+  }
 }

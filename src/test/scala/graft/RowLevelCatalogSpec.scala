@@ -531,7 +531,7 @@ class RowLevelCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0L until 40L).filterNot(_ % 4 == 0))
     assert(rows.forall(r => r.getLong(1) == r.getLong(0) * 7),
       "stored _pos values must survive the rewrite untouched")
-    // flat feather face, owned `_file` data column: the feather-native pair
+    // flat feather face, owned `_file` data column: the same one pair
     plain.sql("CREATE TABLE graft.rl.ownfile USING feather AS " +
       "SELECT id, concat('orig-', id) AS _file FROM range(0, 20)")
     plain.sql("UPDATE graft_dv.rl.ownfile SET _file = 'touched' " +
@@ -711,4 +711,79 @@ class RowLevelCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the winner's delete landed; the loser's did not
     assert(plain.sql("SELECT count(*) FROM graft.rl.race").head().getLong(0) == 9)
   }
+
+  test("multi-batch feather parts: graft_dv DELETE / UPDATE inside the " +
+       "middle batch equal a COW twin, skip the other batches, and COW " +
+       "rewrites the whole kept file") {
+    val n = 12000L // one task, 4096-row batches: three record batches
+    def liveParts(t: String): Seq[(String, Long)] =
+      snapOf(s"rl/$t").files.filterNot(_._1.endsWith("-empty.feather"))
+    def batchesOf(t: String): Seq[Int] = liveParts(t).map { case (rel, len) =>
+      // a 1-byte split budget gives every record batch its own split
+      graft.io.GraftFeather.planReadFiles(plain,
+        Seq((s"$wh/rl/$t/$rel", len)), 1L)._2.size
+    }
+    /** Rows the statement's table scan produced (BatchScanExec metric —
+      * accumulators merge before the command returns). */
+    def scanned(df: org.apache.spark.sql.DataFrame): Long = {
+      val plan = df.queryExecution.executedPlan match {
+        case c: org.apache.spark.sql.execution.CommandResultExec =>
+          c.commandPhysicalPlan
+        case p => p
+      }
+      new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(plan) {
+          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+            b.metrics("numOutputRows").value
+        }.sum
+    }
+    def rows(t: String): Seq[(Long, Long)] =
+      plain.sql(s"SELECT id, v FROM graft.rl.$t ORDER BY id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    for (partitioned <- Seq(false, true)) {
+      val sfx = if (partitioned) "p" else "f"
+      val (dv, cow) = (s"mbdv$sfx", s"mbcow$sfx")
+      for (t <- Seq(dv, cow)) {
+        plain.sql(s"CREATE TABLE graft.rl.$t USING feather " +
+          (if (partitioned) "PARTITIONED BY (day) " else "") +
+          "AS SELECT id, id * 10 AS v" +
+          (if (partitioned) ", 1 AS day" else "") +
+          s" FROM range(0, $n, 1, 1)")
+        val bs = batchesOf(t)
+        assert(bs.size == 1 && bs.head >= 3,
+          s"$t: expected one part with >= 3 record batches, got $bs")
+      }
+      val ctx = if (partitioned) "partitioned" else "flat"
+      val dvBefore = liveParts(dv).map(_._1).toSet
+      // a narrow id band inside the middle batch (rows 4096..8191)
+      val delDv = plain.sql(s"DELETE FROM graft_dv.rl.$dv " +
+        "WHERE id BETWEEN 5000 AND 5009")
+      assert(liveParts(dv).map(_._1).toSet == dvBefore &&
+        snapOf(s"rl/$dv").dvs.nonEmpty,
+        s"$ctx: the delta DELETE must bind a vector, not rewrite the part")
+      assert(scanned(delDv) <= 4096,
+        s"$ctx: the delta scan must skip the stats-empty batches, read " +
+          s"${scanned(delDv)} rows")
+      val cowBefore = liveParts(cow).map(_._1).toSet
+      val delCow = plain.sql(s"DELETE FROM graft.rl.$cow " +
+        "WHERE id BETWEEN 5000 AND 5009")
+      assert(scanned(delCow) == n,
+        s"$ctx: the COW scan reads the kept file whole: ${scanned(delCow)}")
+      val cowAfter = liveParts(cow).map(_._1).toSet
+      assert(cowAfter.intersect(cowBefore).isEmpty && cowAfter.nonEmpty,
+        s"$ctx: the COW DELETE must replace the kept file: " +
+          s"$cowBefore -> $cowAfter")
+      assert(plain.sql(s"SELECT count(*) FROM graft.rl.$cow").head()
+        .getLong(0) == n - 10)
+      for (cat <- Seq("graft_dv", "graft")) {
+        val t = if (cat == "graft_dv") dv else cow
+        plain.sql(s"UPDATE $cat.rl.$t SET v = -v WHERE id BETWEEN 6000 AND 6004")
+      }
+      val expected = (0L until n).filterNot(i => i >= 5000 && i <= 5009)
+        .map(i => (i, if (i >= 6000 && i <= 6004) -i * 10 else i * 10))
+      assert(rows(dv) == expected, s"$ctx: delta rows")
+      assert(rows(cow) == expected, s"$ctx: COW rows")
+    }
+  }
 }
+
