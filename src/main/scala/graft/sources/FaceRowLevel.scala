@@ -233,7 +233,7 @@ private[sources] class FaceScan(host: Option[RowLevelHost],
     // partition-DIRECTORY pruning first (free), then STATS-FIRST
     // whole-file pruning, then blooms for point lookups, footers only
     // for survivors: the sidecars are length-validated (a present entry
-    // covers exactly this file's every batch) and loads are merged-first
+    // covers every row of exactly this file) and loads are merged-first
     // — O(directories) + O(kept) planning, never O(files) footer fetches
     // for a narrow statement over a wide table
     val leafKept =
@@ -282,25 +282,21 @@ private[sources] class FaceScan(host: Option[RowLevelHost],
   }
 
   /** Footer-planned record-batch splits of the surviving feather files. A
-    * file no larger than one split whose stats sidecar covers it needs no
-    * footer read: the sidecar holds one entry per record batch. A file
-    * the plan gives ZERO batches can never produce a row — never a group.
-    * Delta scans also drop stats-empty batches inside kept files. */
+    * file the plan gives ZERO batches can never produce a row — never a
+    * group. Delta scans also drop stats-empty batches inside kept files.
+    * Stats only prune: a sidecar holds one entry per batch for a part the
+    * engine wrote but ONE entry for the whole file after a backfill, so
+    * its length is never the file's batch count (hence `i < stats.size`;
+    * a whole-file entry that proves batch 0 empty proves the file empty). */
   private def featherSplits(
       spark: SparkSession, files: Seq[FeatherPartitions.LeafFile],
       statsByFile: Map[String, Option[Seq[Map[String, FeatherStats.ColStat]]]])
       : Seq[(FeatherPartitions.LeafFile, Seq[Int])] = {
-    def statsOf(f: String) = statsByFile.getOrElse(f, None)
-    val (covered, footered) = files.partition(l =>
-      l.len <= FaceRowLevel.MaxSplitBytes && statsOf(l.file).isDefined)
+    if (files.isEmpty) return Nil
     val byFile = files.map(l => l.file -> l).toMap
-    val planned = covered.map(l => (l.file, statsOf(l.file).get.indices)) ++
-      (if (footered.isEmpty) Nil
-       else GraftFeather.planReadFiles(spark,
-         footered.map(l => (l.file, l.len)), FaceRowLevel.MaxSplitBytes)._2
-         .map { case (f, _, idxs) => (f, idxs) })
-    planned.flatMap { case (f, idxs) =>
-      val keep = statsOf(f) match {
+    GraftFeather.planReadFiles(spark, files.map(l => (l.file, l.len)),
+      FaceRowLevel.MaxSplitBytes)._2.flatMap { case (f, _, idxs) =>
+      val keep = statsByFile.getOrElse(f, None) match {
         case Some(stats) if batchSkip => idxs.filterNot(i => i < stats.size &&
           FeatherStats.batchProvablyEmpty(stats(i), fileFilters))
         case _ => idxs

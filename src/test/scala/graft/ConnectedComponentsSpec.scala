@@ -63,10 +63,11 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     import spark.implicits._
     val sc = spark.sparkContext
     // a deep chain without contraction runs ~9 rounds, each at least one
-    // job: cancel every job of this run from the fourth on, so the
-    // failure lands inside the round loop with the edge cache and a live
-    // round persisted (a cancel that loses the race to a short job just
-    // hits the next one)
+    // job: once the fourth job of this run starts, cancel its group AND
+    // every job the group submits later, so the failure lands inside the
+    // round loop with the edge cache and a live round persisted. Jobs
+    // submitted after the cancel fail at submission, so a short job that
+    // finishes before the cancel arrives cannot let the run complete
     val chain = (0L until 499L).map(i => (i, i + 1)).toDF("d1", "d2")
     val group = s"cc-fail-${System.nanoTime()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -75,8 +76,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (js.properties != null &&
             js.properties.getProperty("spark.jobGroup.id") == group &&
-            jobs.incrementAndGet() >= 4)
-          sc.cancelJob(js.jobId)
+            jobs.incrementAndGet() == 4)
+          sc.cancelJobGroupAndFutureJobs(group, "failure injection")
     }
     val before = sc.getPersistentRDDs.size
     sc.addSparkListener(canceller)

@@ -785,5 +785,50 @@ class RowLevelCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rows(cow) == expected, s"$ctx: COW rows")
     }
   }
-}
 
+  test("adopted multi-batch feather parts with a backfilled whole-file " +
+       "sidecar: COW and graft_dv DELETE / UPDATE past batch 0 keep every " +
+       "batch") {
+    // a foreign directory: parts written outside any table, sidecars
+    // stripped, adopted (the MSCK REPAIR body), then CALL analyze, whose
+    // backfill writes ONE stats entry for the whole multi-batch file
+    val n = 12000L
+    val conf = plain.sparkContext.hadoopConfiguration
+    for (partitioned <- Seq(false, true); cat <- Seq("graft", "graft_dv")) {
+      val t = s"adopt${if (partitioned) "p" else "f"}${cat.replace("_", "")}"
+      val ctx = s"$cat ${if (partitioned) "partitioned" else "flat"}"
+      val root = new org.apache.hadoop.fs.Path(s"$wh/rl/$t")
+      val leaf = if (partitioned) new org.apache.hadoop.fs.Path(root, "day=1")
+        else root
+      val fs = root.getFileSystem(conf)
+      fs.mkdirs(leaf)
+      val written = graft.io.GraftFeather.writeParts(
+        plain.range(0, n, 1, 1).selectExpr("id", "id * 10 AS v"),
+        leaf.toString, "part")
+      assert(written.size == 1)
+      val (name, len, _) = written.head
+      val part = new org.apache.hadoop.fs.Path(leaf, name)
+      assert(graft.io.GraftFeather.planReadFiles(plain,
+        Seq((part.toString, len)), 1L)._2.size >= 3,
+        s"$ctx: expected one part with >= 3 record batches")
+      assert(fs.delete(new org.apache.hadoop.fs.Path(
+        leaf, s"$name.stats.json"), false))
+      graft.io.TableDdl.repairTable(plain, root.toString)
+      assert(plain.sql(s"CALL graft.system.analyze('rl.$t')").head()
+        .getLong(0) == 1L, s"$ctx: one sidecar to backfill")
+      val stats = graft.io.FeatherStats.loadForFiles(conf,
+        Seq((part.toString, len)))(part.toString)
+      assert(stats.exists(_.size == 1),
+        s"$ctx: the backfilled sidecar holds one whole-file entry: $stats")
+      // bands outside batch 0 (rows 0..4095): one in batch 1, one in 2
+      plain.sql(s"DELETE FROM $cat.rl.$t WHERE id >= 5000 AND id <= 5009")
+      plain.sql(s"UPDATE $cat.rl.$t SET v = -v WHERE id >= 9000 AND id <= 9004")
+      val expected = (0L until n).filterNot(i => i >= 5000 && i <= 5009)
+        .map(i => (i, if (i >= 9000 && i <= 9004) -i * 10 else i * 10))
+      val got = plain.sql(s"SELECT id, v FROM graft.rl.$t ORDER BY id")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(got.size == expected.size, s"$ctx: ${got.size} rows")
+      assert(got == expected, s"$ctx: rows")
+    }
+  }
+}
