@@ -424,6 +424,7 @@ object ScaleRehearsal {
       val labels = graft.ops.ConnectedComponents.minLabel(chain)
       val distinct = labels.select("label").distinct().count()
       val secs = (System.nanoTime() - t0) / 1e9
+      graft.ops.OrderedOps.clearPins() // the labels' persisted last round
       require(distinct == 1L, s"a chain is ONE component, got $distinct labels")
       val failed =
         // contraction off: the loud-failure contract is about the
@@ -433,6 +434,7 @@ object ScaleRehearsal {
                 localContract = false)
               .write.format("noop").mode("overwrite").save(); false }
         catch { case _: IllegalStateException => true }
+        finally graft.ops.OrderedOps.clearPins()
       require(failed, s"cap 4 on a $n-vertex chain MUST fail loudly")
       println(f"""{"cc_chain_n":$n,"converged_sec":$secs%.2f,"one_component":true,"tiny_cap_loud_failure":true}""")
     }
@@ -565,9 +567,11 @@ object ScaleRehearsal {
     *  - a scattered graft_dv DELETE must rewrite ZERO data files
     *    (DV sidecars only, bytes ∝ deleted rows), and a SQL read of the
     *    DV-bound snapshot must match the model (timed),
-    *  - a COW MERGE that updates two leaves and inserts a brand-new
-    *    partition value must route the inserts to the new leaf inside
-    *    the one commit.
+    *  - a COW MERGE whose keys match only in day=0 and that inserts a
+    *    brand-new partition value must replace only day=0's files (the
+    *    runtime group filter; every other leaf carried through the
+    *    manifest verbatim, DV bindings included) and route the inserts
+    *    to the new leaf inside the one commit.
     *
     * Wall times print per statement; the structural claims are REQUIREd
     * (a receipt that stopped checking is not a receipt). */
@@ -633,7 +637,8 @@ object ScaleRehearsal {
     val dvReadSec = dvReads.map(_._1).min
     require(dvReads.forall(_._2 == ((liveN, liveV))),
       s"DV-bound read ${dvReads.map(_._2)} != model ($liveN, $liveV)")
-    // 3. COW MERGE: update two leaves, insert a NEW partition value
+    // 3. COW MERGE: keys id * 16 match only day=0 rows, the rest insert
+    // under a NEW partition value
     t0 = System.nanoTime()
     spark.sql(s"MERGE INTO $cow t USING " +
       s"(SELECT id * 16 AS id, CAST(8 AS LONG) AS day, " +
@@ -646,6 +651,13 @@ object ScaleRehearsal {
     val s3 = snap
     require(dataFiles(s3).exists(_._1.startsWith("day=8/")),
       "NOT MATCHED inserts must route to the new day=8 leaf")
+    val mergeRemoved = dataFiles(s2).map(_._1).toSet --
+      dataFiles(s3).map(_._1).toSet
+    require(mergeRemoved.nonEmpty && mergeRemoved.forall(_.startsWith("day=0/")),
+      s"the MERGE must replace ONLY day=0 files: $mergeRemoved")
+    require(dataFiles(s2).filterNot(_._1.startsWith("day=0/")).forall(f =>
+        dataFiles(s3).contains(f) && s3.dvs.get(f._1) == s2.dvs.get(f._1)),
+      "the MERGE must carry every other leaf through the manifest verbatim")
     val count = spark.sql(s"SELECT count(*) FROM $cow")
       .head().getLong(0)
     val expect = {
@@ -656,7 +668,7 @@ object ScaleRehearsal {
       afterDel + (0L until 600000L).map(_ * 16).count(!live(_))
     }
     require(count == expect, s"row count $count != model $expect")
-    println(f"""{"facedml_rows":$n,"leaves":8,"files":${dataFiles(s0).size},"pruned_delete_sec":$delSec%.2f,"rewritten_files":${removed.size},"dv_delete_sec":$dvSec%.2f,"dv_bytes":$dvBytes,"dv_read_sec":$dvReadSec%.2f,"merge_sec":$mrgSec%.2f,"final_rows":$count}""")
+    println(f"""{"facedml_rows":$n,"leaves":8,"files":${dataFiles(s0).size},"pruned_delete_sec":$delSec%.2f,"rewritten_files":${removed.size},"dv_delete_sec":$dvSec%.2f,"dv_bytes":$dvBytes,"dv_read_sec":$dvReadSec%.2f,"merge_sec":$mrgSec%.2f,"merge_removed_files":${mergeRemoved.size},"final_rows":$count}""")
   }
 
   /** Catalog-only parquet BATCH-read tier (r19 ask #1's receipt): the

@@ -791,7 +791,9 @@ private[graft] class GraftTable(
       // (bytes ∝ deleted rows — the merge-on-read parity the graft_dv
       // spelling promises). Every face and layout takes the one
       // FaceRowLevel pair; what differs per face (feather batch splits,
-      // zero-copy flat-feather inserts, hive routing) is chosen inside it.
+      // zero-copy flat-feather inserts, hive routing) is chosen inside it,
+      // and its COW scan narrows the groups at runtime to the files
+      // holding a match (Spark's runtime group filter on `_file`).
       // A table that OWNS a `_pos` or `_file` column (data or hive
       // partition) shadows the engine's metadata columns — Spark hides
       // a conflicting metadata column, so the delta rowId (`_file`,
@@ -802,7 +804,9 @@ private[graft] class GraftTable(
       // graft_dv catalog: COW never consumes rowId values (the scan
       // state names the groups, rows are rewritten wholesale), so the
       // statement stays correct — it just pays copy-on-write instead of
-      // merge-on-read. Pinned by RowLevelCatalogSpec's owned-rowid rows.
+      // merge-on-read, without the runtime group filter (an owned `_file`
+      // would filter on stored values). Pinned by RowLevelCatalogSpec's
+      // owned-rowid rows.
       private val ownsRowId = schema().fieldNames.exists(n =>
         n == graft.sources.GraftMetaColumns.FileName ||
           n == graft.sources.GraftMetaColumns.PosName)

@@ -35,9 +35,10 @@ import org.apache.spark.sql.functions._
   * The undirected EDGE list is the one other persisted relation: a
   * DataFrame cache every round reads, held for the whole loop. Both
   * caches are released on EVERY exit path (try/finally): the edges
-  * always, the live round unless it is the returned labels (the caller
-  * owns those), so a failed or cancelled job mid-iteration leaks no
-  * block.
+  * always, the live round unless it is the returned labels, so a failed
+  * or cancelled job mid-iteration leaks no block. The returned labels'
+  * round is registered with [[OrderedOps.clearPins]]: the caller's
+  * clearPins() after its consuming action frees it.
   *
   * The round cap still exists and hitting it FAILS LOUDLY: silently
   * returning partially-propagated labels would under-merge clusters and
@@ -167,7 +168,8 @@ object ConnectedComponents {
       .select(col("e.d1").as("d1"), col("e.d2").as("d2"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the live round's release handle: every exit but the successful
-    // return frees it (the caller owns the returned labels)
+    // return frees it; the successful return registers it as a pin, so
+    // the caller's OrderedOps.clearPins() after its action frees it
     var releaseLive: () => Unit = () => ()
     var returned = false
     try {
@@ -217,6 +219,7 @@ object ConnectedComponents {
             " vertices, so this is a data or logic bug, not a deep graph. " +
             "Returning the partial labels would under-merge clusters " +
             "(duplicates would pass the dedup gate).")
+      graft.ops.OrderedOps.onClearPins(releaseLive)
       returned = true
       labels
     } finally {

@@ -43,14 +43,21 @@ object OrderedOps {
   // pins — which would re-expose the re-sampling hazard the pin closes.
   // Callers with a clear query boundary (Verify/Bench loops, notebook
   // cells) call clearPins() on the same thread after the consuming action.
-  private val pins = ThreadLocal.withInitial[java.util.ArrayDeque[DataFrame]](
-    () => new java.util.ArrayDeque[DataFrame]())
+  // The registry holds RELEASE ACTIONS, not frames: an intermediate
+  // persisted as an RDD behind createDataFrame (connected components'
+  // labels) is not freed by unpersisting its DataFrame wrapper.
+  private val pins = ThreadLocal.withInitial[java.util.ArrayDeque[() => Unit]](
+    () => new java.util.ArrayDeque[() => Unit]())
 
   private[graft] def pinned(df: DataFrame): DataFrame = {
     val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pins.get().add(p)
+    onClearPins(() => { p.unpersist(blocking = false); () })
     p
   }
+
+  /** Registers `release` to run at this thread's next clearPins(). */
+  private[graft] def onClearPins(release: () => Unit): Unit =
+    pins.get().add(release)
 
   /** Unpersists every relation pinned ON THIS THREAD since the last call.
     * Safe ONLY after the consuming action has run — unpersisting a pin
@@ -59,8 +66,8 @@ object OrderedOps {
     * on a frame after clearPins() re-samples likewise. */
   def clearPins(): Unit = {
     val q = pins.get()
-    var p = q.poll()
-    while (p != null) { p.unpersist(blocking = false); p = q.poll() }
+    var release = q.poll()
+    while (release != null) { release(); release = q.poll() }
   }
 
   /** Adds a global running total of `valueCol` in the order of `sortCols`

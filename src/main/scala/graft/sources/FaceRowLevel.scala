@@ -2,8 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
+import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.types.StructType
@@ -43,20 +44,30 @@ import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats,
   * "groups" the commit atomically replaces with the rewrite query's
   * output. Spark's planning rule (GroupBasedRowLevelOperationScanPlanning)
   * pushes the command's condition into the scan builder; the scan uses it
-  * ONLY to prune whole files (partition directories, stats sidecars
-  * proving every batch empty, blooms excluding every point lookup),
-  * NEVER to drop rows or batches inside a kept file — they would silently
-  * vanish from the rewritten table. Every pushed filter returns as
-  * residual, so Spark re-evaluates the predicate row by row.
+  * ONLY to prune whole files at planning time (partition directories,
+  * stats sidecars proving every batch empty, blooms excluding every point
+  * lookup), NEVER to drop rows or batches inside a kept file — they would
+  * silently vanish from the rewritten table. Every pushed filter returns
+  * as residual, so Spark re-evaluates the predicate row by row. A
+  * condition no file statistic can answer (MERGE `ON t.id = s.id`,
+  * `WHERE id % 97 = 5`) then narrows at RUNTIME: the COW scan offers
+  * `_file` to Spark's RowLevelOperationRuntimeGroupFiltering, which runs
+  * the statement's matching-rows query and hands back `_file IN (…)`, so
+  * the groups become the planned files that hold a match and every other
+  * file carries through the manifest under its own name.
   *
   * The scan and the write share one operation instance: the scan records
-  * the snapshot it planned against and the files it kept
+  * the snapshot it planned against, the groups and the planned files
   * ([[RowLevelScanState]]); the commit publishes through
-  * [[FeatherSnapshots.commitMutation]] with readRel = those files — the
-  * read-set optimistic-concurrency contract (a concurrent rewrite of a
-  * READ file aborts loudly; disjoint mutations and blind appends
-  * commute). A statement that neither reads a group nor writes a row
-  * publishes NO version. The manifest commit swaps groups (COW) or binds
+  * [[FeatherSnapshots.commitMutation]] with readRel = the PLANNED files,
+  * never the runtime-narrowed groups — the read-set
+  * optimistic-concurrency contract (a concurrent rewrite or DV re-bind
+  * of a READ file aborts loudly; disjoint mutations and blind appends
+  * commute). The matching-rows query reads through the table's batch
+  * scan, possibly at a newer snapshot: a file it pruned because a racing
+  * commit rewrote it is still in the read set, so the statement aborts
+  * instead of missing that file's matches. A statement that neither
+  * reads a group nor writes a row publishes NO version. The manifest commit swaps groups (COW) or binds
   * deletion vectors (delta); tmp parts are deleted either way, and a
   * failed commit unwinds the final parts and fresh DV sidecars.
   *
@@ -92,23 +103,28 @@ private[graft] object FaceRowLevel {
   * plans strictly before the write commits. */
 private[sources] trait RowLevelHost {
   def command(): Command
-  /** Delta scans may skip batches inside kept files; COW scans may not. */
-  def batchSkip: Boolean
+  /** COW scans are group-based: whole files, narrowed at runtime to the
+    * files holding a match. Delta scans may skip batches inside kept
+    * files instead. */
+  def groupBased: Boolean
   @volatile private[sources] var scanState: Option[RowLevelScanState] = None
 }
 
-/** What the row-level scan read: the snapshot it planned against and the
+/** What the row-level scan read: the snapshot it planned against, the
   * root-relative names of the files it kept (= the groups a COW commit
-  * replaces, the read set of either commit). */
+  * replaces; the runtime group filter narrows them to the files holding
+  * a match) and the files it planned before any runtime filter (the read
+  * set of either commit). */
 private[sources] final case class RowLevelScanState(
-    snap: FeatherSnapshots.Snapshot, keptRel: Set[String])
+    snap: FeatherSnapshots.Snapshot, keptRel: Set[String],
+    readRel: Set[String])
 
 private class FaceCowOperation(cmd: Command, path: String,
                                face: ConnectorFace, dataSchema: StructType,
                                partCols: Seq[String], partSchema: StructType)
     extends RowLevelOperation with RowLevelHost {
   override def command(): Command = cmd
-  override def batchSkip: Boolean = false
+  override def groupBased: Boolean = true
   override def description(): String =
     s"graft COW $cmd on $path (${face.label} face)"
   /** `_file` rides the rewrite plan: a metadata attribute puts Spark's
@@ -140,7 +156,7 @@ private class FaceDeltaOperation(cmd: Command, path: String,
     with org.apache.spark.sql.connector.write.SupportsDelta
     with RowLevelHost {
   override def command(): Command = cmd
-  override def batchSkip: Boolean = true
+  override def groupBased: Boolean = false
   override def description(): String =
     s"graft delta (merge-on-read) $cmd on $path (${face.label} face)"
   override def rowId(): Array[NamedReference] =
@@ -205,9 +221,10 @@ private[sources] class FaceScan(host: Option[RowLevelHost],
                                 partSchema: StructType,
                                 pinnedVersion: Option[Long],
                                 owned: Set[String] = Set.empty)
-    extends Scan with Batch with SupportsReportStatistics {
+    extends Scan with Batch with SupportsReportStatistics
+    with SupportsRuntimeV2Filtering {
   private val feather = face eq ConnectorFace.FeatherFace
-  private val batchSkip = host.exists(_.batchSkip)
+  private val batchSkip = host.exists(!_.groupBased)
   override def readSchema(): StructType = readSchema0
   override def description(): String =
     s"graft ${face.label} face scan `$path`" + (if (fileFilters.nonEmpty)
@@ -263,7 +280,8 @@ private[sources] class FaceScan(host: Option[RowLevelHost],
       if (!feather) candidates.map(l => (l, Nil))
       else featherSplits(spark, candidates, statsByFile)
     val kept = splits.map(_._1).distinct
-    val state = RowLevelScanState(snap, kept.map(l => relOfAbs(l.file)).toSet)
+    val keptRel = kept.map(l => relOfAbs(l.file)).toSet
+    val state = RowLevelScanState(snap, keptRel, keptRel)
     val parts = splits.map { case (l, idxs) =>
       // `_file` splices per split exactly like a partition value; `_pos`
       // rides per row; the DV binding rides every split of its file
@@ -305,10 +323,67 @@ private[sources] class FaceScan(host: Option[RowLevelHost],
     }
   }
 
+  /** The runtime group filter (Spark's
+    * RowLevelOperationRuntimeGroupFiltering): offered on COW scans only,
+    * never when the table owns `_file` (the reference would resolve to
+    * stored values — [[GraftMetaColumns.fileValue]]'s shadowing rule),
+    * and only when the plan kept more than one file (with one, the
+    * filter can only turn a no-match statement into a no-op, for two
+    * extra jobs on every pruned UPDATE). Asking resolves [[planned]]:
+    * the rule asks BEFORE it builds the matching-rows query, so that
+    * query's batch scan reads this snapshot or a newer one, never an
+    * older one — a newer one is what the read-set check catches. */
+  override def filterAttributes(): Array[NamedReference] =
+    if (host.exists(_.groupBased) &&
+        !owned.contains(GraftMetaColumns.FileName) &&
+        planned._1.keptRel.size > 1)
+      Array(Expressions.column(GraftMetaColumns.FileName))
+    else Array.empty
+
+  /** Planned files narrowed to those the runtime filter names — None
+    * until Spark calls [[filter]]. */
+  @volatile private var runtimeKept: Option[Set[String]] = None
+
+  /** Records `_file IN (…)` — the files the matching-rows query saw a
+    * match in. Planning is not redone: [[planInputPartitions]] drops the
+    * other files' splits. Any other predicate narrows nothing. */
+  override def filter(predicates: Array[Predicate]): Unit = {
+    val (state, _, _) = planned
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
+      SparkSession.active.sparkContext.hadoopConfiguration)
+    predicates.foreach { p =>
+      p.children().toSeq match {
+        case (ref: NamedReference) +: values if p.name() == "IN" &&
+            ref.fieldNames().sameElements(Array(GraftMetaColumns.FileName)) =>
+          val hit = values.collect { case l: Literal[_] =>
+            GraftMetaColumns.fileKey(fs, l.value().toString) }.toSet
+          runtimeKept = Some(runtimeKept.getOrElse(state.keptRel).filter(rel =>
+            hit(GraftMetaColumns.fileKey(fs, absOf(rel)))))
+        case _ => ()
+      }
+    }
+  }
+
+  private def absOf(rel: String): String =
+    new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(path), rel)
+      .toString
+
+  /** Spark calls this again after [[filter]]: that call publishes the
+    * narrowed groups (the read set stays the planned files). */
   override def planInputPartitions(): Array[InputPartition] = {
     val (state, parts, _) = planned
-    host.foreach(_.scanState = Some(state))
-    parts
+    runtimeKept match {
+      case None =>
+        host.foreach(_.scanState = Some(state))
+        parts
+      case Some(rels) =>
+        host.foreach(_.scanState = Some(state.copy(keptRel = rels)))
+        val abs = rels.map(absOf)
+        parts.filter {
+          case p: FeatherInputPartition => abs(p.file)
+          case p: FaceInputPartition => abs(p.file)
+        }
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -427,6 +502,13 @@ private[graft] object GraftMetaColumns {
         !existing.exists(_._1 == FileName) && !owned.contains(FileName))
       Seq(FileName -> f)
     else Seq.empty
+
+  /** One spelling of a `_file` value for comparisons: the batch reads
+    * splice each face's own spelling of the path (scheme or not), so a
+    * runtime `_file` filter compares fully-qualified forms. */
+  def fileKey(fs: org.apache.hadoop.fs.FileSystem, f: String): String =
+    new org.apache.hadoop.fs.Path(f)
+      .makeQualified(fs.getUri, fs.getWorkingDirectory).toString
 }
 
 /** What a reader factory supplies to [[SplicedRowReader]]: the split's
@@ -672,7 +754,7 @@ private class FaceCowWrite(op: RowLevelHost,
     try
       FeatherSnapshots.commitMutation(fs, root, opName, state.snap,
         removeRel = state.keptRel, add = added.toSeq,
-        readRel = Some(state.keptRel)): Unit
+        readRel = Some(state.readRel)): Unit
     catch { case e: Throwable =>
       FaceConvert.deleteFinalized(fs, path, added.toSeq.map(_._1))
       FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
@@ -790,7 +872,7 @@ private class FaceDeltaWrite(op: RowLevelHost,
     try
       FeatherSnapshots.commitMutation(fs, root, opName, state.snap,
         removeRel = droppedRel, add = added.toSeq, setDvs = bindings,
-        readRel = Some(state.keptRel)): Unit
+        readRel = Some(state.readRel)): Unit
     catch { case e: Throwable =>
       // the publish failed (conflict): parts, stamps, leaf-stats
       // entries, AND the freshly written DV sidecars were never

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.ConnectedComponents
+import graft.ops.{ConnectedComponents, OrderedOps}
 
 /** Pins the min-label propagation contract: correct components on branchy
   * graphs, and a LOUD failure (never silent partial labels) when a
@@ -93,6 +93,22 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       sc.removeSparkListener(canceller)
     }
     assert(jobs.get() >= 4)
+    assert(sc.getPersistentRDDs.size == before,
+      s"persisted RDDs leaked: ${sc.getPersistentRDDs.values.map(_.name)}")
+  }
+
+  test("a successful run's labels are released by clearPins() after the " +
+       "consuming action") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    OrderedOps.clearPins() // earlier cases' registrations
+    val before = sc.getPersistentRDDs.size
+    val chain = (0L until 99L).map(i => (i, i + 1)).toDF("d1", "d2")
+    val labels = ConnectedComponents.minLabel(chain).collect()
+    assert(labels.map(_.getAs[Long]("label")).toSet == Set(0L))
+    assert(sc.getPersistentRDDs.size == before + 1,
+      "the returned labels stay persisted until the caller's clearPins()")
+    OrderedOps.clearPins()
     assert(sc.getPersistentRDDs.size == before,
       s"persisted RDDs leaked: ${sc.getPersistentRDDs.values.map(_.name)}")
   }

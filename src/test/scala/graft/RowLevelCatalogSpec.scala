@@ -831,4 +831,195 @@ class RowLevelCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got == expected, s"$ctx: rows")
     }
   }
+
+  // ---- runtime group filtering on `_file` ----------------------------------
+
+  /** Live data files (schema stamps excluded), root-relative. */
+  private def liveFiles(t: String): Set[String] =
+    snapOf(s"rl/$t").files.map(_._1).filterNot(_.contains("-empty.")).toSet
+
+  /** The root-relative file holding row `id` (through the batch read's
+    * `_file`). */
+  private def fileOf(t: String, id: Long): String = {
+    val abs = plain.sql(s"SELECT _file FROM graft.rl.$t WHERE id = $id")
+      .head().getString(0)
+    val hits = liveFiles(t).filter(rel => abs.endsWith("/" + rel))
+    assert(hits.size == 1, s"$t: id $id lives in $abs, live ${liveFiles(t)}")
+    hits.head
+  }
+
+  /** Every BatchScanExec of the statement's executed plan (not its
+    * subqueries), with its runtime filters. */
+  private def batchScans(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] = {
+    val plan = df.queryExecution.executedPlan match {
+      case c: org.apache.spark.sql.execution.CommandResultExec =>
+        c.commandPhysicalPlan
+      case p => p
+    }
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(plan) {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b
+      }
+  }
+
+  private def idv(t: String): Map[Long, Long] =
+    plain.sql(s"SELECT id, v FROM graft.rl.$t").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** `PARTITIONED BY (day)` table, two INSERTs → two files per leaf: ids
+    * 0..39 and 100..139, day = id % 2, v = id. */
+  private def twoFilesPerLeaf(t: String, face: String): Map[Long, Long] = {
+    def rows(lo: Int) = s"SELECT id + $lo AS id, id + $lo AS v, " +
+      s"CAST((id + $lo) % 2 AS INT) AS day FROM range(0, 40, 1, 1)"
+    plain.sql(s"CREATE TABLE graft.rl.$t USING $face PARTITIONED BY (day) " +
+      s"AS ${rows(0)}")
+    plain.sql(s"INSERT INTO graft.rl.$t ${rows(100)}")
+    val files = liveFiles(t)
+    assert(files.size == 4 &&
+      files.groupBy(_.takeWhile(_ != '/')).values.forall(_.size == 2),
+      s"$t: expected two files in each of two leaves, got $files")
+    ((0L until 40L) ++ (100L until 140L)).map(i => i -> i).toMap
+  }
+
+  /** Flat table of three one-part INSERTs: ids 10..50, 100..140,
+    * 200..240, v = id. */
+  private def threeFlatFiles(t: String, face: String): Map[Long, Long] = {
+    plain.sql(s"CREATE TABLE graft.rl.$t (id BIGINT, v BIGINT) USING $face")
+    for (lo <- Seq(10, 100, 200))
+      plain.sql(s"INSERT INTO graft.rl.$t SELECT id + $lo, id + $lo " +
+        "FROM range(0, 41, 1, 1)")
+    assert(liveFiles(t).size == 3, s"$t: ${liveFiles(t)}")
+    Seq(10L, 100L, 200L).flatMap(lo => (lo to lo + 40).map(i => i -> i)).toMap
+  }
+
+  /** The churn-shaped MERGE: `ON t.id = s.id`, UPDATE matched, INSERT the
+    * rest; matched rows get v = -id, inserted ones v = -id too. */
+  private def churnMerge(t: String, ids: Seq[Long]): org.apache.spark.sql.DataFrame =
+    plain.sql(s"MERGE INTO graft.rl.$t t USING (SELECT id, -id AS v, " +
+      s"CAST(id % 2 AS INT) AS day FROM (SELECT explode(array(" +
+      s"${ids.mkString(", ")})) AS id)) s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *")
+
+  test("runtime group filter: a MERGE ON t.id = s.id whose matches lie in " +
+       "one file of one leaf replaces exactly that file, on every face") {
+    for (face <- Seq("feather", "parquet", "avro")) {
+      val t = s"rgf_$face"
+      var model = twoFilesPerLeaf(t, face)
+      val before = liveFiles(t)
+      val target = fileOf(t, 101)
+      assert(fileOf(t, 103) == target)
+      // 101 and 103 match in day=1's second file; 500 and 502 are new
+      val df = churnMerge(t, Seq(101L, 103L, 500L, 502L))
+      model ++= Seq(101L, 103L, 500L, 502L).map(i => i -> -i)
+      val after = liveFiles(t)
+      assert(before -- after == Set(target),
+        s"$face: only the matching file may be replaced, removed " +
+          s"${before -- after}")
+      assert(after.size == before.size + 1 || after.size == before.size + 2,
+        s"$face: the rewrite and the inserts add files: ${after -- before}")
+      assert(idv(t) == model, s"$face: rows")
+      assert(batchScans(df).exists(_.runtimeFilters.nonEmpty),
+        s"$face: the target scan must carry the runtime group filter")
+    }
+  }
+
+  test("runtime group filter: a MERGE whose source keys all miss publishes " +
+       "its NOT MATCHED inserts and removes no file") {
+    val t = "rgf_miss"
+    var model = twoFilesPerLeaf(t, "feather")
+    val before = liveFiles(t)
+    val v0 = snapOf(s"rl/$t").version
+    churnMerge(t, Seq(600L, 601L))
+    model ++= Seq(600L, 601L).map(i => i -> -i)
+    val after = snapOf(s"rl/$t")
+    assert(after.version == v0 + 1, "the inserts publish one version")
+    assert(before.subsetOf(liveFiles(t)),
+      s"no file may be removed: ${before -- liveFiles(t)}")
+    assert(idv(t) == model)
+  }
+
+  test("runtime group filter: a non-pushable COW DELETE on a flat " +
+       "multi-file table replaces only the file holding a match, on every " +
+       "face") {
+    for (face <- Seq("feather", "parquet", "avro")) {
+      val t = s"rgd_$face"
+      // id % 97 = 5 matches only id 102 (ids 10..50, 100..140, 200..240)
+      val model = threeFlatFiles(t, face) - 102L
+      val before = liveFiles(t)
+      val target = fileOf(t, 102)
+      val df = plain.sql(s"DELETE FROM graft.rl.$t WHERE id % 97 = 5")
+      assert(before -- liveFiles(t) == Set(target),
+        s"$face: removed ${before -- liveFiles(t)}, expected $target")
+      assert(idv(t) == model, s"$face: rows")
+      assert(batchScans(df).exists(_.runtimeFilters.nonEmpty), face)
+    }
+  }
+
+  test("runtime group filter: a table OWNING `_file` stays correct and is " +
+       "offered no runtime filter") {
+    val t = "rgf_own"
+    plain.sql(s"CREATE TABLE graft.rl.$t (id BIGINT, _file STRING) " +
+      "USING feather")
+    for (lo <- Seq(0, 100))
+      plain.sql(s"INSERT INTO graft.rl.$t SELECT id + $lo, " +
+        s"concat('orig-', id + $lo) FROM range(0, 10, 1, 1)")
+    assert(liveFiles(t).size == 2)
+    val df = plain.sql(s"MERGE INTO graft.rl.$t t USING (SELECT explode(" +
+      "array(3, 103, 500)) AS id) s ON t.id = s.id " +
+      "WHEN MATCHED THEN UPDATE SET _file = 'touched' " +
+      "WHEN NOT MATCHED THEN INSERT (id, _file) VALUES (s.id, 'new')")
+    assert(batchScans(df).forall(_.runtimeFilters.isEmpty),
+      "an owned `_file` must not be offered as the filter attribute")
+    val rows = plain.sql(s"SELECT id, _file FROM graft.rl.$t").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val expected = ((0L until 10L) ++ (100L until 110L)).map(i =>
+      i -> (if (i == 3 || i == 103) "touched" else s"orig-$i")).toMap +
+      (500L -> "new")
+    assert(rows == expected)
+  }
+
+  test("runtime group filter: a racing commit that rewrites a PRUNED file " +
+       "still aborts the statement (the read set stays the planned files)") {
+    val t = "rgf_race"
+    val model = threeFlatFiles(t, "feather")
+    val pruned = fileOf(t, 210)
+    assert(pruned != fileOf(t, 120))
+    // the MERGE matches only in the 100..140 file; the racer rewrites the
+    // 200..240 file, which the runtime filter dropped from the groups
+    graft.sources.FeatherSnapshots.testBeforeMutationCommit = () => {
+      graft.io.PredicateMutations.deleteWhere(plain, s"$wh/rl/$t",
+        org.apache.spark.sql.functions.col("id") === 210): Unit
+    }
+    val e = intercept[Exception] {
+      plain.sql(s"MERGE INTO graft.rl.$t t USING (SELECT 120L AS id) s " +
+        "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = -1")
+    }
+    assert(e.getMessage.contains("conflict with a concurrent commit") &&
+      e.getMessage.contains(pruned),
+      s"expected the read-set conflict on $pruned, got: ${e.getMessage}")
+    // the racer's delete landed; the MERGE's update did not
+    assert(idv(t) == model - 210L)
+  }
+
+  test("runtime group filter: the plan pins it on a multi-file MERGE's " +
+       "target scan and leaves a one-file pruned UPDATE without it") {
+    val t = "rgf_plan"
+    twoFilesPerLeaf(t, "feather")
+    val merge = churnMerge(t, Seq(2L, 800L))
+    val target = batchScans(merge).filter(
+      _.scan.description().contains("face scan"))
+    assert(target.size == 1 && target.head.runtimeFilters.exists(
+      _.references.exists(_.name == "_file")),
+      s"the MERGE's target scan must filter on _file at runtime: " +
+        target.map(_.runtimeFilters))
+    // day = 0 AND id <= 10: leaf pruning plus stats leave one file
+    val upd = plain.sql(s"UPDATE graft.rl.$t SET v = v + 1 " +
+      "WHERE day = 0 AND id >= 0 AND id <= 10")
+    val scans = batchScans(upd)
+    assert(scans.nonEmpty && scans.forall(_.runtimeFilters.isEmpty),
+      s"a one-file UPDATE needs no runtime filter: " +
+        scans.map(_.runtimeFilters))
+  }
 }
