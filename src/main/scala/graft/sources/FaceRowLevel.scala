@@ -66,10 +66,13 @@ import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats,
   * commute). The matching-rows query reads through the table's batch
   * scan, possibly at a newer snapshot: a file it pruned because a racing
   * commit rewrote it is still in the read set, so the statement aborts
-  * instead of missing that file's matches. A statement that neither
-  * reads a group nor writes a row publishes NO version. The manifest commit swaps groups (COW) or binds
-  * deletion vectors (delta); tmp parts are deleted either way, and a
-  * failed commit unwinds the final parts and fresh DV sidecars.
+  * instead of missing that file's matches. A statement left with no
+  * group and no written row publishes NO version, but still checks its
+  * read set against the head (a racer that rewrote the only matching
+  * file leaves the runtime filter nothing to keep). The manifest commit
+  * swaps groups (COW) or binds deletion vectors (delta); tmp parts are
+  * deleted either way, and a failed commit unwinds the final parts and
+  * fresh DV sidecars.
   *
   * Cost honesty: on the converting faces rewritten/inserted rows are
   * written twice (tmp feather, then the face part) — bytes ∝ the
@@ -346,19 +349,19 @@ private[sources] class FaceScan(host: Option[RowLevelHost],
 
   /** Records `_file IN (…)` — the files the matching-rows query saw a
     * match in. Planning is not redone: [[planInputPartitions]] drops the
-    * other files' splits. Any other predicate narrows nothing. */
+    * other files' splits. Every face's batch read splices `_file` from the
+    * same catalog path as [[absOf]], so the literals compare as they are.
+    * Any other predicate narrows nothing. */
   override def filter(predicates: Array[Predicate]): Unit = {
     val (state, _, _) = planned
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      SparkSession.active.sparkContext.hadoopConfiguration)
     predicates.foreach { p =>
       p.children().toSeq match {
         case (ref: NamedReference) +: values if p.name() == "IN" &&
             ref.fieldNames().sameElements(Array(GraftMetaColumns.FileName)) =>
           val hit = values.collect { case l: Literal[_] =>
-            GraftMetaColumns.fileKey(fs, l.value().toString) }.toSet
+            l.value().toString }.toSet
           runtimeKept = Some(runtimeKept.getOrElse(state.keptRel).filter(rel =>
-            hit(GraftMetaColumns.fileKey(fs, absOf(rel)))))
+            hit(absOf(rel))))
         case _ => ()
       }
     }
@@ -502,13 +505,6 @@ private[graft] object GraftMetaColumns {
         !existing.exists(_._1 == FileName) && !owned.contains(FileName))
       Seq(FileName -> f)
     else Seq.empty
-
-  /** One spelling of a `_file` value for comparisons: the batch reads
-    * splice each face's own spelling of the path (scheme or not), so a
-    * runtime `_file` filter compares fully-qualified forms. */
-  def fileKey(fs: org.apache.hadoop.fs.FileSystem, f: String): String =
-    new org.apache.hadoop.fs.Path(f)
-      .makeQualified(fs.getUri, fs.getWorkingDirectory).toString
 }
 
 /** What a reader factory supplies to [[SplicedRowReader]]: the split's
@@ -739,8 +735,17 @@ private class FaceCowWrite(op: RowLevelHost,
       try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
       catch { case _: Exception => () }
     }
-    if (state.keptRel.isEmpty && data.isEmpty) return
     val opName = s"rowlevel_${op.command().toString.toLowerCase}"
+    if (state.keptRel.isEmpty && data.isEmpty) {
+      // nothing replaced, nothing written: no version. The runtime group
+      // filter may have narrowed a non-empty read set to no group, so
+      // that read set is still checked — a racing rewrite of a matching
+      // file must abort the statement, not turn it into a no-op.
+      if (state.readRel.nonEmpty)
+        FeatherSnapshots.requireReadSetCurrent(fs, root, opName, state.snap,
+          state.readRel)
+      return
+    }
     val targetV = state.snap.version + 1
     val (parts, flatStats) = FaceConvert.toFaceParts(opName, face, fs, path,
       data.toSeq, dataSchema, partCols, targetV)

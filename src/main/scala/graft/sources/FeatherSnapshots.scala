@@ -706,17 +706,9 @@ private[graft] object FeatherSnapshots {
           "check would not protect them")
     }
     commitDv(fs, root, op) { (parentFiles, parentDvs) =>
-      val parentMap = parentFiles.toMap
-      val readSet = readRel.getOrElse(basedOn.files.map(_._1).toSet)
-      basedOn.files.foreach { case (rel, len) =>
-        if (readSet(rel))
-          require(parentMap.get(rel).contains(len) &&
-              parentDvs.get(rel) == basedOn.dvs.get(rel),
-            s"$op on $root: conflict with a concurrent commit — file '$rel' " +
-              s"(read at v${basedOn.version}) was rewritten, deleted, or " +
-              "re-bound by another committer; re-run against the new state " +
-              "(concurrent blind APPENDS commute and do not trigger this)")
-      }
+      requireReadSetIntact(root, op, basedOn,
+        readRel.getOrElse(basedOn.files.map(_._1).toSet),
+        parentFiles, parentDvs)
       // SCHEMA-LEVEL statements (ALTER TABLE ADD COLUMNS) validate
       // against the snapshot's schema, and any concurrent ADDITION may
       // have evolved it (another ALTER's stamps, a mergeSchema append,
@@ -738,6 +730,41 @@ private[graft] object FeatherSnapshots {
       (parentFiles.filterNot { case (rel, _) => removeRel(rel) } ++ add,
         (parentDvs -- removeRel) ++ setDvs)
     }
+  }
+
+  /** The read-set conflict check of [[commitMutation]] against the
+    * parent `parentFiles`/`parentDvs`: every file of `readSet` must still
+    * be carried with the length and DV binding it was read at. */
+  private def requireReadSetIntact(root: Path, op: String, basedOn: Snapshot,
+                                   readSet: Set[String],
+                                   parentFiles: Seq[(String, Long)],
+                                   parentDvs: Map[String, (String, Long)])
+      : Unit = {
+    val parentMap = parentFiles.toMap
+    basedOn.files.foreach { case (rel, len) =>
+      if (readSet(rel))
+        require(parentMap.get(rel).contains(len) &&
+            parentDvs.get(rel) == basedOn.dvs.get(rel),
+          s"$op on $root: conflict with a concurrent commit — file '$rel' " +
+            s"(read at v${basedOn.version}) was rewritten, deleted, or " +
+            "re-bound by another committer; re-run against the new state " +
+            "(concurrent blind APPENDS commute and do not trigger this)")
+    }
+  }
+
+  /** The commit point of a mutation that writes nothing: no version is
+    * published, but its read set must still be intact at the head — a
+    * statement that found nothing to change in files a concurrent commit
+    * rewrote aborts exactly as [[commitMutation]] would. */
+  private[graft] def requireReadSetCurrent(fs: FileSystem, root: Path,
+                                           op: String, basedOn: Snapshot,
+                                           readRel: Set[String]): Unit = {
+    val hook = testBeforeMutationCommit
+    testBeforeMutationCommit = () => ()
+    hook()
+    val head = resolve(fs, root, None).getOrElse(
+      sys.error(s"$op on $root: the table's snapshots vanished"))
+    requireReadSetIntact(root, op, basedOn, readRel, head.files, head.dvs)
   }
 
   /** Time travel by WALL CLOCK: the newest snapshot committed at or

@@ -1003,6 +1003,53 @@ class RowLevelCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(idv(t) == model - 210L)
   }
 
+  test("runtime group filter: a racing rewrite of the ONLY matching file " +
+       "before the matching-rows query runs aborts the statement, never a " +
+       "silent no-op") {
+    // Runs once in the optimizer's user batch, i.e. after Spark's
+    // RowLevelOperationRuntimeGroupFiltering planned the row-level scan
+    // and before the matching-rows query reads its own snapshot.
+    object RaceAfterGroupFilter
+        extends org.apache.spark.sql.catalyst.rules.Rule[
+          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+      @volatile var racer: Option[() => Unit] = None
+      override def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+          : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+        plan match {
+          case _: org.apache.spark.sql.catalyst.plans.logical.ReplaceData =>
+            racer.foreach { r => racer = None; r() }
+          case _ => ()
+        }
+        plan
+      }
+    }
+    val extra = plain.experimental.extraOptimizations
+    plain.experimental.extraOptimizations = extra :+ RaceAfterGroupFilter
+    try Seq(
+      "DELETE FROM graft.rl.TBL WHERE id % 1000 = 120",
+      "UPDATE graft.rl.TBL SET v = -1 WHERE id % 1000 = 120",
+      "MERGE INTO graft.rl.TBL t USING (SELECT 120L AS id) s " +
+        "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = -1"
+    ).zipWithIndex.foreach { case (stmt, i) =>
+      val t = s"rgf_race_only$i"
+      val model = threeFlatFiles(t, "feather")
+      val only = fileOf(t, 120)
+      // the racer rewrites the matching file (dropping 130, keeping 120):
+      // the matching-rows query then names only the racer's new file,
+      // which is no planned file, so no group survives the filter
+      RaceAfterGroupFilter.racer = Some(() =>
+        graft.io.PredicateMutations.deleteWhere(plain, s"$wh/rl/$t",
+          org.apache.spark.sql.functions.col("id") === 130): Unit)
+      val e = intercept[Exception](plain.sql(stmt.replace("TBL", t)))
+      assert(RaceAfterGroupFilter.racer.isEmpty, s"$stmt: the racer never ran")
+      assert(e.getMessage.contains("conflict with a concurrent commit") &&
+        e.getMessage.contains(only),
+        s"$stmt: expected the read-set conflict on $only, got: ${e.getMessage}")
+      assert(idv(t) == model - 130L, s"$stmt must not have applied")
+    }
+    finally plain.experimental.extraOptimizations = extra
+  }
+
   test("runtime group filter: the plan pins it on a multi-file MERGE's " +
        "target scan and leaves a one-file pruned UPDATE without it") {
     val t = "rgf_plan"
