@@ -917,19 +917,18 @@ object ScaleRehearsal {
   }
 
   /** PREDICATE-DML tier (r14, PredicateMutations): the structural
-    * claims behind DELETE FROM / UPDATE —
-    *  (a) a BANDED predicate's COW rewrite touches only the parts whose
-    *      stats admit the band (work ∝ selectivity, not table size:
-    *      filesTouched must stay ≤2 across a 4× table);
+    * claims behind DELETE FROM / UPDATE. The engine entry points run the
+    * SQL row-level statements (`graft.`/dir`` / `graft_dv.`/dir``), so
+    * each shape is timed once:
+    *  (a) a BANDED predicate's COW delete and update touch only the parts
+    *      whose stats admit the band (work ∝ selectivity, not table size:
+    *      filesTouched must stay ≤2 across a 4× table), and a banded
+    *      merge-on-read delete follows on the same table;
     *  (b) a SCATTERED predicate under the DV spelling writes bytes ∝
-    *      deleted rows (data files untouched) where the COW spelling
-    *      rewrites every part — the reason both strategies exist. The
-    *      scattered predicate is deliberately UNTRANSLATABLE (modulo),
-    *      so this also rehearses the no-pruning worst case;
-    *  (c) the SQL spelling of the same shapes through the catalog
-    *      (`graft.`/dir`` / `graft_dv.`/dir``): a banded COW DELETE
-    *      touches ≤2 parts, a scattered graft_dv DELETE rewrites no
-    *      data bytes, and each statement prints its wall time. */
+    *      deleted rows (data files untouched) where its COW twin rewrites
+    *      every part — the reason both strategies exist. The scattered
+    *      predicate is deliberately UNTRANSLATABLE (modulo), so this also
+    *      rehearses the no-pruning worst case. */
   def predDmlTier(spark: SparkSession, out: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -945,93 +944,66 @@ object ScaleRehearsal {
         .write.format("feather").mode("overwrite")
         .option("snapshots", "true").save(dir)
     }
+    def timed[A](body: => A): (A, Double) = {
+      val t = System.nanoTime()
+      val a = body
+      (a, (System.nanoTime() - t) / 1e9)
+    }
     val results = Seq((10, 1000000L), (40, 4000000L)).map { case (parts, n) =>
       val dir = s"$out/pd_$n"
       build(dir, n, parts)
       // (a) banded COW delete: stats admit the band into ≤2 parts
       val lo = n / 2
-      val t0 = System.nanoTime()
-      val rd = graft.io.PredicateMutations.deleteWhere(spark, dir,
-        col("id").between(lo, lo + 49999L))
-      val delSec = (System.nanoTime() - t0) / 1e9
+      val (rd, delSec) = timed(graft.io.PredicateMutations.deleteWhere(
+        spark, dir, col("id").between(lo, lo + 49999L)))
       require(rd.filesTouched <= 2,
         s"banded predicate must touch <=2 of $parts range parts: $rd")
       require(spark.read.format("feather").load(dir).count() == n - 50000L)
       // banded UPDATE at the table head
-      val t1 = System.nanoTime()
-      val ru = graft.io.PredicateMutations.updateWhere(spark, dir,
-        Map("pay" -> concat(lit("upd_"), col("id"))),
-        Some(col("id") < 40000L))
-      val updSec = (System.nanoTime() - t1) / 1e9
+      val (ru, updSec) = timed(graft.io.PredicateMutations.updateWhere(
+        spark, dir, Map("pay" -> concat(lit("upd_"), col("id"))),
+        Some(col("id") < 40000L)))
       require(ru.filesTouched <= 2,
         s"banded update must touch <=2 parts: $ru")
-      // (b) scattered untranslatable predicate: DV vs COW twin
-      val dvDir = s"$out/pd_dv_$n"; val cowDir = s"$out/pd_cow_$n"
-      build(dvDir, n, parts); build(cowDir, n, parts)
+      // banded merge-on-read delete on the same table
+      val lo2 = n / 4
+      val (_, dvBandSec) = timed(graft.io.PredicateMutations.deleteWhereDV(
+        spark, dir, col("id").between(lo2, lo2 + 49999L)))
+      require(spark.read.format("feather").load(dir).count() == n - 100000L,
+        "the banded deletes must leave n - 100000 rows")
+      // (b) scattered untranslatable predicate on fresh twins: DV vs COW
+      val dvDir = s"$out/pd_dv_$n"
+      build(dvDir, n, parts)
       val before = dataBytes(dvDir)
-      val t2 = System.nanoTime()
-      graft.io.PredicateMutations.deleteWhereDV(spark, dvDir,
-        col("id") % 1999L === 0L)
-      val dvSec = (System.nanoTime() - t2) / 1e9
+      val (_, dvSec) = timed(graft.io.PredicateMutations.deleteWhereDV(
+        spark, dvDir, col("id") % 1999L === 0L))
       require(dataBytes(dvDir) == before,
         "DV predicate delete must not rewrite data files")
       val dvSidecars = new java.io.File(dvDir).listFiles()
         .filter(_.getName.endsWith(".dv")).map(_.length()).sum
+      val live = n - (0L until n by 1999L).size
+      require(spark.read.format("feather").load(dvDir).count() == live,
+        s"the scattered DV delete must leave $live rows")
+      // the scattered COW twin rewrites every part
+      val cowDir = s"$out/pd_cow_$n"
+      build(cowDir, n, parts)
       val cowBefore = dataBytes(cowDir)
-      val t3 = System.nanoTime()
-      val rc = graft.io.PredicateMutations.deleteWhere(spark, cowDir,
-        col("id") % 1999L === 0L)
-      val cowSec = (System.nanoTime() - t3) / 1e9
+      val (rc, cowSec) = timed(graft.io.PredicateMutations.deleteWhere(
+        spark, cowDir, col("id") % 1999L === 0L))
       // NEW bytes the rewrite wrote (retired parts stay on disk for
       // time travel until expire() — total dir size would double-count)
       val cowNewBytes = dataBytes(cowDir) - cowBefore
-      // (c) the same shapes as SQL DML through the catalog's path
-      // spelling (Spark's row-level rewrite): a banded COW delete, a
-      // banded and a scattered merge-on-read delete, on one table
-      val sqlDir = s"$out/pd_sql_$n"
-      build(sqlDir, n, parts)
-      val sqlRoot = new org.apache.hadoop.fs.Path(sqlDir)
-      def liveFiles = graft.sources.FeatherSnapshots
-        .resolve(fs, sqlRoot, None).get.files.map(_._1).toSet
-      def timed(sql: String): Double = {
-        val t = System.nanoTime()
-        spark.sql(sql)
-        (System.nanoTime() - t) / 1e9
-      }
-      val f0 = liveFiles
-      val sqlCowSec = timed(s"DELETE FROM graft.`$sqlDir` " +
-        s"WHERE id BETWEEN $lo AND ${lo + 49999L}")
-      val sqlCowTouched = (f0 -- liveFiles).size
-      require(sqlCowTouched <= 2,
-        s"banded SQL delete must touch <=2 of $parts range parts: " +
-          s"$sqlCowTouched")
-      val lo2 = n / 4
-      val sqlDvSec = timed(s"DELETE FROM graft_dv.`$sqlDir` " +
-        s"WHERE id BETWEEN $lo2 AND ${lo2 + 49999L}")
-      val sqlBefore = dataBytes(sqlDir)
-      val sqlScatterSec = timed(s"DELETE FROM graft_dv.`$sqlDir` " +
-        "WHERE id % 1999 = 0")
-      require(dataBytes(sqlDir) == sqlBefore,
-        "scattered graft_dv SQL delete must not rewrite data files")
-      def banded(i: Long) = (i >= lo && i <= lo + 49999L) ||
-        (i >= lo2 && i <= lo2 + 49999L)
-      val sqlLive = n - 100000L - (0L until n by 1999L).count(!banded(_))
-      require(spark.read.format("feather").load(sqlDir).count() == sqlLive,
-        s"SQL deletes must leave $sqlLive rows")
-      (n, delSec, updSec, dvSec, dvSidecars, cowSec, cowNewBytes,
-        cowBefore, rc.filesTouched, (sqlCowSec, sqlCowTouched, sqlDvSec,
-          sqlScatterSec))
+      (n, delSec, updSec, dvBandSec, dvSec, dvSidecars, cowSec, cowNewBytes,
+        cowBefore, rc.filesTouched)
     }
     println("PREDDML tier (banded COW ∝ selectivity; scattered DV " +
       "bytes ∝ deleted rows vs COW full rewrite):")
-    results.foreach { case (n, d, u, dv, dvB, cw, cwB, before, cowTouched,
-                            (sc, scT, sd, ss)) =>
+    results.foreach { case (n, d, u, dvb, dv, dvB, cw, cwB, before,
+                            cowTouched) =>
       println(f"  n=$n%8d bandedDelete=$d%6.2fs bandedUpdate=$u%6.2fs " +
-        f"scatteredDV=$dv%6.2fs dvSidecarBytes=$dvB%9d " +
-        f"scatteredCOW=$cw%6.2fs cowNewBytes=$cwB%11d " +
-        f"(table $before%11d, touched $cowTouched)")
-      println(f"  n=$n%8d sqlBandedDelete=$sc%6.2fs (touched $scT) " +
-        f"sqlBandedDvDelete=$sd%6.2fs sqlScatteredDvDelete=$ss%6.2fs")
+        f"bandedDV=$dvb%6.2fs scatteredDV=$dv%6.2fs " +
+        f"dvSidecarBytes=$dvB%9d scatteredCOW=$cw%6.2fs " +
+        f"cowNewBytes=$cwB%11d (table $before%11d, touched $cowTouched)")
     }
   }
 

@@ -403,29 +403,8 @@ object FeatherMutations {
                              touchedIdx: Seq[Int], keysDf: DataFrame,
                              keyCols: Seq[String],
                              tableSchema: StructType)
-      : Map[Int, Array[Long]] =
-    if (touchedIdx.isEmpty) Map.empty
-    else {
-      val keysProj = keysDf.select(keyCols.map(col): _*).distinct()
-      collectPositions(
-        positionScanFrame(spark, face, root, snap, absFiles, touchedIdx,
-          keyCols, tableSchema)
-          .join(keysProj, keyCols, "inner"))
-    }
-
-  /** The distributed (file ordinal, row position, columns) scan frame
-    * both position scans build on: one task per candidate file reads
-    * `cols` with row positions (existing DV applied, so already-deleted
-    * rows can never re-match), readers tracked onto the task completion
-    * listener. ONE definition — the key-join delete/merge scan and the
-    * predicate scan differ only in their tail (inner join vs filter). */
-  private[io] def positionScanFrame(spark: SparkSession,
-                                    face: ConnectorFace, root: Path,
-                                    snap: FeatherSnapshots.Snapshot,
-                                    absFiles: Seq[(String, Long)],
-                                    touchedIdx: Seq[Int],
-                                    cols: Seq[String],
-                                    tableSchema: StructType): DataFrame = {
+      : Map[Int, Array[Long]] = {
+    if (touchedIdx.isEmpty) return Map.empty
     val readerJson = face.readerJson(spark, touchedIdx.map(absFiles))
     val confMap = GraftHadoop.confBroadcast(spark)
     val work = touchedIdx.map { i =>
@@ -437,7 +416,8 @@ object FeatherMutations {
     val scanSchema = StructType(
       StructField("__fid", IntegerType, nullable = false) +:
       StructField("__pos", LongType, nullable = false) +:
-      cols.map(k => tableSchema(k)))
+      keyCols.map(k => tableSchema(k)))
+    // readers tracked onto the task completion listener
     val rdd = spark.sparkContext
       .parallelize(work, math.max(1, work.size))
       .mapPartitions { it =>
@@ -450,24 +430,21 @@ object FeatherMutations {
         it.flatMap { case (fid, abs, len, dvPath) =>
           val dv = dvPath
             .map(p => DeletionVectors.read(execConf, p)).orNull
-          face.fileRowsPos(execConf, readerJson, abs, len, cols, dv,
+          face.fileRowsPos(execConf, readerJson, abs, len, keyCols, dv,
             r => open.add(r): Unit, r => open.remove(r): Unit)
             .map { case (pos, row) =>
               Row.fromSeq(fid +: pos +: row.toSeq) }
         }
       }
+    // matched (file ordinal → positions, ARBITRARY order — the shuffle
+    // decides; bindDvs sorts before writing sidecars)
     spark.createDataFrame(rdd, scanSchema)
-  }
-
-  /** Matched (file ordinal → positions, ARBITRARY order — the shuffle
-    * decides; [[bindDvs]] sorts before writing sidecars) off a
-    * position-scan frame's surviving rows — changed-row-count-sized by
-    * design. */
-  private[io] def collectPositions(df: DataFrame): Map[Int, Array[Long]] =
-    df.select(col("__fid"), col("__pos"))
+      .join(keysDf.select(keyCols.map(col): _*).distinct(), keyCols, "inner")
+      .select(col("__fid"), col("__pos"))
       .collect()
       .groupBy(_.getInt(0))
       .map { case (fid, rows) => fid -> rows.map(_.getLong(1)) }
+  }
 
   /** Leaf-grouped DV read shared by the clause and predicate mutation
     * tiers: `files` (abs path, len) read with their DV bindings applied
@@ -562,13 +539,13 @@ object FeatherMutations {
     named.toMap
   }
 
-  /** WALL-CLOCK pin, shared by every mutation statement (predicate
-    * DELETE/UPDATE and the clause merge): rewrite clock functions in a
-    * user expression to LITERALS of one per-statement instant. A
-    * mutation evaluates its expressions in several separate Spark jobs
-    * (pruning fold, limit-1 probe, position scan, COW rewrite, and
-    * routePartitionedInserts' distinct() + per-leaf scans, where persist
-    * is only best-effort under eviction/task retry) — left unpinned,
+  /** WALL-CLOCK pin, shared by the clause merge and replaceWhere:
+    * rewrite clock functions in a user expression to LITERALS of one
+    * per-statement instant. A mutation evaluates its expressions in
+    * several separate Spark jobs (pruning fold, limit-1 probe, position
+    * scan, COW rewrite, and routePartitionedInserts' distinct() +
+    * per-leaf scans, where persist is only best-effort under
+    * eviction/task retry) — left unpinned,
     * current_timestamp()/current_date() would evaluate at a DIFFERENT
     * instant per job: pruning could drop files the executed predicate
     * matches, and a routed write could route on one timestamp and write
@@ -667,10 +644,10 @@ object FeatherMutations {
   }
 
   /** Shared table resolution for every statement that opens a snapshot
-    * table by path (predicate DELETE/UPDATE, replaceWhere, INSERT,
-    * COPY INTO): snapshot head, face, hive layout, merged + partition
-    * schemas — ONE definition (the same drift class relDirOf/hiveLayout
-    * were extracted for). `requireHive` refuses non-hive subdirectories
+    * table by path (replaceWhere, INSERT, COPY INTO): snapshot head,
+    * face, hive layout, merged + partition schemas — ONE definition
+    * (the same drift class relDirOf/hiveLayout were extracted for).
+    * `requireHive` refuses non-hive subdirectories
     * for ops that must ROUTE rows by partition values; a pure delete
     * only drops rows and reads any layout. `snapshotsHint` tailors the
     * no-manifest refusal's guidance to the statement family. */

@@ -1,65 +1,65 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, UpdateTable}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
-import graft.sources.{FeatherPartitions, FeatherSnapshots}
+import graft.sources.{FeatherPartitions, FeatherSnapshots, RowLevelCommitMetrics}
 
-/** Predicate DELETE and UPDATE on snapshotted tables — the other two
-  * statements of the SQL DML triad beside MERGE (reference analog: the
-  * reference deletes/updates by boolean mask over an in-memory frame,
+/** Predicate DELETE and UPDATE on snapshotted tables, as engine calls
+  * over the one SQL DML path (reference analog: the reference
+  * deletes/updates by boolean mask over an in-memory frame,
   * python/cudf/cudf/core/dataframe.py `__setitem__` with a boolean
   * indexer and `drop`; a distributed table needs the predicate pushed
   * into candidate pruning instead):
   *
   *  - [[deleteWhere]]: drop every row the predicate selects (NULL
-  *    keeps, SQL semantics), copy-on-write.
+  *    keeps, SQL semantics), copy-on-write — `DELETE FROM graft.`<path>``.
   *  - [[deleteWhereDV]]: same rows masked via [[DeletionVectors]]
-  *    sidecars — bytes ∝ deleted rows (the takedown shape).
+  *    sidecars, bytes ∝ deleted rows (the takedown shape) —
+  *    `DELETE FROM graft_dv.`<path>``.
   *  - [[updateWhere]]: SET expressions applied to selected rows,
-  *    copy-on-write; on a hive-partitioned table a SET on a partition
-  *    column MOVES the row (delete-here + insert-there, one commit).
+  *    copy-on-write — `UPDATE graft.`<path>``; on a hive-partitioned
+  *    table a SET on a partition column MOVES the row (delete-here +
+  *    insert-there, one commit).
   *
-  * Candidate pruning is two-tier and conservative (pruning is an
-  * optimization, never a correctness input): the predicate's
-  * translatable conjuncts prune whole LEAVES through the partition
-  * values ([[FeatherPartitions.survives]]) and whole FILES through the
-  * stats sidecars ([[FeatherStats.batchProvablyEmpty]] over every row
-  * group); an untranslatable predicate just makes every file a
-  * candidate. A limit-1 exact probe then degrades a no-match statement
-  * to a TRUE no-op (no version published — the foreachBatch replay
-  * contract every mutation here carries), exactly the
-  * [[ConditionalMerge]] degrade rule.
-  *
-  * Everything else is the mutation tier's shared machinery: one atomic
-  * manifest commit under the conflict matrix, run-unique part prefixes,
-  * per-leaf schema stamps when every row drops, partition values riding
-  * the working frame as typed columns. */
+  * Each builds Spark's DeleteFromTable / UpdateTable plan from the
+  * caller's Columns and runs it through Spark's row-level rewrite onto
+  * [[graft.sources.FaceRowLevel]]: its scan prunes leaves by partition
+  * values and files by stats and Bloom sidecars (the pushed filters),
+  * and its copy-on-write scan narrows the rewrite at runtime to the
+  * files holding a match. Spark's analysis applies the session's store
+  * assignment policy to SET values and pins the clock functions to one
+  * instant per statement. The `Result` comes from the commit itself:
+  * the row-level write's driver metrics ([[RowLevelCommitMetrics]]). A
+  * statement that matches nothing publishes no version (the
+  * foreachBatch replay contract), except a no-match UPDATE whose pruning
+  * kept exactly one file: the runtime filter is not offered there, so
+  * that file is republished. The session must register the `graft`
+  * (and, for [[deleteWhereDV]], `graft_dv`) catalog. */
 object PredicateMutations {
   import FeatherMutations.Result
 
-  /** Cap on DV positions a predicate delete may collect to the driver
-    * (10M positions ≈ 80 MB of longs — comfortable; a delete past it
-    * belongs to the COW path anyway). Session conf, overridable per
-    * workload. */
-  val MaxDvPositionsKey = "spark.graft.dv.maxDeletePositions"
-  val MaxDvPositionsDefault: Long = 10000000L
-
-  def deleteWhere(spark: SparkSession, path: String, cond: Column,
-                  codec: String = "lz4"): Result =
-    run(spark, path, Some(cond), set0 = None, dvMask = false, codec)
+  def deleteWhere(spark: SparkSession, path: String, cond: Column): Result =
+    rowLevel(spark, path, "graft", Some(cond), Map.empty)
 
   def deleteWhereDV(spark: SparkSession, path: String,
                     cond: Column): Result =
-    run(spark, path, Some(cond), set0 = None, dvMask = true, "lz4")
+    rowLevel(spark, path, "graft_dv", Some(cond), Map.empty)
 
+  /** A no-match UPDATE whose pruning kept exactly one file republishes
+    * that file (a new version with the same rows): the runtime group
+    * filter that would prove the no-match costs two jobs on every pruned
+    * UPDATE, so it is offered only past one file. */
   def updateWhere(spark: SparkSession, path: String,
-                  set: Map[String, Column], cond: Option[Column] = None,
-                  codec: String = "lz4"): Result = {
+                  set: Map[String, Column],
+                  cond: Option[Column] = None): Result = {
     require(set.nonEmpty, "updateWhere: empty SET")
-    run(spark, path, cond, Some(set), dvMask = false, codec)
+    rowLevel(spark, path, "graft", cond, set)
   }
 
   private type Resolved = FeatherMutations.Resolved
@@ -68,259 +68,54 @@ object PredicateMutations {
                            requireHive: Boolean): Resolved =
     FeatherMutations.resolveTable(spark, path, op, requireHive)
 
-  private def run(spark: SparkSession, path: String,
-                  condRaw: Option[Column],
-                  set0: Option[Map[String, Column]], dvMask: Boolean,
-                  codec: String): Result = {
-    val op = if (set0.isDefined) "update" else "delete"
-    require(!dvMask || set0.isEmpty,
-      "updateWhere has no merge-on-read strategy — an update rewrites " +
-        "rows; use MERGE (mergeDV / MERGE INTO graft_dv.`..`) for " +
-        "mask-and-reinsert semantics")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val r = resolveTable(spark, path, op, requireHive = set0.isDefined)
-    val Resolved(root, fs, snap, face, partCols, absFiles, tableSchema,
-      partSchema, fullSchema, caseSensitive, leafByAbs) = r
-    val partitioned = r.partitioned
-    // WALL-CLOCK PINNED ONCE per statement, in the CONDITION and the
-    // SET values (the shared FeatherMutations.pinClock — the pruning
-    // fold, the limit-1 probe, and the rewrite/position scan each run
-    // as separate Spark queries; pruning must never be a correctness
-    // input).
-    val nowInstant = java.time.Instant.now()
-    val pinClock: Column => Column = FeatherMutations.pinClock(spark,
-      fullSchema.fieldNames.toSeq, nowInstant)
-    val cond0: Option[Column] = condRaw.map(pinClock)
-    val set: Map[String, Column] = FeatherMutations.canonicalSet(
-      fullSchema, caseSensitive, set0.getOrElse(Map.empty), s"$op: SET")
-      .map { case (k, v) => k -> pinClock(v) }
-    set.keys.foreach(c => require(fullSchema.fieldNames.contains(c),
+  private def rowLevel(spark: SparkSession, path: String, catalog: String,
+                       cond: Option[Column],
+                       set: Map[String, Column]): Result = {
+    val op = if (set.isEmpty) "delete" else "update"
+    require(spark.conf.getOption(s"spark.sql.catalog.$catalog").isDefined,
+      s"$op on $path runs as SQL DML on $catalog.`<path>`: register the " +
+        s"catalog (spark.sql.catalog.$catalog=graft.catalog.GraftCatalog)")
+    // input checks Spark's analysis of the statement leaves open (it
+    // refuses a nondeterministic WHERE itself): an unknown SET column, a
+    // non-boolean WHERE, a nondeterministic SET — a replayed statement
+    // (the foreachBatch contract) must write the same rows
+    val target = Bridge.ofRows(spark, UnresolvedRelation(Seq(catalog, path)))
+    val caseSensitive =
+      spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
+    set.keys.foreach(c => require(target.columns.exists(t =>
+        if (caseSensitive) t == c else t.equalsIgnoreCase(c)),
       s"$op: SET names column '$c', not in the table schema " +
-        s"(${fullSchema.fieldNames.mkString(", ")})"))
-
-    def emptyFrame = spark.createDataFrame(
-      new java.util.ArrayList[Row](), fullSchema)
-
-    // ---- expression validation (analysis only, zero jobs) -----------------
-    // same lossless-or-exact rule as the clause merge: a silently lossy
-    // SET cast would corrupt rows (or die per-row mid-write under ANSI)
-    {
-      def exprType(c: Column): DataType =
-        emptyFrame.select(c).schema.head.dataType
-      // nondeterministic expressions are REFUSED (Delta's rule, for the
-      // same reason): the statement evaluates them in separate Spark
-      // jobs — pruning, the limit-1 probe, the rewrite/position scan,
-      // and routePartitionedInserts' distinct() + per-leaf scans (where
-      // persist is best-effort under eviction/task retry) — so rand()
-      // in a WHERE or SET could silently duplicate or lose rows. The
-      // clock functions are already pinned to per-statement literals
-      // above, so they pass; determinism is checked on the RESOLVED
-      // tree (an UnresolvedFunction reports deterministic=true).
-      def requireDeterministic(what: String, c: Column): Unit =
-        require(emptyFrame.select(c).queryExecution.analyzed.expressions
-            .forall(_.deterministic),
-          s"$op: $what is nondeterministic — the statement evaluates " +
-            "expressions in several separate Spark jobs (pruning, probe, " +
-            "rewrite, partitioned routing), so a nondeterministic " +
-            "expression can silently duplicate or lose rows; make it " +
-            "deterministic (clock functions are pinned per statement " +
-            "automatically)")
-      cond0.foreach { c =>
-        val dt = exprType(c)
-        require(dt == BooleanType,
-          s"$op: WHERE predicate is ${dt.catalogString}, not boolean")
-        requireDeterministic("the WHERE predicate", c)
-      }
-      set.foreach { case (n, e) =>
-        val target = fullSchema(n).dataType
-        val actual = exprType(e)
-        require(actual == target ||
-            org.apache.spark.sql.catalyst.expressions.Cast
-              .canUpCast(actual, target),
-          s"$op: SET of column '$n' (${target.catalogString}) from a " +
-            s"${actual.catalogString} expression — only exact types and " +
-            "lossless upcasts are applied; cast the expression " +
-            "explicitly if the narrowing is intended")
-        requireDeterministic(s"the SET of column '$n'", e)
-      }
+        s"(${target.columns.mkString(", ")})"))
+    val sets = set.toSeq
+    val resolved = target.select(cond.toSeq ++ sets.map(_._2): _*)
+      .queryExecution.analyzed.expressions
+    cond.foreach { _ =>
+      val dt = resolved.head.dataType
+      require(dt == BooleanType,
+        s"$op: WHERE predicate is ${dt.catalogString}, not boolean")
     }
-
-    // ---- candidate pruning --------------------------------------------------
-    // translatable conjuncts of the RESOLVED predicate; anything the
-    // translator cannot express just doesn't prune
-    val condFilters: Seq[org.apache.spark.sql.sources.Filter] =
-      cond0.toSeq.flatMap(translatedConjuncts(spark, fullSchema, _))
-    // stats load whenever pruning can use them OR the DV branch needs
-    // exact row counts (bindDvs drops a fully-masked file only when it
-    // can PROVE full coverage — an untranslatable predicate must not
-    // silently lose that, the keyed deleteByKeyDV's behavior)
-    val statsByFile
-        : Map[String, Option[Seq[Map[String, FeatherStats.ColStat]]]] =
-      if (condFilters.isEmpty && !dvMask) Map.empty
-      else FeatherStats.loadForFiles(conf, absFiles)
-    val candidateIdx: Seq[Int] =
-      pruneCandidateIdx(absFiles, condFilters, leafByAbs, partSchema,
-        statsByFile)
-    val candidateAbs = candidateIdx.map(absFiles)
-    val dvPathsAll = r.dvPathsAll
-    val valuesByAbs = r.valuesByAbs
-    val targetV = snap.version + 1
-    val prefix = FeatherSnapshots.runPrefix(targetV)
-    def noOp = Result(snap.version, 0, snap.files.size, 0)
-    if (candidateAbs.isEmpty) return noOp
-    val condCol: Column = cond0.getOrElse(lit(true))
-    val fire: Column = coalesce(condCol, lit(false))
-
-    if (dvMask) {
-      // ---- merge-on-read delete: mask matching positions ------------------
-      val positions = predicatePositionScan(spark, face, root, snap,
-        absFiles, candidateIdx, condCol, tableSchema, partSchema,
-        valuesByAbs)
-      if (positions.isEmpty) return noOp
-      def fileRowCount(fid: Int): Option[Long] =
-        statsByFile.getOrElse(absFiles(fid)._1, None)
-          .flatMap(FeatherMutations.exactRows)
-      val (bindings, droppedRel) = FeatherMutations.bindDvs(fs, conf,
-        root, snap, targetV, positions, fileRowCount)
-      val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      if (droppedRel.nonEmpty &&
-          snap.files.forall { case (rel, _) => droppedRel(rel) })
-        added ++= FeatherMutations.stampLeaves(face, fs, root,
-          snap.files.map(_._1), prefix, tableSchema)
-      // conflict scope = the pruned candidates: a concurrent mutation on
-      // files stats/partitions proved matchless commits beside this one
-      val committed = FeatherSnapshots.commitMutation(fs, root, op, snap,
-        droppedRel, added.toSeq, setDvs = bindings,
-        readRel = Some(candidateIdx.map(i => snap.files(i)._1).toSet))
-      val touched = bindings.size + droppedRel.size
-      // partsWritten = DV sidecars written, exactly deleteByKeyDV's
-      // accounting (stamps excluded there too) — the two spellings of
-      // one takedown must report identically
-      return Result(committed, touched, snap.files.size - touched,
-        bindings.size)
+    sets.zip(resolved.drop(cond.size)).foreach { case ((c, _), e) =>
+      require(e.deterministic,
+        s"$op: the SET of column '$c' is nondeterministic — a replayed " +
+          "statement would write different rows; make it deterministic")
     }
-
-    // ---- copy-on-write ------------------------------------------------------
-    val (cand, ownCand) = ConnectorFace.pinIfUncached(
-      FeatherMutations.readWithPartValues(spark, face, candidateAbs,
-        dvPathsAll, tableSchema, partSchema, valuesByAbs))
-    try {
-      // exact limit-1 probe: a statement matching nothing publishes no
-      // version (replay-clean), even when stats could not refute it
-      val anyMatch = cand.where(fire).limit(1).count() > 0
-      if (!anyMatch) return noOp
-      val out: DataFrame = set0 match {
-        case None => cand.where(!fire)
-        case Some(_) =>
-          cand.select(fullSchema.fields.map { f =>
-            (if (set.contains(f.name))
-               when(fire, set(f.name)).otherwise(col(f.name))
-             else col(f.name)).cast(f.dataType).as(f.name)
-          }.toSeq: _*)
-      }
-      val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      if (partitioned) {
-        val candPerLeaf: Map[String, Int] = candidateIdx
-          .map(i => FeatherMutations.relDirOf(snap.files(i)._1))
-          .groupBy(identity).map { case (k, v) => k -> v.size }
-        added ++= FeatherMutations.routePartitionedInserts(op, face, fs,
-          root, out, partCols, tableSchema, prefix, codec,
-          partsFor = relDir => candPerLeaf.getOrElse(relDir, 1))
-      } else {
-        val parts = face.writeParts(
-          out.coalesce(math.max(1, candidateAbs.size)), root.toString,
-          prefix, codec)
-        if (parts.nonEmpty)
-          FeatherStats.upsertMerged(fs, root,
-            parts.map { case (name, len, js) =>
-              name -> (len, FeatherStats.fromJson(js)) }.toMap)
-        added ++= parts.map { case (name, len, _) => (name, len) }
-      }
-      val removeRel: Set[String] = candidateIdx.map(i => snap.files(i)._1)
-        .toSet
-      if (added.isEmpty &&
-          snap.files.forall { case (rel, _) => removeRel(rel) })
-        added ++= FeatherMutations.stampLeaves(face, fs, root,
-          snap.files.map(_._1), prefix, tableSchema)
-      // conflict scope = the pruned candidates (see the DV branch)
-      val committed = FeatherSnapshots.commitMutation(fs, root, op, snap,
-        removeRel, added.toSeq, readRel = Some(removeRel))
-      Result(committed, candidateIdx.size,
-        snap.files.size - candidateIdx.size, added.size)
-    } finally {
-      if (ownCand) cand.unpersist(blocking = false): Unit
-    }
-  }
-
-  /** Distributed position scan for a PREDICATE (the key-join scan's
-    * sibling, [[FeatherMutations.dvPositionScan]]): one task per
-    * candidate file reads the predicate's DATA columns with row
-    * positions (existing DV applied), partition values join in from a
-    * file-count-sized broadcast frame, and the filter leaves exactly the
-    * matching (file, position) pairs — deleted-row-count-sized by
-    * design (a retention predicate that selects most of the table is
-    * [[deleteWhere]]'s job, where the rewrite pays for itself). */
-  private def predicatePositionScan(spark: SparkSession,
-                                    face: ConnectorFace, root: Path,
-                                    snap: FeatherSnapshots.Snapshot,
-                                    absFiles: Seq[(String, Long)],
-                                    candidateIdx: Seq[Int],
-                                    condCol: Column,
-                                    tableSchema: StructType,
-                                    partSchema: StructType,
-                                    valuesByAbs: Map[String, Seq[(String, String)]])
-      : Map[Int, Array[Long]] = {
-    if (candidateIdx.isEmpty) return Map.empty
-    // data columns the predicate references (resolved against the full
-    // shape); partition references ride the per-file values frame
-    val shape = spark.createDataFrame(new java.util.ArrayList[Row](),
-      StructType(tableSchema.fields ++ partSchema.fields))
-    val refs: Set[String] = shape.where(condCol).queryExecution.analyzed
-      .collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition.references.map(_.name).toSet
-      }.getOrElse(Set.empty)
-    val dataCols = tableSchema.fieldNames.filter(refs.contains).toSeq
-    val scan = FeatherMutations.positionScanFrame(spark, face, root, snap,
-      absFiles, candidateIdx, dataCols, tableSchema)
-    // per-file partition values (file-count-sized; broadcast-cheap)
-    val withParts =
-      if (partSchema.isEmpty) scan
-      else {
-        val fidSchema = StructType(
-          StructField("__fid", IntegerType, nullable = false) +:
-            partSchema.fields.map(f => StructField(f.name, StringType)))
-        val fidRows = candidateIdx.map { i =>
-          val values = valuesByAbs.getOrElse(absFiles(i)._1, Nil).toMap
-          Row.fromSeq(i +: partSchema.fieldNames.toSeq
-            .map(c => values.getOrElse(c, null)))
-        }
-        import scala.jdk.CollectionConverters._
-        val typed = partSchema.fields.foldLeft(
-          spark.createDataFrame(fidRows.asJava, fidSchema)) {
-            case (df, f) => df.withColumn(f.name,
-              col(f.name).cast(f.dataType))
-          }
-        scan.join(broadcast(typed), "__fid")
-      }
-    val matching = withParts.where(coalesce(condCol, lit(false)))
-    // DRIVER-COLLECT GUARD: the masked positions collect to the driver
-    // (that is the DV design — bytes ∝ deleted rows), so a mis-aimed
-    // predicate that selects half a 100-TB table must refuse BEFORE the
-    // collect, not OOM the driver. One count over the same pruned scan
-    // decides; the threshold is a session conf. The extra scan is
-    // takedown-cheap: candidates are already pruned to the predicate's
-    // leaves/files, and a delete large enough for the count to hurt is
-    // past the threshold anyway.
-    val maxPos = spark.conf.get(MaxDvPositionsKey,
-      MaxDvPositionsDefault.toString).toLong
-    val selected = matching.count()
-    require(selected <= maxPos,
-      s"deleteWhereDV on $root: this predicate selects $selected rows, " +
-        s"above the $maxPos-position driver-collect cap " +
-        s"($MaxDvPositionsKey) — use deleteWhere (copy-on-write), where " +
-        "a delete this large pays for its rewrite")
-    FeatherMutations.collectPositions(matching)
+    def expr(c: Column) = Bridge.convertedExpression(spark, c)
+    // the statement runs over the relation resolved above: one table load
+    val table = target.queryExecution.analyzed
+    val plan =
+      if (set.isEmpty)
+        DeleteFromTable(table, cond.map(expr).getOrElse(Literal.TrueLiteral))
+      else UpdateTable(table, sets.map { case (c, e) =>
+        Assignment(UnresolvedAttribute.quoted(c), expr(e)) }, cond.map(expr))
+    val done = Bridge.ofRows(spark, plan)
+    val r = RowLevelCommitMetrics.of(done).getOrElse(
+      throw new IllegalStateException(s"$op on $path: the executed " +
+        "statement carries no row-level commit report"))
+    // partsWritten = DV sidecars for the merge-on-read delete, exactly
+    // deleteByKeyDV's accounting — the two spellings of one takedown
+    // report identically
+    Result(r.version, r.filesRemoved + r.dvsBound, r.filesKept,
+      if (catalog == "graft_dv") r.dvsBound else r.partsAdded)
   }
 
   /** Translatable conjuncts of a RESOLVED predicate, through Spark's
@@ -402,15 +197,15 @@ object PredicateMutations {
     *  - `cond` must be a deterministic boolean; `data`'s plan must be
     *    deterministic too (the constraint probe, the routed write's
     *    distinct() and its per-leaf slices each re-evaluate it; persist
-    *    is best-effort under eviction, the DML triad's rule);
+    *    is best-effort under eviction);
     *  - clock functions in both pin to one per-statement instant;
     *  - `data` aligns BY NAME under the lossless-or-exact cast rule;
     *    columns it does not supply read as NULL (partition columns must
     *    be supplied); extra columns refuse with evolution guidance.
     *
     * Work ∝ selectivity: candidates prune through partition values and
-    * stats sidecars exactly like the DML triad (Spark's own filter
-    * translation), non-candidate files carry through the manifest
+    * stats sidecars through Spark's own filter translation (the
+    * row-level scan's pushdown semantics), non-candidate files carry through the manifest
     * untouched, and only candidate rows the predicate does NOT select
     * rewrite — for the common leaf-aligned backfill that is ~zero rows,
     * so the write is the new data plus the manifest. Commits as an
@@ -418,7 +213,7 @@ object PredicateMutations {
     * matches nothing and inserts nothing publishes NO version (the
     * replay-clean rule). */
   def replaceWhere(spark: SparkSession, path: String, data: DataFrame,
-                   cond: Column, codec: String = "lz4"): Result = {
+                   cond: Column): Result = {
     val op = "replaceWhere"
     val conf = spark.sparkContext.hadoopConfiguration
     val r = resolveTable(spark, path, op, requireHive = true)
@@ -505,7 +300,7 @@ object PredicateMutations {
           "NOT select — every inserted row must satisfy the replaceWhere " +
           "predicate (otherwise the statement silently grows its own " +
           "scope); widen the predicate or filter the data")
-      // ---- candidates (the DML triad's two-tier pruning) --------------------
+      // ---- candidates (two-tier pruning) ------------------------------------
       val condFilters = translatedConjuncts(spark, fullSchema, cond0)
       val statsByFile
           : Map[String, Option[Seq[Map[String, FeatherStats.ColStat]]]] =
@@ -545,13 +340,13 @@ object PredicateMutations {
             .map(i => FeatherMutations.relDirOf(snap.files(i)._1))
             .groupBy(identity).map { case (k, v) => k -> v.size }
           added ++= FeatherMutations.routePartitionedInserts(op, face, fs,
-            root, out, partCols, tableSchema, prefix, codec,
+            root, out, partCols, tableSchema, prefix, "lz4",
             partsFor = relDir => candPerLeaf.getOrElse(relDir, 1))
         } else {
           val parts = face.writeParts(
             out.coalesce(math.max(1, rewriteIdx.size +
               (if (insEmpty) 0 else ConnectorFace.capWriteParts(ins)))),
-            root.toString, prefix, codec)
+            root.toString, prefix, "lz4")
           if (parts.nonEmpty)
             FeatherStats.upsertMerged(fs, root,
               parts.map { case (name, len, js) =>
@@ -577,9 +372,9 @@ object PredicateMutations {
               stampPart = () => face.stamp(fs, root, prefix, tableSchema))
           else FeatherSnapshots.commitMutation(fs, root,
             "overwrite", snap, removeRel, added.toSeq,
-            // conflict scope = the rewritten candidates (the DML
-            // triad's rule): a concurrent mutation on non-candidate
-            // files commits beside this backfill
+            // conflict scope = the rewritten candidates: a concurrent
+            // mutation on non-candidate files commits beside this
+            // backfill
             readRel = Some(removeRel))
         Result(committed, rewriteIdx.size,
           snap.files.size - rewriteIdx.size, added.size)

@@ -1531,10 +1531,11 @@ object IoQueries extends QueryPack {
   }
 
   // PREDICATE DELETE, merge-on-read, on the PARQUET face
-  // (PredicateMutations.deleteWhereDV): matching positions mask via DV
-  // sidecars — the fixture pins ZERO data bytes rewritten (bytes ∝
-  // deleted rows, the takedown-at-rest shape for predicates the way
-  // io_parquet_delete_dv pins it for key lists).
+  // (PredicateMutations.deleteWhereDV, i.e. a `graft_dv` DELETE through
+  // the row-level path): matching positions mask via DV sidecars — the
+  // fixture pins ZERO data bytes rewritten (bytes ∝ deleted rows, the
+  // takedown-at-rest shape for predicates the way io_parquet_delete_dv
+  // pins it for key lists).
   register("io_delete_where_dv",
     """SELECT o_orderkey, o_orderpriority,
       |  CAST(o_totalprice AS DOUBLE) AS total

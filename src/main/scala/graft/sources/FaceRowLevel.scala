@@ -4,9 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
+import org.apache.spark.sql.execution.CommandResultExec
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -74,6 +76,16 @@ import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats,
   * deleted either way, and a failed commit unwinds the final parts and
   * fresh DV sidecars.
   *
+  * The engine's predicate DML runs here too: `deleteWhere`,
+  * `deleteWhereDV` and `updateWhere` ([[graft.io.PredicateMutations]])
+  * build Spark's DeleteFromTable / UpdateTable over ``graft.`<path>` ``
+  * or ``graft_dv.`<path>` ``, so their pruning is this scan's. Both
+  * writes report what the commit did as DSv2 driver metrics on the
+  * command's plan — `commitVersion`, `filesRemoved`, `filesKept`,
+  * `partsAdded`, `dvsBound` ([[RowLevelCommitMetrics]]) — which the SQL
+  * statements show and the entry points return. A merge-on-read commit
+  * refuses past [[FaceRowLevel.MaxDvPositionsKey]] deleted positions.
+  *
   * Cost honesty: on the converting faces rewritten/inserted rows are
   * written twice (tmp feather, then the face part) — bytes ∝ the
   * statement's own output, never the table, and the conversion is one
@@ -93,6 +105,14 @@ private[graft] object FaceRowLevel {
 
   /** Feather split size for row-level scans — the connector's default. */
   val MaxSplitBytes: Long = 128L << 20
+
+  /** Cap on the deletion-vector positions one merge-on-read statement
+    * (DELETE, UPDATE or MERGE on `graft_dv`) may bind, checked in
+    * [[FaceDeltaWrite]]'s commit. 10M positions ≈ 80 MB of longs; a
+    * delete past it belongs to copy-on-write anyway. Session conf,
+    * overridable per workload. */
+  val MaxDvPositionsKey = "spark.graft.dv.maxDeletePositions"
+  val MaxDvPositionsDefault: Long = 10000000L
 }
 
 // ---------------------------------------------------------------------------
@@ -329,19 +349,24 @@ private[sources] class FaceScan(host: Option[RowLevelHost],
   /** The runtime group filter (Spark's
     * RowLevelOperationRuntimeGroupFiltering): offered on COW scans only,
     * never when the table owns `_file` (the reference would resolve to
-    * stored values — [[GraftMetaColumns.fileValue]]'s shadowing rule),
-    * and only when the plan kept more than one file (with one, the
-    * filter can only turn a no-match statement into a no-op, for two
-    * extra jobs on every pruned UPDATE). Asking resolves [[planned]]:
-    * the rule asks BEFORE it builds the matching-rows query, so that
-    * query's batch scan reads this snapshot or a newer one, never an
-    * older one — a newer one is what the read-set check catches. */
-  override def filterAttributes(): Array[NamedReference] =
+    * stored values — [[GraftMetaColumns.fileValue]]'s shadowing rule).
+    * An UPDATE or MERGE gets it only when the plan kept more than one
+    * file: with one, the filter can only turn a no-match statement into
+    * a no-op, for two extra jobs on every pruned UPDATE — so a no-match
+    * UPDATE narrowed to one file republishes that file. A DELETE gets it
+    * on one kept file too, so a no-match DELETE publishes no version
+    * (the replay contract). Asking resolves [[planned]]: the rule asks
+    * BEFORE it builds the matching-rows query, so that query's batch
+    * scan reads this snapshot or a newer one, never an older one — a
+    * newer one is what the read-set check catches. */
+  override def filterAttributes(): Array[NamedReference] = {
+    val minKept = if (host.exists(_.command() == Command.DELETE)) 1 else 2
     if (host.exists(_.groupBased) &&
         !owned.contains(GraftMetaColumns.FileName) &&
-        planned._1.keptRel.size > 1)
+        planned._1.keptRel.size >= minKept)
       Array(Expressions.column(GraftMetaColumns.FileName))
     else Array.empty
+  }
 
   /** Planned files narrowed to those the runtime filter names — None
     * until Spark calls [[filter]]. */
@@ -698,6 +723,78 @@ private[sources] object FaceConvert {
       GraftFeather.toArrowField(f.name, f.dataType, f.nullable))
 }
 
+/** What a row-level commit did, as DSv2 driver metrics: both writes
+  * declare them (`supportedCustomMetrics`) and report them
+  * (`reportDriverMetrics`), which Spark's write exec posts on the
+  * command's physical plan once the commit returns. The SQL statements
+  * show them in their executed plan; the engine entry points
+  * ([[graft.io.PredicateMutations]]) read their `Result` from them —
+  * never from a diff of the head, which a concurrent commit inside the
+  * statement's window would make name the wrong version.
+  *
+  *  - `commitVersion`: the version the commit published, or the planned
+  *    snapshot's version when it published none;
+  *  - `filesRemoved`: files dropped from the manifest (COW groups, or
+  *    files a delta delete masked entirely);
+  *  - `filesKept`: planned-snapshot files carried through untouched;
+  *  - `partsAdded`: parts the commit added (schema stamps included);
+  *  - `dvsBound`: deletion-vector sidecars bound. */
+private[graft] object RowLevelCommitMetrics {
+  // Spark's UI instantiates these by class name to aggregate the values
+  sealed abstract class Sum(n: String, d: String) extends CustomSumMetric {
+    override def name(): String = n
+    override def description(): String = d
+  }
+  final class CommitVersion extends Sum("commitVersion", "commit version")
+  final class FilesRemoved extends Sum("filesRemoved", "files removed")
+  final class FilesKept extends Sum("filesKept", "files kept")
+  final class PartsAdded extends Sum("partsAdded", "parts added")
+  final class DvsBound extends Sum("dvsBound", "deletion vectors bound")
+
+  /** In [[Report]]'s field order. */
+  def supported: Array[CustomMetric] = Array(new CommitVersion,
+    new FilesRemoved, new FilesKept, new PartsAdded, new DvsBound)
+  private val names: Seq[String] = supported.map(_.name()).toSeq
+
+  final case class Report(version: Long, filesRemoved: Int, filesKept: Int,
+                          partsAdded: Int, dvsBound: Int) {
+    def toTaskMetrics: Array[CustomTaskMetric] =
+      names.zip(Seq(version, filesRemoved.toLong, filesKept.toLong,
+          partsAdded.toLong, dvsBound.toLong)).map { case (n, v) =>
+        new CustomTaskMetric {
+          override def name(): String = n
+          override def value(): Long = v
+        }: CustomTaskMetric
+      }.toArray
+  }
+
+  /** A report for a statement that published nothing. */
+  def noOp(snap: FeatherSnapshots.Snapshot): Report =
+    Report(snap.version, 0, snap.files.size, 0, 0)
+
+  /** The report on an executed row-level command's plan (the plan of a
+    * DataFrame built over a DELETE / UPDATE / MERGE); None when no node
+    * of it carries these metrics. */
+  def of(df: org.apache.spark.sql.DataFrame): Option[Report] = {
+    val physical = df.queryExecution.executedPlan match {
+      case c: CommandResultExec => c.commandPhysicalPlan
+      case p => p
+    }
+    physical.collectFirst {
+      case p if names.forall(p.metrics.contains) =>
+        names.map(p.metrics(_).value)
+    }.map(v => Report(v(0), v(1).toInt, v(2).toInt, v(3).toInt, v(4).toInt))
+  }
+
+  /** Both writes' side: declare the metrics, report what `commit` set. */
+  trait Reporting extends Write {
+    @volatile protected var report: Option[Report] = None
+    override def supportedCustomMetrics(): Array[CustomMetric] = supported
+    override def reportDriverMetrics(): Array[CustomTaskMetric] =
+      report.map(_.toTaskMetrics).getOrElse(Array.empty)
+  }
+}
+
 /** Group-based COW write (finalize first: a MERGE into a fully-pruned
   * table still publishes its NOT MATCHED inserts; no-read no-write
   * statements publish NO version; unwind on a lost conflict check). */
@@ -706,7 +803,8 @@ private class FaceCowWrite(op: RowLevelHost,
                                     path: String, face: ConnectorFace,
                                     dataSchema: StructType,
                                     partCols: Seq[String])
-    extends WriteBuilder with Write with BatchWrite {
+    extends WriteBuilder with Write with BatchWrite
+    with RowLevelCommitMetrics.Reporting {
   FaceConvert.requireFeatherMappable(st)
 
   override def build(): Write = this
@@ -744,6 +842,7 @@ private class FaceCowWrite(op: RowLevelHost,
       if (state.readRel.nonEmpty)
         FeatherSnapshots.requireReadSetCurrent(fs, root, opName, state.snap,
           state.readRel)
+      report = Some(RowLevelCommitMetrics.noOp(state.snap))
       return
     }
     val targetV = state.snap.version + 1
@@ -756,15 +855,18 @@ private class FaceCowWrite(op: RowLevelHost,
       added ++= FeatherMutations.stampLeaves(face, fs, root,
         state.snap.files.map(_._1),
         FeatherSnapshots.runPrefix(targetV), dataSchema)
-    try
-      FeatherSnapshots.commitMutation(fs, root, opName, state.snap,
-        removeRel = state.keptRel, add = added.toSeq,
-        readRel = Some(state.readRel)): Unit
-    catch { case e: Throwable =>
-      FaceConvert.deleteFinalized(fs, path, added.toSeq.map(_._1))
-      FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
-      throw e
-    }
+    val version =
+      try
+        FeatherSnapshots.commitMutation(fs, root, opName, state.snap,
+          removeRel = state.keptRel, add = added.toSeq,
+          readRel = Some(state.readRel))
+      catch { case e: Throwable =>
+        FaceConvert.deleteFinalized(fs, path, added.toSeq.map(_._1))
+        FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
+        throw e
+      }
+    report = Some(RowLevelCommitMetrics.Report(version, state.keptRel.size,
+      state.snap.files.size - state.keptRel.size, added.size, 0))
     if (flatStats.nonEmpty) FeatherStats.upsertMerged(fs, root, flatStats)
   }
 
@@ -786,14 +888,19 @@ private class FaceCowWrite(op: RowLevelHost,
   * (parts, sidecars, fresh DVs, leaf-stats entries) when the conflict
   * check loses. A file whose UNION'd vector covers every row
   * (stats-proven) is dropped from the manifest instead of carrying a
-  * full mask — shared with the engine path through
-  * [[FeatherMutations.bindDvs]]. */
+  * full mask — shared with the keyed engine path through
+  * [[FeatherMutations.bindDvs]]. The commit refuses a statement whose
+  * deleted positions sum past [[FaceRowLevel.MaxDvPositionsKey]] before
+  * it finalizes a part or writes a sidecar: the task commit messages
+  * already brought the positions to the driver, so the cap bounds the
+  * sidecar write and the manifest, not the collect. */
 private class FaceDeltaWrite(op: RowLevelHost,
                                       info: LogicalWriteInfo,
                                       path: String, face: ConnectorFace,
                                       dataSchema: StructType,
                                       partCols: Seq[String])
-    extends DeltaWriteBuilder with DeltaWrite with DeltaBatchWrite {
+    extends DeltaWriteBuilder with DeltaWrite with DeltaBatchWrite
+    with RowLevelCommitMetrics.Reporting {
 
   private val rowSchema: StructType = info.schema()
   private val rowIdSchema: StructType = info.rowIdSchema().orElseThrow(() =>
@@ -836,6 +943,17 @@ private class FaceDeltaWrite(op: RowLevelHost,
       byFid.getOrElseUpdate(relIdx(rel),
         scala.collection.mutable.ArrayBuffer.empty[Long]) ++= poss
     })
+    // the position cap, before any part finalizes or sidecar writes: the
+    // throw makes Spark call abort, which deletes the tmp insert parts
+    val maxPos = spark.conf.get(FaceRowLevel.MaxDvPositionsKey,
+      FaceRowLevel.MaxDvPositionsDefault.toString).toLong
+    val selected = byFid.valuesIterator.map(_.size.toLong).sum
+    require(selected <= maxPos,
+      s"delta ${op.command()} on $path: this statement selects $selected " +
+        s"rows for deletion, above the $maxPos-position cap " +
+        s"(${FaceRowLevel.MaxDvPositionsKey}) — use copy-on-write " +
+        "(deleteWhere, or the `graft` catalog), where a delete this large " +
+        "pays for its rewrite")
     val (insertMsgs, emptyIns) = msgs.flatMap(_.insert).toSeq
       .partition(m => FeatherStats.fromJson(m.statsJson).nonEmpty)
     emptyIns.foreach { m =>
@@ -844,7 +962,10 @@ private class FaceDeltaWrite(op: RowLevelHost,
     }
     // nothing deleted, nothing inserted: a no-match statement publishes
     // NO version (replay-clean, the COW contract)
-    if (byFid.isEmpty && insertMsgs.isEmpty) return
+    if (byFid.isEmpty && insertMsgs.isEmpty) {
+      report = Some(RowLevelCommitMetrics.noOp(state.snap))
+      return
+    }
     val targetV = state.snap.version + 1
     val opName =
       s"rowlevel_delta_${op.command().toString.toLowerCase}"
@@ -874,23 +995,27 @@ private class FaceDeltaWrite(op: RowLevelHost,
       added ++= FeatherMutations.stampLeaves(face, fs, root,
         state.snap.files.map(_._1),
         FeatherSnapshots.runPrefix(targetV), dataSchema)
-    try
-      FeatherSnapshots.commitMutation(fs, root, opName, state.snap,
-        removeRel = droppedRel, add = added.toSeq, setDvs = bindings,
-        readRel = Some(state.readRel)): Unit
-    catch { case e: Throwable =>
-      // the publish failed (conflict): parts, stamps, leaf-stats
-      // entries, AND the freshly written DV sidecars were never
-      // visible — delete them all
-      FaceConvert.deleteFinalized(fs, path, added.toSeq.map(_._1))
-      FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
-      bindings.values.foreach { case (dvRel, _) =>
-        try fs.delete(new org.apache.hadoop.fs.Path(root, dvRel), false)
-        catch { case _: Exception => () }
-        ()
+    val version =
+      try
+        FeatherSnapshots.commitMutation(fs, root, opName, state.snap,
+          removeRel = droppedRel, add = added.toSeq, setDvs = bindings,
+          readRel = Some(state.readRel))
+      catch { case e: Throwable =>
+        // the publish failed (conflict): parts, stamps, leaf-stats
+        // entries, AND the freshly written DV sidecars were never
+        // visible — delete them all
+        FaceConvert.deleteFinalized(fs, path, added.toSeq.map(_._1))
+        FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
+        bindings.values.foreach { case (dvRel, _) =>
+          try fs.delete(new org.apache.hadoop.fs.Path(root, dvRel), false)
+          catch { case _: Exception => () }
+          ()
+        }
+        throw e
       }
-      throw e
-    }
+    report = Some(RowLevelCommitMetrics.Report(version, droppedRel.size,
+      state.snap.files.size - droppedRel.size - bindings.size, added.size,
+      bindings.size))
     if (flatStats.nonEmpty) FeatherStats.upsertMerged(fs, root, flatStats)
   }
 

@@ -155,7 +155,7 @@ class ConcurrencySpec extends AnyFunSuite {
     assert(after.where(col("id") > 290).count() === 0,
       "loser rebased onto the winner's manifest and landed")
     val hist = FeatherSnapshots.history(fsOf(path), new Path(path))
-    assert(hist.map(_._3).count(_ == "delete") === 2,
+    assert(hist.map(_._3).count(_ == "rowlevel_delete") === 2,
       s"both deletes in history: ${hist.map(_._3)}")
     // OVERLAPPING candidates still abort loudly: both deletes target
     // the same row, so their pruned candidate sets share its file

@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.PredicateMutations
-import graft.sources.FeatherSnapshots
+import graft.sources.{FaceRowLevel, FeatherSnapshots}
 
 /** Predicate DELETE/UPDATE (io/PredicateMutations) and their SQL
-  * spellings: candidate pruning by stats + partition values, the
-  * limit-1 no-match degrade, DV masking, partition moves through
-  * UPDATE, per-leaf stamps on full deletes, and the loud contracts. */
+  * spellings, one row-level path: candidate pruning by stats + partition
+  * values, the no-match degrade, DV masking and its position cap,
+  * partition moves through UPDATE, per-leaf stamps on full deletes, and
+  * the loud contracts. */
 class PredicateMutationsSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -192,11 +193,12 @@ class PredicateMutationsSpec extends AnyFunSuite {
         Map("nope" -> lit(1)), Some(col("id") === 1))
     }
     assert(e1.getMessage.contains("not in the table schema"))
-    val e2 = intercept[IllegalArgumentException] {
+    // Spark's analysis applies the session's STRICT store assignment
+    val e2 = intercept[org.apache.spark.sql.AnalysisException] {
       PredicateMutations.updateWhere(spark, path,
         Map("id" -> lit("str")), Some(col("id") === 1))
     }
-    assert(e2.getMessage.contains("lossless"))
+    assert(e2.getMessage.contains("CANNOT_SAFELY_CAST"), e2.getMessage)
     val e3 = intercept[IllegalArgumentException] {
       PredicateMutations.updateWhere(spark, path,
         Map("amt" -> lit(0.0)), Some(col("id")))
@@ -278,33 +280,87 @@ class PredicateMutationsSpec extends AnyFunSuite {
 
   test("deleteWhereDV refuses above the driver-collect position cap " +
        "with COW guidance; under the cap the path is unchanged") {
+    // both spellings: the cap lives in the one merge-on-read commit, so
+    // graft_dv DELETE and UPDATE refuse the same way
     val path = tmp("dv_cap")
     writeTable(path)
-    spark.conf.set(PredicateMutations.MaxDvPositionsKey, "5")
+    spark.conf.set(FaceRowLevel.MaxDvPositionsKey, "5")
     try {
-      val e = intercept[IllegalArgumentException] {
-        PredicateMutations.deleteWhereDV(spark, path, col("id") <= 12)
+      Seq[(String, () => Unit)](
+        "deleteWhereDV" -> (() =>
+          PredicateMutations.deleteWhereDV(spark, path, col("id") <= 12): Unit),
+        "graft_dv DELETE" -> (() =>
+          spark.sql(s"DELETE FROM graft_dv.`$path` WHERE id <= 12")
+            .collect(): Unit),
+        "graft_dv UPDATE" -> (() =>
+          spark.sql(s"UPDATE graft_dv.`$path` SET amt = 0 WHERE id <= 12")
+            .collect(): Unit)
+      ).foreach { case (what, run) =>
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains("selects 12 rows") &&
+          e.getMessage.contains("deleteWhere"),
+          s"$what: the guard must name the count and the COW alternative: " +
+            e.getMessage)
+        // the refusal happened BEFORE any commit — version unchanged, no
+        // sidecar written, the UPDATE's tmp insert parts deleted
+        assert(FeatherSnapshots.resolve(fsOf(path), new Path(path), None)
+          .get.version === 1, what)
+        val left = new java.io.File(path).list().toSeq
+        assert(!left.exists(n => n.endsWith(".dv") || n.endsWith(".tmp")),
+          s"$what left files behind: $left")
       }
-      assert(e.getMessage.contains("selects 12 rows") &&
-        e.getMessage.contains("deleteWhere"),
-        s"guard must name the count and the COW alternative: ${e.getMessage}")
-      // the refusal happened BEFORE any commit — version unchanged
-      assert(FeatherSnapshots.resolve(fsOf(path), new Path(path), None)
-        .get.version === 1)
       // under the cap: same statement shape lands DV sidecars as before
       val r = PredicateMutations.deleteWhereDV(spark, path, col("id") <= 4)
       assert(r.partsWritten === 1 && readAll(path).count() === 396)
-    } finally spark.conf.unset(PredicateMutations.MaxDvPositionsKey)
+    } finally spark.conf.unset(FaceRowLevel.MaxDvPositionsKey)
+  }
+
+  test("a no-match DELETE publishes no version when pruning keeps exactly " +
+       "one file, in both spellings; a no-match UPDATE narrowed to one " +
+       "file republishes it") {
+    import spark.implicits._
+    val path = tmp("noop_one_file")
+    (1 to 400).map(i => (i.toLong, s"g${i % 4}", i * 1.0))
+      .toDF("id", "grp", "amt")
+      .repartition(1).write.format("feather").mode("overwrite")
+      .option("snapshots", "true").save(path)
+    def version = FeatherSnapshots.resolve(fsOf(path), new Path(path), None)
+      .get.version
+    val v0 = version
+    // untranslatable: no file statistic refutes it, so the one file is
+    // planned and only the runtime filter can prove the no-match
+    val noMatch = col("id") % 1000 === 999
+    val r = PredicateMutations.deleteWhere(spark, path, noMatch)
+    assert(r.version === v0 && r.filesTouched === 0 && r.filesKept === 1)
+    assert(PredicateMutations.deleteWhereDV(spark, path, noMatch)
+      .version === v0)
+    for (cat <- Seq("graft", "graft_dv"))
+      spark.sql(s"DELETE FROM $cat.`$path` WHERE id % 1000 = 999").collect()
+    spark.sql(s"UPDATE graft_dv.`$path` SET amt = 0 WHERE id % 1000 = 999")
+      .collect()
+    assert(version === v0, "a no-match DELETE must publish no version")
+    // the copy-on-write UPDATE gets no runtime filter on one file (two
+    // extra jobs on every pruned UPDATE), so it rewrites the file
+    val u = PredicateMutations.updateWhere(spark, path,
+      Map("amt" -> lit(0.0)), Some(noMatch))
+    assert(u.version === v0 + 1 && u.filesTouched === 1)
+    spark.sql(s"UPDATE graft.`$path` SET amt = 0 WHERE id % 1000 = 999")
+      .collect()
+    assert(version === v0 + 2)
+    assert(readAll(path).count() === 400 &&
+      readAll(path).where(col("amt") === 0.0).count() === 0)
   }
 
   test("nondeterministic WHERE / SET refuse loudly (the predicate " +
        "evaluates in separate jobs; rand() could lose or duplicate rows)") {
     val path = tmp("nondet")
     writeTable(path)
-    val e1 = intercept[IllegalArgumentException] {
+    // Spark's analysis refuses a nondeterministic WHERE itself
+    val e1 = intercept[org.apache.spark.sql.AnalysisException] {
       PredicateMutations.deleteWhere(spark, path, rand() < lit(2.0))
     }
-    assert(e1.getMessage.contains("nondeterministic"))
+    assert(e1.getMessage.contains("INVALID_NON_DETERMINISTIC_EXPRESSIONS"),
+      e1.getMessage)
     val e2 = intercept[IllegalArgumentException] {
       PredicateMutations.updateWhere(spark, path,
         Map("amt" -> rand()), Some(col("id") === 1))

@@ -1069,4 +1069,31 @@ class RowLevelCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"a one-file UPDATE needs no runtime filter: " +
         scans.map(_.runtimeFilters))
   }
+
+  test("commit metrics: a SQL DELETE on graft.`path` and graft_dv.`path` " +
+       "reports what its commit published in the executed plan") {
+    for ((cat, t) <- Seq("graft" -> "cm_cow", "graft_dv" -> "cm_dv")) {
+      threeFlatFiles(t, "feather")
+      val before = snapOf(s"rl/$t")
+      val df = plain.sql(s"DELETE FROM $cat.`$wh/rl/$t` WHERE id % 1000 = 120")
+      val after = snapOf(s"rl/$t")
+      assert(after.version == before.version + 1)
+      val write = (df.queryExecution.executedPlan match {
+        case c: org.apache.spark.sql.execution.CommandResultExec =>
+          c.commandPhysicalPlan
+        case p => p
+      }).collectFirst { case p if p.metrics.contains("commitVersion") => p }
+        .getOrElse(fail(s"$cat: no commit metrics in " +
+          df.queryExecution.executedPlan))
+      val m = Seq("commitVersion", "filesRemoved", "filesKept", "partsAdded",
+        "dvsBound").map(k => k -> write.metrics(k).value).toMap
+      // COW replaces the one matching file with one part; delta binds one
+      // DV on it; either way every other planned file is kept
+      val (removed, added, dvs) = if (cat == "graft") (1, 1, 0) else (0, 0, 1)
+      assert(m == Map("commitVersion" -> after.version,
+        "filesRemoved" -> removed, "filesKept" -> (before.files.size - 1),
+        "partsAdded" -> added, "dvsBound" -> dvs),
+        s"$cat (${write.nodeName}): $m")
+    }
+  }
 }
