@@ -85,10 +85,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
   private def fsOf(p: Path) = p.getFileSystem(hadoopConf)
 
-  /** `graft.`/abs/path`` — the escape hatch: a name that IS a path. */
+  /** `graft.`/abs/path`` — the escape hatch: a name that IS a path,
+    * absolute or a URI (`hdfs://nn/t`, or `file:/t` with no authority).
+    * No table name can be read this way: [[checkSegment]] refuses '/'. */
   private def isPathIdent(ident: Identifier): Boolean =
-    ident.namespace.isEmpty &&
-      (ident.name.startsWith("/") || ident.name.contains("://"))
+    ident.namespace.isEmpty && (ident.name.startsWith("/") ||
+      ident.name.matches("[A-Za-z][A-Za-z0-9+.-]*:/.*"))
 
   private def requireWarehouse(what: String): String =
     warehouse.getOrElse(throw new IllegalArgumentException(

@@ -1,13 +1,18 @@
 package graft.io
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, UpdateTable}
+import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.catalog.GraftCatalog
 import graft.sources.{FeatherPartitions, FeatherSnapshots, RowLevelCommitMetrics}
 
 /** Predicate DELETE and UPDATE on snapshotted tables, as engine calls
@@ -32,15 +37,17 @@ import graft.sources.{FeatherPartitions, FeatherSnapshots, RowLevelCommitMetrics
   * [[graft.sources.FaceRowLevel]]: its scan prunes leaves by partition
   * values and files by stats and Bloom sidecars (the pushed filters),
   * and its copy-on-write scan narrows the rewrite at runtime to the
-  * files holding a match. Spark's analysis applies the session's store
-  * assignment policy to SET values and pins the clock functions to one
-  * instant per statement. The `Result` comes from the commit itself:
+  * files holding a match. The relation comes from a catalog built in
+  * place over the qualified path, so any session runs them and a
+  * relative path names that directory, never a warehouse table. A SET
+  * applies only exact types and lossless upcasts whatever the session's
+  * store assignment policy; Spark's analysis pins the clock functions to
+  * one instant per statement. The `Result` comes from the commit itself:
   * the row-level write's driver metrics ([[RowLevelCommitMetrics]]). A
   * statement that matches nothing publishes no version (the
   * foreachBatch replay contract), except a no-match UPDATE whose pruning
   * kept exactly one file: the runtime filter is not offered there, so
-  * that file is republished. The session must register the `graft`
-  * (and, for [[deleteWhereDV]], `graft_dv`) catalog. */
+  * that file is republished. */
 object PredicateMutations {
   import FeatherMutations.Result
 
@@ -72,18 +79,34 @@ object PredicateMutations {
                        cond: Option[Column],
                        set: Map[String, Column]): Result = {
     val op = if (set.isEmpty) "delete" else "update"
-    require(spark.conf.getOption(s"spark.sql.catalog.$catalog").isDefined,
-      s"$op on $path runs as SQL DML on $catalog.`<path>`: register the " +
-        s"catalog (spark.sql.catalog.$catalog=graft.catalog.GraftCatalog)")
+    // the statement's relation comes from a catalog of this name built in
+    // place: no session conf needed, and the qualified path always takes
+    // the catalog's path branch (a relative name would resolve under a
+    // warehouse). On the default filesystem the bare absolute path is
+    // the name the SQL spelling `graft.`/abs/t`` uses.
+    val conf = spark.sparkContext.hadoopConfiguration
+    val raw = new Path(path)
+    val fs = raw.getFileSystem(conf)
+    val qualified = fs.makeQualified(raw)
+    val name =
+      if (fs.getUri == FileSystem.getDefaultUri(conf)) qualified.toUri.getPath
+      else qualified.toString
+    val cat = new GraftCatalog
+    cat.initialize(catalog, CaseInsensitiveStringMap.empty())
+    val ident = Identifier.of(Array.empty[String], name)
+    val target = Bridge.ofRows(spark,
+      DataSourceV2Relation.create(cat.loadTable(ident), Some(cat), Some(ident)))
     // input checks Spark's analysis of the statement leaves open (it
     // refuses a nondeterministic WHERE itself): an unknown SET column, a
     // non-boolean WHERE, a nondeterministic SET — a replayed statement
-    // (the foreachBatch contract) must write the same rows
-    val target = Bridge.ofRows(spark, UnresolvedRelation(Seq(catalog, path)))
+    // (the foreachBatch contract) must write the same rows — and a SET
+    // that is neither exact nor a lossless upcast, whatever the session's
+    // store assignment policy (the rule of every engine entry point)
     val caseSensitive =
       spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-    set.keys.foreach(c => require(target.columns.exists(t =>
-        if (caseSensitive) t == c else t.equalsIgnoreCase(c)),
+    def field(c: String) = target.schema.fields.find(f =>
+      if (caseSensitive) f.name == c else f.name.equalsIgnoreCase(c))
+    set.keys.foreach(c => require(field(c).isDefined,
       s"$op: SET names column '$c', not in the table schema " +
         s"(${target.columns.mkString(", ")})"))
     val sets = set.toSeq
@@ -95,6 +118,12 @@ object PredicateMutations {
         s"$op: WHERE predicate is ${dt.catalogString}, not boolean")
     }
     sets.zip(resolved.drop(cond.size)).foreach { case ((c, _), e) =>
+      val to = field(c).get.dataType
+      require(e.dataType == to || Cast.canUpCast(e.dataType, to),
+        s"$op: SET of column '$c' (${to.catalogString}) from a " +
+          s"${e.dataType.catalogString} expression — only exact types and " +
+          "lossless upcasts are applied; cast the expression explicitly " +
+          "if the narrowing is intended")
       require(e.deterministic,
         s"$op: the SET of column '$c' is nondeterministic — a replayed " +
           "statement would write different rows; make it deterministic")

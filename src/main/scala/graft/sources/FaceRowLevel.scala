@@ -71,7 +71,9 @@ import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats,
   * instead of missing that file's matches. A statement left with no
   * group and no written row publishes NO version, but still checks its
   * read set against the head (a racer that rewrote the only matching
-  * file leaves the runtime filter nothing to keep). The manifest commit
+  * file leaves the runtime filter nothing to keep); so does a COW DELETE
+  * of one file that wrote back every live row the file's stats count
+  * (the runtime filter is not offered there). The manifest commit
   * swaps groups (COW) or binds deletion vectors (delta); tmp parts are
   * deleted either way, and a failed commit unwinds the final parts and
   * fresh DV sidecars.
@@ -79,7 +81,8 @@ import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats,
   * The engine's predicate DML runs here too: `deleteWhere`,
   * `deleteWhereDV` and `updateWhere` ([[graft.io.PredicateMutations]])
   * build Spark's DeleteFromTable / UpdateTable over ``graft.`<path>` ``
-  * or ``graft_dv.`<path>` ``, so their pruning is this scan's. Both
+  * or ``graft_dv.`<path>` `` (a relation of a catalog they build in
+  * place), so their pruning is this scan's. Both
   * writes report what the commit did as DSv2 driver metrics on the
   * command's plan — `commitVersion`, `filesRemoved`, `filesKept`,
   * `partsAdded`, `dvsBound` ([[RowLevelCommitMetrics]]) — which the SQL
@@ -113,6 +116,20 @@ private[graft] object FaceRowLevel {
     * overridable per workload. */
   val MaxDvPositionsKey = "spark.graft.dv.maxDeletePositions"
   val MaxDvPositionsDefault: Long = 10000000L
+
+  /** The rows a reader sees in files `rels` of `snap`: the stats
+    * sidecars' exact counts less each file's deletion-vector count. None
+    * when a file's stats carry no count (adopted, not yet backfilled). */
+  def liveRows(root: org.apache.hadoop.fs.Path,
+               snap: FeatherSnapshots.Snapshot,
+               rels: Set[String]): Option[Long] = {
+    val lenOf = snap.files.toMap
+    FeatherStats.exactRowCount(
+      SparkSession.active.sparkContext.hadoopConfiguration,
+      rels.toSeq.map(rel =>
+        (new org.apache.hadoop.fs.Path(root, rel).toString, lenOf(rel))))
+      .map(_ - rels.toSeq.flatMap(snap.dvs.get).map(_._2).sum)
+  }
 }
 
 // ---------------------------------------------------------------------------
@@ -349,21 +366,24 @@ private[sources] class FaceScan(host: Option[RowLevelHost],
   /** The runtime group filter (Spark's
     * RowLevelOperationRuntimeGroupFiltering): offered on COW scans only,
     * never when the table owns `_file` (the reference would resolve to
-    * stored values — [[GraftMetaColumns.fileValue]]'s shadowing rule).
-    * An UPDATE or MERGE gets it only when the plan kept more than one
-    * file: with one, the filter can only turn a no-match statement into
-    * a no-op, for two extra jobs on every pruned UPDATE — so a no-match
-    * UPDATE narrowed to one file republishes that file. A DELETE gets it
-    * on one kept file too, so a no-match DELETE publishes no version
-    * (the replay contract). Asking resolves [[planned]]: the rule asks
-    * BEFORE it builds the matching-rows query, so that query's batch
-    * scan reads this snapshot or a newer one, never an older one — a
-    * newer one is what the read-set check catches. */
+    * stored values — [[GraftMetaColumns.fileValue]]'s shadowing rule),
+    * and only when the plan kept more than one file: with one, the filter
+    * can only turn a no-match statement into a no-op, for two extra jobs
+    * on every pruned statement. A one-file DELETE proves its no-match at
+    * commit instead, by the row count ([[FaceCowWrite]]), and gets the
+    * filter only when its file's stats carry no count; a no-match UPDATE
+    * narrowed to one file republishes that file. Asking resolves
+    * [[planned]]: the rule asks BEFORE it builds the matching-rows query,
+    * so that query's batch scan reads this snapshot or a newer one, never
+    * an older one — a newer one is what the read-set check catches. */
   override def filterAttributes(): Array[NamedReference] = {
-    val minKept = if (host.exists(_.command() == Command.DELETE)) 1 else 2
+    val state = planned._1
+    def uncountedDelete = host.exists(_.command() == Command.DELETE) &&
+      FaceRowLevel.liveRows(new org.apache.hadoop.fs.Path(path), state.snap,
+        state.keptRel).isEmpty
     if (host.exists(_.groupBased) &&
         !owned.contains(GraftMetaColumns.FileName) &&
-        planned._1.keptRel.size >= minKept)
+        (state.keptRel.size > 1 || state.keptRel.size == 1 && uncountedDelete))
       Array(Expressions.column(GraftMetaColumns.FileName))
     else Array.empty
   }
@@ -829,16 +849,27 @@ private class FaceCowWrite(op: RowLevelHost,
     val committed = messages.collect { case m: FeatherCommitMessage => m }
     val (data, empty) = committed.partition(m =>
       FeatherStats.fromJson(m.statsJson).nonEmpty)
-    empty.foreach { m =>
+    // a one-file DELETE that wrote back every live row of its group
+    // deleted nothing (the scan offers no runtime filter on one counted
+    // file): no version, at no extra job
+    def rows(m: FeatherCommitMessage): Long =
+      FeatherStats.fromJson(m.statsJson).flatMap(_.get(FeatherStats.RowCountKey))
+        .collect { case FeatherStats.ColStat.Count(n) => n }.sum
+    val noneDeleted = op.command() == Command.DELETE &&
+      state.keptRel.size == 1 &&
+      FaceRowLevel.liveRows(root, state.snap, state.keptRel)
+        .contains(data.map(rows).sum)
+    (if (noneDeleted) committed else empty).foreach { m =>
       try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
       catch { case _: Exception => () }
     }
     val opName = s"rowlevel_${op.command().toString.toLowerCase}"
-    if (state.keptRel.isEmpty && data.isEmpty) {
+    if (noneDeleted || state.keptRel.isEmpty && data.isEmpty) {
       // nothing replaced, nothing written: no version. The runtime group
-      // filter may have narrowed a non-empty read set to no group, so
-      // that read set is still checked — a racing rewrite of a matching
-      // file must abort the statement, not turn it into a no-op.
+      // filter may have narrowed a non-empty read set to no group (or the
+      // one-file DELETE wrote its group back whole), so that read set is
+      // still checked — a racing rewrite of a matching file must abort
+      // the statement, not turn it into a no-op.
       if (state.readRel.nonEmpty)
         FeatherSnapshots.requireReadSetCurrent(fs, root, opName, state.snap,
           state.readRel)

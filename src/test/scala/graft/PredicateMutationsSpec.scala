@@ -193,12 +193,11 @@ class PredicateMutationsSpec extends AnyFunSuite {
         Map("nope" -> lit(1)), Some(col("id") === 1))
     }
     assert(e1.getMessage.contains("not in the table schema"))
-    // Spark's analysis applies the session's STRICT store assignment
-    val e2 = intercept[org.apache.spark.sql.AnalysisException] {
+    val e2 = intercept[IllegalArgumentException] {
       PredicateMutations.updateWhere(spark, path,
         Map("id" -> lit("str")), Some(col("id") === 1))
     }
-    assert(e2.getMessage.contains("CANNOT_SAFELY_CAST"), e2.getMessage)
+    assert(e2.getMessage.contains("lossless"))
     val e3 = intercept[IllegalArgumentException] {
       PredicateMutations.updateWhere(spark, path,
         Map("amt" -> lit(0.0)), Some(col("id")))
@@ -349,6 +348,68 @@ class PredicateMutationsSpec extends AnyFunSuite {
     assert(version === v0 + 2)
     assert(readAll(path).count() === 400 &&
       readAll(path).where(col("amt") === 0.0).count() === 0)
+    // without a row count in the file's stats the DELETE takes the
+    // runtime filter instead, and still publishes nothing
+    new java.io.File(path).listFiles().filter(f =>
+      f.getName.endsWith(".stats.json") || f.getName == "_stats.json")
+      .foreach(_.delete())
+    val v2 = version
+    assert(PredicateMutations.deleteWhere(spark, path, noMatch)
+      .version === v2)
+    spark.sql(s"DELETE FROM graft.`$path` WHERE id % 1000 = 999").collect()
+    assert(version === v2)
+    assert(PredicateMutations.deleteWhere(spark, path, col("id") === 7)
+      .version === v2 + 1 && readAll(path).count() === 399)
+  }
+
+  test("the entry points open the path the caller names: relative, " +
+       "file: URI, in a session with no graft catalog and Spark's default " +
+       "store assignment (a lossy SET still refuses)") {
+    val rel = "target/graft_predmut_rel/t"
+    val abs = new java.io.File(rel).getAbsolutePath
+    def wipe(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(wipe)
+      f.delete(): Unit
+    }
+    wipe(new java.io.File(abs))
+    try {
+      writeTable(rel)
+      def version = FeatherSnapshots.resolve(fsOf(abs), new Path(abs), None)
+        .get.version
+      val v0 = version
+      assert(PredicateMutations.deleteWhere(spark, rel, col("id") === 1)
+        .version === v0 + 1)
+      assert(PredicateMutations.updateWhere(spark, s"file:$abs",
+        Map("amt" -> lit(0.0)), Some(col("id") === 2)).version === v0 + 2)
+      assert(PredicateMutations.deleteWhereDV(spark, s"file:$abs",
+        col("id") === 3).version === v0 + 3)
+      // the SQL spelling takes a scheme-only URI too
+      spark.sql(s"DELETE FROM graft.`file:$abs` WHERE id = 4").collect()
+      assert(version === v0 + 4)
+      assert(readAll(abs).count() === 397 &&
+        readAll(abs).where(col("amt") === 0.0).count() === 1)
+      val plain = org.apache.spark.sql.graft.Bridge.sessionWithoutExtensions(
+        spark, Map("spark.sql.shuffle.partitions" -> "4",
+          "spark.sql.session.timeZone" -> "UTC"))
+      // the shared context conf registers the catalogs; this session
+      // drops them
+      Seq("graft", "graft_dv").foreach(c =>
+        plain.conf.unset(s"spark.sql.catalog.$c"))
+      assert(plain.conf.getOption("spark.sql.catalog.graft").isEmpty &&
+        plain.conf.get("spark.sql.storeAssignmentPolicy") === "ANSI")
+      val e = intercept[IllegalArgumentException] {
+        PredicateMutations.updateWhere(plain, abs,
+          Map("id" -> lit(1.5)), Some(col("id") === 5))
+      }
+      assert(e.getMessage.contains("lossless"), e.getMessage)
+      assert(version === v0 + 4)
+      assert(PredicateMutations.updateWhere(plain, abs,
+        Map("amt" -> lit(0)), Some(col("id") === 5)).version === v0 + 5)
+      assert(PredicateMutations.deleteWhereDV(plain, rel, col("id") === 6)
+        .version === v0 + 6)
+      assert(readAll(abs).count() === 396 &&
+        readAll(abs).where(col("amt") === 0.0).count() === 2)
+    } finally wipe(new java.io.File(abs).getParentFile)
   }
 
   test("nondeterministic WHERE / SET refuse loudly (the predicate " +
