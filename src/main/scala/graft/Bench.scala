@@ -34,7 +34,7 @@ package graft
   * as a fast one.
   */
 object Bench {
-  /** Untimed warmup shared by Bench and TimeQ: JVM/codegen/parquet-footer
+  /** Untimed warmup shared by Bench and Prof: JVM/codegen/parquet-footer
     * costs land here, not on whichever query happens to run first. One query
     * per (table, operator class) — measured r6: the first window query of a
     * cold run absorbed ~4 s of JIT that re-timing in isolation showed was
@@ -117,7 +117,7 @@ object Bench {
       // (median, min, max): the max makes a contention-poisoned rep
       // self-evident per ROW — r12's driver sweep read two 6–10 s medians
       // whose same-HEAD idle re-times were 3× lower, and adjudicating
-      // that took a judge TimeQ pass because the artifact only carried
+      // that took a per-query re-timing pass because the artifact only carried
       // the whole-run load block. A row whose max ≫ median (with the
       // min near the idle floor) is a contended rep, not a regression.
       val stats =
@@ -148,7 +148,7 @@ object Bench {
     // min-sum rides beside the med-sum in BOTH emitted lines: the r14
     // driver sweep headlined 155.4 s while its own per-query mins summed
     // to 139.2 and the idle box read ~118 — the contended-vs-regressed
-    // adjudication the judge did by hand over TimeQ re-runs should be
+    // adjudication done by hand over per-query re-runs should be
     // one field read, not six re-timings.
     val totalMin = results.values.map(_._2).filter(_ >= 0).sum
     val loadEnd = loadAvg()

@@ -25,14 +25,15 @@ object GraftSession {
       // iterative queries (connected components) from paying 32 near-empty
       // tasks per round
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "false"))
+        "false")
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // INSERT / UPDATE SET / MERGE assignments apply only exact types and
-      // lossless up-casts (the mutation tier's rule, ConditionalMerge's
-      // checkExpr): Spark's default ANSI policy would silently truncate
+      // lossless up-casts (the rule the engine's row-level entry points
+      // check themselves, PredicateMutations.requireSets): Spark's
+      // default ANSI policy would silently truncate
       // 15.5 into a BIGINT column and corrupt the written rows
       .config("spark.sql.storeAssignmentPolicy", "STRICT")
       // Deliberately NOT set here: spark.sql.parquet.outputTimestampType.

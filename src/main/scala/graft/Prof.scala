@@ -2,17 +2,20 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Dev profiling harness: run ONE registry query (after Bench.warmup) with a
-  * listener that prints every Spark job's wall time and task time, plus the
-  * gaps between jobs (driver-side planning/conversion time). Complements
-  * TimeQ when the question is WHERE inside a multi-job query the time goes.
+/** Dev timing and profiling harness: run a comma-separated list of
+  * registry queries `reps` times each (default 2: cold + warm) after the
+  * same untimed warmup Bench uses (Bench.warmup), printing each rep's wall
+  * time with every Spark job's wall time and every stage's task time.
+  * Complements Bench (whole-suite, single rep) when isolating one query's
+  * cost from suite ordering noise, and shows WHERE inside a multi-job
+  * query the time goes. Pins release per rep, exactly as Bench does.
   *
-  * Usage: runMain graft.Prof <sfDir> <name> [reps]
+  * Usage: runMain graft.Prof <sfDir> <name>[,<name>...] [reps]
   */
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val name = args(1)
+    val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = GraftSession.build("graft-prof")
     spark.sparkContext.setLogLevel("WARN")
@@ -46,7 +49,7 @@ object Prof {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    for (rep <- 1 to reps) {
+    for (name <- names; rep <- 1 to reps) {
       events.clear()
       stageTask.set(0)
       val t0 = System.nanoTime()

@@ -2,10 +2,13 @@ package graft.io
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, InsertAction, InsertStarAction, MergeAction, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateStarAction}
+import org.apache.spark.sql.connector.catalog.TableCatalog
+import org.apache.spark.sql.graft.Bridge
 
-import graft.sources.FeatherSnapshots
+import graft.sources.{FeatherPartitions, FeatherSnapshots}
 
 /** Conditional MERGE — the Delta/industry MERGE surface CDC consumers
   * actually write (reference analog: the reference's in-memory upsert is
@@ -23,77 +26,60 @@ import graft.sources.FeatherSnapshots
   *   // .executeDV()     // merge-on-read: masks + new parts
   * }}}
   *
-  * Semantics (the Delta contract):
-  *  - rows pair by `keyCols` equality (null keys never match);
-  *  - clauses of each family evaluate IN ORDER, first condition that
-  *    holds wins; a row matching no clause of its family carries through
-  *    unchanged (matched / not-matched-by-source families) or is ignored
-  *    (not-matched source rows);
-  *  - `update` SET expressions and clause conditions reference the two
-  *    sides as `target.<col>` / `source.<col>`; an `update` leaves
-  *    unlisted columns at their target values, an `insert` fills
-  *    unlisted columns with NULL;
-  *  - the source must carry UNIQUE key tuples — two source rows matching
-  *    one target row have no defined merge order, and the check is loud
-  *    (Delta's multiple-matches error);
-  *  - the whole operation is ONE atomic manifest commit under the
-  *    conflict matrix (concurrent blind appends commute, racing
-  *    mutations abort loudly);
-  *  - replay shape: a merge whose keys match NO actual row (or with no
-  *    qualifying insert) publishes NO version; one whose keys match but
-  *    whose CONDITIONS all evaluate false still rewrites the candidate
-  *    files under COW (Delta's touched-file rule — deciding "no clause
-  *    fired anywhere" would cost the same scan as the rewrite), so a
-  *    replayed CONDITIONAL merge is content-idempotent but not
-  *    version-free; executeDV's masks make the replay cheap where that
-  *    matters.
+  * Both entry points build Spark's MergeIntoTable over ``graft.`<path>` ``
+  * (copy-on-write) or ``graft_dv.`<path>` `` (merge-on-read) — the SQL
+  * MERGE statement, run through Spark's row-level rewrite onto
+  * [[graft.sources.FaceRowLevel]] (an insert-only merge becomes Spark's
+  * append). The semantics are Spark's (the Delta contract):
+  *  - rows pair by `keyCols` equality (null keys never match); the sides
+  *    are aliased `target` and `source`;
+  *  - clauses of each family evaluate IN ORDER, the first whose condition
+  *    holds wins; a row matching no clause of its family is left as it is
+  *    (matched / not-matched-by-source) or ignored (not-matched source);
+  *  - an update leaves unlisted columns at their target values, an insert
+  *    fills them with NULL;
+  *  - two source rows matching one target row fail the statement
+  *    (MERGE_CARDINALITY_VIOLATION);
+  *  - one atomic manifest commit under the conflict matrix; a merge that
+  *    changes nothing publishes no version; one wall-clock instant per
+  *    statement.
   *
-  * Strategies:
-  *  - [[execute]] (copy-on-write): candidate files — pruned by the
-  *    stats/bloom probe on the source keys — rewrite whole. A
-  *    `whenNotMatchedBySource` clause touches EVERY file (any row might
-  *    be unmatched; Delta scans the full table for this clause too). An
-  *    insert-only merge rewrites nothing — it reads candidate keys for
-  *    the anti-join and appends the insert parts.
-  *  - [[executeDV]] (merge-on-read): matched rows' positions mask via
-  *    [[DeletionVectors]] sidecars and the clause OUTPUT (updated +
-  *    carried-through matched rows + inserts) lands as new parts —
-  *    bytes ∝ matched + inserted rows, never touched-file sizes.
-  *    `whenNotMatchedBySource` is refused here: masking "every row not
-  *    in the source" is a full-table operation where the rewrite is the
-  *    right strategy anyway.
+  * Up to [[ConditionalMerge.MaxPrunedKeys]] distinct source keys join the
+  * ON condition as `target.key IN (…)`, which Spark pushes into the
+  * target scan: its stats and Bloom sidecars drop the files no key can
+  * be in, so both strategies plan — and a concurrent commit is checked
+  * against — only those. The copy-on-write rewrite then keeps only the
+  * files that hold a match (the runtime `_file` filter); a
+  * `whenNotMatchedBySource` clause rewrites every file. Merge-on-read
+  * masks the rows a clause changes or deletes
+  * and lands the clause output as new parts; it refuses
+  * `whenNotMatchedBySource`, a full-table clause. On a hive-partitioned
+  * table the partition columns are ordinary columns of both sides: a SET
+  * on one moves the row, and every written row lands in the leaf its
+  * values name.
   *
-  * Scope: flat AND hive-partitioned tables, any face (feather/avro/
-  * parquet). On a partitioned table the partition columns ride the
-  * working frame as ordinary columns (typed by the same inference a
-  * partitioned read applies): clause conditions and SETs may reference
-  * `target.<partcol>`, a SET on one is a cross-partition move
-  * (delete-here + insert-there in the one commit), and every output row
-  * routes to the leaf its values name. Keys must be DATA columns
-  * (partition values live in the directory chain); an explicit insert
-  * VALUES must name every partition column. Nested non-hive layouts
-  * refuse (nowhere to route). */
+  * The entry points check only what Spark's analysis leaves open: keys
+  * (named, on both sides, never a partition column), a partitioned insert
+  * naming every partition column, deterministic source, conditions and
+  * SETs (the copy-on-write plan reads the source twice), and the
+  * lossless-or-exact SET rule ([[PredicateMutations.requireSets]]),
+  * applied to the implicit SETs of updateAll/insertAll too. */
 final case class ConditionalMerge(
     spark: SparkSession, path: String, source: DataFrame,
     keyCols: Seq[String],
     matched: Seq[(Option[Column], ConditionalMerge.MatchedAction)] = Nil,
     notMatched: Seq[(Option[Column], Map[String, Column])] = Nil,
     bySource: Seq[(Option[Column], ConditionalMerge.MatchedAction)] = Nil,
-    codec: String = "lz4",
     evolveSchema: Boolean = false) {
   import ConditionalMerge._
 
-  /** Schema evolution opt-in (Delta's `WITH SCHEMA EVOLUTION`): the
-    * source's NEW columns join the table schema as nullable — survivors
-    * and untouched generations read them as null through mergeSchema,
-    * exactly the mutation tier's evolveSchema contract
-    * ([[FeatherMutations.mergeDV]]). Without the opt-in an extra source
-    * column is simply ignored (Delta's default) unless a clause
-    * references it as a TABLE column, which stays loud. Deliberate
-    * trade-off: a merge that degrades to a NO-OP (no row matched, no
-    * insert qualified) publishes no version and therefore evolves
-    * NOTHING — replay-cleanliness wins over metadata-only evolution;
-    * the columns land with the first commit that writes rows. */
+  /** Schema evolution opt-in (`MERGE WITH SCHEMA EVOLUTION`): the
+    * source's NEW columns that a clause writes join the table schema as
+    * nullable, through the catalog's ADD COLUMNS before the merge plans —
+    * its own commit, kept even when the merge then fails or changes
+    * nothing. Without the opt-in an extra source column is ignored
+    * (Delta's default) unless a clause references it as a table column,
+    * which stays loud. */
   def withSchemaEvolution(): ConditionalMerge = copy(evolveSchema = true)
 
   def whenMatchedUpdate(cond: Option[Column] = None,
@@ -122,716 +108,158 @@ final case class ConditionalMerge(
     copy(bySource = bySource :+ (cond -> Update(set)))
 
   /** Copy-on-write execution. */
-  def execute(): FeatherMutations.Result = run(dvMask = false)
+  def execute(): FeatherMutations.Result = run("graft")
 
   /** Merge-on-read execution (DV masks + new parts). */
-  def executeDV(): FeatherMutations.Result = run(dvMask = true)
+  def executeDV(): FeatherMutations.Result = run("graft_dv")
 
-  private def run(dvMask: Boolean): FeatherMutations.Result = {
+  private def run(catalog: String): FeatherMutations.Result = {
     require(matched.nonEmpty || notMatched.nonEmpty || bySource.nonEmpty,
       "merge: no clauses — add whenMatched*/whenNotMatched* first")
-    require(!dvMask || bySource.isEmpty,
+    require(catalog == "graft" || bySource.isEmpty,
       "merge: whenNotMatchedBySource touches every table row — a " +
         "merge-on-read mask of the whole table buys nothing; use " +
         "execute() (copy-on-write) for this clause")
     require(keyCols.nonEmpty, "merge: keyCols must be non-empty")
-    // membership mirrors Spark's resolver: case-insensitive under the
-    // default conf, exact under spark.sql.caseSensitive=true — laxer
-    // and a wrong-case key would die later as a raw UNRESOLVED_COLUMN,
-    // stricter and legal SQL spellings would be refused
-    val csGuard =
+    val rel = PredicateMutations.pathRelation(spark, path, catalog)
+    val target = Bridge.ofRows(spark, rel)
+    val table = target.schema
+    val caseSensitive =
       spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-    keyCols.foreach(k => require(
-      source.columns.exists(c => if (csGuard) c == k else c.equalsIgnoreCase(k)),
-      s"merge: key column '$k' not in source (${source.columns.mkString(", ")})"))
-    ConditionalMerge.run(this, dvMask)
+    def in(names: Iterable[String])(c: String): Boolean =
+      names.exists(n => if (caseSensitive) n == c else n.equalsIgnoreCase(c))
+    val partCols = rel.table.partitioning().toSeq
+      .flatMap(_.references().map(_.fieldNames().head))
+    // a nested NON-hive layout has no partition values to route rows by
+    val root = new Path(rel.table.properties().get(TableCatalog.PROP_LOCATION))
+    val chains = FeatherSnapshots.resolve(
+        root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, None)
+      .toSeq.flatMap(_.files.map(f => FeatherMutations.relDirOf(f._1)))
+      .distinct.filter(_.nonEmpty)
+    require(chains.isEmpty || FeatherPartitions.hiveLayout(chains)._1,
+      s"merge on $path: table has non-hive subdirectories " +
+        s"(${chains.mkString(", ")}) — clause output routes rows by " +
+        "partition values and needs a hive key=value layout")
+    keyCols.foreach { k =>
+      require(in(source.columns)(k),
+        s"merge: key column '$k' not in source (${source.columns.mkString(", ")})")
+      require(!in(partCols)(k),
+        s"merge: key column '$k' is a partition column — partition " +
+          "values live in the directory chain, not the data files; key " +
+          "on data columns (clause output routes by partition values)")
+      require(in(table.fieldNames)(k), s"merge: key column '$k' not in " +
+        s"table schema (${table.fieldNames.mkString(", ")})")
+    }
+    // an unnamed partition value would route the row to the null leaf
+    if (partCols.nonEmpty)
+      notMatched.zipWithIndex.foreach { case ((_, values), i) =>
+        val missing = partCols.filterNot(in(values.keys))
+        require(values.isEmpty || missing.isEmpty,
+          s"merge: whenNotMatched clause ${i + 1}'s VALUES omits " +
+            s"partition column(s) ${missing.mkString(", ")} — an " +
+            "unnamed partition value would silently route the row to " +
+            "the null partition; name every partition column")
+      }
+    // the copy-on-write plan evaluates the source, conditions and SETs
+    // twice (the runtime filter's matching-rows query, then the rewrite):
+    // a nondeterministic one could match one row set and write another
+    def nondeterministic(what: String) = new IllegalArgumentException(
+      s"merge: $what is nondeterministic — the statement evaluates it " +
+        "more than once, so it could match, duplicate or lose different " +
+        "rows each time; make it deterministic (materialize a source " +
+        "first: write it to a staging path and read it back)")
+    if (source.queryExecution.analyzed.find(p =>
+        !p.expressions.forall(_.deterministic)).isDefined)
+      throw nondeterministic("the source plan")
+    val on = keyCols.map(k => EqualTo(UnresolvedAttribute(Seq("target", k)),
+      UnresolvedAttribute(Seq("source", k)))).reduce[Expression](And(_, _))
+    val shape = target.alias("target")
+      .join(source.alias("source"), Bridge.column(on), "left_outer")
+    val conds = (matched ++ bySource).flatMap(_._1) ++ notMatched.flatMap(_._1)
+    if (conds.nonEmpty && !shape.select(conds: _*).queryExecution.analyzed
+        .expressions.forall(_.deterministic))
+      throw nondeterministic("a clause condition")
+    // a row not matched by the source has no source side: Spark refuses
+    // a `source.x` name there, but a column taken off the source frame
+    // (`sourceDf("x")`) would read NULL on every row it applies to
+    val bySourceExprs = bySource.flatMap { case (c, a) =>
+      c.toSeq ++ (a match { case Update(set) => set.values; case _ => Nil }) }
+    if (bySourceExprs.nonEmpty) {
+      val srcOut = source.queryExecution.analyzed.outputSet
+      val refs = shape.select(bySourceExprs: _*).queryExecution.analyzed
+        .expressions.flatMap(_.references).filter(srcOut.contains)
+      require(refs.isEmpty,
+        s"merge: whenNotMatchedBySource references source column(s) " +
+          s"${refs.map(_.name).distinct.mkString(", ")} — a row not " +
+          "matched by the source has no source side (the reference would " +
+          "read NULL on every row); use target columns only")
+    }
+    (matched ++ bySource).foreach {
+      case (_, Update(set)) =>
+        PredicateMutations.requireSets("merge", table, shape, set.toSeq)
+      case _ => ()
+    }
+    notMatched.foreach { case (_, values) =>
+      PredicateMutations.requireSets("merge (insert VALUES)", table, shape,
+        values.toSeq)
+    }
+    // updateAll / insertAll SET every table column from the source's
+    if (matched.exists(_._2 == UpdateAll) || notMatched.exists(_._2.isEmpty)) {
+      table.fieldNames.foreach(c => require(in(source.columns)(c),
+        s"merge: updateAll/insertAll needs source column '$c' " +
+          s"(source has: ${source.columns.mkString(", ")})"))
+      PredicateMutations.requireSets("merge: updateAll/insertAll", table,
+        shape, table.fieldNames.toSeq.map(c =>
+          c -> Bridge.column(UnresolvedAttribute(Seq("source", c)))))
+    }
+
+    def expr(c: Column) = Bridge.convertedExpression(spark, c)
+    // the source's keys as one more ON conjunct on the target: exact (a
+    // target row outside them matches no source row either way), and
+    // Spark pushes it into the target scan, whose stats and Bloom sidecars
+    // prune the files no key can be in — the planned files, which are
+    // also the read set a concurrent commit is checked against. Batches
+    // past MaxPrunedKeys distinct keys read every planned file; so does a
+    // bySource clause, which reads every row anyway.
+    val keyPrune: Option[Expression] =
+      if (bySource.nonEmpty) None
+      else {
+        val keys = source.select(keyCols.map(source(_)): _*).na.drop()
+          .distinct().limit(MaxPrunedKeys + 1).collect()
+        if (keys.isEmpty || keys.length > MaxPrunedKeys) None
+        else Some(keyCols.indices.map(i => expr(Bridge.column(
+          UnresolvedAttribute(Seq("target", keyCols(i))))
+          .isin(keys.map(_.get(i)).distinct.toSeq: _*))).reduce(And(_, _)))
+      }
+    def assign(set: Map[String, Column]) = set.toSeq.map { case (c, e) =>
+      Assignment(UnresolvedAttribute.quoted(c), expr(e)) }
+    def action(cond: Option[Column], a: MatchedAction): MergeAction = a match {
+      case Update(set) => UpdateAction(cond.map(expr), assign(set), false)
+      case UpdateAll => UpdateStarAction(cond.map(expr))
+      case Delete => DeleteAction(cond.map(expr))
+    }
+    val plan = MergeIntoTable(SubqueryAlias("target", rel),
+      SubqueryAlias("source", source.queryExecution.analyzed),
+      keyPrune.fold(on)(And(on, _)),
+      matched.map { case (c, a) => action(c, a) },
+      notMatched.map {
+        case (c, values) if values.isEmpty => InsertStarAction(c.map(expr))
+        case (c, values) => InsertAction(c.map(expr), assign(values))
+      },
+      bySource.map { case (c, a) => action(c, a) },
+      evolveSchema)
+    val r = PredicateMutations.commitReport(spark, plan, s"merge on $path")
+    FeatherMutations.Result(r.version, r.filesRemoved + r.dvsBound,
+      r.filesKept, r.partsAdded)
   }
 }
 
 object ConditionalMerge {
+  /** Distinct source keys the merge collects to prune target files. */
+  val MaxPrunedKeys = 10000
+
   sealed trait MatchedAction extends Serializable
   final case class Update(set: Map[String, Column]) extends MatchedAction
   case object UpdateAll extends MatchedAction
   case object Delete extends MatchedAction
-
-  // action-id encoding for the single-pass clause resolution: 0 = carry
-  // the target row through unchanged (or, for inserts, drop the source
-  // row); 1.. = that clause index fired; -1 = delete the row
-  private val Keep = 0
-
-  private def run(m0: ConditionalMerge, dvMask: Boolean)
-      : FeatherMutations.Result = {
-    val spark = m0.spark
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(m0.path)
-    val fs = root.getFileSystem(conf)
-    require(FeatherSnapshots.enabled(fs, root),
-      s"merge on ${m0.path}, which has no ${FeatherSnapshots.Dir} " +
-        "directory — write the table with option(\"snapshots\", \"true\") first")
-    val snap = FeatherSnapshots.resolve(fs, root, None).getOrElse(
-      sys.error(s"merge on ${m0.path}: no snapshot versions"))
-    val face = ConnectorFace.detect(snap.files, "merge", m0.path)
-    // hive layout: partition columns come from the key=value chains and
-    // ride the merge as ordinary columns of the working frame — clause
-    // conditions and SETs may reference them (a SET on one is a
-    // cross-partition move), and the output routes each row to the leaf
-    // its values name. A nested NON-hive layout has nowhere to route.
-    val chains: Seq[String] = snap.files.map { case (rel, _) =>
-      FeatherMutations.relDirOf(rel) }.distinct.filter(_.nonEmpty)
-    val (hiveChains, partCols) =
-      graft.sources.FeatherPartitions.hiveLayout(chains)
-    require(chains.isEmpty || hiveChains,
-      s"merge on ${m0.path}: table has non-hive subdirectories " +
-        s"(${chains.mkString(", ")}) — conditional clauses route output " +
-        "rows by partition values and need a hive key=value layout")
-    val partitioned = partCols.nonEmpty
-    val absFiles = snap.files.map { case (rel, len) =>
-      (new Path(root, rel).toString, len) }
-    val absLen = absFiles.toMap
-    // data columns from the live footers; partition columns typed by the
-    // SAME long→double→date→string inference every partitioned READ applies
-    // (FeatherPartitions) — clause expressions see exactly the types a
-    // read of this table would produce
-    val tableSchema0 = face.mergedSchema(spark, absFiles)
-    val caseSensitive =
-      spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-    // schema evolution opt-in: the source's NEW columns join as nullable
-    // (the mutateDv contract) — survivors and untouched generations read
-    // them as null through mergeSchema; KEYS still validate against the
-    // pre-evolution schema below (a key naming a source-only column is
-    // a typo, not an evolution). "New" matches like the resolver —
-    // under caseSensitive=true a case-variant spelling IS a new column.
-    val tableSchema =
-      if (!m0.evolveSchema) tableSchema0
-      else {
-        val known = tableSchema0.fieldNames.toSeq ++ partCols
-        val extra = m0.source.schema.fields
-          .filterNot(f => known.exists(k =>
-            if (caseSensitive) k == f.name else k.equalsIgnoreCase(f.name)))
-          .map(f => org.apache.spark.sql.types
-            .StructField(f.name, f.dataType, nullable = true))
-        StructType(tableSchema0.fields ++ extra)
-      }
-    // an EVOLVING merge's commit must abort if anything else landed
-    // files since this snapshot (another evolution, an ALTER's stamps)
-    // — the same no-new-files rule ALTER itself commits under; a
-    // non-evolving merge keeps the append-commutes matrix
-    val schemaEvolved = tableSchema.length > tableSchema0.length
-    // ONE discovery pass serves both the partition-column types and the
-    // per-file values map below (toDiscovered re-parses every rel path)
-    val discovered =
-      if (!partitioned) None
-      else Some(FeatherSnapshots.toDiscovered(root, snap))
-    val partSchema: StructType =
-      discovered.map(_.partSchema).getOrElse(new StructType())
-    val fullSchema = StructType(tableSchema.fields ++ partSchema.fields)
-    FeatherMutations.requireNotEmbedded("merge", partCols, tableSchema,
-      caseSensitive)
-    // key names canonicalize onto the table schema's spelling under
-    // spark.sql.caseSensitive=false (the default — a SQL-originated
-    // `ON t.Id = s.Id` legally names a column stored as `id`; every
-    // other identifier in the statement resolves case-insensitively,
-    // so the key must too); an ambiguous or absent name falls through
-    // to the loud require
-    val keys: Seq[String] = m0.keyCols.map(
-      FeatherMutations.canonicalName(tableSchema0, caseSensitive))
-    keys.foreach(k => require(tableSchema0.fieldNames.contains(k),
-      if (partCols.exists(p => p == k || (!caseSensitive &&
-          p.equalsIgnoreCase(k))))
-        s"merge: key column '$k' is a partition column — partition " +
-          "values live in the directory chain, not the data files; key " +
-          "on data columns (clause output routes by partition values)"
-      else s"merge: key column '$k' not in table schema " +
-        s"(${tableSchema0.fieldNames.mkString(", ")})"))
-    // SET/VALUES column names canonicalize exactly like the keys — a
-    // SQL statement legally spells `GRADE` for a column stored as
-    // `grade`; every clause check and CASE chain below keys on the
-    // schema spelling, so the maps must carry it
-    // WALL CLOCK PINNED ONCE per MERGE statement in every clause
-    // condition, SET value, and insert VALUES (the shared
-    // FeatherMutations.pinClock): the probe, the rewrite/position scan,
-    // and routePartitionedInserts' per-leaf writes run as separate
-    // Spark jobs (persist best-effort under eviction), so an unpinned
-    // `SET updated_at = current_timestamp()` could write a DIFFERENT
-    // instant per leaf — one statement, one instant. Shadow names cover
-    // both sides: a table/source column named `current_date` wins over
-    // the bare-keyword spelling, like Spark's own resolution order.
-    val nowInstant = java.time.Instant.now()
-    val pinC: Column => Column = FeatherMutations.pinClock(spark,
-      fullSchema.fieldNames.toSeq ++ m0.source.columns, nowInstant)
-    def canonSet(set: Map[String, Column],
-                 what: String): Map[String, Column] =
-      FeatherMutations.canonicalSet(fullSchema, caseSensitive, set,
-        s"merge: $what").map { case (k, v) => k -> pinC(v) }
-    def canonAction(a: MatchedAction): MatchedAction = a match {
-      case Update(set) => Update(canonSet(set, "an update SET"))
-      case other => other
-    }
-    val m = m0.copy(
-      matched = m0.matched.map { case (c, a) => (c.map(pinC), canonAction(a)) },
-      notMatched = m0.notMatched.map { case (c, vs) =>
-        (c.map(pinC), canonSet(vs, "an insert VALUES")) },
-      bySource = m0.bySource.map { case (c, a) => (c.map(pinC), canonAction(a)) })
-    // a partitioned insert must NAME its leaf: every explicit VALUES
-    // clause lists every partition column (a silently-absent one would
-    // route to the null leaf), and insertAll's source must carry them
-    // (checked with the other *All requirements below)
-    if (partitioned)
-      m.notMatched.zipWithIndex.foreach { case ((_, values), i) =>
-        if (values.nonEmpty) {
-          val missing = partCols.filterNot(values.contains)
-          require(missing.isEmpty,
-            s"merge: whenNotMatched clause ${i + 1}'s VALUES omits " +
-              s"partition column(s) ${missing.mkString(", ")} — an " +
-              "unnamed partition value would silently route the row to " +
-              "the null partition; name every partition column")
-        }
-      }
-    // the clause machinery stakes out two working columns — a real column
-    // with either name would be silently clobbered by withColumn and
-    // mis-route rows (the same guard GraftParquet.readFiles applies to
-    // its __gp_dv_* names)
-    Seq("__m_action", "__s_present", "__m_cnt").foreach(n => require(
-      !fullSchema.fieldNames.contains(n) && !m.source.columns.contains(n),
-      s"merge: reserved column name '$n' collides with a table/source column"))
-    validateSetColumns(m, fullSchema)
-
-    // ONE materialization of the source serves the duplicate check, the
-    // clause/insert joins, the DV position scan, and the partition-count
-    // probe — an expensive upstream plan must not re-execute per use
-    // (the routePartitionedInserts precedent). Unpersisted in the
-    // finally at the bottom.
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      val (cached, owned) = ConnectorFace.pinIfUncached(df)
-      if (owned) pinned += cached
-      cached
-    }
-    // The SOURCE PLAN gets the same two guards as the clause
-    // expressions: its rows re-read in the probe, the clause joins, and
-    // the routed per-leaf writes (persist is best-effort under
-    // eviction/task retry), so clock calls pin to the statement instant
-    // and a nondeterministic plan refuses — a rand()-shaped source
-    // could match one row set in the probe and write another. (Delta
-    // MATERIALIZES the source for exactly this hazard; refusing with
-    // materialize-first guidance is the honest equivalent without a
-    // spill tier.) Expression replacement preserves the plan's output
-    // exprIds, so the source.col remaps below stay valid.
-    val srcGuarded =
-      FeatherMutations.pinClockInPlan(spark, m.source, nowInstant)
-    srcGuarded.queryExecution.analyzed.find(p =>
-        !p.expressions.forall(_.deterministic)).foreach(_ =>
-      throw new IllegalArgumentException(
-        "merge: the source plan is nondeterministic — the probe, the " +
-          "clause joins, and the routed per-leaf writes re-evaluate " +
-          "the source (persist is best-effort under eviction), so " +
-          "rand()/uuid()-shaped sources can silently duplicate, lose, " +
-          "or mis-route rows; materialize the source first (write it " +
-          "to a staging path and read it back)"))
-    val src = pin(srcGuarded)
-    try {
-
-    val targetV = snap.version + 1
-    val prefix = FeatherSnapshots.runPrefix(targetV)
-    val srcP = src.withColumn("__s_present", lit(true)).alias("source")
-    def keyCond = keys
-      .map(k => col(s"target.$k") === col(s"source.$k")).reduce(_ && _)
-
-    // ---- clause-expression TYPE validation (analysis only, zero jobs) ------
-    // The output columns cast each clause's expression to the table
-    // column's type; a silently lossy cast would corrupt matched rows
-    // (or, under ANSI, die per-row mid-write). Resolve every SET/VALUES
-    // expression against an EMPTY frame of the joined shape and refuse
-    // anything that is not the column's exact type or a lossless upcast.
-    {
-      def empty(st: StructType) = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), st)
-      // the source side of the shape is the REAL source plan (exprIds
-      // preserved): a resolved srcDf("x") column must type-check here
-      // exactly as it resolves in the execution join — an empty rebuild
-      // with fresh exprIds would refuse that legal spelling with a raw
-      // MISSING_ATTRIBUTE. Analysis only; nothing executes.
-      val shape = empty(fullSchema).alias("target")
-        .join(srcP, keyCond, "left_outer")
-      def exprType(c: Column): org.apache.spark.sql.types.DataType =
-        shape.select(c).schema.head.dataType
-      def checkExpr(where: String, name: String, e: Column): Unit = {
-        val target = fullSchema(name).dataType
-        val actual = exprType(e)
-        require(actual == target ||
-            org.apache.spark.sql.catalyst.expressions.Cast
-              .canUpCast(actual, target),
-          s"merge: $where sets column '$name' (${target.catalogString}) " +
-            s"from a ${actual.catalogString} expression — only exact " +
-            "types and lossless upcasts are applied; cast the expression " +
-            "explicitly if the narrowing is intended")
-      }
-      // nondeterministic clause expressions are REFUSED (Delta's rule,
-      // for the same reason): conditions and SET/VALUES evaluate in
-      // separate Spark jobs — the limit-1 probe, the rewrite/position
-      // scan, and routePartitionedInserts' distinct() + per-leaf scans
-      // (persist best-effort under eviction/task retry) — so rand()
-      // could fire a clause in the probe and not in the rewrite, or
-      // route a row to one leaf and write another's values. Clock
-      // functions are already pinned to per-statement literals above.
-      // Determinism reads off the RESOLVED tree (unresolved nodes
-      // default to deterministic=true); an expression that does not
-      // resolve against the joined shape is skipped here — the
-      // family-specific resolution checks own that refusal.
-      def checkDet(where: String, e: Column): Unit = {
-        val resolved =
-          try Some(shape.select(e).queryExecution.analyzed)
-          catch { case _: org.apache.spark.sql.AnalysisException => None }
-        resolved.foreach(p => require(p.expressions.forall(_.deterministic),
-          s"merge: $where is nondeterministic — clause conditions and " +
-            "SET/VALUES evaluate in separate Spark jobs (probe, rewrite, " +
-            "per-leaf routed writes), so a nondeterministic expression " +
-            "can silently duplicate, lose, or mis-route rows; make it " +
-            "deterministic (clock functions are pinned per statement " +
-            "automatically)"))
-      }
-      m.matched.zipWithIndex.foreach { case ((cond, a), i) =>
-        val where = s"whenMatched clause ${i + 1}"
-        cond.foreach(c => checkDet(s"$where's condition", c))
-        a match {
-          case Update(set) => set.foreach { case (n, e) =>
-            checkExpr(where, n, e)
-            checkDet(s"$where's SET of '$n'", e)
-          }
-          case _ => ()
-        }
-      }
-      // a NOT MATCHED BY SOURCE row HAS no source side: a source.*
-      // reference would evaluate to NULL on every row it applies to —
-      // conditions silently never fire, SETs overwrite survivors with
-      // nulls. Refuse at build (Delta's contract for this clause family).
-      val srcAttrIds = m.source.queryExecution.analyzed.output
-        .map(_.exprId).toSet
-      def noSourceRefs(where: String, e: Column): Unit = {
-        val refs = org.apache.spark.sql.graft.Bridge
-          .convertedExpression(spark, e).collect {
-          // functions.col("source.x") may arrive as ONE unparsed name
-          // part ("source.x") or as parsed parts (["source","x"]) —
-          // normalize before testing the qualifier
-          // a parsed source.x reference arrives as >= 2 name parts; a
-          // SINGLE part is a backtick-quoted literal column name (a
-          // target column could legally be named "source.flag") and is
-          // never a source reference
-          case ua: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-              if ua.nameParts.length >= 2 &&
-                ua.nameParts.head.equalsIgnoreCase("source") => ua.name
-          // a RESOLVED column taken straight off the source frame
-          // (sourceDf("x")) carries an AttributeReference whose exprId
-          // belongs to the source plan — the same null-on-every-row trap
-          // in a different spelling
-          case ar: org.apache.spark.sql.catalyst.expressions.AttributeReference
-              if srcAttrIds(ar.exprId) => ar.name
-        }
-        require(refs.isEmpty,
-          s"merge: $where references ${refs.mkString(", ")} — a row not " +
-            "matched by the source has no source side (the reference " +
-            "would read NULL on every row); whenNotMatchedBySource " +
-            "expressions may use target.* columns only")
-      }
-      m.bySource.zipWithIndex.foreach { case ((cond, a), i) =>
-        val where = s"whenNotMatchedBySource clause ${i + 1}"
-        cond.foreach { c =>
-          noSourceRefs(s"$where's condition", c)
-          checkDet(s"$where's condition", c)
-        }
-        a match {
-          case Update(set) => set.foreach { case (n, e) =>
-            noSourceRefs(s"$where's SET of '$n'", e)
-            checkExpr(where, n, e)
-            checkDet(s"$where's SET of '$n'", e)
-          }
-          case _ => ()
-        }
-      }
-      // the insert family's frame is source-only (the anti-join): a
-      // target.* reference would die mid-run with a raw
-      // UNRESOLVED_COLUMN — in executeDV only after the sidecars were
-      // already written. Mirror of noSourceRefs for the other side.
-      def noTargetRefs(where: String, e: Column): Unit = {
-        val refs = org.apache.spark.sql.graft.Bridge
-          .convertedExpression(spark, e).collect {
-            case ua: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-                if ua.nameParts.length >= 2 &&
-                  ua.nameParts.head.equalsIgnoreCase("target") => ua.name
-          }
-        require(refs.isEmpty,
-          s"merge: $where references ${refs.mkString(", ")} — an " +
-            "unmatched source row has no target side; whenNotMatched " +
-            "expressions may use source.* columns only")
-      }
-      m.notMatched.zipWithIndex.foreach { case ((cond, values), i) =>
-        val where = s"whenNotMatched clause ${i + 1}"
-        cond.foreach { c =>
-          noTargetRefs(s"$where's condition", c)
-          checkDet(s"$where's condition", c)
-        }
-        values.foreach { case (n, e) =>
-          noTargetRefs(s"$where's VALUES of '$n'", e)
-          checkExpr(where, n, e)
-          checkDet(s"$where's VALUES of '$n'", e)
-        }
-      }
-      // updateAll/insertAll implicitly set EVERY table column from the
-      // source's — the same lossless-or-exact rule applies, or the two
-      // spellings of one merge would diverge (explicit SET refused,
-      // updateAll silently corrupting)
-      if (m.matched.exists(_._2 == UpdateAll) ||
-          m.notMatched.exists(_._2.isEmpty))
-        fullSchema.fields.foreach { f =>
-          val st = m.source.schema(f.name).dataType
-          require(st == f.dataType ||
-              org.apache.spark.sql.catalyst.expressions.Cast
-                .canUpCast(st, f.dataType),
-            s"merge: updateAll/insertAll sets column '${f.name}' " +
-              s"(${f.dataType.catalogString}) from the source's " +
-              s"${st.catalogString} — only exact types and lossless " +
-              "upcasts are applied; cast the source before merging")
-        }
-    }
-
-    /** First-matching-clause-wins when-chain: built from the LAST clause
-      * outward so earlier clauses shadow later ones. `base` offsets the
-      * clause ids into the global action-id space. */
-    def chain(clauses: Seq[(Option[Column], MatchedAction)],
-              base: Int): Column =
-      clauses.zipWithIndex.foldRight(lit(Keep): Column) {
-        case (((c, a), i), tail) =>
-          val id = a match { case Delete => lit(-1); case _ => lit(base + i) }
-          when(c.getOrElse(lit(true)), id).otherwise(tail)
-      }
-
-    /** Clause application over target⋈source: one action id per row, one
-      * CASE per output column. Matched rows run the whenMatched family,
-      * unmatched target rows the whenNotMatchedBySource family; action 0
-      * carries the row through, -1 drops it. */
-    def applyClauses(tgt: DataFrame): DataFrame = {
-      val joined = tgt.alias("target").join(srcP, keyCond, "left_outer")
-      val present = col("source.__s_present").isNotNull
-      val actionId = when(present, chain(m.matched, 1))
-        .otherwise(chain(m.bySource, 1 + m.matched.size))
-      val all = m.matched ++ m.bySource
-      val outCols = fullSchema.fields.map { f =>
-        val keepV = col(s"target.${f.name}")
-        val v = all.zipWithIndex.foldRight(keepV: Column) {
-          case (((_, a), i), tail) =>
-            val setV: Column = a match {
-              case Update(set) => set.getOrElse(f.name, keepV)
-              case UpdateAll => col(s"source.${f.name}")
-              case Delete => keepV // unreachable: the row is filtered
-            }
-            when(col("__m_action") === lit(1 + i), setV).otherwise(tail)
-        }
-        // table nullability stamps the output (a non-nullable SET
-        // literal must not narrow the written footer — see
-        // FeatherMutations.nullableAsTable)
-        FeatherMutations.nullableAsTable(v.cast(f.dataType), f.nullable)
-          .as(f.name)
-      }
-      joined.withColumn("__m_action", actionId)
-        .where(col("__m_action") =!= lit(-1))
-        .select(outCols.toSeq: _*)
-    }
-
-    /** Not-matched source rows through the insert-clause chain; a row
-      * matching no insert clause drops. */
-    def inserts(tgtKeys: DataFrame): DataFrame = {
-      val anti = srcP
-        .join(tgtKeys.toDF(keys: _*).alias("target"), keyCond, "left_anti")
-      val actionId = m.notMatched.zipWithIndex.foldRight(lit(Keep): Column) {
-        case (((c, _), i), tail) =>
-          when(c.getOrElse(lit(true)), lit(i + 1)).otherwise(tail)
-      }
-      val outCols = fullSchema.fields.map { f =>
-        val v = m.notMatched.zipWithIndex.foldRight(lit(null): Column) {
-          case (((_, values), i), tail) =>
-            val insV: Column =
-              if (values.isEmpty) col(s"source.${f.name}") // insertAll
-              else values.getOrElse(f.name, lit(null))
-            when(col("__m_action") === lit(i + 1), insV).otherwise(tail)
-        }
-        FeatherMutations.nullableAsTable(v.cast(f.dataType), f.nullable)
-          .as(f.name)
-      }
-      anti.withColumn("__m_action", actionId)
-        .where(col("__m_action") =!= lit(Keep))
-        .select(outCols.toSeq: _*)
-    }
-
-    // unique source keys: one target row must pair with at most one
-    // source row (and one source key with one insert). Null-keyed
-    // source rows never match anything and may repeat. (The aggregate
-    // alias is reserved above: a key column literally named "count"
-    // must not make this check ambiguous.)
-    val dupes = src.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__m_cnt"))
-      .where(col("__m_cnt") > 1 &&
-        keys.map(col(_).isNotNull).reduce(_ && _))
-      .limit(1).collect()
-    require(dupes.isEmpty,
-      s"merge: source carries a duplicate key tuple " +
-        s"${keys.zipWithIndex.map { case (k, i) =>
-          s"$k=${dupes.headOption.map(_.get(i)).orNull}" }
-          .mkString("(", ", ", ")")} — multiple source rows matching one " +
-        "target row have no defined merge order; pre-collapse the source " +
-        "(max-sequence per key)")
-
-    // ---- which files participate? -------------------------------------------
-    // a whenNotMatchedBySource clause can fire on ANY row → every file;
-    // otherwise only files whose key range could contain a source key.
-    // Pruning is an over-approximation of "could match", so a source key
-    // outside every candidate file is unmatched BY CONSTRUCTION — the
-    // insert anti-join against the candidate rows alone is exact.
-    // probeTouched also returns the stats it loaded; the DV branch's
-    // full-coverage check reuses them instead of paying a second
-    // per-leaf sidecar read (the documented probeTouched contract).
-    val (candidateIdx: Seq[Int],
-         probeStats: Map[String, Option[Seq[Map[String, FeatherStats.ColStat]]]]) =
-      if (m.bySource.nonEmpty) (absFiles.indices: Seq[Int], Map.empty)
-      else {
-        val (touched, stats) = FeatherMutations.probeTouched(spark, "merge",
-          absFiles, tableSchema, src, keys)
-        (touched.toSeq.sorted, stats)
-      }
-    val candidateAbs = candidateIdx.map(absFiles)
-    // conflict scope for every commit below: the candidates are exactly
-    // the files whose content this merge read (probe-pruned files
-    // provably hold no matching key; a bySource clause already widened
-    // candidates to every file) — a concurrent mutation disjoint from
-    // them commits beside this one (commitMutation's readRel contract)
-    val candidateRel: Set[String] =
-      candidateIdx.map(i => snap.files(i)._1).toSet
-    val dvPathsAll = snap.dvs.map { case (rel, (dvRel, _)) =>
-      new Path(root, rel).toString -> new Path(root, dvRel).toString }
-    def emptyFrame = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), fullSchema)
-    // per-file partition values straight from the SAME parse partSchema
-    // came from (toDiscovered's LeafFile.values) — never a second
-    // hand-rolled chain parse that could drift from the read path
-    val valuesByAbs: Map[String, Seq[(String, String)]] =
-      discovered.map(_.files.map(lf => lf.file -> lf.values).toMap)
-        .getOrElse(Map.empty)
-    // the shared leaf-grouped DV read (one union arm per leaf, balanced;
-    // probe-pruned candidates keep arm count touched-leaf-sized; only a
-    // whenNotMatchedBySource full sweep pays O(live leaves) plan arms —
-    // Delta's bySource pays a full scan too, though over one planned
-    // relation; a face-specific single-scan read is the upgrade path if
-    // wide-partitioned bySource merges become a real workload)
-    def readWithParts(files: Seq[(String, Long)],
-                      keep: Map[String, Array[Long]] = Map.empty)
-        : DataFrame =
-      if (files.isEmpty) emptyFrame
-      else FeatherMutations.readWithPartValues(spark, face, files,
-        dvPathsAll, tableSchema, partSchema, valuesByAbs, keep)
-    def readCandidates(): DataFrame = readWithParts(candidateAbs)
-
-    val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    var partsWritten = 0
-    // candidate files per leaf: sizes the routed COW rewrite (one output
-    // part per rewritten input, the flat rewrite's rule); leaves that
-    // only RECEIVE rows (a cross-partition move target, pure inserts)
-    // default to 1
-    val candPerLeaf: Map[String, Int] = candidateIdx
-      .map(i => FeatherMutations.relDirOf(snap.files(i)._1))
-      .groupBy(identity).map { case (k, v) => k -> v.size }
-    // `rewrite` = the output carries every candidate row (the COW
-    // rewrite), so a leaf's write sizes to its rewritten-file count;
-    // insert-only and degraded-no-match outputs are change-batch-sized
-    // and land one part per leaf like any routed insert (deliberate:
-    // the right per-leaf parallelism would be ∝ the leaf's share of
-    // the batch, unknowable without counting — a global srcParts per
-    // leaf would shatter small batches into empty-task parts; an
-    // insert batch big enough to need parallel leaf writes is
-    // compaction's job to fold either way)
-    def writeOut(out: DataFrame, targetParts: Int,
-                 rewrite: Boolean = false): Unit = {
-      if (partitioned) {
-        // rows land in the leaf THEIR partition values name — survivors
-        // return home, a SET on a partition column moves the row
-        val routed = FeatherMutations.routePartitionedInserts("merge",
-          face, fs, root, out, partCols, tableSchema, prefix, m.codec,
-          partsFor = relDir =>
-            if (rewrite) candPerLeaf.getOrElse(relDir, 1) else 1)
-        added ++= routed
-        partsWritten += routed.size
-      } else {
-        val parts = face.writeParts(
-          out.coalesce(math.max(1, targetParts)), root.toString, prefix,
-          m.codec)
-        if (parts.nonEmpty)
-          FeatherStats.upsertMerged(fs, root,
-            parts.map { case (name, len, js) =>
-              name -> (len, FeatherStats.fromJson(js)) }.toMap)
-        added ++= parts.map { case (name, len, _) => (name, len) }
-        partsWritten += parts.size
-      }
-    }
-    /** applyClauses + inserts both scan `base`: persist it for the one
-      * write job, or every candidate file decodes twice. Unpersisted in
-      * the finally below once the write ran (or failed). */
-    def clauseOutput(base: DataFrame): DataFrame = {
-      val cached = pin(base)
-      applyClauses(cached)
-        .unionByName(inserts(cached.select(keys.map(col): _*)))
-    }
-    def noOp = FeatherMutations.Result(snap.version, 0, snap.files.size, 0)
-    // a merge that deletes EVERY row must still leave a readable table —
-    // one schema stamp per leaf (the shared mutation-tier loop)
-    def stampLeaves(): Unit =
-      added ++= FeatherMutations.stampLeaves(face, fs, root,
-        snap.files.map(_._1), prefix, tableSchema)
-    val srcParts = ConnectorFace.capWriteParts(src)
-
-    val rewriteNeeded = m.matched.nonEmpty || m.bySource.nonEmpty
-    // set by the COW branch: false when the merge degraded to a pure
-    // append (keys matched no actual row), so Result.filesTouched
-    // reports what happened, not what the probe guessed
-    var cowRewrote = false
-      if (!rewriteNeeded) {
-        // insert-only merge, EITHER strategy: candidates are read for the
-        // anti-join but never rewritten or masked — the commit is a pure
-        // append (masking matched rows just to re-insert them identically
-        // would cost ∝ matched rows and buy nothing)
-        // only the key columns feed the anti-join: select BEFORE the
-        // pin so the cache (and the scan, via pruning) is key-width
-        val cand = pin(readCandidates().select(keys.map(col): _*))
-        writeOut(inserts(cand), srcParts)
-        // zero qualifying inserts: a TRUE no-op — publishing an empty
-        // op="merge" version would abort live snapshot streams for a
-        // change that altered nothing (the deleteByKeyDV precedent)
-        if (added.isEmpty) return noOp
-        val committed = FeatherSnapshots.commitMutation(fs, root, "merge",
-          snap, Set.empty, added.toSeq,
-          requireNoNewFiles = schemaEvolved,
-          readRel = Some(candidateRel))
-        return FeatherMutations.Result(committed, 0, snap.files.size,
-          partsWritten)
-      }
-      val committed: Long =
-        if (!dvMask) {
-          // ---- copy-on-write ------------------------------------------------
-          // the probe over-approximates: when no bySource clause forces a
-          // full sweep, one pruned limit-1 probe decides whether any row
-          // ACTUALLY matches — a merge whose keys fall inside candidate
-          // ranges but match nothing must not rewrite candidates
-          // byte-identically and publish a stream-aborting version (the
-          // replayed-foreachBatch case); it degrades to the insert path
-          // the probe and the degraded (no actual match) path consume
-          // only the KEY columns — pin key-width, and read full width
-          // only once a rewrite is certain (the replayed-foreachBatch
-          // no-match case must not decode or cache every column of
-          // every candidate)
-          val candKeys =
-            if (candidateAbs.isEmpty) None
-            else Some(pin(readCandidates().select(keys.map(col): _*)))
-          val anyMatch = m.bySource.nonEmpty || candKeys.exists(c =>
-            c.alias("target").join(srcP, keyCond, "left_semi")
-              .limit(1).count() > 0)
-          cowRewrote = candKeys.nonEmpty && anyMatch
-          if (cowRewrote) {
-            // the probe cache served its one limit-1 job; the rewrite
-            // pins its own full-width read — holding both would cache
-            // the key columns twice for the whole write
-            candKeys.foreach(_.unpersist(blocking = false))
-            writeOut(clauseOutput(readCandidates()),
-              math.max(candidateAbs.size, srcParts), rewrite = true)
-          }
-          else
-            writeOut(inserts(candKeys
-                .getOrElse(emptyFrame.select(keys.map(col): _*))),
-              srcParts)
-          val removeRel: Set[String] =
-            if (cowRewrote) candidateIdx.map(i => snap.files(i)._1).toSet
-            else Set.empty
-          if (added.isEmpty && removeRel.isEmpty) return noOp
-          if (added.isEmpty && removeRel.nonEmpty &&
-              snap.files.forall { case (rel, _) => removeRel(rel) })
-            stampLeaves()
-          FeatherSnapshots.commitMutation(fs, root, "merge", snap,
-            removeRel, added.toSeq, requireNoNewFiles = schemaEvolved,
-            readRel = Some(candidateRel))
-        } else {
-          // ---- merge-on-read: mask EVERY matched position, land the clause
-          // output (updates + carried-through matched rows + inserts) as new
-          // parts. A matched row no clause fires on re-inserts identically
-          // (the CDF net-diff cancels it), so masks stay ∝ matched rows.
-          val positions = FeatherMutations.dvPositionScan(spark, face,
-            root, snap, absFiles, candidateIdx, src, keys, tableSchema)
-          def fileRowCount(fid: Int): Option[Long] =
-            probeStats.getOrElse(absFiles(fid)._1, None)
-              .flatMap(FeatherMutations.exactRows)
-          val (bindings, droppedRel) = FeatherMutations.bindDvs(fs, conf,
-            root, snap, targetV, positions, fileRowCount)
-          // full matched rows: posKeep read of exactly the masked positions
-          val keepByAbs: Map[String, Array[Long]] = positions.map {
-            case (fid, pos) => absFiles(fid)._1 -> pos.distinct.sorted }
-          val matchedRows =
-            if (keepByAbs.isEmpty) emptyFrame
-            else readWithParts(
-              keepByAbs.keys.toSeq.sorted.map(abs => (abs, absLen(abs))),
-              keep = keepByAbs)
-          writeOut(clauseOutput(matchedRows),
-            srcParts)
-          // nothing matched, nothing inserted: a TRUE no-op (see above)
-          if (added.isEmpty && bindings.isEmpty && droppedRel.isEmpty)
-            return noOp
-          if (added.isEmpty && droppedRel.nonEmpty &&
-              snap.files.forall { case (rel, _) => droppedRel(rel) })
-            stampLeaves()
-          FeatherSnapshots.commitMutation(fs, root, "merge", snap,
-            droppedRel, added.toSeq, setDvs = bindings,
-            requireNoNewFiles = schemaEvolved,
-            readRel = Some(candidateRel))
-        }
-      val touched =
-        if (dvMask) positionsTouched(committed, snap, fs, root)
-        else if (cowRewrote) candidateIdx.size
-        else 0
-      FeatherMutations.Result(committed, touched,
-        snap.files.size - touched, partsWritten)
-    } finally {
-      // drop whatever was pinned — the write jobs are done (or failed)
-      pinned.foreach(_.unpersist(blocking = false))
-    }
-  }
-
-  /** Files the committed DV-merge actually masked or dropped — read back
-    * from the committed manifest delta instead of threading counts
-    * through the branches. One manifest read. */
-  private def positionsTouched(v: Long, parent: FeatherSnapshots.Snapshot,
-                               fs: org.apache.hadoop.fs.FileSystem,
-                               root: Path): Int = {
-    val cur = FeatherSnapshots.read(fs, root, v)
-    val parentSet = parent.files.map(_._1).toSet
-    val gone = parent.files.count { case (rel, _) =>
-      !cur.files.exists(_._1 == rel) }
-    val rebound = cur.dvs.count { case (rel, b) =>
-      parentSet(rel) && !parent.dvs.get(rel).contains(b) }
-    gone + rebound
-  }
-
-  private def validateSetColumns(m: ConditionalMerge,
-                                 schema: StructType): Unit = {
-    def check(set: Map[String, Column], what: String): Unit =
-      set.keys.foreach(c => require(schema.fieldNames.contains(c),
-        s"merge: $what names column '$c', not in the table schema " +
-          s"(${schema.fieldNames.mkString(", ")})"))
-    (m.matched ++ m.bySource).foreach {
-      case (_, Update(set)) => check(set, "an update SET")
-      case _ => ()
-    }
-    m.notMatched.foreach { case (_, values) =>
-      check(values, "an insert VALUES") }
-    // updateAll / insertAll need the source to carry every table column
-    val needsAll = m.matched.exists(_._2 == UpdateAll) ||
-      m.notMatched.exists(_._2.isEmpty)
-    if (needsAll)
-      schema.fieldNames.foreach(c => require(m.source.columns.contains(c),
-        s"merge: updateAll/insertAll needs source column '$c' " +
-          s"(source has: ${m.source.columns.mkString(", ")})"))
-  }
 }

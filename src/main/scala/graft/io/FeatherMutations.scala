@@ -522,23 +522,6 @@ object FeatherMutations {
       case _ => k
     }
 
-  /** Canonicalize a SET/VALUES map's keys, refusing case-variant
-    * spellings that collapse onto one column (the Map would silently
-    * keep whichever iterates last). */
-  private[io] def canonicalSet(schema: StructType, caseSensitive: Boolean,
-                               set: Map[String, org.apache.spark.sql.Column],
-                               what: String)
-      : Map[String, org.apache.spark.sql.Column] = {
-    val canon = canonicalName(schema, caseSensitive) _
-    val named = set.toSeq.map { case (k, v) => canon(k) -> v }
-    val dups = named.groupBy(_._1).collect {
-      case (n, vs) if vs.size > 1 => n }
-    require(dups.isEmpty,
-      s"$what assigns ${dups.mkString(", ")} more than once " +
-        "(case-variant spellings name the same column)")
-    named.toMap
-  }
-
   /** WALL-CLOCK pin, shared by the clause merge and replaceWhere:
     * rewrite clock functions in a user expression to LITERALS of one
     * per-statement instant. A mutation evaluates its expressions in
@@ -757,7 +740,7 @@ object FeatherMutations {
     *
     * `partsFor(escapedRelDir)` sizes the write per leaf — 1 for insert
     * batches (the default; a correction batch per leaf is small), the
-    * leaf's touched-file count for [[ConditionalMerge]]'s COW rewrites
+    * leaf's rewritten-file count for replaceWhere's survivor rewrite
     * (whose routed output carries every candidate row, not just the
     * changed ones — one part per rewritten input keeps part counts
     * stable, the same rule `mutate`'s flat rewrite applies). */

@@ -129,7 +129,7 @@ object ParquetTable {
       parts,
       stampPart = () =>
         GraftParquet.stampSchemaOnly(fs, root, s"$prefix-empty.parquet",
-          df.schema))
+          df.schema)).version
   }
 
   /** Hive-partitioned part landing: Spark's own partitioned sink writes

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, UpdateTable}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, LogicalPlan, UpdateTable}
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
@@ -79,11 +79,39 @@ object PredicateMutations {
                        cond: Option[Column],
                        set: Map[String, Column]): Result = {
     val op = if (set.isEmpty) "delete" else "update"
-    // the statement's relation comes from a catalog of this name built in
-    // place: no session conf needed, and the qualified path always takes
-    // the catalog's path branch (a relative name would resolve under a
-    // warehouse). On the default filesystem the bare absolute path is
-    // the name the SQL spelling `graft.`/abs/t`` uses.
+    val rel = pathRelation(spark, path, catalog)
+    val target = Bridge.ofRows(spark, rel)
+    // Spark's analysis refuses a nondeterministic WHERE itself, not a
+    // non-boolean one
+    cond.foreach { c =>
+      val dt = target.select(c).schema.head.dataType
+      require(dt == BooleanType,
+        s"$op: WHERE predicate is ${dt.catalogString}, not boolean")
+    }
+    requireSets(op, target.schema, target, set.toSeq)
+    def expr(c: Column) = Bridge.convertedExpression(spark, c)
+    val plan =
+      if (set.isEmpty)
+        DeleteFromTable(rel, cond.map(expr).getOrElse(Literal.TrueLiteral))
+      else UpdateTable(rel, set.toSeq.map { case (c, e) =>
+        Assignment(UnresolvedAttribute.quoted(c), expr(e)) }, cond.map(expr))
+    val r = commitReport(spark, plan, s"$op on $path")
+    // partsWritten = DV sidecars for the merge-on-read delete, exactly
+    // deleteByKeyDV's accounting — the two spellings of one takedown
+    // report identically
+    Result(r.version, r.filesRemoved + r.dvsBound, r.filesKept,
+      if (catalog == "graft_dv") r.dvsBound else r.partsAdded)
+  }
+
+  /** The relation of ``graft.`<path>` `` (copy-on-write) or
+    * ``graft_dv.`<path>` `` (merge-on-read), from a catalog of that name
+    * built in place: no session conf needed, and the qualified path
+    * always takes the catalog's path branch (a relative name would
+    * resolve under a warehouse). On the default filesystem the bare
+    * absolute path is the name the SQL spelling `graft.`/abs/t`` uses.
+    * The statement built over it runs on this one table load. */
+  private[io] def pathRelation(spark: SparkSession, path: String,
+                               catalog: String): DataSourceV2Relation = {
     val conf = spark.sparkContext.hadoopConfiguration
     val raw = new Path(path)
     val fs = raw.getFileSystem(conf)
@@ -94,30 +122,28 @@ object PredicateMutations {
     val cat = new GraftCatalog
     cat.initialize(catalog, CaseInsensitiveStringMap.empty())
     val ident = Identifier.of(Array.empty[String], name)
-    val target = Bridge.ofRows(spark,
-      DataSourceV2Relation.create(cat.loadTable(ident), Some(cat), Some(ident)))
-    // input checks Spark's analysis of the statement leaves open (it
-    // refuses a nondeterministic WHERE itself): an unknown SET column, a
-    // non-boolean WHERE, a nondeterministic SET — a replayed statement
-    // (the foreachBatch contract) must write the same rows — and a SET
-    // that is neither exact nor a lossless upcast, whatever the session's
-    // store assignment policy (the rule of every engine entry point)
-    val caseSensitive =
-      spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-    def field(c: String) = target.schema.fields.find(f =>
+    DataSourceV2Relation.create(cat.loadTable(ident), Some(cat), Some(ident))
+  }
+
+  /** The SET rule of every row-level entry point, an input check Spark's
+    * analysis leaves open: each (column, value) names a column of
+    * `table`, and the value, resolved over `shape`, is deterministic (a
+    * replayed statement must write the same rows) and of the column's
+    * exact type or a lossless upcast, whatever the session's store
+    * assignment policy. */
+  private[io] def requireSets(op: String, table: StructType, shape: DataFrame,
+                              sets: Seq[(String, Column)]): Unit = {
+    val caseSensitive = shape.sparkSession.conf
+      .get("spark.sql.caseSensitive", "false").toBoolean
+    def field(c: String) = table.fields.find(f =>
       if (caseSensitive) f.name == c else f.name.equalsIgnoreCase(c))
-    set.keys.foreach(c => require(field(c).isDefined,
+    sets.foreach { case (c, _) => require(field(c).isDefined,
       s"$op: SET names column '$c', not in the table schema " +
-        s"(${target.columns.mkString(", ")})"))
-    val sets = set.toSeq
-    val resolved = target.select(cond.toSeq ++ sets.map(_._2): _*)
+        s"(${table.fieldNames.mkString(", ")})") }
+    if (sets.isEmpty) return
+    val resolved = shape.select(sets.map(_._2): _*)
       .queryExecution.analyzed.expressions
-    cond.foreach { _ =>
-      val dt = resolved.head.dataType
-      require(dt == BooleanType,
-        s"$op: WHERE predicate is ${dt.catalogString}, not boolean")
-    }
-    sets.zip(resolved.drop(cond.size)).foreach { case ((c, _), e) =>
+    sets.zip(resolved).foreach { case ((c, _), e) =>
       val to = field(c).get.dataType
       require(e.dataType == to || Cast.canUpCast(e.dataType, to),
         s"$op: SET of column '$c' (${to.catalogString}) from a " +
@@ -128,24 +154,15 @@ object PredicateMutations {
         s"$op: the SET of column '$c' is nondeterministic — a replayed " +
           "statement would write different rows; make it deterministic")
     }
-    def expr(c: Column) = Bridge.convertedExpression(spark, c)
-    // the statement runs over the relation resolved above: one table load
-    val table = target.queryExecution.analyzed
-    val plan =
-      if (set.isEmpty)
-        DeleteFromTable(table, cond.map(expr).getOrElse(Literal.TrueLiteral))
-      else UpdateTable(table, sets.map { case (c, e) =>
-        Assignment(UnresolvedAttribute.quoted(c), expr(e)) }, cond.map(expr))
-    val done = Bridge.ofRows(spark, plan)
-    val r = RowLevelCommitMetrics.of(done).getOrElse(
-      throw new IllegalStateException(s"$op on $path: the executed " +
-        "statement carries no row-level commit report"))
-    // partsWritten = DV sidecars for the merge-on-read delete, exactly
-    // deleteByKeyDV's accounting — the two spellings of one takedown
-    // report identically
-    Result(r.version, r.filesRemoved + r.dvsBound, r.filesKept,
-      if (catalog == "graft_dv") r.dvsBound else r.partsAdded)
   }
+
+  /** Runs a row-level statement and returns what its commit published:
+    * the write's driver metrics ([[RowLevelCommitMetrics]]). */
+  private[io] def commitReport(spark: SparkSession, plan: LogicalPlan,
+                               what: String): RowLevelCommitMetrics.Report =
+    RowLevelCommitMetrics.of(Bridge.ofRows(spark, plan)).getOrElse(
+      throw new IllegalStateException(s"$what: the executed statement " +
+        "carries no commit report"))
 
   /** Translatable conjuncts of a RESOLVED predicate, through Spark's
     * OWN filter translation (`Bridge.translateFilter`) so pruning
@@ -399,6 +416,7 @@ object PredicateMutations {
             FeatherSnapshots.publishDataCommit(fs, root,
               truncate = false, Seq(face.suffix), added.toSeq,
               stampPart = () => face.stamp(fs, root, prefix, tableSchema))
+              .version
           else FeatherSnapshots.commitMutation(fs, root,
             "overwrite", snap, removeRel, added.toSeq,
             // conflict scope = the rewritten candidates: a concurrent

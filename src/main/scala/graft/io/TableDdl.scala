@@ -95,7 +95,7 @@ object TableDdl {
     val stamp = connFace.stamp(fs, root, prefix, schema)
     val v = FeatherSnapshots.publishDataCommit(fs, root,
       truncate = false, Seq(connFace.suffix), Seq(stamp),
-      stampPart = () => stamp)
+      stampPart = () => stamp).version
     Result(v, 0, 0, 1)
   }
 

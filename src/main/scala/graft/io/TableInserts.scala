@@ -139,7 +139,7 @@ object TableInserts {
       // publishDataCommit protocol ParquetTable.append rides)
       val committed = FeatherSnapshots.publishDataCommit(fs, root,
         truncate = false, Seq(face.suffix), added,
-        stampPart = () => face.stamp(fs, root, prefix, tableSchema))
+        stampPart = () => face.stamp(fs, root, prefix, tableSchema)).version
       Result(committed, 0, snap.files.size, added.size)
     } finally {
       if (ownOut) out.unpersist(blocking = false): Unit

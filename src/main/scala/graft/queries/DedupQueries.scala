@@ -29,32 +29,23 @@ object DedupQueries extends QueryPack {
 
   import org.apache.spark.sql.{DataFrame, SparkSession}
 
-  /** Opt-in shingle-relation caching. MEASURED at sf0.1 (local[32], noop
-    * writes): persisting the (doc_id, shingles) relation made every LSH
-    * query SLOWER (dedup_ngram_jaccard 9.1 → 12.6 s) — the codegen'd
-    * WordShingles recompute over a column-pruned parquet scan is cheaper
-    * than serializing string arrays into the block store, and the persist
-    * also forces full-corpus shingling on the verify side where the lazy
-    * plan shingles candidates only (the semi-join runs BEFORE the shingle
-    * projection). Default is therefore lazy recompute; flip the env knob on
-    * clusters where the scan itself is the bottleneck (cold object stores).
-    */
-  private val PersistShingles = sys.env.get("GRAFT_PERSIST_SHINGLES").contains("1")
-
   /** One shared shingle source per query: `docs` for index/signature
     * building, and a candidate-verify accessor that re-derives shingles for
-    * the (small) candidate id set — O(candidates), not O(corpus). */
+    * the (small) candidate id set — O(candidates), not O(corpus). Never
+    * persisted: MEASURED at sf0.1 (local[32], noop writes), persisting the
+    * (doc_id, shingles) relation made every LSH query SLOWER
+    * (dedup_ngram_jaccard 9.1 → 12.6 s) — the codegen'd WordShingles
+    * recompute over a column-pruned parquet scan is cheaper than
+    * serializing string arrays into the block store, and the persist also
+    * forces full-corpus shingling on the verify side where the lazy plan
+    * shingles candidates only (the semi-join runs BEFORE the shingle
+    * projection). */
   private def shingleSource(s: SparkSession, d: String): (DataFrame, DataFrame => DataFrame) = {
     val base = Tables.documents(s, d)
     val docs = base.select(col("doc_id"), shingles(col("text")).as("sh"))
       .filter(size(col("sh")) >= 1)
-    if (PersistShingles) {
-      // tracked pin: released by OrderedOps.clearPins() after the action
-      val cached = graft.ops.OrderedOps.pinned(docs)
-      (cached, candIds => cached.join(candIds, Seq("doc_id"), "left_semi"))
-    } else
-      (docs, candIds => base.join(candIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), shingles(col("text")).as("sh")))
+    (docs, candIds => base.join(candIds, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), shingles(col("text")).as("sh")))
   }
 
   private def sqlPolyHash(e: String): String =
@@ -826,8 +817,8 @@ object DedupQueries extends QueryPack {
     // ~190 ms spanHashes stages in the Prof dump), but pinning it measured
     // SLOWER (Prof warm 1.05 → 1.47 s) — the block-store write of the
     // exploded (doc_id, n_tok, pos, shid) relation costs more than the
-    // second fused span-hash pass it saves. Same lesson as
-    // PersistShingles above.
+    // second fused span-hash pass it saves. Same lesson as the unpersisted
+    // shingleSource above.
     val wins = base
       .select(col("doc_id"), col("n_tok"),
         posexplode(spanHashes(col("text"), 8)).as(Seq("pos", "shid")))

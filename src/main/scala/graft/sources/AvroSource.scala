@@ -155,7 +155,8 @@ private class AvroWrite(st: StructType, path: String, truncate: Boolean,
                         codec: String, snapshotsOpt: Boolean = false,
                         mergeSchemaOpt: Boolean = false)
     extends org.apache.spark.sql.connector.write.Write
-    with org.apache.spark.sql.connector.write.BatchWrite {
+    with org.apache.spark.sql.connector.write.BatchWrite
+    with RowLevelCommitMetrics.Reporting {
   // fail on unmappable schemas / bad codecs BEFORE tasks launch
   private val schemaJson = GraftAvro.toAvroSchema(st).toString
   require(Seq("snappy", "deflate", "null", "none").contains(codec),
@@ -187,10 +188,24 @@ private class AvroWrite(st: StructType, path: String, truncate: Boolean,
     val spark = SparkSession.active
     val out = new org.apache.hadoop.fs.Path(path)
     val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = messages.collect { case m: AvroCommitMessage => m }
+    val all = messages.collect { case m: AvroCommitMessage => m }
     // snapshot mode mirrors the feather face: requested on this write or
     // already snapshotted (then every commit must publish a manifest)
     val snapMode = snapshotsOpt || FeatherSnapshots.enabled(fs, out)
+    // a snapshot APPEND keeps only the parts that hold rows, and a
+    // zero-row append publishes no version (the feather sink's rule)
+    val tableAppend = !truncate && FeatherSnapshots.enabled(fs, out)
+    val (committed, empty) =
+      if (tableAppend) all.partition(m => !graft.io.FeatherMutations
+        .exactRows(graft.io.FeatherStats.fromJson(m.statsJson)).contains(0L))
+      else (all, Array.empty[AvroCommitMessage])
+    empty.foreach(m =>
+      fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false))
+    if (tableAppend && committed.isEmpty) {
+      report = FeatherSnapshots.resolve(fs, out, None)
+        .map(RowLevelCommitMetrics.noOp)
+      return
+    }
     // refuse a root append into a hive layout BEFORE renaming (see the
     // feather commit: a post-rename refusal leaves orphan residue)
     if (snapMode && !truncate && committed.nonEmpty)
@@ -224,9 +239,9 @@ private class AvroWrite(st: StructType, path: String, truncate: Boolean,
         new org.apache.hadoop.fs.Path(out, stampName)).getLen
     }
     if (snapMode)
-      FeatherSnapshots.publishDataCommit(fs, out, truncate, Seq(".avro"),
-        mergedAdd.map { case (n, (len, _)) => (n, len) }.toSeq,
-        stampPart _): Unit
+      report = Some(FeatherSnapshots.publishDataCommit(fs, out, truncate,
+        Seq(".avro"), mergedAdd.map { case (n, (len, _)) => (n, len) }.toSeq,
+        stampPart _))
     else if (!fs.listStatus(out).exists(_.getPath.getName.endsWith(".avro")))
       stampPart(): Unit
     fs.create(new org.apache.hadoop.fs.Path(out, "_SUCCESS"), true).close()

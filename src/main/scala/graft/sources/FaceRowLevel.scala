@@ -78,16 +78,19 @@ import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats,
   * deleted either way, and a failed commit unwinds the final parts and
   * fresh DV sidecars.
   *
-  * The engine's predicate DML runs here too: `deleteWhere`,
-  * `deleteWhereDV` and `updateWhere` ([[graft.io.PredicateMutations]])
-  * build Spark's DeleteFromTable / UpdateTable over ``graft.`<path>` ``
-  * or ``graft_dv.`<path>` `` (a relation of a catalog they build in
-  * place), so their pruning is this scan's. Both
-  * writes report what the commit did as DSv2 driver metrics on the
-  * command's plan — `commitVersion`, `filesRemoved`, `filesKept`,
-  * `partsAdded`, `dvsBound` ([[RowLevelCommitMetrics]]) — which the SQL
-  * statements show and the entry points return. A merge-on-read commit
-  * refuses past [[FaceRowLevel.MaxDvPositionsKey]] deleted positions.
+  * The engine's predicate DML and conditional MERGE run here too:
+  * `deleteWhere`, `deleteWhereDV` and `updateWhere`
+  * ([[graft.io.PredicateMutations]]) build Spark's DeleteFromTable /
+  * UpdateTable, and `ConditionalMerge.execute` / `executeDV`
+  * ([[graft.io.ConditionalMerge]]) Spark's MergeIntoTable, over
+  * ``graft.`<path>` `` or ``graft_dv.`<path>` `` (a relation of a catalog
+  * they build in place), so their pruning is this scan's. Both writes
+  * report what the commit did as DSv2 driver metrics on the command's
+  * plan — `commitVersion`, `filesRemoved`, `filesKept`, `partsAdded`,
+  * `dvsBound` ([[RowLevelCommitMetrics]]) — which the SQL statements show
+  * and the entry points return; so do the table appends an insert-only
+  * MERGE becomes. A merge-on-read commit refuses past
+  * [[FaceRowLevel.MaxDvPositionsKey]] deleted positions.
   *
   * Cost honesty: on the converting faces rewritten/inserted rows are
   * written twice (tmp feather, then the face part) — bytes ∝ the
@@ -371,19 +374,22 @@ private[sources] class FaceScan(host: Option[RowLevelHost],
     * can only turn a no-match statement into a no-op, for two extra jobs
     * on every pruned statement. A one-file DELETE proves its no-match at
     * commit instead, by the row count ([[FaceCowWrite]]), and gets the
-    * filter only when its file's stats carry no count; a no-match UPDATE
-    * narrowed to one file republishes that file. Asking resolves
+    * filter only when its file's stats carry no count; a one-file MERGE
+    * always gets it (a merge that changes nothing publishes no version —
+    * the engine's key-pruned merges often plan one file); a no-match
+    * UPDATE narrowed to one file republishes that file. Asking resolves
     * [[planned]]: the rule asks BEFORE it builds the matching-rows query,
     * so that query's batch scan reads this snapshot or a newer one, never
     * an older one — a newer one is what the read-set check catches. */
   override def filterAttributes(): Array[NamedReference] = {
     val state = planned._1
-    def uncountedDelete = host.exists(_.command() == Command.DELETE) &&
-      FaceRowLevel.liveRows(new org.apache.hadoop.fs.Path(path), state.snap,
-        state.keptRel).isEmpty
+    def oneFileFilter = host.exists(h => h.command() == Command.MERGE ||
+      h.command() == Command.DELETE &&
+        FaceRowLevel.liveRows(new org.apache.hadoop.fs.Path(path),
+          state.snap, state.keptRel).isEmpty)
     if (host.exists(_.groupBased) &&
         !owned.contains(GraftMetaColumns.FileName) &&
-        (state.keptRel.size > 1 || state.keptRel.size == 1 && uncountedDelete))
+        (state.keptRel.size > 1 || state.keptRel.size == 1 && oneFileFilter))
       Array(Expressions.column(GraftMetaColumns.FileName))
     else Array.empty
   }
@@ -651,8 +657,9 @@ private[sources] object FaceConvert {
       : (Seq[(String, Long)],
          Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])]) = {
     if (tmpMsgs.isEmpty) return (Seq.empty, Map.empty)
+    val prefix = FeatherSnapshots.runPrefix(targetV)
     if ((face eq ConnectorFace.FeatherFace) && partCols.isEmpty) {
-      val renamed = renameParts(fs, path, tmpMsgs)
+      val renamed = renameParts(fs, path, tmpMsgs, prefix)
       return (renamed.map { case (n, (len, _)) => (n, len) }.toSeq, renamed)
     }
     val spark = SparkSession.active
@@ -661,7 +668,6 @@ private[sources] object FaceConvert {
       (new org.apache.hadoop.fs.Path(path, m.tmpName).toString, m.bytes))
     try {
       val df = GraftFeather.readFiles(spark, tmpFiles)
-      val prefix = FeatherSnapshots.runPrefix(targetV)
       if (partCols.isEmpty) {
         // cap the write fan-out like the mutation tier: a 32-task insert
         // must not fill the table with 32 near-empty parts per statement
@@ -685,17 +691,18 @@ private[sources] object FaceConvert {
     }
   }
 
-  /** Rename tmp feather parts to gen-tagged finals + write their per-part
-    * stats sidecars; returns final name → (bytes, batch stats), the
-    * upsertMerged input shape. ZERO-ROW parts (empty batch stats — a task
-    * every row bypassed) are deleted, not renamed: publishing them would
-    * add one junk file per idle task to the manifest. */
+  /** Rename tmp feather parts to finals under the run prefix (the
+    * mutation tier's `mut-v…` naming: collision-free beside retained
+    * generations, and vacuum never reclaims a part of a version newer
+    * than the head) + write their per-part stats sidecars; returns final
+    * name → (bytes, batch stats), the upsertMerged input shape. ZERO-ROW
+    * parts (empty batch stats — a task every row bypassed) are deleted,
+    * not renamed: publishing them would add one junk file per idle task
+    * to the manifest. */
   private def renameParts(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                          committed: Seq[FeatherCommitMessage])
-      : Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])] = {
-    // the append sink's naming: the gen tag keeps these parts
-    // collision-free beside retained generations
-    val gen = f"-g${System.nanoTime()}%x"
+                          committed: Seq[FeatherCommitMessage],
+                          prefix: String)
+      : Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])] =
     committed.flatMap { m =>
       val stats = FeatherStats.fromJson(m.statsJson)
       val tmp = new org.apache.hadoop.fs.Path(path, m.tmpName)
@@ -704,8 +711,7 @@ private[sources] object FaceConvert {
         None
       } else {
         val fin = new org.apache.hadoop.fs.Path(path,
-          f"part-${m.partitionId}%05d-${java.util.UUID.nameUUIDFromBytes(
-            m.tmpName.getBytes("UTF-8"))}$gen.feather")
+          f"$prefix-part-${m.partitionId}%05d.feather")
         require(fs.rename(tmp, fin), s"commit rename $tmp -> $fin failed")
         val sc = fs.create(new org.apache.hadoop.fs.Path(path,
           fin.getName + ".stats.json"), true)
@@ -713,7 +719,6 @@ private[sources] object FaceConvert {
         Some(fin.getName -> (m.bytes, stats))
       }
     }.toMap
-  }
 
   /** Failure-path unwind: delete finalized parts and their sidecars — a
     * manifest commit that threw never made them visible. */
@@ -743,13 +748,15 @@ private[sources] object FaceConvert {
       GraftFeather.toArrowField(f.name, f.dataType, f.nullable))
 }
 
-/** What a row-level commit did, as DSv2 driver metrics: both writes
-  * declare them (`supportedCustomMetrics`) and report them
-  * (`reportDriverMetrics`), which Spark's write exec posts on the
-  * command's physical plan once the commit returns. The SQL statements
-  * show them in their executed plan; the engine entry points
-  * ([[graft.io.PredicateMutations]]) read their `Result` from them —
-  * never from a diff of the head, which a concurrent commit inside the
+/** What a table commit did, as DSv2 driver metrics: both row-level
+  * writes and the table appends ([[FaceBatchWrite]], the feather and avro
+  * sinks — where an insert-only MERGE lands) declare them
+  * (`supportedCustomMetrics`) and report them (`reportDriverMetrics`),
+  * which Spark's write exec posts on the command's physical plan once the
+  * commit returns. The SQL statements show them in their executed plan;
+  * the engine entry points ([[graft.io.PredicateMutations]],
+  * [[graft.io.ConditionalMerge]]) read their `Result` from them — never
+  * from a diff of the head, which a concurrent commit inside the
   * statement's window would make name the wrong version.
   *
   *  - `commitVersion`: the version the commit published, or the planned

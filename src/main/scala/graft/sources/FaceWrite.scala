@@ -44,7 +44,8 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
                                     writeSchema: StructType)
     extends WriteBuilder with Write with BatchWrite
     with org.apache.spark.sql.connector.write.SupportsOverwrite
-    with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite {
+    with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite
+    with RowLevelCommitMetrics.Reporting {
   FaceConvert.requireFeatherMappable(writeSchema)
 
   /** append | truncate | static (leaf-equality filters) | predicate |
@@ -148,8 +149,10 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
           else GraftFeather.readFiles(spark, data.toSeq.map(m =>
             (new org.apache.hadoop.fs.Path(path, m.tmpName).toString,
               m.bytes)))
-        graft.io.PredicateMutations.replaceWhere(spark, path, rows,
-          predicate.map(toColumn).reduce(_ && _)): Unit
+        val r = graft.io.PredicateMutations.replaceWhere(spark, path, rows,
+          predicate.map(toColumn).reduce(_ && _))
+        report = Some(RowLevelCommitMetrics.Report(r.version, r.filesTouched,
+          r.filesKept, r.partsWritten, 0))
       } finally abort(messages)
       return
     }
@@ -159,7 +162,10 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
           "carry one)"))
     // a zero-row APPEND publishes no version (replay-clean); overwrites
     // still publish — emptying is their meaning
-    if (data.isEmpty && mode == "append") return
+    if (data.isEmpty && mode == "append") {
+      report = Some(RowLevelCommitMetrics.noOp(snap))
+      return
+    }
     val opName = mode match {
       case "append" => "append"
       case _ => "insert_overwrite"
@@ -213,7 +219,10 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
     }
     // nothing written AND nothing replaced (dynamic overwrite of zero
     // rows, static overwrite matching no leaf): publish no version
-    if (parts.isEmpty && removeRel.isEmpty) return
+    if (parts.isEmpty && removeRel.isEmpty) {
+      report = Some(RowLevelCommitMetrics.noOp(snap))
+      return
+    }
     val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     added ++= parts
     // an overwrite that emptied the table (or its target leaves) must
@@ -224,15 +233,18 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
       added ++= FeatherMutations.stampLeaves(face, fs, root,
         snap.files.map(_._1), FeatherSnapshots.runPrefix(targetV),
         dataSchema)
-    try
-      FeatherSnapshots.commitMutation(fs, root, opName, snap,
-        removeRel = removeRel, add = added.toSeq,
-        readRel = Some(removeRel)): Unit
-    catch { case e: Throwable =>
-      FaceConvert.deleteFinalized(fs, path, added.toSeq.map(_._1))
-      FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
-      throw e
-    }
+    val version =
+      try
+        FeatherSnapshots.commitMutation(fs, root, opName, snap,
+          removeRel = removeRel, add = added.toSeq,
+          readRel = Some(removeRel))
+      catch { case e: Throwable =>
+        FaceConvert.deleteFinalized(fs, path, added.toSeq.map(_._1))
+        FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
+        throw e
+      }
+    report = Some(RowLevelCommitMetrics.Report(version, removeRel.size,
+      snap.files.size - removeRel.size, added.size, 0))
     if (flatStats.nonEmpty) FeatherStats.upsertMerged(fs, root, flatStats)
   }
 

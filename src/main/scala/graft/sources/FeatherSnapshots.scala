@@ -836,12 +836,15 @@ private[graft] object FeatherSnapshots {
     * publish a zero-file manifest — the table would be unreadable at
     * head), and the commit itself. `stampPart` physically writes one
     * schema-only part and returns its (name, len); it is only invoked
-    * when needed. Call AFTER the new parts are renamed into place. */
+    * when needed. Call AFTER the new parts are renamed into place.
+    * Returns what the commit published (the writes report it as their
+    * [[RowLevelCommitMetrics]]). */
   private[graft] def publishDataCommit(fs: FileSystem, root: Path,
                                        truncate: Boolean,
                                        suffixes: Seq[String],
                                        newParts: Seq[(String, Long)],
-                                       stampPart: () => (String, Long)): Long = {
+                                       stampPart: () => (String, Long))
+      : RowLevelCommitMetrics.Report = {
     val newNames = newParts.map(_._1).toSet
     val legacySeed: Seq[(String, Long)] =
       if (!truncate && latestVersion(fs, root).isEmpty)
@@ -861,14 +864,21 @@ private[graft] object FeatherSnapshots {
     // layout guard (backstop — the sinks also pre-check BEFORE renaming
     // via requireRootAppendable, so a refused write leaves no residue),
     // run INSIDE the callback against the parent actually published over
-    commit(fs, root, if (truncate) "overwrite" else "append") { parent =>
-      val out =
-        if (truncate) newParts ++ stamped
-        else legacySeed ++ parent ++ newParts ++ stamped
-      val chains = out.map(f => chainOf(f._1)).distinct
-      require(chains.size <= 1, mixedLayoutMsg(root, chains))
-      out
-    }
+    var parentSize = 0
+    val version =
+      commit(fs, root, if (truncate) "overwrite" else "append") { parent =>
+        parentSize = parent.size
+        val out =
+          if (truncate) newParts ++ stamped
+          else legacySeed ++ parent ++ newParts ++ stamped
+        val chains = out.map(f => chainOf(f._1)).distinct
+        require(chains.size <= 1, mixedLayoutMsg(root, chains))
+        out
+      }
+    RowLevelCommitMetrics.Report(version,
+      filesRemoved = if (truncate) parentSize else 0,
+      filesKept = if (truncate) 0 else legacySeed.size + parentSize,
+      partsAdded = newParts.size + stamped.size, dvsBound = 0)
   }
 
   private[graft] def chainOf(rel: String): Seq[String] =

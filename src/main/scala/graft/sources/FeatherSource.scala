@@ -734,7 +734,8 @@ private class FeatherWrite(st: StructType, path: String, truncate: Boolean,
                            snapshotsOpt: Boolean,
                            mergeSchemaOpt: Boolean = false)
     extends org.apache.spark.sql.connector.write.Write
-    with org.apache.spark.sql.connector.write.BatchWrite {
+    with org.apache.spark.sql.connector.write.BatchWrite
+    with RowLevelCommitMetrics.Reporting {
   // fail on unmappable schemas / bad options BEFORE tasks launch
   st.fields.foreach(f => GraftFeather.toArrowField(f.name, f.dataType, f.nullable))
   require(Seq("lz4", "zstd", "none", "null").contains(codec),
@@ -783,7 +784,11 @@ private class FeatherWrite(st: StructType, path: String, truncate: Boolean,
       else (all, Array.empty[FeatherCommitMessage])
     empty.foreach(m =>
       fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false))
-    if (tableAppend && committed.isEmpty) return
+    if (tableAppend && committed.isEmpty) {
+      report = FeatherSnapshots.resolve(fs, out, None)
+        .map(RowLevelCommitMetrics.noOp)
+      return
+    }
     // refuse a root-level append into a hive layout BEFORE renaming any
     // part — failing after the renames would leave orphan residue at the
     // root that a later adopt() would mix into an unreadable manifest
@@ -828,10 +833,10 @@ private class FeatherWrite(st: StructType, path: String, truncate: Boolean,
         new org.apache.hadoop.fs.Path(out, stampName)).getLen
     }
     if (snapMode)
-      FeatherSnapshots.publishDataCommit(fs, out, truncate,
+      report = Some(FeatherSnapshots.publishDataCommit(fs, out, truncate,
         FeatherSnapshots.FeatherSuffixes,
         mergedAdd.map { case (n, (len, _)) => (n, len) }.toSeq,
-        stampPart _): Unit
+        stampPart _))
     else if (!fs.listStatus(out).exists(
         _.getPath.getName.endsWith(".feather")))
       stampPart(): Unit

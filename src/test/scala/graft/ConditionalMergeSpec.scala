@@ -111,15 +111,19 @@ class ConditionalMergeSpec extends AnyFunSuite {
     assert(after === bytes0, "DV strategy must not rewrite candidates")
     assert(rd.filesTouched >= 1, "the matched files carry masks")
     assert(collect(pathCow) === collect(pathDv))
-    // the source matches EVERY row of the two upper range files
-    // (51..75, 76..100): a full-coverage mask DROPS the file from the
-    // manifest instead of binding a sidecar
+    // a clause changes EVERY row of the top range file (76..100: amt >
+    // 700 updates, the tens delete): a full-coverage mask DROPS the file
+    // from the manifest instead of binding a sidecar. The 51..75 file
+    // keeps the matched rows no clause fires on (51..69 minus the tens),
+    // so it binds a sidecar
     val snap = FeatherSnapshots.resolve(fsOf(pathDv), new Path(pathDv), None).get
     val parent = FeatherSnapshots.read(fsOf(pathDv), new Path(pathDv), 1L)
     val carried = parent.files.map(_._1).toSet
       .intersect(snap.files.map(_._1).toSet)
-    assert(parent.files.size - carried.size === 2,
-      "the two fully-matched files drop from the manifest")
+    assert(parent.files.size - carried.size === 1,
+      "the fully-changed file drops from the manifest")
+    assert(snap.dvs.size === 1 && carried(snap.dvs.keys.head),
+      "the partly-changed file binds a DV sidecar")
     // a PARTIAL match binds a real sidecar
     import spark.implicits._
     ConditionalMerge(spark, pathDv,
@@ -195,11 +199,12 @@ class ConditionalMergeSpec extends AnyFunSuite {
     val path = tmp("loud")
     writeTable(path)
     val dup = Seq((60L, "a", 1.0), (60L, "b", 2.0)).toDF("id", "grade", "amt")
-    val e1 = intercept[IllegalArgumentException] {
+    // Spark's row-level MERGE refuses two source rows on one target row
+    val e1 = intercept[org.apache.spark.SparkThrowable] {
       ConditionalMerge(spark, path, dup, Seq("id"))
         .whenMatchedUpdateAll().execute()
     }
-    assert(e1.getMessage.contains("duplicate key"))
+    assert(e1.getCondition === "MERGE_CARDINALITY_VIOLATION")
     val e2 = intercept[IllegalArgumentException] {
       ConditionalMerge(spark, path, src, Seq("id"))
         .whenNotMatchedBySourceDelete().executeDV()
@@ -308,6 +313,13 @@ class ConditionalMergeSpec extends AnyFunSuite {
     val r1 = ConditionalMerge(spark, path, allMatched, Seq("id"))
       .whenNotMatchedInsertAll().execute()
     assert(r1.version === 1L, s"zero-insert merge must not commit: $r1")
+    // the same on the avro face, where the insert-only merge lands
+    // through the avro sink's append
+    val avro = tmp("noop_avro")
+    writeTable(avro, "graft-avro")
+    val r1a = ConditionalMerge(spark, avro, allMatched, Seq("id"))
+      .whenNotMatchedInsertAll().execute()
+    assert(r1a.version === 1L, s"zero-insert avro merge must not commit: $r1a")
     // DV strategy, no key matches, no clause output -> no commit
     val noMatch = Seq((9999L, "sX", 1.0)).toDF("id", "grade", "amt")
     val r2 = ConditionalMerge(spark, path, noMatch, Seq("id"))
@@ -328,6 +340,14 @@ class ConditionalMergeSpec extends AnyFunSuite {
       .whenMatchedUpdateAll().execute()
     assert(r3.version === 1L && r3.filesTouched === 0,
       s"an in-range miss must degrade to a no-op, not a rewrite: $r3")
+    // a key inside ONE file's id range (52..100) but absent from it: the
+    // key pruning plans that one file, and the merge still proves its
+    // no-match instead of republishing the file
+    val r3b = ConditionalMerge(spark, gapped,
+      Seq((53L, "sX", 1.0)).toDF("id", "grade", "amt"), Seq("id"))
+      .whenMatchedUpdateAll().execute()
+    assert(r3b.version === 1L && r3b.filesTouched === 0,
+      s"a one-file in-range miss must be a no-op too: $r3b")
     // ... and with a qualifying insert it degrades to a PURE APPEND
     val r4 = ConditionalMerge(spark, gapped,
       Seq((51L, "sX", 1.0)).toDF("id", "grade", "amt"), Seq("id"))
@@ -687,8 +707,11 @@ class ConditionalMergeSpec extends AnyFunSuite {
     val path = tmp("evolve_race")
     writeTable(path)
     // a concurrent ALTER lands 'extra_col' STRING inside the evolving
-    // merge's commit window; the merge's footers would carry it as
-    // DOUBLE — the commit must abort, not land the conflict
+    // merge's commit window; the merge would add it as DOUBLE — the
+    // merge must abort, not land the conflict. The merge evolves only
+    // the columns its clauses write (updateAll writes extra_col), and
+    // its ADD COLUMNS commits before the rows under the no-new-files
+    // rule
     FeatherSnapshots.testBeforeMutationCommit = () => {
       graft.io.TableDdl.addColumns(spark, path, Seq(
         org.apache.spark.sql.types.StructField("extra_col",
@@ -698,10 +721,12 @@ class ConditionalMergeSpec extends AnyFunSuite {
       ConditionalMerge(spark, path,
         src.withColumn("extra_col", lit(1.0)), Seq("id"))
         .withSchemaEvolution()
-        .whenMatchedUpdate(set = Map("amt" -> col("source.amt")))
+        .whenMatchedUpdateAll()
         .execute()
     }
-    assert(e.getMessage.contains("concurrent commit added file"),
+    // the ADD COLUMNS loses the no-new-files check, and its retry
+    // revalidates against the winner's schema
+    assert(e.getMessage.contains("column 'extra_col' already exists"),
       e.getMessage)
     // the winner's STRING evolution is intact and the table reads
     val got = spark.read.format("feather")

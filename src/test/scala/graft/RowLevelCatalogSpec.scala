@@ -327,10 +327,10 @@ class RowLevelCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       root, None).get
   }
 
-  /** Data parts only — the CREATE stamp (zero rows) rides every manifest
-    * and is irrelevant to rewrite/DV accounting. */
+  /** Data parts only — the CREATE stamp (zero rows, `<prefix>-empty`)
+    * rides every manifest and is irrelevant to rewrite/DV accounting. */
   private def dataFiles(s: graft.sources.FeatherSnapshots.Snapshot) =
-    s.files.map(_._1).filter(_.startsWith("part-")).toSet
+    s.files.map(_._1).filterNot(_.endsWith("-empty.feather")).toSet
 
   test("graft_dv DELETE runs the DELTA rewrite: DV sidecars, ZERO data " +
        "files rewritten, reads identical to the COW twin") {
@@ -1072,12 +1072,7 @@ class RowLevelCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("commit metrics: a SQL DELETE on graft.`path` and graft_dv.`path` " +
        "reports what its commit published in the executed plan") {
-    for ((cat, t) <- Seq("graft" -> "cm_cow", "graft_dv" -> "cm_dv")) {
-      threeFlatFiles(t, "feather")
-      val before = snapOf(s"rl/$t")
-      val df = plain.sql(s"DELETE FROM $cat.`$wh/rl/$t` WHERE id % 1000 = 120")
-      val after = snapOf(s"rl/$t")
-      assert(after.version == before.version + 1)
+    def metrics(cat: String, df: org.apache.spark.sql.DataFrame) = {
       val write = (df.queryExecution.executedPlan match {
         case c: org.apache.spark.sql.execution.CommandResultExec =>
           c.commandPhysicalPlan
@@ -1085,15 +1080,56 @@ class RowLevelCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       }).collectFirst { case p if p.metrics.contains("commitVersion") => p }
         .getOrElse(fail(s"$cat: no commit metrics in " +
           df.queryExecution.executedPlan))
-      val m = Seq("commitVersion", "filesRemoved", "filesKept", "partsAdded",
-        "dvsBound").map(k => k -> write.metrics(k).value).toMap
+      (write.nodeName, Seq("commitVersion", "filesRemoved", "filesKept",
+        "partsAdded", "dvsBound").map(k => k -> write.metrics(k).value).toMap)
+    }
+    for ((cat, t) <- Seq("graft" -> "cm_cow", "graft_dv" -> "cm_dv")) {
+      threeFlatFiles(t, "feather")
+      val before = snapOf(s"rl/$t")
+      val df = plain.sql(s"DELETE FROM $cat.`$wh/rl/$t` WHERE id % 1000 = 120")
+      val after = snapOf(s"rl/$t")
+      assert(after.version == before.version + 1)
+      val (node, m) = metrics(cat, df)
       // COW replaces the one matching file with one part; delta binds one
       // DV on it; either way every other planned file is kept
       val (removed, added, dvs) = if (cat == "graft") (1, 1, 0) else (0, 0, 1)
       assert(m == Map("commitVersion" -> after.version,
         "filesRemoved" -> removed, "filesKept" -> (before.files.size - 1),
-        "partsAdded" -> added, "dvsBound" -> dvs),
-        s"$cat (${write.nodeName}): $m")
+        "partsAdded" -> added, "dvsBound" -> dvs), s"$cat ($node): $m")
+    }
+    // a MERGE (matched update + not-matched insert), and an insert-only
+    // MERGE, which Spark runs as an append: each report equals the
+    // manifest delta its commit published
+    def merge(cat: String, t: String, clauses: String) =
+      plain.sql(s"MERGE INTO $cat.`$wh/rl/$t` t USING (SELECT 120L AS id, " +
+        s"-1L AS v UNION ALL SELECT 999L, -1L) s ON t.id = s.id $clauses")
+    val upsert = "WHEN MATCHED THEN UPDATE SET v = s.v " +
+      "WHEN NOT MATCHED THEN INSERT *"
+    for ((cat, t, clauses, node) <- Seq(
+        ("graft", "cmm_cow", upsert, "ReplaceData"),
+        ("graft_dv", "cmm_dv", upsert, "WriteDelta"),
+        ("graft", "cmm_ins", "WHEN NOT MATCHED THEN INSERT *", "AppendData"))) {
+      threeFlatFiles(t, "feather")
+      val before = snapOf(s"rl/$t")
+      val (name, m) = metrics(cat, merge(cat, t, clauses))
+      val after = snapOf(s"rl/$t")
+      val removed = before.files.toSet -- after.files.toSet
+      val added = after.files.toSet -- before.files.toSet
+      val bound = after.dvs.count { case (rel, b) =>
+        !before.dvs.get(rel).contains(b) }
+      assert(name.startsWith(node), s"$cat $t: $name")
+      assert(after.version == before.version + 1 && added.nonEmpty)
+      // only the 100..140 file holds id 120: COW replaces it, delta masks
+      // it, the append leaves every file
+      assert((removed.size, bound) == (node match {
+        case "ReplaceData" => (1, 0)
+        case "WriteDelta" => (0, 1)
+        case _ => (0, 0)
+      }), s"$cat $t: removed $removed, $bound bound")
+      assert(m == Map("commitVersion" -> after.version,
+        "filesRemoved" -> removed.size,
+        "filesKept" -> (before.files.size - removed.size - bound),
+        "partsAdded" -> added.size, "dvsBound" -> bound), s"$cat $t: $m")
     }
   }
 }
