@@ -1007,13 +1007,14 @@ object ScaleRehearsal {
     }
   }
 
-  /** DV-MERGE tier (r13, FeatherMutations.mergeDV): the structural
-    * claim behind merge-on-read upserts — a scattered 1000-key
-    * correction's WRITTEN BYTES scale with the CHANGED ROWS under the
-    * DV path but with the TOUCHED FILE BYTES under copy-on-write. Two
-    * table scales (4×), the same strided source hitting every part:
-    * COW merge bytes must grow ~4×, DV merge bytes must stay flat
-    * (one small source part + position sidecars). */
+  /** DV-MERGE tier (r13; `FeatherMutations.merge` / `mergeDV`, both a
+    * MERGE on the row-level path): the structural claim behind
+    * merge-on-read upserts — a scattered 1000-key correction's WRITTEN
+    * BYTES scale with the CHANGED ROWS under the DV path but with the
+    * TOUCHED FILE BYTES under copy-on-write. Two table scales (4×), the
+    * same strided source holding a key in every part: COW merge bytes
+    * must grow ~4×, DV merge bytes must stay flat (one small part of
+    * replacements and inserts + position sidecars). */
   def dvMergeTier(spark: SparkSession, out: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val results = Seq(8, 32).map { parts =>
@@ -1062,7 +1063,7 @@ object ScaleRehearsal {
       val dvSec = (System.nanoTime() - t1) / 1e9
       val dvBytes = newBytes(dvPath)
       require(rc.filesTouched == parts && rd.filesTouched == parts,
-        s"strided keys must touch every part: cow=$rc dv=$rd")
+        s"strided keys must change every part: cow=$rc dv=$rd")
       println(f"""{"dvmerge_parts":$parts,"cow_bytes_written":$cowBytes,"dv_bytes_written":$dvBytes,"cow_sec":$cowSec%.2f,"dv_sec":$dvSec%.2f}""")
       (cowBytes, dvBytes)
     }
@@ -1187,7 +1188,8 @@ object ScaleRehearsal {
     println(f"""{"parquet_rows":$n,"cow_bytes_written":$cowBytes,"dv_bytes_written":$dvBytes,"cow_sec":$cowSec%.2f,"dv_sec":$dvSec%.2f,"binary_compact_sec":$binSec%.2f,"binary_files_after":${rcmp.filesAfter},"decode_cluster_sec":$decodeSec%.2f,"banded_read_sec":$readSec%.2f,"banded_read_rows":$cnt}""")
   }
 
-  /** Deletion-vector tier (r12, io/DeletionVectors.scala): the
+  /** Deletion-vector tier (r12; `FeatherMutations.deleteByKey` /
+    * `deleteByKeyDV`, both a MERGE on the row-level path): the
     * structural claim behind merge-on-read deletes — a scattered
     * takedown's WRITTEN BYTES scale with the DELETED ROWS under the DV
     * path but with the TOUCHED FILE BYTES under copy-on-write. Two
@@ -1254,8 +1256,9 @@ object ScaleRehearsal {
     println(f"""{"dv_tier":"merge_on_read","table_ratio":4,"cow_bytes_ratio":${results(1)._1.toDouble / results(0)._1}%.2f,"dv_bytes_ratio":${results(1)._2.toDouble / results(0)._2}%.2f}""")
   }
 
-  /** Overlapping-generations probe tier (r11,
-    * io/FeatherMutations.scala): DELIBERATELY overlapping file ranges —
+  /** Overlapping-generations probe tier (r11, the key probe
+    * `FeatherMutations.probeTouched` every keyed mutation runs before its
+    * MERGE): DELIBERATELY overlapping file ranges —
     * generation g holds the STRIDED keys {g, g+gens, g+2·gens, …}, so
     * EVERY generation's every part spans the whole key domain and the
     * overlap depth equals generations × parts-per-generation (the
@@ -1264,7 +1267,9 @@ object ScaleRehearsal {
     * pre-r11 shape was a DISTINCT-keys × broadcast-ranges
     * BroadcastNestedLoopJoin). The structural claim: probe wall grows
     * with keys · overlap depth, not keys × files, and stays sub-second
-    * while the rewrite cost tracks the (deliberately full) touch set. */
+    * while the rewrite cost tracks the (deliberately full) touch set.
+    * The second, absent-key delete plans only what the Bloom sidecars
+    * cannot clear and changes nothing. */
   def overlapTier(spark: SparkSession, out: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1295,9 +1300,9 @@ object ScaleRehearsal {
       // blooms are advisory at fpp 0.001: 50 keys x 32 files ≈ 1 expected
       // false positive — a touched file or two is the index working as
       // specified, not a pruning failure
-      require(r2.filesTouched <= 3,
+      require(r2.filesPlanned <= 3,
         s"absent in-range keys must prune to ~zero through blooms: $r2")
-      println(f"""{"overlap_rows":$n,"generations":$gens,"files":${gens * 4},"touched":${r.filesTouched},"probe_and_rewrite_sec":$sec%.2f,"probe_only_sec":$probeSec%.2f}""")
+      println(f"""{"overlap_rows":$n,"generations":$gens,"files":${gens * 4},"touched":${r.filesTouched},"probe_only_planned":${r2.filesPlanned},"probe_and_rewrite_sec":$sec%.2f,"probe_only_sec":$probeSec%.2f}""")
       (sec, probeSec)
     }
     println(f"""{"overlap_tier":"interval_stab","table_ratio":10,"wall_ratio":${results(1)._1 / results(0)._1}%.2f,"probe_ratio":${results(1)._2 / results(0)._2}%.2f}""")
@@ -1434,16 +1439,16 @@ object ScaleRehearsal {
         .option("snapshots", "true").save(dir)
       val band = spark.range(n / 2, n / 2 + 50000L).select(col("id"))
       val r0 = graft.io.FeatherMutations.deleteByKey(spark, dir, band, Seq("id"))
-      require(r0.filesTouched == parts,
-        s"hash layout should touch all $parts parts: $r0")
+      require(r0.filesPlanned == parts,
+        s"hash layout should plan all $parts parts: $r0")
       val t0 = System.nanoTime()
       val rc = graft.io.FeatherCluster.cluster(spark, dir, Seq("id"),
         targetBytes = (n * 24) / parts) // ~input part count out
       val sec = (System.nanoTime() - t0) / 1e9
       val band2 = spark.range(n / 4, n / 4 + 50000L).select(col("id"))
       val r1 = graft.io.FeatherMutations.deleteByKey(spark, dir, band2, Seq("id"))
-      require(r1.filesTouched <= 2,
-        s"clustered band must touch <=2 of ${rc.filesAfter}: $r1")
+      require(r1.filesPlanned <= 2,
+        s"clustered band must plan <=2 of ${rc.filesAfter}: $r1")
       val rows = spark.read.format("feather").load(dir).count()
       require(rows == n - 100000L, s"rows after two deletes: $rows")
       println(f"""{"cluster_rows":$n,"parts_in":$parts,"parts_out":${rc.filesAfter},"cluster_sec":$sec%.2f,"touched_before":${r0.filesTouched},"touched_after":${r1.filesTouched}}""")
@@ -1452,13 +1457,16 @@ object ScaleRehearsal {
     println(f"""{"cluster_tier":"feather","table_ratio":10,"wall_ratio":${results(1) / results(0)}%.2f}""")
   }
 
-  /** Row-level mutation tier (r10, io/FeatherMutations.scala): DELETE and
-    * MERGE against range-clustered snapshotted tables at 1M and 10M rows.
-    * The structural claim under test: copy-on-write work scales with
-    * TOUCHED bytes, not table bytes — a fixed-width key band (50k keys)
-    * touches the same number of parts at both sizes, so its wall time
-    * should stay ~flat across the 10× table growth (the residual growth
-    * is the candidate probe + manifest bookkeeping, both O(files)). */
+  /** Row-level mutation tier (r10; `FeatherMutations.deleteByKey` /
+    * `merge`, each a MERGE on the row-level path): DELETE and MERGE
+    * against range-clustered snapshotted tables at 1M and 10M rows. The
+    * structural claim under test: copy-on-write work scales with TOUCHED
+    * bytes, not table bytes — a fixed-width key band (50k keys, past any
+    * collect-to-driver bound) plans the same number of parts at both
+    * sizes, because the key probe hands the row-level scan only its
+    * candidates, so its wall time should stay ~flat across the 10× table
+    * growth (the residual growth is the probe + manifest bookkeeping,
+    * both O(files)). */
   def mutationTier(spark: SparkSession, out: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1477,8 +1485,8 @@ object ScaleRehearsal {
       val t0 = System.nanoTime()
       val rd = graft.io.FeatherMutations.deleteByKey(spark, dir, delKeys, Seq("id"))
       val delSec = (System.nanoTime() - t0) / 1e9
-      require(rd.filesTouched <= 2,
-        s"fixed band must touch <=2 of $parts range parts: $rd")
+      require(rd.filesPlanned <= 2,
+        s"fixed band must plan <=2 of $parts range parts: $rd")
       val afterDel = spark.read.format("feather").load(dir).count()
       require(afterDel == n - 50000L, s"rows after delete: $afterDel")
       // merge: same-width update band at the table head + 10k inserts
@@ -1489,20 +1497,21 @@ object ScaleRehearsal {
       val t1 = System.nanoTime()
       val rm = graft.io.FeatherMutations.merge(spark, dir, src, Seq("id"))
       val mrgSec = (System.nanoTime() - t1) / 1e9
-      require(rm.filesTouched <= 2,
-        s"merge band must touch <=2 data parts: $rm")
+      require(rm.filesPlanned <= 2,
+        s"merge band must plan <=2 data parts: $rm")
       val afterMrg = spark.read.format("feather").load(dir).count()
       require(afterMrg == n - 50000L + 10000L, s"rows after merge: $afterMrg")
       // bloom refinement: absent keys INSIDE a live file's range (the
       // band deleted above — the rewritten survivor file still spans it).
       // Keys ABOVE every range would prove nothing: the hi-bound check
       // prunes those with no bloom involved. First probe runs WITHOUT
-      // blooms and must touch ≥1 file (ranges alone cannot prune this
-      // workload); after the build the same probe touches ZERO.
+      // blooms and must plan ≥1 file (ranges alone cannot prune this
+      // workload); after the build the same probe plans ZERO. Neither
+      // changes a row.
       val inBandAbsent = spark.range(lo + 1000L, lo + 1200L).select(col("id"))
       val rNoBloom = graft.io.FeatherMutations.deleteByKey(
         spark, dir, inBandAbsent, Seq("id"))
-      require(rNoBloom.filesTouched >= 1,
+      require(rNoBloom.filesPlanned >= 1 && rNoBloom.filesTouched == 0,
         s"workload sanity: ranges alone must NOT prune in-band keys: $rNoBloom")
       val t2 = System.nanoTime()
       val nb = graft.io.FeatherBloom.build(spark, dir, "id")
@@ -1511,9 +1520,29 @@ object ScaleRehearsal {
       val rb = graft.io.FeatherMutations.deleteByKey(
         spark, dir, inBandAbsent, Seq("id"))
       val bloomProbeSec = (System.nanoTime() - t3) / 1e9
-      require(rb.filesTouched == 0,
-        s"bloom must prune an in-range absent-key delete to zero: $rb")
-      println(f"""{"mutation_rows":$n,"parts":$parts,"del_touched":${rd.filesTouched},"del_sec":$delSec%.2f,"merge_touched":${rm.filesTouched},"merge_sec":$mrgSec%.2f,"bloom_files":$nb,"bloom_build_sec":$bloomBuildSec%.2f,"bloom_probe_sec":$bloomProbeSec%.2f}""")
+      // the blooms are advisory (fpp 0.001): the probe must plan exactly
+      // the files whose range covers a probe key AND whose bloom admits
+      // one — zero unless a bloom answers a false positive
+      val conf = spark.sparkContext.hadoopConfiguration
+      val probeKeys = (lo + 1000L) until (lo + 1200L)
+      val admitted = graft.sources.FeatherSnapshots
+        .resolve(fs, new org.apache.hadoop.fs.Path(dir), None).get.files
+        .map { case (rel, len) => (s"$dir/$rel", len) }
+        .count { case (abs, len) =>
+          graft.io.FeatherStats.loadForFiles(conf, Seq((abs, len)))
+            .getOrElse(abs, None).forall { batches =>
+              val rs = batches.flatMap(_.get("id")).collect {
+                case graft.io.FeatherStats.ColStat.Longs(a, b) => (a, b) }
+              rs.isEmpty || probeKeys.exists(k =>
+                rs.map(_._1).min <= k && k <= rs.map(_._2).max)
+            } &&
+            graft.io.FeatherBloom.load(conf, abs, len, "id")
+              .forall(bf => probeKeys.exists(bf.mightContainLong(_)))
+        }
+      require(rb.filesPlanned == admitted && rb.filesTouched == 0,
+        s"bloom must prune an in-range absent-key delete to the files " +
+          s"whose bloom admits a key ($admitted): $rb")
+      println(f"""{"mutation_rows":$n,"parts":$parts,"del_planned":${rd.filesPlanned},"del_touched":${rd.filesTouched},"del_sec":$delSec%.2f,"merge_planned":${rm.filesPlanned},"merge_touched":${rm.filesTouched},"merge_sec":$mrgSec%.2f,"bloom_files":$nb,"bloom_build_sec":$bloomBuildSec%.2f,"no_bloom_planned":${rNoBloom.filesPlanned},"bloom_planned":${rb.filesPlanned},"bloom_false_positive_files":$admitted,"bloom_probe_sec":$bloomProbeSec%.2f}""")
       (delSec, mrgSec)
     }
     println(f"""{"mutation_tier":"feather","table_ratio":10,"del_wall_ratio":${results(1)._1 / results(0)._1}%.2f,"merge_wall_ratio":${results(1)._2 / results(0)._2}%.2f}""")

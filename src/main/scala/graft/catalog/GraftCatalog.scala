@@ -549,13 +549,20 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   * face and layout ([[graft.sources.FaceRowLevel]]). Spark's
   * TableOutputResolver aligns inserts (no ACCEPT_ANY_SCHEMA: that
   * capability would also set `skipSchemaResolution` on UPDATE/MERGE and
-  * strand the statement at physical planning). */
+  * strand the statement at physical planning).
+  *
+  * `keyed` is set only by the engine's keyed merges
+  * ([[withKeyedMerge]], on the handle their one statement runs on;
+  * [[graft.sources.KeyedMerge]]): every scan of that handle — the
+  * row-level scan and the batch scans Spark's MERGE rewrite reads the
+  * target through — drops the files the key probe cleared. The catalog
+  * never sets it, so SQL statements plan as before. */
 private[graft] class GraftTable(
     val path: String, ident: String,
     dataSchema: StructType, partCols: Seq[String],
     partSchema: StructType, face: String,
     headVersion: Long, pinnedVersion: Option[Long],
-    dvFace: Boolean)
+    dvFace: Boolean, keyed: Option[graft.sources.KeyedMerge] = None)
     extends Table with TruncatableTable
     with org.apache.spark.sql.connector.catalog.SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
@@ -573,6 +580,14 @@ private[graft] class GraftTable(
     graft.sources.GraftMetaColumns.columns
 
   override def name(): String = ident
+
+  /** This handle for one keyed merge statement (see the class doc). */
+  def withKeyedMerge(k: graft.sources.KeyedMerge): GraftTable =
+    new GraftTable(path, ident, dataSchema, partCols, partSchema, face,
+      headVersion, pinnedVersion, dvFace, Some(k))
+
+  private def keyCleared: Set[String] =
+    keyed.fold(Set.empty[String])(_.cleared)
 
   override def schema(): StructType =
     StructType(dataSchema.fields ++ partSchema.fields)
@@ -641,18 +656,21 @@ private[graft] class GraftTable(
       options: CaseInsensitiveStringMap)
       : org.apache.spark.sql.connector.read.ScanBuilder =
     delegate match {
-      case Some(t: org.apache.spark.sql.connector.catalog.SupportsRead) =>
+      case Some(t: org.apache.spark.sql.connector.catalog.SupportsRead)
+          if keyCleared.isEmpty =>
         t.newScanBuilder(options)
       case _ =>
         // faces without a DSv2 connector (parquet) read through the
         // generic ConnectorFace scan: whole-file partitions, partition/
         // stats/bloom file skipping, DV-aware, `_file`/`_pos` served,
-        // clean snapshots on Spark's vectorized parquet reader.
+        // clean snapshots on Spark's vectorized parquet reader. A handle
+        // carrying a key probe's verdict reads here on every face, so
+        // the verdict drops its files from the batch scans too.
         // pinnedVersion only: an unpinned handle resolves the HEAD at
         // scan time, exactly like the connector delegates
         new graft.sources.FaceScanBuilder(None,
           graft.io.ConnectorFace.byLabel(face), path, schema(), partSchema,
-          pinnedVersion)
+          pinnedVersion, keyCleared)
     }
 
   /** Batch inserts and streaming sinks delegate like the read path —
@@ -816,7 +834,7 @@ private[graft] class GraftTable(
           : org.apache.spark.sql.connector.write.RowLevelOperation =
         graft.sources.FaceRowLevel.operation(info.command(), path,
           graft.io.ConnectorFace.byLabel(face), dataSchema, partCols,
-          partSchema, delta = dvFace && !ownsRowId)
+          partSchema, delta = dvFace && !ownsRowId, keyed)
     }
   }
 }

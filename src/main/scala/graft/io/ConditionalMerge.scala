@@ -7,8 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, InsertAction, InsertStarAction, MergeAction, MergeIntoTable, SubqueryAlias, UpdateAction, UpdateStarAction}
 import org.apache.spark.sql.connector.catalog.TableCatalog
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.StructType
 
-import graft.sources.{FeatherPartitions, FeatherSnapshots}
+import graft.catalog.GraftTable
+import graft.sources.{FeatherPartitions, FeatherSnapshots, KeyedMerge, RowLevelCommitMetrics}
 
 /** Conditional MERGE — the Delta/industry MERGE surface CDC consumers
   * actually write (reference analog: the reference's in-memory upsert is
@@ -41,28 +43,34 @@ import graft.sources.{FeatherPartitions, FeatherSnapshots}
   *  - two source rows matching one target row fail the statement
   *    (MERGE_CARDINALITY_VIOLATION);
   *  - one atomic manifest commit under the conflict matrix; a merge that
-  *    changes nothing publishes no version; one wall-clock instant per
-  *    statement.
+  *    changes nothing publishes no version, and one whose clauses all
+  *    delete commits as a delete (`rowlevel_delete`); one wall-clock
+  *    instant per statement.
   *
-  * Up to [[ConditionalMerge.MaxPrunedKeys]] distinct source keys join the
-  * ON condition as `target.key IN (…)`, which Spark pushes into the
-  * target scan: its stats and Bloom sidecars drop the files no key can
-  * be in, so both strategies plan — and a concurrent commit is checked
-  * against — only those. The copy-on-write rewrite then keeps only the
-  * files that hold a match (the runtime `_file` filter); a
-  * `whenNotMatchedBySource` clause rewrites every file. Merge-on-read
-  * masks the rows a clause changes or deletes
-  * and lands the clause output as new parts; it refuses
-  * `whenNotMatchedBySource`, a full-table clause. On a hive-partitioned
-  * table the partition columns are ordinary columns of both sides: a SET
-  * on one moves the row, and every written row lands in the leaf its
-  * values name.
+  * The engine's key probe ([[FeatherMutations.probeTouched]]: stats
+  * ranges and Bloom sidecars in one distributed pass, the keys never on
+  * the driver) names the files of the head snapshot that hold no source
+  * key; they ride the statement's table handle
+  * ([[graft.catalog.GraftTable.withKeyedMerge]]) and its scans drop
+  * them, so both strategies plan — and a concurrent commit is checked
+  * against — only the candidates, at any key count. A file committed
+  * after the probe is planned. The copy-on-write rewrite then keeps only
+  * the files that hold a match (the runtime `_file` filter); a
+  * `whenNotMatchedBySource` clause rewrites every file, and a merge that
+  * evolves the schema plans every file (Spark reloads the table after
+  * its ADD COLUMNS, a handle without the verdict). Merge-on-read masks
+  * the rows a clause changes or deletes and lands the clause output as
+  * new parts; it refuses `whenNotMatchedBySource`, a full-table clause.
+  * On a hive-partitioned table the partition columns are ordinary
+  * columns of both sides: a SET on one moves the row, and every written
+  * row lands in the leaf its values name.
   *
   * The entry points check only what Spark's analysis leaves open: keys
   * (named, on both sides, never a partition column), a partitioned insert
-  * naming every partition column, deterministic source, conditions and
-  * SETs (the copy-on-write plan reads the source twice), and the
-  * lossless-or-exact SET rule ([[PredicateMutations.requireSets]]),
+  * naming every partition column, a hive layout for a merge that writes
+  * rows (a delete-only merge reads any layout), deterministic source,
+  * conditions and SETs (the copy-on-write plan reads the source twice),
+  * and the lossless-or-exact SET rule ([[PredicateMutations.requireSets]]),
   * applied to the implicit SETs of updateAll/insertAll too. */
 final case class ConditionalMerge(
     spark: SparkSession, path: String, source: DataFrame,
@@ -108,12 +116,20 @@ final case class ConditionalMerge(
     copy(bySource = bySource :+ (cond -> Update(set)))
 
   /** Copy-on-write execution. */
-  def execute(): FeatherMutations.Result = run("graft")
+  def execute(): FeatherMutations.Result =
+    FeatherMutations.Result.of(report("graft"))
 
   /** Merge-on-read execution (DV masks + new parts). */
-  def executeDV(): FeatherMutations.Result = run("graft_dv")
+  def executeDV(): FeatherMutations.Result =
+    FeatherMutations.Result.of(report("graft_dv"))
 
-  private def run(catalog: String): FeatherMutations.Result = {
+  /** Runs the merge on `catalog` (`graft` or `graft_dv`) and returns what
+    * its commit published. `check` sees the table's schema and partition
+    * columns before anything runs — the keyed entry points' own source
+    * contract ([[FeatherMutations]]). */
+  private[io] def report(catalog: String,
+                         check: (StructType, Seq[String]) => Unit =
+                           (_, _) => ()): RowLevelCommitMetrics.Report = {
     require(matched.nonEmpty || notMatched.nonEmpty || bySource.nonEmpty,
       "merge: no clauses — add whenMatched*/whenNotMatched* first")
     require(catalog == "graft" || bySource.isEmpty,
@@ -121,22 +137,27 @@ final case class ConditionalMerge(
         "merge-on-read mask of the whole table buys nothing; use " +
         "execute() (copy-on-write) for this clause")
     require(keyCols.nonEmpty, "merge: keyCols must be non-empty")
-    val rel = PredicateMutations.pathRelation(spark, path, catalog)
-    val target = Bridge.ofRows(spark, rel)
+    val rel0 = PredicateMutations.pathRelation(spark, path, catalog)
+    val target = Bridge.ofRows(spark, rel0)
     val table = target.schema
     val caseSensitive =
       spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
     def in(names: Iterable[String])(c: String): Boolean =
       names.exists(n => if (caseSensitive) n == c else n.equalsIgnoreCase(c))
-    val partCols = rel.table.partitioning().toSeq
+    val partCols = rel0.table.partitioning().toSeq
       .flatMap(_.references().map(_.fieldNames().head))
-    // a nested NON-hive layout has no partition values to route rows by
-    val root = new Path(rel.table.properties().get(TableCatalog.PROP_LOCATION))
-    val chains = FeatherSnapshots.resolve(
-        root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, None)
-      .toSeq.flatMap(_.files.map(f => FeatherMutations.relDirOf(f._1)))
-      .distinct.filter(_.nonEmpty)
-    require(chains.isEmpty || FeatherPartitions.hiveLayout(chains)._1,
+    check(table, partCols)
+    // a nested NON-hive layout has no partition values to route rows by;
+    // a delete-only merge writes no row and reads any layout
+    val root = new Path(rel0.table.properties().get(TableCatalog.PROP_LOCATION))
+    val snap = FeatherSnapshots.resolve(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, None)
+    val chains = snap.toSeq.flatMap(_.files.map(f =>
+      FeatherMutations.relDirOf(f._1))).distinct.filter(_.nonEmpty)
+    val writesRows = notMatched.nonEmpty ||
+      (matched ++ bySource).exists(_._2 != Delete)
+    require(!writesRows || chains.isEmpty ||
+        FeatherPartitions.hiveLayout(chains)._1,
       s"merge on $path: table has non-hive subdirectories " +
         s"(${chains.mkString(", ")}) — clause output routes rows by " +
         "partition values and needs a hive key=value layout")
@@ -194,14 +215,19 @@ final case class ConditionalMerge(
           "matched by the source has no source side (the reference would " +
           "read NULL on every row); use target columns only")
     }
+    // under schema evolution a SET may name a source column the table
+    // lacks: Spark adds the column the clause writes
+    def fresh(c: String) = evolveSchema && !in(table.fieldNames)(c) &&
+      in(source.columns)(c)
     (matched ++ bySource).foreach {
       case (_, Update(set)) =>
-        PredicateMutations.requireSets("merge", table, shape, set.toSeq)
+        PredicateMutations.requireSets("merge", table, shape,
+          set.toSeq.filterNot(e => fresh(e._1)))
       case _ => ()
     }
     notMatched.foreach { case (_, values) =>
       PredicateMutations.requireSets("merge (insert VALUES)", table, shape,
-        values.toSeq)
+        values.toSeq.filterNot(e => fresh(e._1)))
     }
     // updateAll / insertAll SET every table column from the source's
     if (matched.exists(_._2 == UpdateAll) || notMatched.exists(_._2.isEmpty)) {
@@ -213,24 +239,38 @@ final case class ConditionalMerge(
           c -> Bridge.column(UnresolvedAttribute(Seq("source", c)))))
     }
 
+    // the engine's key probe over the head snapshot: the files whose
+    // stats ranges and Bloom sidecars prove they hold no source key ride
+    // the statement's table handle, and its scans drop them — so the
+    // planned files, which are also the read set a concurrent commit is
+    // checked against, are the candidates at any key count. The keys
+    // never reach the driver. Skipped for a bySource clause (it reads
+    // every row) and for a merge that evolves the schema (Spark reloads
+    // the table after its ADD COLUMNS, a fresh handle without the
+    // verdict). A merge that only deletes commits as a delete.
+    val evolving = evolveSchema && (
+      (matched.exists(_._2 == UpdateAll) || notMatched.exists(_._2.isEmpty)) &&
+        source.columns.exists(c => !in(table.fieldNames)(c)) ||
+      (matched.collect { case (_, Update(set)) => set.keys }.flatten ++
+        notMatched.flatMap(_._2.keys)).exists(fresh))
+    val cleared: Set[String] = snap match {
+      case Some(s) if bySource.isEmpty && !evolving =>
+        val tableKeys =
+          keyCols.map(FeatherMutations.canonicalName(table, caseSensitive))
+        val keys = source.select(keyCols.zip(tableKeys).map { case (k, t) =>
+          source(k).as(t) }: _*)
+        val absFiles = s.files.map { case (r, len) =>
+          (new Path(root, r).toString, len) }
+        val touched = FeatherMutations.probeTouched(spark, absFiles, table,
+          keys, tableKeys)
+        s.files.indices.filterNot(touched).map(s.files(_)._1).toSet
+      case _ => Set.empty
+    }
+    val rel =
+      if (cleared.isEmpty && writesRows) rel0
+      else rel0.copy(table = rel0.table.asInstanceOf[GraftTable]
+        .withKeyedMerge(KeyedMerge(cleared, deleteOnly = !writesRows)))
     def expr(c: Column) = Bridge.convertedExpression(spark, c)
-    // the source's keys as one more ON conjunct on the target: exact (a
-    // target row outside them matches no source row either way), and
-    // Spark pushes it into the target scan, whose stats and Bloom sidecars
-    // prune the files no key can be in — the planned files, which are
-    // also the read set a concurrent commit is checked against. Batches
-    // past MaxPrunedKeys distinct keys read every planned file; so does a
-    // bySource clause, which reads every row anyway.
-    val keyPrune: Option[Expression] =
-      if (bySource.nonEmpty) None
-      else {
-        val keys = source.select(keyCols.map(source(_)): _*).na.drop()
-          .distinct().limit(MaxPrunedKeys + 1).collect()
-        if (keys.isEmpty || keys.length > MaxPrunedKeys) None
-        else Some(keyCols.indices.map(i => expr(Bridge.column(
-          UnresolvedAttribute(Seq("target", keyCols(i))))
-          .isin(keys.map(_.get(i)).distinct.toSeq: _*))).reduce(And(_, _)))
-      }
     def assign(set: Map[String, Column]) = set.toSeq.map { case (c, e) =>
       Assignment(UnresolvedAttribute.quoted(c), expr(e)) }
     def action(cond: Option[Column], a: MatchedAction): MergeAction = a match {
@@ -239,8 +279,7 @@ final case class ConditionalMerge(
       case Delete => DeleteAction(cond.map(expr))
     }
     val plan = MergeIntoTable(SubqueryAlias("target", rel),
-      SubqueryAlias("source", source.queryExecution.analyzed),
-      keyPrune.fold(on)(And(on, _)),
+      SubqueryAlias("source", source.queryExecution.analyzed), on,
       matched.map { case (c, a) => action(c, a) },
       notMatched.map {
         case (c, values) if values.isEmpty => InsertStarAction(c.map(expr))
@@ -248,16 +287,11 @@ final case class ConditionalMerge(
       },
       bySource.map { case (c, a) => action(c, a) },
       evolveSchema)
-    val r = PredicateMutations.commitReport(spark, plan, s"merge on $path")
-    FeatherMutations.Result(r.version, r.filesRemoved + r.dvsBound,
-      r.filesKept, r.partsAdded)
+    PredicateMutations.commitReport(spark, plan, s"merge on $path")
   }
 }
 
 object ConditionalMerge {
-  /** Distinct source keys the merge collects to prune target files. */
-  val MaxPrunedKeys = 10000
-
   sealed trait MatchedAction extends Serializable
   final case class Update(set: Map[String, Column]) extends MatchedAction
   case object UpdateAll extends MatchedAction

@@ -4,12 +4,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Deletion-vector sidecars: the MERGE-ON-READ half of row-level deletes
   * (the Delta deletion-vector / Iceberg position-delete shape). A
-  * copy-on-write delete ([[FeatherMutations.deleteByKey]]) rewrites every
-  * candidate file — a scattered 1000-key takedown against a clustered
-  * 100-TB table rewrites ~1000 × 128 MiB parts to drop ~1000 rows. A DV
-  * delete instead writes one tiny sidecar of deleted ROW POSITIONS per
-  * touched file and publishes the (file → DV) binding in the snapshot
-  * manifest: bytes written scale with DELETED ROWS, not touched files.
+  * copy-on-write delete ([[FeatherMutations.deleteByKey]], a `graft`
+  * MERGE) rewrites every file holding a match — a scattered 1000-key
+  * takedown against a clustered 100-TB table rewrites ~1000 × 128 MiB
+  * parts to drop ~1000 rows. A DV delete (the `graft_dv` catalog's
+  * delta write, [[graft.sources.FaceRowLevel]]) instead writes one tiny
+  * sidecar of deleted ROW POSITIONS per touched file and publishes the
+  * (file → DV) binding in the snapshot manifest: bytes written scale
+  * with DELETED ROWS, not touched files.
   * Readers apply the DV as a position filter inside the scan; physical
   * erasure happens when compaction/clustering folds the DV into a
   * rewrite and `expire()` reclaims the old part (the same compliance

@@ -49,10 +49,10 @@ import graft.sources.{FeatherPartitions, FeatherSnapshots}
   * the range's end version (see [[readChanges]]) so consumers see a
   * stable schema per head; the streaming source aligns to its own
   * start-pinned schema instead and skips the end-version sweep
-  * entirely. A pipeline that can
-  * shape its writes should still prefer [[FeatherMutations.applyCdc]]
-  * input frames as the change source (they ARE the change set, no diff
-  * needed); the CDF read is for consumers who only see the table.
+  * entirely. A pipeline that can shape its writes should still use the
+  * change frames it hands [[FeatherMutations.applyCdc]] as its change
+  * source (they ARE the change set, no diff needed); the CDF read is for
+  * consumers who only see the table.
   * Map-typed data columns are not groupable and are rejected loudly.
   *
   * Face-agnostic via [[ConnectorFace]] (feather and avro tables both

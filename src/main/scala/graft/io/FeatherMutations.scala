@@ -2,467 +2,236 @@ package graft.io
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 import graft.sources.FeatherSnapshots
 
-/** Row-level DELETE and MERGE (upsert) on snapshotted feather AND avro
-  * tables (face auto-detected from the manifest's part suffixes), as
-  * copy-on-write MANIFEST operations — the mutation tier a 100-TB corpus
-  * table needs (takedown/right-to-erasure deletes by document key;
-  * incremental corrections and late-arriving re-crawls as upserts) that
-  * the reference gets trivially from in-memory ownership
+/** Keyed DELETE, MERGE (upsert) and CDC apply on snapshotted tables of
+  * every face — the mutation tier a 100-TB corpus table needs
+  * (takedown/right-to-erasure deletes by document key; incremental
+  * corrections and late-arriving re-crawls as upserts; change batches
+  * from a CDC feed) that the reference gets from in-memory ownership
   * (`DataFrame.drop` / boolean-mask assignment mutate the frame in
-  * place, python/cudf/cudf/core/dataframe.py `drop`/`__setitem__`) but a
+  * place, python/cudf/cudf/core/dataframe.py `drop`/`__setitem__`;
+  * cpp/include/cudf/copying.hpp `boolean_mask_scatter`) but a
   * distributed immutable table does not.
   *
-  * Shape, from the same playbook as [[Compaction.runSnapshot]]:
+  * Each entry point is one [[ConditionalMerge]] — Spark's MERGE over
+  * ``graft.`<path>` `` (copy-on-write) or ``graft_dv.`<path>` ``
+  * (merge-on-read), run on [[graft.sources.FaceRowLevel]]:
   *
-  *  - **Copy-on-write, file-pruned.** Only files whose skipping-index key
-  *    range could contain a mutation key are rewritten ("touched");
-  *    everything else carries into the new manifest untouched. On a
-  *    range-clustered layout (repartitionByRange ingest, or hive
-  *    partitions) a narrow delete touches a sliver of the table. A file
-  *    with no usable stats is touched unconditionally — pruning is an
-  *    optimization, never a correctness input.
-  *  - **Candidate probe is distributed.** Mutation keys are NEVER
-  *    collected to the driver: per-file [min,max] ranges (schema-sized,
-  *    from the manifest + stats sidecars) become a sorted-boundary
-  *    structure a codegen binary search probes INSIDE the key scan —
-  *    disjoint ranges (clustered layouts) search the file boundaries
-  *    directly; overlapping ranges stab an elementary-segment index
-  *    (O(log files + overlap depth) per key). Only matching file ids
-  *    come back to the driver. No broadcast join in either shape; a
-  *    pathological overlap that would blow the segment index's memory
-  *    cap falls back to a broadcast non-equi probe.
-  *  - **One atomic commit.** New parts land via tmp+rename under a
-  *    version-derived name prefix, then ONE snapshot manifest publishes
-  *    the swap (touched files out, new parts in). Readers of any retained
-  *    version are untouched — time travel across a delete shows the
-  *    pre-delete rows until `expire()` reclaims them, which is exactly
-  *    the audit trail a takedown pipeline wants (and `expire` is the
-  *    compliance point that makes erasure physical).
-  *  - **Conflict matrix** ([[FeatherSnapshots.commitMutation]], shared
-  *    with cluster/compact): concurrent blind APPENDS commute — the
-  *    appended files carry through the mutation's manifest untouched
-  *    (write-serializable: the mutation serializes before the append, so
-  *    appended rows are not subject to its predicate). A concurrent
-  *    mutation/overwrite/restore that touched anything this run read
-  *    aborts loudly rather than publish a manifest computed against dead
-  *    state. Part prefixes are RUN-unique, so racing mutators can never
-  *    pre-clean each other's uncommitted parts; a crashed run's orphans
-  *    are reclaimed by [[FeatherSnapshots.vacuumOrphans]] (age-gated,
-  *    in-flight-guarded).
+  *  - [[deleteByKey]] / [[deleteByKeyDV]]: `WHEN MATCHED THEN DELETE`
+  *    over the distinct key tuples;
+  *  - [[merge]] / [[mergeDV]]: `WHEN MATCHED THEN UPDATE SET *` +
+  *    `WHEN NOT MATCHED THEN INSERT *`;
+  *  - [[applyCdc]] / [[applyCdcDV]]: delete where the tombstone is set,
+  *    update otherwise, insert only live rows.
   *
-  * Semantics:
-  *  - `deleteByKey(keys, keyCols)`: drop every table row whose `keyCols`
-  *    tuple appears in `keys` (left-anti join; null keys never match,
-  *    per SQL equality). Works on hive-partitioned tables (each leaf
-  *    rewrites independently; rows never change partition).
-  *  - `merge(source, keyCols)`: upsert — table rows matched by a source
-  *    key tuple are REPLACED by the source row, unmatched source rows
-  *    are inserted. Source schema must carry exactly the table's data
-  *    columns — plus, on a hive-partitioned table, its partition
-  *    columns: inserts ROUTE to the leaf their partition values name,
-  *    and a matched key whose source row names different partition
-  *    values MOVES partitions (delete-here + insert-there in the same
-  *    commit).
-  *    Re-running the same merge is idempotent on table CONTENT (one more
-  *    version, same rows) — which makes it safe as a foreachBatch sink
-  *    under Structured Streaming's replayed-batch semantics.
-  */
+  * Rows pair by `keyCols` equality (null keys never match). The merge's
+  * key probe ([[probeTouched]]: stats ranges and Bloom sidecars in one
+  * distributed pass, keys never on the driver) hands the row-level scan
+  * the files that provably hold no key, so a narrow mutation plans — and
+  * a concurrent commit is checked against — only its candidates, at any
+  * key count; the copy-on-write rewrite then keeps only the files that
+  * hold a match. One atomic manifest commit under the conflict matrix
+  * ([[FeatherSnapshots.commitMutation]]: concurrent blind appends
+  * commute, a concurrent rewrite of a read file aborts loudly); time
+  * travel keeps the pre-mutation rows until `expire()`, the compliance
+  * point that makes an erasure physical.
+  *
+  * Semantics are Spark's MERGE:
+  *  - a mutation that changes nothing (absent keys, a replayed tombstone
+  *    batch) publishes no version — the foreachBatch replay contract; a
+  *    re-run upsert that matches rows publishes one more version with
+  *    identical rows;
+  *  - two source rows matching one table row fail the statement
+  *    (MERGE_CARDINALITY_VIOLATION): a change batch must carry one change
+  *    per key;
+  *  - on a hive-partitioned table the partition columns are ordinary
+  *    columns: inserts land in the leaf their values name, and a matched
+  *    key whose source row names other values moves;
+  *  - a delete commits as `rowlevel_delete`, an upsert or change batch as
+  *    `rowlevel_merge` (`rowlevel_delta_*` merge-on-read);
+  *  - rows land with the face's default codec.
+  *
+  * The entry points keep two input contracts of their own: an upsert or
+  * change source carries exactly the table's columns (partition columns
+  * included; the tombstone column aside), and the key columns are named
+  * on both sides. `Result.filesTouched` counts the files the commit
+  * rewrote or masked — files that held a match — and
+  * `Result.filesPlanned` the files the statement planned.
+  *
+  * The object also holds the table helpers the row-level writes,
+  * `replaceWhere` and the inserts share: leaf routing and stamps, DV
+  * binding, table resolution and the key probe. */
 object FeatherMutations {
 
-  /** `version` = the committed snapshot; `filesTouched`/`filesKept` split
-    * the parent manifest; `partsWritten` = new parts in the commit. */
+  /** `version` = the committed snapshot (the planned one when nothing
+    * was published); `filesTouched` = files rewritten, dropped or masked;
+    * `filesKept` = the rest of the parent manifest; `partsWritten` = new
+    * parts in the commit (deletion-vector sidecars for the merge-on-read
+    * deletes); `filesPlanned` = files the statement's row-level scan
+    * planned, its read set (0 for statements without one). */
   final case class Result(version: Long, filesTouched: Int, filesKept: Int,
-                          partsWritten: Int)
+                          partsWritten: Int, filesPlanned: Int = 0)
 
-  def deleteByKey(spark: SparkSession, path: String, keys: DataFrame,
-                  keyCols: Seq[String], codec: String = "lz4"): Result =
-    mutate(spark, path, "delete", keys, keyCols, appendSource = None, codec)
-
-  /** MERGE-ON-READ delete: same semantics as [[deleteByKey]] (drop every
-    * row whose `keyCols` tuple appears in `keys`; null keys never match)
-    * but instead of copy-on-writing every candidate file it writes one
-    * tiny [[DeletionVectors]] sidecar of matched ROW POSITIONS per
-    * touched file and binds it in the manifest — bytes written scale
-    * with DELETED ROWS, not with touched-file sizes. The read path
-    * filters the positions inside the scan; compaction/clustering folds
-    * the DV into a physical rewrite; `expire()` then makes the erasure
-    * physical (the same compliance path as the copy-on-write delete).
-    * A second DV delete on an already-bound file unions into a fresh
-    * sidecar (the old one expires with its version). Prefer this for
-    * scattered takedowns; prefer [[deleteByKey]] when a delete drops a
-    * large fraction of the touched files' rows (the rewrite then pays
-    * for itself in read-side work).
-    *
-    * Scale: the probe is the same distributed stats/bloom candidate scan
-    * as the COW path; the position scan reads ONLY key columns of
-    * candidate files; matched (file, position) pairs come back to the
-    * driver — deleted-row-count-sized, the quantity a DV delete is for
-    * (a takedown list, not a retention sweep). `partsWritten` reports DV
-    * sidecars written. */
-  def deleteByKeyDV(spark: SparkSession, path: String, keys: DataFrame,
-                    keyCols: Seq[String]): Result = {
-    val op = "delete"
-    require(keyCols.nonEmpty, s"$op: keyCols must be non-empty")
-    keyCols.foreach(k => require(keys.columns.contains(k),
-      s"$op: key column '$k' not in keys frame (${keys.columns.mkString(", ")})"))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    require(FeatherSnapshots.enabled(fs, root),
-      s"$op on $path, which has no ${FeatherSnapshots.Dir} directory — " +
-        "row-level mutation is a manifest operation; write the table with " +
-        "option(\"snapshots\", \"true\") first")
-    val snap = FeatherSnapshots.resolve(fs, root, None).getOrElse(
-      sys.error(s"$op on $path: snapshot directory exists but holds no versions"))
-    val face = ConnectorFace.detect(snap.files, op, path)
-    val absFiles = snap.files.map { case (rel, len) =>
-      (new Path(root, rel).toString, len) }
-    val tableSchema = face.mergedSchema(spark, absFiles)
-    keyCols.foreach(k => require(tableSchema.fieldNames.contains(k),
-      s"$op: key column '$k' not in table schema " +
-        s"(${tableSchema.fieldNames.mkString(", ")}) — partition columns " +
-        "live in the directory chain and cannot key a DV delete"))
-    val (touchedSet, probeStats) =
-      probeTouched(spark, op, absFiles, tableSchema, keys, keyCols)
-    val touchedIdx = touchedSet.toSeq.sorted
-    val targetV = snap.version + 1
-    val newByFile = dvPositionScan(spark, face, root, snap, absFiles,
-      touchedIdx, keys, keyCols, tableSchema)
-    def fileRowCount(fid: Int): Option[Long] =
-      probeStats.getOrElse(absFiles(fid)._1, None).flatMap(exactRows)
-    val (newBindings, droppedRel) =
-      bindDvs(fs, conf, root, snap, targetV, newByFile, fileRowCount)
-
-    // an all-rows delete must still leave a readable table: when every
-    // file drops, stamp one schema-only part per leaf (hive layouts keep
-    // their key=value paths), same as the COW path
-    val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    if (droppedRel.nonEmpty &&
-        snap.files.forall { case (rel, _) => droppedRel(rel) })
-      added ++= stampLeaves(face, fs, root, snap.files.map(_._1),
-        FeatherSnapshots.runPrefix(targetV), tableSchema)
-
-    // a delete that matched NOTHING (already-deleted keys, absent keys)
-    // publishes no commit: an empty op="delete" version would abort any
-    // live snapshot stream for a change that altered zero rows, and a
-    // retried takedown must be a true no-op
-    if (newBindings.isEmpty && droppedRel.isEmpty && added.isEmpty)
-      return Result(snap.version, 0, snap.files.size, 0)
-    // conflict scope = the key-probed candidates (commitMutation's
-    // readRel contract): a concurrent mutation disjoint from them
-    // commits beside this takedown
-    val committed = FeatherSnapshots.commitMutation(fs, root, op, snap,
-      droppedRel, added.toSeq, setDvs = newBindings,
-      readRel = Some(touchedIdx.map(i => snap.files(i)._1).toSet))
-    Result(committed, newBindings.size + droppedRel.size,
-      snap.files.size - newBindings.size - droppedRel.size,
-      newBindings.size)
+  object Result {
+    /** What a row-level commit reported. `dvSidecars`: `partsWritten`
+      * counts the deletion-vector sidecars bound (the merge-on-read
+      * deletes). */
+    private[io] def of(r: graft.sources.RowLevelCommitMetrics.Report,
+                       dvSidecars: Boolean = false): Result =
+      Result(r.version, r.filesRemoved + r.dvsBound, r.filesKept,
+        if (dvSidecars) r.dvsBound else r.partsAdded, r.filesPlanned)
   }
 
-  /** `evolveSchema = true` lets the source carry NEW columns: they join
-    * the table schema (nullable), survivors and older generations read
-    * them as null — the Delta mergeSchema-on-write contract. The table
-    * becomes schema-heterogeneous, which is exactly what the mergeSchema
-    * read option exists for. */
-  def merge(spark: SparkSession, path: String, source: DataFrame,
-            keyCols: Seq[String], codec: String = "lz4",
-            evolveSchema: Boolean = false): Result =
-    mutate(spark, path, "merge", source, keyCols,
-      appendSource = Some(source), codec, evolveSchema)
+  /** Drop every table row whose `keyCols` tuple appears in `keys`,
+    * copy-on-write. Any layout: a delete writes no row, so nested
+    * non-hive directories are fine. */
+  def deleteByKey(spark: SparkSession, path: String, keys: DataFrame,
+                  keyCols: Seq[String]): Result =
+    Result.of(keyedDelete(spark, path, keys, keyCols).report("graft"))
 
-  /** CDC apply: one change frame carrying upserts AND deletes, flagged by
-    * a boolean tombstone column (null = live). Matched tombstoned keys are
-    * deleted, matched live keys replaced, unmatched live rows inserted
-    * (an unmatched tombstone is a no-op) — all in ONE manifest commit, so
-    * a change batch is atomic. Idempotent on content like [[merge]],
-    * which is exactly what a `foreachBatch` streaming sink needs: Spark
-    * replays a batch after a crash, and the replay commits one more
-    * version with identical rows. The batch must be pre-collapsed to one
-    * change per key (standard CDC compaction: keep the max-sequence row
-    * per key) — with several changes to one key in a frame there is no
-    * order to apply them in. */
+  /** Merge-on-read [[deleteByKey]]: matched rows are masked by
+    * [[DeletionVectors]] sidecars bound in the manifest — bytes written
+    * scale with DELETED ROWS, not with touched-file sizes (a file the
+    * masks cover entirely drops from the manifest). Compaction folds the
+    * masks physically; `expire()` then makes the erasure physical. Prefer
+    * this for scattered takedowns and [[deleteByKey]] when a delete drops
+    * a large fraction of the touched files' rows. `partsWritten` reports
+    * the sidecars bound, exactly as `PredicateMutations.deleteWhereDV`
+    * does. */
+  def deleteByKeyDV(spark: SparkSession, path: String, keys: DataFrame,
+                    keyCols: Seq[String]): Result =
+    Result.of(keyedDelete(spark, path, keys, keyCols).report("graft_dv"),
+      dvSidecars = true)
+
+  /** Upsert, copy-on-write: table rows matched by a source key tuple are
+    * replaced by the source row, unmatched source rows are inserted.
+    * `evolveSchema = true` lets the source carry NEW columns, which join
+    * the table schema as nullable (survivors and older generations read
+    * them as null): an ADD COLUMNS commit of its own before the rows, so
+    * a merge that then fails keeps the new columns; such a merge plans
+    * every file (the probe's verdict rides a table handle Spark reloads
+    * after the ADD COLUMNS). */
+  def merge(spark: SparkSession, path: String, source: DataFrame,
+            keyCols: Seq[String], evolveSchema: Boolean = false): Result =
+    Result.of(upsert(spark, path, source, keyCols, evolveSchema)
+      .report("graft", exactColumns("merge", source, evolveSchema)))
+
+  /** Merge-on-read [[merge]]: matched rows are DV-masked and the
+    * replacements land as new parts beside the inserts — bytes written
+    * scale with CHANGED ROWS, not with touched-file sizes. Prefer
+    * [[merge]] when the source replaces a large fraction of the touched
+    * files' rows (a masked file still decodes its masked rows' pages).
+    * Same contracts as [[merge]], `evolveSchema` included. */
+  def mergeDV(spark: SparkSession, path: String, source: DataFrame,
+              keyCols: Seq[String], evolveSchema: Boolean = false): Result =
+    Result.of(upsert(spark, path, source, keyCols, evolveSchema)
+      .report("graft_dv", exactColumns("merge", source, evolveSchema)))
+
+  /** CDC apply, copy-on-write: one change frame carrying upserts AND
+    * deletes, flagged by a boolean tombstone column (null = live).
+    * Matched tombstoned keys are deleted, matched live keys replaced,
+    * unmatched live rows inserted (an unmatched tombstone is a no-op) —
+    * one commit, so a change batch is atomic, and a replayed batch leaves
+    * the content as it was, which is what a `foreachBatch` sink needs.
+    * The batch must carry one change per key (standard CDC compaction:
+    * the max-sequence row per key). The tombstone column never becomes a
+    * table column, `evolveSchema` or not. */
   def applyCdc(spark: SparkSession, path: String, changes: DataFrame,
                keyCols: Seq[String], deleteCol: String = "_deleted",
-               codec: String = "lz4",
-               evolveSchema: Boolean = false): Result = {
+               evolveSchema: Boolean = false): Result =
+    Result.of(cdc(spark, path, changes, keyCols, deleteCol, evolveSchema)
+      .report("graft", exactColumns("applyCdc", changes.drop(deleteCol),
+        evolveSchema)))
+
+  /** Merge-on-read [[applyCdc]]: matched keys (tombstoned or live) are
+    * DV-masked, live rows land as new parts — bytes ∝ the change batch. */
+  def applyCdcDV(spark: SparkSession, path: String, changes: DataFrame,
+                 keyCols: Seq[String], deleteCol: String = "_deleted",
+                 evolveSchema: Boolean = false): Result =
+    Result.of(cdc(spark, path, changes, keyCols, deleteCol, evolveSchema)
+      .report("graft_dv", exactColumns("applyCdcDV",
+        changes.drop(deleteCol), evolveSchema)))
+
+  // ---- the merges behind the entry points ---------------------------------
+
+  private def keyedDelete(spark: SparkSession, path: String, keys: DataFrame,
+                          keyCols: Seq[String]): ConditionalMerge =
+    ConditionalMerge(spark, path,
+      keys.select(keyCols.map(keys(_)): _*).distinct(), keyCols)
+      .whenMatchedDelete()
+
+  private def upsert(spark: SparkSession, path: String, source: DataFrame,
+                     keyCols: Seq[String],
+                     evolveSchema: Boolean): ConditionalMerge = {
+    val m = ConditionalMerge(spark, path, source, keyCols)
+      .whenMatchedUpdateAll().whenNotMatchedInsertAll()
+    if (evolveSchema) m.withSchemaEvolution() else m
+  }
+
+  /** Under `evolveSchema` the clauses SET each non-tombstone column by
+    * name: `UPDATE SET *` would evolve the tombstone into the table. */
+  private def cdc(spark: SparkSession, path: String, changes: DataFrame,
+                  keyCols: Seq[String], deleteCol: String,
+                  evolveSchema: Boolean): ConditionalMerge = {
     require(changes.columns.contains(deleteCol),
       s"applyCdc: tombstone column '$deleteCol' not in changes frame " +
         s"(${changes.columns.mkString(", ")})")
-    val live = changes
-      .filter(!coalesce(col(deleteCol), lit(false))).drop(deleteCol)
-    mutate(spark, path, "cdc", changes, keyCols,
-      appendSource = Some(live), codec, evolveSchema)
-  }
-
-  /** MERGE-ON-READ upsert: the same semantics as [[merge]] (matched table
-    * rows are REPLACED by the source row, unmatched source rows insert)
-    * but instead of copy-on-writing every candidate file it DV-masks the
-    * matched old rows ([[DeletionVectors]] sidecars, the same position
-    * scan as [[deleteByKeyDV]]) and lands the ENTIRE source as ordinary
-    * new parts — all in ONE manifest commit. Bytes written scale with
-    * CHANGED ROWS (source size + position sidecars), not with
-    * touched-file sizes: a 1000-key correction against scattered 128 MiB
-    * parts writes ~one small part + ~8 KB of sidecars instead of
-    * rewriting every candidate. Prefer [[merge]] when the source
-    * replaces a large fraction of the touched files' rows (the rewrite
-    * then pays for itself in read-side work — a DV-masked file still
-    * decodes its masked rows' pages).
-    *
-    * Same contracts as [[merge]]: idempotent on table CONTENT (a re-run
-    * masks the first run's copies and lands identical replacements —
-    * safe as a foreachBatch sink), partitioned tables route inserts by
-    * the source's partition values (a matched key with different values
-    * MOVES partitions: mask-here + insert-there), `evolveSchema` lets
-    * the source carry new columns (and is CHEAPER here: survivors are
-    * never rewritten, old generations read the new column as null via
-    * mergeSchema). The CDF emits the masked rows as deletes and the new
-    * parts as inserts through the same net-diff machinery; compaction
-    * folds the masks physically; expire() completes the erasure. */
-  def mergeDV(spark: SparkSession, path: String, source: DataFrame,
-              keyCols: Seq[String], codec: String = "lz4",
-              evolveSchema: Boolean = false): Result =
-    mutateDv(spark, path, "merge", source, keyCols,
-      insertSource = source, codec, evolveSchema)
-
-  /** The merge-on-read face of [[applyCdc]]: matched keys (tombstoned or
-    * live) DV-mask, live rows land as new parts — one atomic commit,
-    * idempotent on content, bytes ∝ the change batch. */
-  def applyCdcDV(spark: SparkSession, path: String, changes: DataFrame,
-                 keyCols: Seq[String], deleteCol: String = "_deleted",
-                 codec: String = "lz4",
-                 evolveSchema: Boolean = false): Result = {
-    require(changes.columns.contains(deleteCol),
-      s"applyCdcDV: tombstone column '$deleteCol' not in changes frame " +
-        s"(${changes.columns.mkString(", ")})")
-    val live = changes
-      .filter(!coalesce(col(deleteCol), lit(false))).drop(deleteCol)
-    mutateDv(spark, path, "cdc", changes, keyCols, live, codec,
-      evolveSchema)
-  }
-
-  // ---- shared implementation ----------------------------------------------
-
-  /** The merge-on-read mutation core behind [[mergeDV]]/[[applyCdcDV]]:
-    * probe → position scan → DV bind → whole-source part write → one
-    * commit. `keysDf` drives the mask (all change keys, tombstones
-    * included); `insertSource` is what lands as new parts (the live
-    * rows). Validation mirrors [[mutate]]'s merge path exactly — the two
-    * strategies must accept and reject the same inputs. */
-  private def mutateDv(spark: SparkSession, path: String, op: String,
-                       keysDf: DataFrame, keyCols: Seq[String],
-                       insertSource: DataFrame, codec: String,
-                       evolveSchema: Boolean): Result = {
-    require(keyCols.nonEmpty, s"$op: keyCols must be non-empty")
-    keyCols.foreach(k => require(keysDf.columns.contains(k),
-      s"$op: key column '$k' not in keys frame (${keysDf.columns.mkString(", ")})"))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    require(FeatherSnapshots.enabled(fs, root),
-      s"$op on $path, which has no ${FeatherSnapshots.Dir} directory — " +
-        "row-level mutation is a manifest operation; write the table with " +
-        "option(\"snapshots\", \"true\") first")
-    val snap = FeatherSnapshots.resolve(fs, root, None).getOrElse(
-      sys.error(s"$op on $path: snapshot directory exists but holds no versions"))
-    val face = ConnectorFace.detect(snap.files, op, path)
-    val targetV = snap.version + 1
-    val prefix = FeatherSnapshots.runPrefix(targetV)
-
-    val chains: Seq[String] = snap.files.map { case (rel, _) => relDirOf(rel) }
-      .distinct.filter(_.nonEmpty)
-    val (hiveChains, partCols) =
-      graft.sources.FeatherPartitions.hiveLayout(chains)
-    if (chains.nonEmpty && !hiveChains)
-      throw new IllegalArgumentException(
-        s"$op on $path: table has non-hive subdirectories " +
-          s"(${chains.mkString(", ")}) — $op routes inserts by partition " +
-          "values and needs a hive key=value layout")
-    val partitioned = partCols.nonEmpty
-
-    val absFiles = snap.files.map { case (rel, len) =>
-      (new Path(root, rel).toString, len) }
-    val tableSchema0 = face.mergedSchema(spark, absFiles)
-    val tableSchema =
-      if (!evolveSchema) tableSchema0
-      else {
-        val known = tableSchema0.fieldNames.toSet ++ partCols
-        val extra = insertSource.schema.fields.filterNot(f => known(f.name))
-          .map(f => StructField(f.name, f.dataType, nullable = true))
-        StructType(tableSchema0.fields ++ extra)
-      }
-    keyCols.foreach(k => require(tableSchema0.fieldNames.contains(k),
-      if (partCols.contains(k))
-        s"$op: key column '$k' is a partition column — partition values " +
-          "live in the directory chain, not the data files; key on data " +
-          "columns (the source's partition values route the rows)"
-      else s"$op: key column '$k' not in table schema " +
-        s"(${tableSchema.fieldNames.mkString(", ")})"))
-    requireNotEmbedded(op, partCols, tableSchema,
-      spark.conf.get("spark.sql.caseSensitive", "false").toBoolean)
-    val expected = (tableSchema.fieldNames ++ partCols).sorted
-    require(insertSource.columns.sorted.sameElements(expected),
-      s"$op: source columns (${insertSource.columns.sorted.mkString(", ")})" +
-        s" must be exactly the table's data columns" +
-        (if (partitioned) " plus its partition columns" else "") +
-        s" (${expected.mkString(", ")})")
-    tableSchema.fields.foreach { tf =>
-      val st = insertSource.schema(tf.name).dataType
-      require(st == tf.dataType,
-        s"$op: source column '${tf.name}' is ${st.catalogString} but the " +
-          s"table carries ${tf.dataType.catalogString} — cast the source " +
-          "before merging")
-    }
-
-    // ---- mask the matched old rows ------------------------------------------
-    // ONE materialization of the change batch serves the probe, the
-    // position scan, and (for merge, where insertSource eq keysDf) the
-    // part write — a foreachBatch source built from an expensive plan
-    // must not re-execute per pass (the routePartitionedInserts
-    // precedent). Unpersisted in the finally.
-    val (keysC, ownKeys) = ConnectorFace.pinIfUncached(keysDf)
-    val (insertC, ownInsert) =
-      if (insertSource eq keysDf) (keysC, false)
-      else ConnectorFace.pinIfUncached(insertSource)
-    try {
-    val (touchedSet, probeStats) =
-      probeTouched(spark, op, absFiles, tableSchema0, keysC, keyCols)
-    val touchedIdx = touchedSet.toSeq.sorted
-    val newByFile = dvPositionScan(spark, face, root, snap, absFiles,
-      touchedIdx, keysC, keyCols, tableSchema0)
-    def fileRowCount(fid: Int): Option[Long] =
-      probeStats.getOrElse(absFiles(fid)._1, None).flatMap(exactRows)
-    val (newBindings, droppedRel) =
-      bindDvs(fs, conf, root, snap, targetV, newByFile, fileRowCount)
-
-    // ---- land the whole source as new parts ---------------------------------
-    val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    var partsWritten = 0
-    if (!partitioned) {
-      val src = insertC.select(tableSchema.fieldNames.map(col).toSeq: _*)
-      val parts = face.writeParts(
-        src.coalesce(ConnectorFace.capWriteParts(insertC)), root.toString,
-        prefix, codec)
-      if (parts.nonEmpty)
-        FeatherStats.upsertMerged(fs, root,
-          parts.map { case (name, len, js) =>
-            name -> (len, FeatherStats.fromJson(js)) }.toMap)
-      added ++= parts.map { case (name, len, _) => (name, len) }
-      partsWritten += parts.size
-    } else {
-      val routed = routePartitionedInserts(op, face, fs, root, insertC,
-        partCols, tableSchema, prefix, codec)
-      added ++= routed
-      partsWritten += routed.size
-    }
-
-    // a change batch that tombstones EVERY remaining row and inserts
-    // nothing must still leave a readable table — stamp per leaf, same
-    // as the delete paths
-    if (added.isEmpty && droppedRel.nonEmpty &&
-        snap.files.forall { case (rel, _) => droppedRel(rel) })
-      added ++= stampLeaves(face, fs, root, snap.files.map(_._1),
-        FeatherSnapshots.runPrefix(targetV), tableSchema)
-
-    // a batch that changed NOTHING (replayed tombstones whose rows are
-    // already masked, no live rows) publishes no commit: an empty
-    // op="merge"/"cdc" version would abort any live snapshot stream for
-    // a change that altered zero rows, and a foreachBatch replay must be
-    // a true no-op — the same guard deleteByKeyDV carries
-    if (newBindings.isEmpty && droppedRel.isEmpty && added.isEmpty)
-      return Result(snap.version, 0, snap.files.size, 0)
-    // conflict scope = the key-probed candidates (deleteByKeyDV's rule)
-    val committed = FeatherSnapshots.commitMutation(fs, root, op, snap,
-      droppedRel, added.toSeq, setDvs = newBindings,
-      readRel = Some(touchedIdx.map(i => snap.files(i)._1).toSet))
-    Result(committed, newBindings.size + droppedRel.size,
-      snap.files.size - newBindings.size - droppedRel.size, partsWritten)
-    } finally {
-      if (ownKeys) keysC.unpersist(blocking = false): Unit
-      if (ownInsert) insertC.unpersist(blocking = false): Unit
+    def source(c: String) = Bridge.column(UnresolvedAttribute(Seq("source", c)))
+    val tomb = coalesce(source(deleteCol), lit(false))
+    val m = ConditionalMerge(spark, path, changes, keyCols)
+      .whenMatchedDelete(Some(tomb))
+    if (!evolveSchema)
+      m.whenMatchedUpdateAll().whenNotMatchedInsertAll(Some(!tomb))
+    else {
+      val set = changes.columns.filterNot(_ == deleteCol)
+        .map(c => c -> source(c)).toMap
+      m.withSchemaEvolution().whenMatchedUpdate(None, set)
+        .whenNotMatchedInsert(Some(!tomb), set)
     }
   }
 
-  // ---- shared implementation (cont.) ----------------------------------------
-
-  /** Distributed position scan shared by [[deleteByKeyDV]] and
-    * [[mergeDV]]: one task per candidate file reads ONLY the key columns
-    * with row positions (existing DV applied, so an already-deleted row
-    * can never re-match); the inner join against the key frame leaves
-    * exactly the matched (file index, position) pairs. Matched pairs
-    * collect to the driver — changed-row-count-sized by design (a
-    * takedown list or correction batch, never a retention sweep). */
-  private[io] def dvPositionScan(spark: SparkSession, face: ConnectorFace,
-                             root: Path,
-                             snap: FeatherSnapshots.Snapshot,
-                             absFiles: Seq[(String, Long)],
-                             touchedIdx: Seq[Int], keysDf: DataFrame,
-                             keyCols: Seq[String],
-                             tableSchema: StructType)
-      : Map[Int, Array[Long]] = {
-    if (touchedIdx.isEmpty) return Map.empty
-    val readerJson = face.readerJson(spark, touchedIdx.map(absFiles))
-    val confMap = GraftHadoop.confBroadcast(spark)
-    val work = touchedIdx.map { i =>
-      (i, absFiles(i)._1, absFiles(i)._2,
-        snap.dvs.get(snap.files(i)._1).map { case (dvRel, _) =>
-          new Path(root, dvRel).toString })
-    }
-    import org.apache.spark.sql.Row
-    val scanSchema = StructType(
-      StructField("__fid", IntegerType, nullable = false) +:
-      StructField("__pos", LongType, nullable = false) +:
-      keyCols.map(k => tableSchema(k)))
-    // readers tracked onto the task completion listener
-    val rdd = spark.sparkContext
-      .parallelize(work, math.max(1, work.size))
-      .mapPartitions { it =>
-        val execConf = new org.apache.hadoop.conf.Configuration(false)
-        confMap.value.foreach { case (k, v) => execConf.set(k, v) }
-        val open = new java.util.ArrayList[AutoCloseable]()
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => open.forEach(r =>
-            try r.close() catch { case _: Exception => () })))
-        it.flatMap { case (fid, abs, len, dvPath) =>
-          val dv = dvPath
-            .map(p => DeletionVectors.read(execConf, p)).orNull
-          face.fileRowsPos(execConf, readerJson, abs, len, keyCols, dv,
-            r => open.add(r): Unit, r => open.remove(r): Unit)
-            .map { case (pos, row) =>
-              Row.fromSeq(fid +: pos +: row.toSeq) }
-        }
-      }
-    // matched (file ordinal → positions, ARBITRARY order — the shuffle
-    // decides; bindDvs sorts before writing sidecars)
-    spark.createDataFrame(rdd, scanSchema)
-      .join(keysDf.select(keyCols.map(col): _*).distinct(), keyCols, "inner")
-      .select(col("__fid"), col("__pos"))
-      .collect()
-      .groupBy(_.getInt(0))
-      .map { case (fid, rows) => fid -> rows.map(_.getLong(1)) }
+  /** The upsert/CDC input contract: the source carries exactly the
+    * table's columns, partition columns included — or, under
+    * `evolveSchema`, at least them. */
+  private def exactColumns(op: String, source: DataFrame,
+                           evolveSchema: Boolean)
+                          (table: StructType, partCols: Seq[String]): Unit = {
+    val caseSensitive = source.sparkSession.conf
+      .get("spark.sql.caseSensitive", "false").toBoolean
+    def in(names: Seq[String])(c: String) = names.exists(n =>
+      if (caseSensitive) n == c else n.equalsIgnoreCase(c))
+    val cols = source.columns.toSeq
+    val missing = table.fieldNames.filterNot(in(cols))
+    val extra = if (evolveSchema) Nil else cols.filterNot(in(table.fieldNames))
+    require(missing.isEmpty && extra.isEmpty,
+      s"$op: source columns (${cols.sorted.mkString(", ")}) must be exactly " +
+        "the table's data columns" +
+        (if (partCols.nonEmpty) " plus its partition columns" else "") +
+        s" (${table.fieldNames.sorted.mkString(", ")})")
   }
 
-  /** Leaf-grouped DV read shared by the clause and predicate mutation
-    * tiers: `files` (abs path, len) read with their DV bindings applied
-    * and, when partitioned, each leaf's partition values attached as
-    * typed literal columns (the same values-from-the-chain contract
-    * every partitioned read applies; `lit(null).cast` for the hive null
-    * leaf) — one union arm per leaf, folded as a BALANCED tree so the
-    * analyzer never recurses O(leaves) deep. `keep` optionally pins the
-    * posKeep positions per file (the DV matched-rows read). Callers
-    * guarantee `files` is non-empty. */
+  // ---- shared helpers ------------------------------------------------------
+
+  /** Leaf-grouped DV read of replaceWhere's candidates: `files` (abs
+    * path, len) read with their DV bindings applied and, when
+    * partitioned, each leaf's partition values attached as typed literal
+    * columns (the same values-from-the-chain contract every partitioned
+    * read applies; `lit(null).cast` for the hive null leaf) — one union
+    * arm per leaf, folded as a BALANCED tree so the analyzer never
+    * recurses O(leaves) deep. Callers guarantee `files` is non-empty. */
   private[io] def readWithPartValues(spark: SparkSession,
                                      face: ConnectorFace,
                                      files: Seq[(String, Long)],
                                      dvPathsAll: Map[String, String],
                                      tableSchema: StructType,
                                      partSchema: StructType,
-                                     valuesByAbs: Map[String, Seq[(String, String)]],
-                                     keep: Map[String, Array[Long]] = Map.empty)
+                                     valuesByAbs: Map[String, Seq[(String, String)]])
       : DataFrame = {
     require(files.nonEmpty, "readWithPartValues: empty file list")
     def attachParts(df: DataFrame,
@@ -478,11 +247,8 @@ object FeatherMutations {
         // O(leaves × dvMappings × filesPerLeaf) driver work
         val leafSet = leafFiles.map(_._1).toSet
         val dvs = dvPathsAll.filter { case (abs, _) => leafSet(abs) }
-        val raw =
-          if (keep.isEmpty) face.readMergedDv(spark, leafFiles, dvs)
-          else face.readMergedDv(spark, leafFiles, dvs,
-            keep.filter { case (abs, _) => leafSet(abs) })
-        attachParts(ConnectorFace.align(raw, tableSchema), values)
+        attachParts(ConnectorFace.align(
+          face.readMergedDv(spark, leafFiles, dvs), tableSchema), values)
       }
     def balanced(fs: Seq[DataFrame]): DataFrame =
       if (fs.size == 1) fs.head
@@ -491,23 +257,6 @@ object FeatherMutations {
         balanced(l).unionByName(balanced(r))
       }
     balanced(arms)
-  }
-
-  /** Refuse a table whose DATA files also embed a partition column —
-    * the partition-value attach in every routed rewrite would clobber
-    * the embedded values (or the plan dies later as a raw
-    * AMBIGUOUS_REFERENCE). Matches like the resolver: case-insensitive
-    * under the default conf. ONE definition across all four mutation
-    * paths. */
-  private[io] def requireNotEmbedded(op: String, partCols: Seq[String],
-                                     tableSchema: StructType,
-                                     caseSensitive: Boolean): Unit = {
-    val embedded = partCols.filter(p => tableSchema.fieldNames.exists(f =>
-      f == p || (!caseSensitive && f.equalsIgnoreCase(p))))
-    require(embedded.isEmpty,
-      s"$op: partition column(s) ${embedded.mkString(", ")} are ALSO " +
-        "embedded in the data files — routing cannot tell the path copy " +
-        "from the data copy")
   }
 
   /** Column-name canonicalization onto a schema's spelling under
@@ -522,12 +271,11 @@ object FeatherMutations {
       case _ => k
     }
 
-  /** WALL-CLOCK pin, shared by the clause merge and replaceWhere:
-    * rewrite clock functions in a user expression to LITERALS of one
-    * per-statement instant. A mutation evaluates its expressions in
-    * several separate Spark jobs (pruning fold, limit-1 probe, position
-    * scan, COW rewrite, and routePartitionedInserts' distinct() +
-    * per-leaf scans, where persist is only best-effort under
+  /** WALL-CLOCK pin of replaceWhere: rewrite clock functions in a user
+    * expression to LITERALS of one per-statement instant. The statement
+    * evaluates its expressions in several separate Spark jobs (pruning
+    * fold, limit-1 probe, survivor rewrite, and routePartitionedInserts'
+    * distinct() + per-leaf scans, where persist is only best-effort under
     * eviction/task retry) — left unpinned,
     * current_timestamp()/current_date() would evaluate at a DIFFERENT
     * instant per job: pruning could drop files the executed predicate
@@ -687,11 +435,16 @@ object FeatherMutations {
     val fullSchema = StructType(tableSchema.fields ++ partSchema.fields)
     val caseSensitive =
       spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-    // the embedded-partition-column refusal is a ROUTING contract —
-    // metadata-only consumers (DESCRIBE) read such tables fine and
-    // must not inherit a write-path refusal
-    if (checkEmbedded)
-      requireNotEmbedded(op, partCols, tableSchema, caseSensitive)
+    // refuse a table whose DATA files also embed a partition column: the
+    // partition-value attach of a routed rewrite would clobber the
+    // embedded values. A ROUTING contract — metadata-only consumers
+    // (DESCRIBE) read such tables fine and must not inherit it
+    val embedded = partCols.filter(p => tableSchema.fieldNames.exists(f =>
+      f == p || (!caseSensitive && f.equalsIgnoreCase(p))))
+    require(!checkEmbedded || embedded.isEmpty,
+      s"$op: partition column(s) ${embedded.mkString(", ")} are ALSO " +
+        "embedded in the data files — routing cannot tell the path copy " +
+        "from the data copy")
     val leafByAbs: Map[String, FeatherPartitions.LeafFile] =
       discovered.map(_.files.map(lf => lf.file -> lf).toMap)
         .getOrElse(Map.empty)
@@ -708,8 +461,8 @@ object FeatherMutations {
   }
 
   /** One schema-only stamp per distinct leaf of `relPaths` — the
-    * all-rows-deleted shape shared by every mutation path (COW delete,
-    * DV delete, DV merge, conditional merge): a table whose every row
+    * all-rows-deleted shape shared by every mutation path (the
+    * row-level writes, replaceWhere, overwrites): a table whose every row
     * dropped must still read as an EMPTY frame with its schema, and a
     * hive layout must keep its key=value paths (a single root-level
     * stamp would silently drop the partition columns discovery infers).
@@ -729,7 +482,8 @@ object FeatherMutations {
       (if (relDir.isEmpty) name else s"$relDir/$name", len)
     }
 
-  /** Partitioned insert routing shared by the COW and DV mutations:
+  /** Partitioned insert routing shared by the row-level writes, the
+    * partitioned appends and replaceWhere:
     * source rows land in the leaf THEIR partition values name (the hive
     * contract: a matched key whose source row carries different
     * partition values moves partitions — delete-here + insert-there,
@@ -743,7 +497,7 @@ object FeatherMutations {
     * leaf's rewritten-file count for replaceWhere's survivor rewrite
     * (whose routed output carries every candidate row, not just the
     * changed ones — one part per rewritten input keeps part counts
-    * stable, the same rule `mutate`'s flat rewrite applies). */
+    * stable). */
   private[graft] def routePartitionedInserts(op: String, face: ConnectorFace,
                                       fs: org.apache.hadoop.fs.FileSystem,
                                       root: Path, src0: DataFrame,
@@ -755,8 +509,9 @@ object FeatherMutations {
     val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     // one source scan feeds the distinct() AND every per-tuple slice —
     // an expensive upstream plan must not re-execute once per partition.
-    // A frame the caller already persisted (mutateDv pins its batch) is
-    // reused as-is; unpersisting it here would evict the caller's cache.
+    // A frame the caller already persisted (replaceWhere pins its data)
+    // is reused as-is; unpersisting it here would evict the caller's
+    // cache.
     val (src, owned) = ConnectorFace.pinIfUncached(src0)
     try {
       // Spark's Hive escaping — the SAME encoding the partitioned sink
@@ -884,8 +639,8 @@ object FeatherMutations {
 
   /** Exact row count from per-batch stats — defined only when EVERY
     * batch carries a count (a partial answer could prove the wrong
-    * thing). Shared by the DV full-coverage check and the COW no-op
-    * delete proof. */
+    * thing). Shared by the delta write's full-coverage check and the
+    * avro sink's zero-row check. */
   private[graft] def exactRows(batches: Seq[Map[String, FeatherStats.ColStat]])
       : Option[Long] = {
     val counts = batches.map(_.get(FeatherStats.RowCountKey) match {
@@ -895,24 +650,19 @@ object FeatherMutations {
     if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
   }
 
-  /** The file-pruning PROBE shared by the copy-on-write mutations and the
-    * deletion-vector delete: which files (by index into `absFiles`) could
-    * contain a key from `keysDf`? Stats ranges (sorted-boundary binary
-    * search on disjoint layouts, interval-stab on overlapping ones) and
-    * Bloom sidecars fold into one distributed pass; a file without usable
-    * stats is touched unconditionally — pruning is an optimization, never
-    * a correctness input. Mutation keys never collect to the driver.
-    *
-    * Returns (touched file indices, the stats it loaded) — callers that
-    * need sidecar stats afterwards (the DV delete's full-coverage check)
-    * reuse them instead of paying a second per-leaf sidecar read. */
-  private[io] def probeTouched(spark: SparkSession, op: String,
-                           absFiles: Seq[(String, Long)],
-                           tableSchema: StructType,
-                           keysDf: DataFrame,
-                           keyCols: Seq[String])
-      : (Set[Int],
-         Map[String, Option[Seq[Map[String, FeatherStats.ColStat]]]]) = {
+  /** The key probe of every keyed merge ([[ConditionalMerge]]): which
+    * files (by index into `absFiles`) could contain a key from `keysDf`?
+    * Stats ranges of the first key column (sorted-boundary binary search
+    * on disjoint layouts, interval-stab on overlapping ones) and Bloom
+    * sidecars fold into one distributed pass; a file without usable
+    * stats is a candidate unconditionally — pruning is an optimization,
+    * never a correctness input. Mutation keys never collect to the
+    * driver; only candidate file indices do. */
+  private[io] def probeTouched(spark: SparkSession,
+                               absFiles: Seq[(String, Long)],
+                               tableSchema: StructType,
+                               keysDf: DataFrame,
+                               keyCols: Seq[String]): Set[Int] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val stats = FeatherStats.loadForFiles(conf, absFiles)
     val k0 = keyCols.head
@@ -1139,255 +889,9 @@ object FeatherMutations {
         probeOnce(blooms) ++ alien.map(_._2)
       case _ => rangedIdx.map(_._2).toSet // no comparable family: touch all
     }
-    val touchedIdx: Set[Int] = ranges.zipWithIndex.collect {
+    ranges.zipWithIndex.collect {
       case (Unknown, i) => i
       case (_: Rng, i) if candidateIdx(i) => i
     }.toSet
-    (touchedIdx, stats)
-  }
-
-  private def mutate(spark: SparkSession, path: String, op: String,
-                     keysDf: DataFrame, keyCols: Seq[String],
-                     appendSource: Option[DataFrame], codec: String,
-                     evolveSchema: Boolean = false): Result = {
-    require(keyCols.nonEmpty, s"$op: keyCols must be non-empty")
-    keyCols.foreach(k => require(keysDf.columns.contains(k),
-      s"$op: key column '$k' not in keys frame (${keysDf.columns.mkString(", ")})"))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    require(FeatherSnapshots.enabled(fs, root),
-      s"$op on $path, which has no ${FeatherSnapshots.Dir} directory — " +
-        "row-level mutation is a manifest operation; write the table with " +
-        "option(\"snapshots\", \"true\") first")
-    val snap = FeatherSnapshots.resolve(fs, root, None).getOrElse(
-      sys.error(s"$op on $path: snapshot directory exists but holds no versions"))
-    val face = ConnectorFace.detect(snap.files, op, path)
-    val parentV = snap.version
-    // RUN-UNIQUE prefix: the pre-clean in writeParts removes only THIS
-    // run's residue (a crash-retry of the same logical mutation gets a
-    // new tag, so the crashed attempt's parts become vacuumOrphans
-    // work — age-gated, in-flight-guarded). A parent-version-only
-    // prefix would let two mutators racing the same parent pre-clean
-    // each other's uncommitted parts: the loser aborts at commit, but
-    // the WINNER could publish a manifest referencing files the loser
-    // already deleted.
-    val prefix = FeatherSnapshots.runPrefix(parentV + 1)
-
-    val byLeaf: Seq[(String, Seq[(String, Long)])] =
-      snap.files.groupBy { case (rel, _) => relDirOf(rel) }.toSeq.sortBy(_._1)
-    // hive partition columns from the leaf chains (the manifest layout
-    // guard keeps them uniform); a partitioned merge/cdc ROUTES inserts
-    // to their partition leaf and must carry the partition columns. A
-    // nested NON-hive layout (adopted `batch1/`, `batch2/` directories —
-    // segments without `=`) is not partitioned: delete rewrites its
-    // leaves generically, but merge has nowhere to route inserts and
-    // must refuse rather than silently drop them.
-    val chains: Seq[String] = byLeaf.map(_._1).filter(_.nonEmpty)
-    val (hiveChains, partCols) =
-      graft.sources.FeatherPartitions.hiveLayout(chains)
-    if (appendSource.isDefined && chains.nonEmpty && !hiveChains)
-      throw new IllegalArgumentException(
-        s"$op on $path: table has non-hive subdirectories " +
-          s"(${chains.mkString(", ")}) — $op routes inserts by partition " +
-          "values and needs a hive key=value layout (deleteByKey supports " +
-          "any layout)")
-    val partitioned = partCols.nonEmpty
-
-    // table schema = the UNION of every live footer/header (a mutated
-    // table may carry evolved generations; projecting to the first file
-    // would silently drop evolved columns from the rewritten survivors) —
-    // validates keys before any work
-    val tableSchema0 = face.mergedSchema(spark,
-      snap.files.map { case (rel, len) => (new Path(root, rel).toString, len) })
-    // schema evolution on write (opt-in): the source's NEW columns join
-    // the table schema as nullable — survivors and untouched generations
-    // read them as null through mergeSchema, exactly the read-side
-    // evolution contract. Without the flag, an unexpected column stays
-    // the loud mistake it usually is.
-    val tableSchema =
-      if (!evolveSchema) tableSchema0
-      else appendSource match {
-        case Some(src) =>
-          val known = tableSchema0.fieldNames.toSet ++ partCols
-          val extra = src.schema.fields.filterNot(f => known(f.name))
-            .map(f => StructField(f.name, f.dataType, nullable = true))
-          StructType(tableSchema0.fields ++ extra)
-        case None => tableSchema0
-      }
-    // keys validate against the PRE-evolution schema: a key naming a
-    // column that exists only in the evolving SOURCE (a typo for a real
-    // key) would otherwise pass and silently rewrite the whole table as
-    // an expensive no-match append
-    keyCols.foreach(k => require(tableSchema0.fieldNames.contains(k),
-      if (partCols.contains(k))
-        s"$op: key column '$k' is a partition column — partition values " +
-          "live in the directory chain, not the data files; key on data " +
-          "columns (the source's partition values route the rows)"
-      else s"$op: key column '$k' not in table schema " +
-        s"(${tableSchema.fieldNames.mkString(", ")})"))
-    appendSource.foreach { src =>
-      requireNotEmbedded(op, partCols, tableSchema,
-        spark.conf.get("spark.sql.caseSensitive", "false").toBoolean)
-      val expected = (tableSchema.fieldNames ++ partCols).sorted
-      require(src.columns.sorted.sameElements(expected),
-        s"$op: source columns (${src.columns.sorted.mkString(", ")}) must " +
-          s"be exactly the table's data columns" +
-          (if (partitioned) s" plus its partition columns" else "") +
-          s" (${expected.mkString(", ")})")
-      // names alone would let a type-mismatched source commit parts whose
-      // footer types disagree with the table — corruption that surfaces
-      // only on a later read. Compare types, nullability-insensitive.
-      tableSchema.fields.foreach { tf =>
-        val st = src.schema(tf.name).dataType
-        require(st == tf.dataType,
-          s"$op: source column '${tf.name}' is ${st.catalogString} but the " +
-            s"table carries ${tf.dataType.catalogString} — cast the source " +
-            "before merging")
-      }
-    }
-
-    // ---- prune: which files could contain a mutation key? ------------------
-    val absFiles = snap.files.map { case (rel, len) =>
-      (new Path(root, rel).toString, len) }
-    val (touchedIdx, probeStatsCow) =
-      probeTouched(spark, op, absFiles, tableSchema0, keysDf, keyCols)
-    val touchedRel: Set[String] =
-      touchedIdx.map(i => snap.files(i)._1)
-
-    // ---- rewrite touched leaves --------------------------------------------
-    val keysProj = keysDf.select(keyCols.map(col): _*)
-    val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    // (leafDir, part name, exact rows) per rewritten part — feeds the
-    // no-op delete proof below
-    val writtenMeta = scala.collection.mutable.ArrayBuffer
-      .empty[(Path, String, Option[Long])]
-    var partsWritten = 0
-    byLeaf.foreach { case (relDir, leafFiles) =>
-      val touchedLeaf = leafFiles.filter { case (rel, _) => touchedRel(rel) }
-      if (touchedLeaf.nonEmpty ||
-          (appendSource.isDefined && !partitioned && relDir.isEmpty)) {
-        val leafDir = if (relDir.isEmpty) root else new Path(root, relDir)
-        val survivors: Option[DataFrame] =
-          if (touchedLeaf.isEmpty) None
-          else {
-            // deletion vectors on touched files apply INSIDE the read: a
-            // plain merged read would resurrect rows a DV delete already
-            // dropped — the rewrite folds the DV away (the new parts have
-            // no binding)
-            val dvPaths = touchedLeaf.flatMap { case (rel, _) =>
-              snap.dvs.get(rel).map { case (dvRel, _) =>
-                new Path(root, rel).toString ->
-                  new Path(root, dvRel).toString }
-            }.toMap
-            val sv0 = face.readMergedDv(spark,
-              touchedLeaf.map { case (rel, len) =>
-                (new Path(root, rel).toString, len) }, dvPaths)
-            // project to the FULL table schema (mergeSchema above unions
-            // only the TOUCHED footers): when every touched file predates
-            // an evolved column, sv would lack it and a legitimate
-            // merge/cdc would die in unionByName — null-fill instead,
-            // exactly what a merged read of those files yields
-            Some(ConnectorFace.align(sv0, tableSchema)
-              .join(keysProj, keyCols, "left_anti"))
-          }
-        // partitioned: survivors only here (inserts route per-partition
-        // below — a source row must land in ITS leaf, not this one)
-        val srcHere = if (partitioned) None else appendSource
-        val outDf = (survivors, srcHere) match {
-          case (Some(sv), Some(src)) => sv.unionByName(src)
-          case (Some(sv), None) => sv
-          case (None, Some(src)) => src
-          case (None, None) => sys.error("unreachable: untouched leaf")
-        }
-        // one output part per touched input (or per source partition for a
-        // pure insert) — keeps part counts stable across mutations instead
-        // of inheriting spark.sql.shuffle.partitions tiny parts; compaction
-        // owns long-run part hygiene either way
-        val targetParts = math.max(1, math.max(touchedLeaf.size,
-          srcHere.map(_.rdd.getNumPartitions).getOrElse(0)))
-        val parts = face.writeParts(
-          outDf.coalesce(targetParts), leafDir.toString, prefix, codec)
-        if (parts.nonEmpty)
-          FeatherStats.upsertMerged(fs, leafDir,
-            parts.map { case (name, len, js) =>
-              name -> (len, FeatherStats.fromJson(js)) }.toMap)
-        added ++= parts.map { case (name, len, _) =>
-          (if (relDir.isEmpty) name else s"$relDir/$name", len) }
-        writtenMeta ++= parts.map { case (name, _, js) =>
-          (leafDir, name, exactRows(FeatherStats.fromJson(js))) }
-        partsWritten += parts.size
-      }
-    }
-
-    // ---- partitioned insert routing ----------------------------------------
-    if (partitioned && appendSource.isDefined) {
-      val routed = routePartitionedInserts(op, face, fs, root,
-        appendSource.get, partCols, tableSchema, prefix, codec)
-      added ++= routed
-      partsWritten += routed.size
-    }
-
-    // a table whose every row was deleted must still read as an EMPTY
-    // frame with its schema — stamp one schema-only part PER LEAF, so a
-    // hive layout keeps its key=value paths (and with them the partition
-    // columns discovery infers; a single root-level stamp would silently
-    // drop them from the table's schema)
-    if (added.isEmpty && snap.files.forall { case (rel, _) => touchedRel(rel) })
-      added ++= stampLeaves(face, fs, root, snap.files.map(_._1), prefix,
-        tableSchema)
-
-    // ---- one atomic manifest publish ---------------------------------------
-    // a DELETE that touched no file publishes no commit (same reasoning
-    // as the DV path: an empty op="delete" version aborts live snapshot
-    // streams for nothing); merge/cdc always commit — even an insert-only
-    // batch writes parts, and a truly empty source is a legitimate
-    // idempotent version
-    if (op == "delete" && touchedRel.isEmpty && added.isEmpty)
-      return Result(snap.version, 0, snap.files.size, 0)
-    // ... and a DELETE whose candidates were rewritten ROW-EQUIVALENTLY
-    // (a retried takedown whose keys fall inside surviving ranges, so
-    // stats/bloom pruning cannot clear them) must be a true no-op too:
-    // prove it by exact counts — old effective rows (stats minus DV
-    // cardinality) vs rewritten rows — and WITHDRAW the rewrite instead
-    // of publishing an empty op="delete" version. Unknown counts fall
-    // back to committing (pruning stats are optional; the proof is not
-    // allowed to guess).
-    if (op == "delete" && appendSource.isEmpty && touchedRel.nonEmpty) {
-      val oldRows: Option[Long] = {
-        val per = touchedIdx.toSeq.map { i =>
-          val rel = snap.files(i)._1
-          // the manifest binding carries the DV's cardinality exactly so
-          // accounting like this never opens the sidecar
-          val dvRows = snap.dvs.get(rel).map(_._2).getOrElse(0L)
-          probeStatsCow.getOrElse(absFiles(i)._1, None).flatMap(exactRows)
-            .map(_ - dvRows)
-        }
-        if (per.exists(_.isEmpty)) None else Some(per.flatten.sum)
-      }
-      val newRows: Option[Long] =
-        if (writtenMeta.exists(_._3.isEmpty)) None
-        else Some(writtenMeta.flatMap(_._3).sum)
-      if (oldRows.isDefined && oldRows == newRows) {
-        writtenMeta.groupBy(_._1).foreach { case (leafDir, ps) =>
-          FeatherStats.upsertMerged(fs, leafDir, Map.empty,
-            ps.map(_._2).toSet)
-        }
-        added.foreach { case (rel, _) =>
-          fs.delete(new Path(root, rel), false): Unit
-          // the writer's per-part stats sidecar rides along
-          fs.delete(new Path(root, s"$rel.stats.json"), false): Unit
-        }
-        return Result(snap.version, 0, snap.files.size, 0)
-      }
-    }
-    // conflict matrix (FeatherSnapshots.commitMutation): concurrent blind
-    // appends commute — their files carry through; a concurrent mutation/
-    // overwrite/restore touching any key-probed candidate aborts loudly,
-    // while one disjoint from them commits beside this run (readRel)
-    val committed = FeatherSnapshots.commitMutation(fs, root, op, snap,
-      touchedRel, added.toSeq, readRel = Some(touchedRel))
-    Result(committed, touchedIdx.size, snap.files.size - touchedIdx.size,
-      partsWritten)
   }
 }

@@ -69,12 +69,6 @@ object PredicateMutations {
     rowLevel(spark, path, "graft", cond, set)
   }
 
-  private type Resolved = FeatherMutations.Resolved
-  private val Resolved = FeatherMutations.Resolved
-  private def resolveTable(spark: SparkSession, path: String, op: String,
-                           requireHive: Boolean): Resolved =
-    FeatherMutations.resolveTable(spark, path, op, requireHive)
-
   private def rowLevel(spark: SparkSession, path: String, catalog: String,
                        cond: Option[Column],
                        set: Map[String, Column]): Result = {
@@ -95,12 +89,11 @@ object PredicateMutations {
         DeleteFromTable(rel, cond.map(expr).getOrElse(Literal.TrueLiteral))
       else UpdateTable(rel, set.toSeq.map { case (c, e) =>
         Assignment(UnresolvedAttribute.quoted(c), expr(e)) }, cond.map(expr))
-    val r = commitReport(spark, plan, s"$op on $path")
     // partsWritten = DV sidecars for the merge-on-read delete, exactly
-    // deleteByKeyDV's accounting — the two spellings of one takedown
-    // report identically
-    Result(r.version, r.filesRemoved + r.dvsBound, r.filesKept,
-      if (catalog == "graft_dv") r.dvsBound else r.partsAdded)
+    // FeatherMutations.deleteByKeyDV's accounting — the two spellings of
+    // one takedown report identically
+    Result.of(commitReport(spark, plan, s"$op on $path"),
+      dvSidecars = catalog == "graft_dv")
   }
 
   /** The relation of ``graft.`<path>` `` (copy-on-write) or
@@ -116,6 +109,10 @@ object PredicateMutations {
     val raw = new Path(path)
     val fs = raw.getFileSystem(conf)
     val qualified = fs.makeQualified(raw)
+    require(FeatherSnapshots.enabled(fs, qualified),
+      s"row-level DML on $path, which has no ${FeatherSnapshots.Dir} " +
+        "directory — it is a manifest operation; write the table with " +
+        "option(\"snapshots\", \"true\") first")
     val name =
       if (fs.getUri == FileSystem.getDefaultUri(conf)) qualified.toUri.getPath
       else qualified.toString
@@ -262,9 +259,9 @@ object PredicateMutations {
                    cond: Column): Result = {
     val op = "replaceWhere"
     val conf = spark.sparkContext.hadoopConfiguration
-    val r = resolveTable(spark, path, op, requireHive = true)
-    val Resolved(root, fs, snap, face, partCols, absFiles, tableSchema,
-      partSchema, fullSchema, caseSensitive, leafByAbs) = r
+    val r = FeatherMutations.resolveTable(spark, path, op, requireHive = true)
+    val FeatherMutations.Resolved(root, fs, snap, face, partCols, absFiles,
+      tableSchema, partSchema, fullSchema, caseSensitive, leafByAbs) = r
     def bad(msg: String): Nothing =
       throw new IllegalArgumentException(s"$op on $path: $msg")
     val nowInstant = java.time.Instant.now()

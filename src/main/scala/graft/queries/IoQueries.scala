@@ -936,7 +936,7 @@ object IoQueries extends QueryPack {
         .select(col("o_orderkey").as("l_orderkey"))
       val r = graft.io.FeatherMutations.deleteByKey(
         s, p, takedown, Seq("l_orderkey"))
-      require(r.filesTouched > 0 && r.filesTouched < 8,
+      require(r.filesTouched > 0 && r.filesPlanned < 8,
         s"delete should touch a strict subset of the 8 parts: $r")
     }
     s.read.format("feather").load(path)
@@ -978,7 +978,8 @@ object IoQueries extends QueryPack {
   }
 
   // MERGE-ON-READ delete via deletion vectors
-  // (io/FeatherMutations.deleteByKeyDV + io/DeletionVectors.scala): the
+  // (io/FeatherMutations.deleteByKeyDV, a delete-only MERGE on the
+  // graft_dv catalog, + io/DeletionVectors.scala): the
   // same takedown as io_feather_delete but NO data file is rewritten —
   // the delete writes position-bitmap sidecars bound in the manifest,
   // and the scan filters the positions out. The oracle is IDENTICAL to
@@ -1008,7 +1009,7 @@ object IoQueries extends QueryPack {
         .select(col("o_orderkey").as("l_orderkey"))
       val r = graft.io.FeatherMutations.deleteByKeyDV(
         s, p, takedown, Seq("l_orderkey"))
-      require(r.filesTouched > 0 && r.filesTouched < 8,
+      require(r.filesTouched > 0 && r.filesPlanned < 8,
         s"DV delete should touch a strict subset of the 8 parts: $r")
       val after = new java.io.File(p).listFiles()
         .filter(f => f.getName.endsWith(".feather")).map(_.length()).sum
@@ -1045,7 +1046,7 @@ object IoQueries extends QueryPack {
         .select(col("o_orderkey").as("l_orderkey"))
       val r = graft.io.FeatherMutations.deleteByKeyDV(
         s, p, takedown, Seq("l_orderkey"))
-      require(r.filesTouched > 0 && r.filesTouched < 8,
+      require(r.filesTouched > 0 && r.filesPlanned < 8,
         s"DV delete should touch a strict subset of the 8 parts: $r")
     }
     s.read.format("graft-avro").load(path)
@@ -1110,7 +1111,7 @@ object IoQueries extends QueryPack {
         .select(col("o_orderkey").as("l_orderkey"))
       val r = graft.io.FeatherMutations.deleteByKeyDV(
         s, p, takedown, Seq("l_orderkey"))
-      require(r.filesTouched > 0 && r.filesTouched < 8,
+      require(r.filesTouched > 0 && r.filesPlanned < 8,
         s"DV delete should touch a strict subset of the 8 parts: $r")
       val after = new java.io.File(p).listFiles()
         .filter(f => f.getName.endsWith(".parquet")).map(_.length()).sum
@@ -1188,10 +1189,11 @@ object IoQueries extends QueryPack {
              |ORDER BY o_orderkey""".stripMargin)
   }
 
-  // MERGE-ON-READ upsert (io/FeatherMutations.mergeDV): the same merge
-  // as io_feather_merge but NO candidate file rewrites — matched old
-  // rows DV-mask (position sidecars, the deleteByKeyDV scan) and the
-  // whole source lands as new parts in the one commit, so merge bytes
+  // MERGE-ON-READ upsert (io/FeatherMutations.mergeDV, a MERGE on the
+  // graft_dv catalog): the same merge as io_feather_merge but NO
+  // candidate file rewrites — matched old rows DV-mask (position
+  // sidecars from the delta write's row ids) and their replacements land
+  // with the inserts as new parts in the one commit, so merge bytes
   // scale with the CHANGE, not with touched-file sizes. The ORACLE is
   // byte-identical to the copy-on-write merge's — the strategy must
   // never change the semantics; the fixture pins zero data-file bytes
@@ -1224,7 +1226,7 @@ object IoQueries extends QueryPack {
           (col("o_totalprice") * 2).as("o_totalprice"))
       val r = graft.io.FeatherMutations.mergeDV(
         s, p, source, Seq("o_orderkey"))
-      require(r.filesTouched > 0 && r.filesTouched < 6,
+      require(r.filesTouched > 0 && r.filesPlanned < 6,
         s"DV merge should mask a strict subset of the 6 parts: $r")
       val after = new java.io.File(p).listFiles()
         .filter(f => f.getName.endsWith(".feather") &&
@@ -2068,7 +2070,7 @@ object IoQueries extends QueryPack {
           (col("o_totalprice") * 2).as("o_totalprice"))
       val r = graft.io.FeatherMutations.merge(
         s, p, source, Seq("o_orderkey"))
-      require(r.filesTouched > 0 && r.filesTouched < 6,
+      require(r.filesTouched > 0 && r.filesPlanned < 6,
         s"merge should touch a strict subset of the 6 parts: $r")
     }
     s.read.format("feather").load(path)
@@ -2101,7 +2103,7 @@ object IoQueries extends QueryPack {
         .select(col("o_orderkey").as("l_orderkey"))
       val r = graft.io.FeatherMutations.deleteByKey(
         s, p, takedown, Seq("l_orderkey"))
-      require(r.filesTouched > 0 && r.filesTouched < 8,
+      require(r.filesTouched > 0 && r.filesPlanned < 8,
         s"avro delete should touch a strict subset of the 8 parts: $r")
     }
     s.read.format("graft-avro").load(path)
@@ -2138,7 +2140,7 @@ object IoQueries extends QueryPack {
           (col("o_totalprice") * 2).as("o_totalprice"))
       val r = graft.io.FeatherMutations.merge(
         s, p, source, Seq("o_orderkey"))
-      require(r.filesTouched > 0 && r.filesTouched < 6,
+      require(r.filesTouched > 0 && r.filesPlanned < 6,
         s"avro merge should touch a strict subset of the 6 parts: $r")
     }
     s.read.format("graft-avro").load(path)
@@ -2341,7 +2343,7 @@ object IoQueries extends QueryPack {
         .filter(col("o_orderkey").between(2001, 2300))
         .select(col("o_orderkey").as("l_orderkey"))
       val r = graft.io.FeatherMutations.deleteByKey(s, p, band, Seq("l_orderkey"))
-      require(r.filesTouched < rc.filesAfter,
+      require(r.filesPlanned < rc.filesAfter,
         s"clustered delete must prune: $r of ${rc.filesAfter}")
     }
     s.read.format("feather").load(path)
@@ -2379,7 +2381,7 @@ object IoQueries extends QueryPack {
         .filter(col("o_orderkey").between(1001, 1300))
         .select(col("o_orderkey").as("l_orderkey"))
       val r = graft.io.FeatherMutations.deleteByKey(s, p, band, Seq("l_orderkey"))
-      require(r.filesTouched < rc.filesAfter,
+      require(r.filesPlanned < rc.filesAfter,
         s"clustered avro delete must prune: $r of ${rc.filesAfter}")
     }
     s.read.format("graft-avro").load(path)
@@ -2538,7 +2540,7 @@ object IoQueries extends QueryPack {
       // the payoff require only binds with a real file population (the
       // sf0.001 fixture collapses to a handful of coarse z-boxes)
       if (rc.filesAfter >= 8)
-        require(r.filesTouched < rc.filesAfter,
+        require(r.filesPlanned < rc.filesAfter,
           s"z-order second-dimension band must prune: $r of ${rc.filesAfter}")
     }
     s.read.format("feather").load(path)
@@ -2577,7 +2579,7 @@ object IoQueries extends QueryPack {
         .select(col("o_orderdate").cast(DateType).as("odate")).distinct()
       val r = graft.io.FeatherMutations.deleteByKey(s, p, band, Seq("odate"))
       if (rc.filesAfter >= 8)
-        require(r.filesTouched < rc.filesAfter,
+        require(r.filesPlanned < rc.filesAfter,
           s"date-dimension band must prune after mixed z-order: " +
             s"$r of ${rc.filesAfter}")
     }
@@ -2642,13 +2644,13 @@ object IoQueries extends QueryPack {
       val absent = Seq("doc_000007x", "doc_000023x").toDF("doc_key")
       val r0 = graft.io.FeatherMutations.deleteByKey(
         s, p, absent, Seq("doc_key"))
-      require(r0.filesTouched == 0,
+      require(r0.filesPlanned == 0 && r0.filesTouched == 0,
         s"string blooms must prune absent in-range doc ids: $r0")
       val takedown = Seq("doc_000007", "doc_000023", "doc_000040")
         .toDF("doc_key")
       val r = graft.io.FeatherMutations.deleteByKey(
         s, p, takedown, Seq("doc_key"))
-      require(r.filesTouched >= 1 && r.filesTouched < 6,
+      require(r.filesTouched >= 1 && r.filesPlanned < 6,
         s"present doc ids touch a strict subset: $r")
     }
     s.read.format("feather").load(path)
@@ -2690,7 +2692,7 @@ object IoQueries extends QueryPack {
           lit("9-CDC").as("o_orderpriority"), lit(false).as("_deleted"))
       val r = graft.io.FeatherMutations.applyCdc(
         s, p, deletes.unionByName(upserts), Seq("o_orderkey"))
-      require(r.filesTouched > 0 && r.filesTouched < 6,
+      require(r.filesTouched > 0 && r.filesPlanned < 6,
         s"cdc should touch a strict subset of the 6 parts: $r")
     }
     s.read.format("feather").load(path)

@@ -203,7 +203,7 @@ private class AvroWrite(st: StructType, path: String, truncate: Boolean,
       fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false))
     if (tableAppend && committed.isEmpty) {
       report = FeatherSnapshots.resolve(fs, out, None)
-        .map(RowLevelCommitMetrics.noOp)
+        .map(RowLevelCommitMetrics.noOp(_))
       return
     }
     // refuse a root append into a hive layout BEFORE renaming (see the

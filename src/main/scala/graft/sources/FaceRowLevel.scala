@@ -78,18 +78,22 @@ import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats,
   * deleted either way, and a failed commit unwinds the final parts and
   * fresh DV sidecars.
   *
-  * The engine's predicate DML and conditional MERGE run here too:
-  * `deleteWhere`, `deleteWhereDV` and `updateWhere`
-  * ([[graft.io.PredicateMutations]]) build Spark's DeleteFromTable /
-  * UpdateTable, and `ConditionalMerge.execute` / `executeDV`
-  * ([[graft.io.ConditionalMerge]]) Spark's MergeIntoTable, over
+  * Every engine DML entry point runs here too: `deleteWhere`,
+  * `deleteWhereDV` and `updateWhere` ([[graft.io.PredicateMutations]])
+  * build Spark's DeleteFromTable / UpdateTable; `ConditionalMerge.execute`
+  * / `executeDV` ([[graft.io.ConditionalMerge]]) and the keyed
+  * `deleteByKey*` / `merge*` / `applyCdc*` built on it
+  * ([[graft.io.FeatherMutations]]) Spark's MergeIntoTable — over
   * ``graft.`<path>` `` or ``graft_dv.`<path>` `` (a relation of a catalog
-  * they build in place), so their pruning is this scan's. Both writes
-  * report what the commit did as DSv2 driver metrics on the command's
-  * plan — `commitVersion`, `filesRemoved`, `filesKept`, `partsAdded`,
-  * `dvsBound` ([[RowLevelCommitMetrics]]) — which the SQL statements show
-  * and the entry points return; so do the table appends an insert-only
-  * MERGE becomes. A merge-on-read commit refuses past
+  * they build in place), so their pruning is this scan's. A keyed merge
+  * also hands the scan its key probe's verdict on the table handle
+  * ([[KeyedMerge]]): the files that provably hold no key are never
+  * planned. Both writes report what the commit did as DSv2 driver
+  * metrics on the command's plan — `commitVersion`, `filesRemoved`,
+  * `filesKept`, `partsAdded`, `dvsBound`, `filesPlanned`
+  * ([[RowLevelCommitMetrics]]) — which the SQL statements show and the
+  * entry points return; so do the table appends an insert-only MERGE
+  * becomes. A merge-on-read commit refuses past
   * [[FaceRowLevel.MaxDvPositionsKey]] deleted positions.
   *
   * Cost honesty: on the converting faces rewritten/inserted rows are
@@ -103,11 +107,18 @@ private[graft] object FaceRowLevel {
     * `graft` catalog, delta (DV sidecars) for `graft_dv`. */
   def operation(cmd: Command, path: String, face: ConnectorFace,
                 dataSchema: StructType, partCols: Seq[String],
-                partSchema: StructType, delta: Boolean): RowLevelOperation =
+                partSchema: StructType, delta: Boolean,
+                keyed: Option[KeyedMerge]): RowLevelOperation = {
+    val cleared = keyed.fold(Set.empty[String])(_.cleared)
+    val verb =
+      if (keyed.exists(_.deleteOnly)) "delete" else cmd.toString.toLowerCase
     if (delta)
-      new FaceDeltaOperation(cmd, path, face, dataSchema, partCols, partSchema)
+      new FaceDeltaOperation(cmd, path, face, dataSchema, partCols, partSchema,
+        cleared, s"rowlevel_delta_$verb")
     else
-      new FaceCowOperation(cmd, path, face, dataSchema, partCols, partSchema)
+      new FaceCowOperation(cmd, path, face, dataSchema, partCols, partSchema,
+        cleared, s"rowlevel_$verb")
+  }
 
   /** Feather split size for row-level scans — the connector's default. */
   val MaxSplitBytes: Long = 128L << 20
@@ -135,6 +146,27 @@ private[graft] object FaceRowLevel {
   }
 }
 
+/** What one of the engine's keyed merges ([[graft.io.ConditionalMerge]])
+  * hands the row-level path on its statement's table handle
+  * ([[graft.catalog.GraftTable.withKeyedMerge]]):
+  *
+  *  - `cleared`: the key probe's verdict
+  *    ([[graft.io.FeatherMutations.probeTouched]]) — root-relative names
+  *    of files of the probed snapshot that provably hold no key. Every
+  *    scan of the handle drops them; a file committed after the probe
+  *    carries a name the verdict never saw and is planned, so the planned
+  *    set (the read set) stays the candidates.
+  *  - `deleteOnly`: every clause deletes, so the commit records a delete
+  *    and a snapshot stream treats it as one (its added files hold only
+  *    already-delivered survivors).
+  *
+  * A typed field, not a predicate or an option: a `_file IN (…)`
+  * conjunct in the ON condition fails Spark's copy-on-write analysis (the
+  * group-filter subquery does not carry the metadata column), and an
+  * option or conf would be a knob nothing outside the engine should set. */
+private[graft] final case class KeyedMerge(cleared: Set[String],
+                                           deleteOnly: Boolean)
+
 // ---------------------------------------------------------------------------
 // operations
 // ---------------------------------------------------------------------------
@@ -146,6 +178,8 @@ private[graft] object FaceRowLevel {
   * plans strictly before the write commits. */
 private[sources] trait RowLevelHost {
   def command(): Command
+  /** The operation name the commit records in the manifest. */
+  def opName: String
   /** COW scans are group-based: whole files, narrowed at runtime to the
     * files holding a match. Delta scans may skip batches inside kept
     * files instead. */
@@ -164,7 +198,8 @@ private[sources] final case class RowLevelScanState(
 
 private class FaceCowOperation(cmd: Command, path: String,
                                face: ConnectorFace, dataSchema: StructType,
-                               partCols: Seq[String], partSchema: StructType)
+                               partCols: Seq[String], partSchema: StructType,
+                               keyCleared: Set[String], val opName: String)
     extends RowLevelOperation with RowLevelHost {
   override def command(): Command = cmd
   override def groupBased: Boolean = true
@@ -181,7 +216,8 @@ private class FaceCowOperation(cmd: Command, path: String,
     Array(Expressions.column(GraftMetaColumns.FileName))
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new FaceScanBuilder(Some(this), face, path,
-      StructType(dataSchema.fields ++ partSchema.fields), partSchema, None)
+      StructType(dataSchema.fields ++ partSchema.fields), partSchema, None,
+      keyCleared)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new FaceCowWrite(this, info.schema(), path, face, dataSchema, partCols)
 }
@@ -194,7 +230,8 @@ private class FaceCowOperation(cmd: Command, path: String,
   * INSERT (an in-place update of an immutable part does not exist). */
 private class FaceDeltaOperation(cmd: Command, path: String,
                                  face: ConnectorFace, dataSchema: StructType,
-                                 partCols: Seq[String], partSchema: StructType)
+                                 partCols: Seq[String], partSchema: StructType,
+                                 keyCleared: Set[String], val opName: String)
     extends RowLevelOperation
     with org.apache.spark.sql.connector.write.SupportsDelta
     with RowLevelHost {
@@ -210,7 +247,8 @@ private class FaceDeltaOperation(cmd: Command, path: String,
     Array.empty
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new FaceScanBuilder(Some(this), face, path,
-      StructType(dataSchema.fields ++ partSchema.fields), partSchema, None)
+      StructType(dataSchema.fields ++ partSchema.fields), partSchema, None,
+      keyCleared)
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new FaceDeltaWrite(this, info, path, face, dataSchema, partCols)
 }
@@ -227,7 +265,8 @@ private[graft] class FaceScanBuilder(host: Option[RowLevelHost],
                                      face: ConnectorFace, path: String,
                                      fullSchema: StructType,
                                      partSchema: StructType,
-                                     pinnedVersion: Option[Long])
+                                     pinnedVersion: Option[Long],
+                                     keyCleared: Set[String] = Set.empty)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters {
   private var required: StructType = fullSchema
@@ -251,10 +290,11 @@ private[graft] class FaceScanBuilder(host: Option[RowLevelHost],
       new ParquetFaceBatchScan(face, path, required, fileFilters.toSeq,
         StructType(fullSchema.fields.filterNot(f =>
           partSchema.fieldNames.contains(f.name))),
-        partSchema, pinnedVersion, owned = fullSchema.fieldNames.toSet)
+        partSchema, pinnedVersion, owned = fullSchema.fieldNames.toSet,
+        keyCleared)
     else
       new FaceScan(host, face, path, required, fileFilters.toSeq, partSchema,
-        pinnedVersion, owned = fullSchema.fieldNames.toSet)
+        pinnedVersion, owned = fullSchema.fieldNames.toSet, keyCleared)
 }
 
 private[sources] class FaceScan(host: Option[RowLevelHost],
@@ -263,7 +303,8 @@ private[sources] class FaceScan(host: Option[RowLevelHost],
                                 fileFilters: Seq[org.apache.spark.sql.sources.Filter],
                                 partSchema: StructType,
                                 pinnedVersion: Option[Long],
-                                owned: Set[String] = Set.empty)
+                                owned: Set[String] = Set.empty,
+                                keyCleared: Set[String] = Set.empty)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeV2Filtering {
   private val feather = face eq ConnectorFace.FeatherFace
@@ -296,10 +337,14 @@ private[sources] class FaceScan(host: Option[RowLevelHost],
     // covers every row of exactly this file) and loads are merged-first
     // — O(directories) + O(kept) planning, never O(files) footer fetches
     // for a narrow statement over a wide table
+    // a key probe's verdict names files of ITS snapshot: a file
+    // committed after it (a blind append, a compaction's output) carries
+    // a name the verdict never saw, so it is planned
     val leafKept =
-      if (disc.partCols.isEmpty || fileFilters.isEmpty) disc.files
-      else disc.files.filter(
-        FeatherPartitions.survives(_, disc.partSchema, fileFilters))
+      (if (disc.partCols.isEmpty || fileFilters.isEmpty) disc.files
+       else disc.files.filter(
+         FeatherPartitions.survives(_, disc.partSchema, fileFilters)))
+        .filterNot(l => keyCleared(relOfAbs(l.file)))
     val statsByFile
         : Map[String, Option[Seq[Map[String, FeatherStats.ColStat]]]] =
       if (fileFilters.isEmpty) Map.empty
@@ -454,9 +499,11 @@ private[sources] class FaceScan(host: Option[RowLevelHost],
     val lenOf = state.snap.files.map { case (rel, len) =>
       new org.apache.hadoop.fs.Path(root, rel).toString -> len }.toMap
     // avro merged reader schema, resolved ONCE per scan and shipped via
-    // the (broadcast) factory, never per partition
-    val readerJson = face.readerJson(spark,
-      keptAbs.map(abs => (abs, lenOf(abs))))
+    // the (broadcast) factory, never per partition; a scan that planned
+    // no file (everything pruned) opens no reader and has none to resolve
+    val readerJson =
+      if (keptAbs.isEmpty) ""
+      else face.readerJson(spark, keptAbs.map(abs => (abs, lenOf(abs))))
     new FaceReaderFactory(face, readSchema0, readerJson,
       GraftHadoop.confBroadcast(spark))
   }
@@ -765,7 +812,10 @@ private[sources] object FaceConvert {
   *    files a delta delete masked entirely);
   *  - `filesKept`: planned-snapshot files carried through untouched;
   *  - `partsAdded`: parts the commit added (schema stamps included);
-  *  - `dvsBound`: deletion-vector sidecars bound. */
+  *  - `dvsBound`: deletion-vector sidecars bound;
+  *  - `filesPlanned`: files the row-level scan planned — the read set a
+  *    concurrent commit is checked against (0 for appends and
+  *    overwrites, which plan no row-level scan). */
 private[graft] object RowLevelCommitMetrics {
   // Spark's UI instantiates these by class name to aggregate the values
   sealed abstract class Sum(n: String, d: String) extends CustomSumMetric {
@@ -777,27 +827,31 @@ private[graft] object RowLevelCommitMetrics {
   final class FilesKept extends Sum("filesKept", "files kept")
   final class PartsAdded extends Sum("partsAdded", "parts added")
   final class DvsBound extends Sum("dvsBound", "deletion vectors bound")
+  final class FilesPlanned extends Sum("filesPlanned", "files planned")
 
   /** In [[Report]]'s field order. */
   def supported: Array[CustomMetric] = Array(new CommitVersion,
-    new FilesRemoved, new FilesKept, new PartsAdded, new DvsBound)
+    new FilesRemoved, new FilesKept, new PartsAdded, new DvsBound,
+    new FilesPlanned)
   private val names: Seq[String] = supported.map(_.name()).toSeq
 
   final case class Report(version: Long, filesRemoved: Int, filesKept: Int,
-                          partsAdded: Int, dvsBound: Int) {
+                          partsAdded: Int, dvsBound: Int,
+                          filesPlanned: Int = 0) {
     def toTaskMetrics: Array[CustomTaskMetric] =
       names.zip(Seq(version, filesRemoved.toLong, filesKept.toLong,
-          partsAdded.toLong, dvsBound.toLong)).map { case (n, v) =>
-        new CustomTaskMetric {
-          override def name(): String = n
-          override def value(): Long = v
-        }: CustomTaskMetric
+          partsAdded.toLong, dvsBound.toLong, filesPlanned.toLong)).map {
+        case (n, v) =>
+          new CustomTaskMetric {
+            override def name(): String = n
+            override def value(): Long = v
+          }: CustomTaskMetric
       }.toArray
   }
 
   /** A report for a statement that published nothing. */
-  def noOp(snap: FeatherSnapshots.Snapshot): Report =
-    Report(snap.version, 0, snap.files.size, 0, 0)
+  def noOp(snap: FeatherSnapshots.Snapshot, filesPlanned: Int = 0): Report =
+    Report(snap.version, 0, snap.files.size, 0, 0, filesPlanned)
 
   /** The report on an executed row-level command's plan (the plan of a
     * DataFrame built over a DELETE / UPDATE / MERGE); None when no node
@@ -810,7 +864,8 @@ private[graft] object RowLevelCommitMetrics {
     physical.collectFirst {
       case p if names.forall(p.metrics.contains) =>
         names.map(p.metrics(_).value)
-    }.map(v => Report(v(0), v(1).toInt, v(2).toInt, v(3).toInt, v(4).toInt))
+    }.map(v => Report(v(0), v(1).toInt, v(2).toInt, v(3).toInt, v(4).toInt,
+      v(5).toInt))
   }
 
   /** Both writes' side: declare the metrics, report what `commit` set. */
@@ -870,7 +925,7 @@ private class FaceCowWrite(op: RowLevelHost,
       try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
       catch { case _: Exception => () }
     }
-    val opName = s"rowlevel_${op.command().toString.toLowerCase}"
+    val opName = op.opName
     if (noneDeleted || state.keptRel.isEmpty && data.isEmpty) {
       // nothing replaced, nothing written: no version. The runtime group
       // filter may have narrowed a non-empty read set to no group (or the
@@ -880,7 +935,8 @@ private class FaceCowWrite(op: RowLevelHost,
       if (state.readRel.nonEmpty)
         FeatherSnapshots.requireReadSetCurrent(fs, root, opName, state.snap,
           state.readRel)
-      report = Some(RowLevelCommitMetrics.noOp(state.snap))
+      report = Some(RowLevelCommitMetrics.noOp(state.snap,
+        state.readRel.size))
       return
     }
     val targetV = state.snap.version + 1
@@ -904,7 +960,8 @@ private class FaceCowWrite(op: RowLevelHost,
         throw e
       }
     report = Some(RowLevelCommitMetrics.Report(version, state.keptRel.size,
-      state.snap.files.size - state.keptRel.size, added.size, 0))
+      state.snap.files.size - state.keptRel.size, added.size, 0,
+      state.readRel.size))
     if (flatStats.nonEmpty) FeatherStats.upsertMerged(fs, root, flatStats)
   }
 
@@ -926,8 +983,7 @@ private class FaceCowWrite(op: RowLevelHost,
   * (parts, sidecars, fresh DVs, leaf-stats entries) when the conflict
   * check loses. A file whose UNION'd vector covers every row
   * (stats-proven) is dropped from the manifest instead of carrying a
-  * full mask — shared with the keyed engine path through
-  * [[FeatherMutations.bindDvs]]. The commit refuses a statement whose
+  * full mask ([[FeatherMutations.bindDvs]]). The commit refuses a statement whose
   * deleted positions sum past [[FaceRowLevel.MaxDvPositionsKey]] before
   * it finalizes a part or writes a sidecar: the task commit messages
   * already brought the positions to the driver, so the cap bounds the
@@ -1001,12 +1057,12 @@ private class FaceDeltaWrite(op: RowLevelHost,
     // nothing deleted, nothing inserted: a no-match statement publishes
     // NO version (replay-clean, the COW contract)
     if (byFid.isEmpty && insertMsgs.isEmpty) {
-      report = Some(RowLevelCommitMetrics.noOp(state.snap))
+      report = Some(RowLevelCommitMetrics.noOp(state.snap,
+        state.readRel.size))
       return
     }
     val targetV = state.snap.version + 1
-    val opName =
-      s"rowlevel_delta_${op.command().toString.toLowerCase}"
+    val opName = op.opName
     val (parts, flatStats) = FaceConvert.toFaceParts(opName, face, fs, path,
       insertMsgs, dataSchema, partCols, targetV)
     // exact row counts (stats sidecars) let fully-masked files DROP from
@@ -1053,7 +1109,7 @@ private class FaceDeltaWrite(op: RowLevelHost,
       }
     report = Some(RowLevelCommitMetrics.Report(version, droppedRel.size,
       state.snap.files.size - droppedRel.size - bindings.size, added.size,
-      bindings.size))
+      bindings.size, state.readRel.size))
     if (flatStats.nonEmpty) FeatherStats.upsertMerged(fs, root, flatStats)
   }
 

@@ -786,7 +786,7 @@ private class FeatherWrite(st: StructType, path: String, truncate: Boolean,
       fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false))
     if (tableAppend && committed.isEmpty) {
       report = FeatherSnapshots.resolve(fs, out, None)
-        .map(RowLevelCommitMetrics.noOp)
+        .map(RowLevelCommitMetrics.noOp(_))
       return
     }
     // refuse a root-level append into a hive layout BEFORE renaming any

@@ -41,7 +41,8 @@ private[sources] class ParquetFaceBatchScan(
     face: ConnectorFace, path: String, required: StructType,
     fileFilters: Seq[org.apache.spark.sql.sources.Filter],
     dataSchema: StructType, partSchema: StructType,
-    pinnedVersion: Option[Long], owned: Set[String])
+    pinnedVersion: Option[Long], owned: Set[String],
+    keyCleared: Set[String])
     extends Scan with Batch with SupportsReportStatistics {
 
   private val partNames = partSchema.fieldNames.toSet
@@ -88,7 +89,7 @@ private[sources] class ParquetFaceBatchScan(
   // view), the generic scan's own, so this read and the row-level scans
   // prune files identically
   private val generic = new FaceScan(None, face, path, readSchema(),
-    fileFilters, partSchema, pinnedVersion, owned)
+    fileFilters, partSchema, pinnedVersion, owned, keyCleared)
 
   private def keptParts: Seq[FaceInputPartition] =
     generic.planned._2.toSeq.map(_.asInstanceOf[FaceInputPartition])

@@ -58,7 +58,10 @@ class ConcurrencyPropertySpec extends AnyFunSuite {
   private case class Upd(leaf: Int, k: Int) extends Op {
     val rewrites = Some(Set(leaf))
   }
-  private case class Mrg(leaf: Int) extends Op {
+  /** `wide`: the source also carries 10 001 keys above every file's
+    * range, none of them inserted — past any collect-to-driver bound, so
+    * only the engine's key probe keeps the merge's read set at its leaf. */
+  private case class Mrg(leaf: Int, wide: Boolean = false) extends Op {
     val rewrites = Some(Set(leaf))
   }
   private case class App(leaf: Int, base: Long) extends Op {
@@ -87,7 +90,7 @@ class ConcurrencyPropertySpec extends AnyFunSuite {
       m.map { case (id, (day, amt)) =>
         if (day == s"d$l" && id % 7 == k) id -> (day, amt + 100000.0)
         else id -> (day, amt) }
-    case Mrg(l) =>
+    case Mrg(l, _) =>
       val updated = m.map { case (id, (day, amt)) =>
         if (mergeIds(l).contains(id)) id -> (day, -1.0)
         else id -> (day, amt) }
@@ -105,13 +108,16 @@ class ConcurrencyPropertySpec extends AnyFunSuite {
       PredicateMutations.updateWhere(spark, path,
         Map("amt" -> (col("amt") + 100000.0)),
         Some(col("day") === s"d$l" && pmod(col("id"), lit(7L)) === k)): Unit
-    case Mrg(l) =>
+    case Mrg(l, wide) =>
       import spark.implicits._
-      val src = (mergeIds(l).map(id => (id, s"d$l", -1.0)) :+
-        ((700L + l, s"d$l", 700.0 + l))).toDF("id", "day", "amt")
+      val filler =
+        if (!wide) Nil else (0L to 10000L).map(j => (100000L + j, s"d$l", 0.0))
+      val src = (mergeIds(l).map(id => (id, s"d$l", -1.0)) ++
+        ((700L + l, s"d$l", 700.0 + l) +: filler)).toDF("id", "day", "amt")
       ConditionalMerge(spark, path, src, Seq("id"))
         .whenMatchedUpdate(None, Map("amt" -> col("source.amt")))
-        .whenNotMatchedInsertAll()
+        .whenNotMatchedInsertAll(
+          if (wide) Some(col("source.id") < 100000L) else None)
         .execute(): Unit
     case App(l, base) =>
       import spark.implicits._
@@ -157,9 +163,7 @@ class ConcurrencyPropertySpec extends AnyFunSuite {
   private def sample[A](g: Gen[A], seed: Long): A =
     g.pureApply(Gen.Parameters.default, Seed(seed))
 
-  test("54 seeded op-pair interleavings: disjoint footprints both " +
-       "commit, overlapping rewrites abort, and the surviving state is " +
-       "always a serial order of the two") {
+  private lazy val pairs: Seq[(Op, Op)] = {
     val leafGen = Gen.chooseNum(0, 2)
     val opGen: Gen[Op] = Gen.frequency(
       3 -> (for { l <- leafGen; k <- Gen.chooseNum(0, 6) } yield Del(l, k)),
@@ -168,8 +172,28 @@ class ConcurrencyPropertySpec extends AnyFunSuite {
       2 -> leafGen.map(l => App(l, 0L)), // base assigned per scenario
       1 -> Gen.const(Alter("c")),        // name assigned per scenario
       1 -> Gen.const(Compact))
-    val pairs = sample(Gen.listOfN(54, Gen.zip(opGen, opGen)), 20260816L)
+    sample(Gen.listOfN(54, Gen.zip(opGen, opGen)), 20260816L)
+  }
 
+  test("54 seeded op-pair interleavings: disjoint footprints both " +
+       "commit, overlapping rewrites abort, and the surviving state is " +
+       "always a serial order of the two") {
+    runPairs(pairs, "s")
+  }
+
+  test("the pairs holding a merge, rerun with a source of more than " +
+       "10 000 keys: the key probe keeps disjoint merges disjoint") {
+    def widen(op: Op): Op = op match {
+      case m: Mrg => m.copy(wide = true)
+      case other => other
+    }
+    runPairs(pairs.collect {
+      case (o, i) if o.isInstanceOf[Mrg] || i.isInstanceOf[Mrg] =>
+        (widen(o), widen(i))
+    }, "w")
+  }
+
+  private def runPairs(pairs: Seq[(Op, Op)], tag: String): Unit =
     pairs.zipWithIndex.foreach { case ((outer0, inner0), i) =>
       // unique append ids / column names per scenario (two App ops in
       // one scenario get distinct bases so the model stays a function)
@@ -180,7 +204,7 @@ class ConcurrencyPropertySpec extends AnyFunSuite {
       }
       val outer = fix(outer0, 0)
       val inner = fix(inner0, 1)
-      val path = tmp(s"s$i")
+      val path = tmp(s"$tag$i")
       writeInitial(path)
       val clue = s"scenario $i: outer=$outer inner=$inner"
 
@@ -221,5 +245,4 @@ class ConcurrencyPropertySpec extends AnyFunSuite {
         assert(got === innerThenOuter || got === outerThenInner,
           s"$clue: surviving state equals neither serial order")
     }
-  }
 }

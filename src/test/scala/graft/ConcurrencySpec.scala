@@ -70,9 +70,10 @@ class ConcurrencySpec extends AnyFunSuite {
     assert(after.where(col("id") === 10L).count() === 1,
       "a blind append's row is not retroactively deleted")
     assert(after.count() === 400L - 2 + 2)
-    // both commits are in the history
+    // both commits are in the history (a keyed delete commits as a
+    // row-level delete)
     val hist = FeatherSnapshots.history(fsOf(path), new Path(path))
-    assert(hist.map(_._3) === Seq("overwrite", "append", "delete"))
+    assert(hist.map(_._3) === Seq("overwrite", "append", "rowlevel_delete"))
   }
 
   test("DV delete racing a blind append commits both too") {

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.io.{ConditionalMerge, FeatherChanges}
+import graft.io.{ConditionalMerge, FeatherChanges, FeatherMutations}
 import graft.sources.FeatherSnapshots
 
 /** The Delta-shaped conditional MERGE: clause ordering, partial SET /
@@ -773,5 +773,41 @@ class ConditionalMergeSpec extends AnyFunSuite {
       .where(col("ts").isNotNull).select("ts").distinct().count()
     assert(distinctTs === 1L,
       "one statement, one instant, even through the source plan")
+  }
+
+  test("20 000 distinct keys in one of 32 range parts plan that one file " +
+       "on both strategies: ConditionalMerge, merge, deleteByKey") {
+    // spark.range slices are contiguous: part p holds ids
+    // [p·20 000, (p+1)·20 000)
+    val path = tmp("probe_20k")
+    spark.range(0L, 640000L, 1L, 32)
+      .select(col("id"), (col("id") % 7).cast("double").as("amt"))
+      .write.format("feather").mode("overwrite")
+      .option("snapshots", "true").save(path)
+    def keys(p: Int) = spark.range(p * 20000L, (p + 1) * 20000L).toDF()
+    def source(p: Int) = keys(p).select(col("id"), lit(-1.0).as("amt"))
+    def clause(p: Int) = ConditionalMerge(spark, path, source(p), Seq("id"))
+      .whenMatchedUpdate(set = Map("amt" -> col("source.amt")))
+    // each run keys its own part, so an earlier run's output never
+    // shares a key range with a later run's keys
+    val runs: Seq[(String, () => FeatherMutations.Result)] = Seq(
+      "ConditionalMerge.execute" -> (() => clause(3).execute()),
+      "ConditionalMerge.executeDV" -> (() => clause(5).executeDV()),
+      "merge" -> (() =>
+        FeatherMutations.merge(spark, path, source(7), Seq("id"))),
+      "mergeDV" -> (() =>
+        FeatherMutations.mergeDV(spark, path, source(9), Seq("id"))),
+      "deleteByKey" -> (() =>
+        FeatherMutations.deleteByKey(spark, path, keys(11), Seq("id"))),
+      "deleteByKeyDV" -> (() =>
+        FeatherMutations.deleteByKeyDV(spark, path, keys(13), Seq("id"))))
+    runs.foreach { case (what, run) =>
+      val r = run()
+      assert(r.filesPlanned === 1, s"$what must plan its one part: $r")
+      assert(r.filesTouched === 1, s"$what must change its one part: $r")
+    }
+    val back = spark.read.format("feather").load(path)
+    assert(back.count() === 640000L - 40000L)
+    assert(back.where(col("amt") === -1.0).count() === 80000L)
   }
 }

@@ -40,7 +40,8 @@ class FeatherBloomSpec extends AnyFunSuite {
     // touch every file the keys land in
     val absent = Seq(11L, 333L, 777L, 1201L, 1999L).toDF("id")
     val r = FeatherMutations.deleteByKey(spark, path, absent, Seq("id"))
-    assert(r.filesTouched === 0, s"blooms must prune absent keys: $r")
+    assert(r.filesPlanned === 0, s"blooms must prune absent keys: $r")
+    assert(r.filesTouched === 0 && r.version === 1L, s"nothing changes: $r")
     assert(spark.read.format("feather").load(path).count() === 1000)
   }
 
@@ -52,6 +53,8 @@ class FeatherBloomSpec extends AnyFunSuite {
     // two present (even) keys + two absent (odd) ones
     val keys = Seq(100L, 1500L, 101L, 1501L).toDF("id")
     val r = FeatherMutations.deleteByKey(spark, path, keys, Seq("id"))
+    // the blooms drop the absent keys' files from the plan
+    assert(r.filesPlanned >= 1 && r.filesPlanned <= 2, s"got $r")
     assert(r.filesTouched >= 1 && r.filesTouched <= 2, s"got $r")
     val after = spark.read.format("feather").load(path)
     assert(after.count() === 998)
@@ -124,7 +127,7 @@ class FeatherBloomSpec extends AnyFunSuite {
     // the clustered parts carry fresh blooms: absent-key delete touches 0
     val r = FeatherMutations.deleteByKey(spark, path,
       Seq(11L, 333L).toDF("id"), Seq("id"))
-    assert(r.filesTouched === 0, s"post-cluster blooms must prune: $r")
+    assert(r.filesPlanned === 0, s"post-cluster blooms must prune: $r")
   }
 
   test("avro face: bloom sidecars skip whole files on point lookups") {
@@ -179,7 +182,8 @@ class FeatherBloomSpec extends AnyFunSuite {
     val absent = Seq("doc_000011", "doc_000333", "doc_001999")
       .toDF("doc") // odd ids: in-range, never present
     val r = FeatherMutations.deleteByKey(spark, path, absent, Seq("doc"))
-    assert(r.filesTouched === 0, s"string blooms must prune absent keys: $r")
+    assert(r.filesPlanned === 0, s"string blooms must prune absent keys: $r")
+    assert(r.filesTouched === 0 && r.version === 1L, s"nothing changes: $r")
     assert(spark.read.format("feather").load(path).count() === 1000)
   }
 
@@ -190,6 +194,7 @@ class FeatherBloomSpec extends AnyFunSuite {
     import spark.implicits._
     val keys = Seq("doc_000100", "doc_001500", "doc_000101").toDF("doc")
     val r = FeatherMutations.deleteByKey(spark, path, keys, Seq("doc"))
+    assert(r.filesPlanned >= 1 && r.filesPlanned <= 2, s"got $r")
     assert(r.filesTouched >= 1 && r.filesTouched <= 2, s"got $r")
     val after = spark.read.format("feather").load(path)
     assert(after.count() === 998)

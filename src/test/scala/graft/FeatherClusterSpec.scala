@@ -55,14 +55,14 @@ class FeatherClusterSpec extends AnyFunSuite {
     // hash layout: a 50-key band overlaps every file's range
     val r1 = FeatherMutations.deleteByKey(spark, path,
       (100L to 149L).toDF("id"), Seq("id"))
-    assert(r1.filesTouched === 8, s"hash layout should touch all: $r1")
+    assert(r1.filesPlanned === 8, s"hash layout should plan all: $r1")
     val rc = FeatherCluster.cluster(spark, path, Seq("id"),
       targetBytes = 4096) // force several output parts at test size
     assert(rc.filesAfter > 1, s"want multiple clustered parts: $rc")
     // clustered layout: the next band touches a strict subset
     val r2 = FeatherMutations.deleteByKey(spark, path,
       (300L to 349L).toDF("id"), Seq("id"))
-    assert(r2.filesTouched < rc.filesAfter,
+    assert(r2.filesPlanned < rc.filesAfter,
       s"clustered delete must prune: $r2 of ${rc.filesAfter}")
     val left = spark.read.format("feather").load(path)
     assert(left.count() === 1900)
@@ -141,20 +141,20 @@ class FeatherClusterSpec extends AnyFunSuite {
       .option("snapshots", "true").save(path)
     val r0 = graft.io.FeatherMutations.deleteByKey(spark, path,
       spark.range(100L, 111L).select(col("id").as("y")), Seq("y"))
-    assert(r0.filesTouched === 8, s"hash layout touches all parts: $r0")
+    assert(r0.filesPlanned === 8, s"hash layout plans all parts: $r0")
     val rc = graft.io.FeatherCluster.clusterZOrder(spark, path,
       Seq("x", "y"), bitsPerDim = 10, targetBytes = 60 << 10)
     assert(rc.filesAfter >= 8, s"want a real file population: $rc")
     // a band on the SECOND dimension prunes (the z-box bounds y)
     val ry = graft.io.FeatherMutations.deleteByKey(spark, path,
       spark.range(200L, 206L).select(col("id").as("y")), Seq("y"))
-    assert(ry.filesTouched < rc.filesAfter,
-      s"y-band must touch a strict subset: $ry of ${rc.filesAfter}")
+    assert(ry.filesPlanned < rc.filesAfter,
+      s"y-band must plan a strict subset: $ry of ${rc.filesAfter}")
     // and so does a band on the first
     val rx = graft.io.FeatherMutations.deleteByKey(spark, path,
       spark.range(10L, 16L).select(col("id").as("x")), Seq("x"))
-    assert(rx.filesTouched < rc.filesAfter,
-      s"x-band must touch a strict subset: $rx of ${rc.filesAfter}")
+    assert(rx.filesPlanned < rc.filesAfter,
+      s"x-band must plan a strict subset: $rx of ${rc.filesAfter}")
     // content integrity after the three mutations
     val after = spark.read.format("feather").load(path)
     // 11 y-rows + 6 y-rows + 6 x-columns, minus the x-column cells the
@@ -184,7 +184,7 @@ class FeatherClusterSpec extends AnyFunSuite {
       (0 until 5).map(i => java.sql.Date.valueOf(
         java.time.LocalDate.of(2020, 1, 1).plusDays(290 + i).toString))
         .toDF("day"), Seq("day"))
-    assert(r0.filesTouched === 8, s"hash layout touches all parts: $r0")
+    assert(r0.filesPlanned === 8, s"hash layout plans all parts: $r0")
     val rc = graft.io.FeatherCluster.clusterZOrder(spark, path,
       Seq("day", "cat"), bitsPerDim = 10, targetBytes = 60 << 10)
     assert(rc.filesAfter >= 8, s"want a real file population: $rc")
@@ -193,14 +193,14 @@ class FeatherClusterSpec extends AnyFunSuite {
       (0 until 5).map(i => java.sql.Date.valueOf(
         java.time.LocalDate.of(2020, 1, 1).plusDays(100 + i).toString))
         .toDF("day"), Seq("day"))
-    assert(rd.filesTouched < rc.filesAfter,
-      s"date band must touch a strict subset: $rd of ${rc.filesAfter}")
+    assert(rd.filesPlanned < rc.filesAfter,
+      s"date band must plan a strict subset: $rd of ${rc.filesAfter}")
     // STRING band (sampled-rank dimension; probe via string stats)
     val rs = graft.io.FeatherMutations.deleteByKey(spark, path,
       (200 until 206).map(i => f"category_prefix_$i%03d").toDF("cat"),
       Seq("cat"))
-    assert(rs.filesTouched < rc.filesAfter,
-      s"string band must touch a strict subset: $rs of ${rc.filesAfter}")
+    assert(rs.filesPlanned < rc.filesAfter,
+      s"string band must plan a strict subset: $rs of ${rc.filesAfter}")
     // content integrity: 5 + 5 day-rows of 300, 6 cat-columns of 300
     // minus the 10-day cells those deletes already removed
     val after = spark.read.format("feather").load(path)
@@ -241,7 +241,7 @@ class FeatherClusterSpec extends AnyFunSuite {
     val rd = graft.io.FeatherMutations.deleteByKey(spark, path,
       ((100L to 120L) ++ (20500L to 20520L)).toDF("id"), Seq("id"))
     // each band hits exactly one file PER GENERATION (both clustered)
-    assert(rd.filesTouched <= 2 && rd.filesTouched < head.files.size,
+    assert(rd.filesPlanned <= 2 && rd.filesPlanned < head.files.size,
       s"banded delete must prune across generations: $rd")
     // content survives
     assert(spark.read.format("feather").load(path).count() === 21000 - 42)

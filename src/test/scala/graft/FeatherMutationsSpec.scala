@@ -46,6 +46,7 @@ class FeatherMutationsSpec extends AnyFunSuite {
       keysOf(Seq(10L, 11L, 12L, 990L)), Seq("id"))
     assert(r.version === 2L)
     // keys 10-12 and 990 live in two of the eight range-clustered parts
+    assert(r.filesPlanned === 2, s"expected 2 planned, got $r")
     assert(r.filesTouched === 2, s"expected 2 touched, got $r")
     assert(r.filesKept === 6)
     val after = spark.read.format("feather").load(path)
@@ -170,6 +171,7 @@ class FeatherMutationsSpec extends AnyFunSuite {
       .toDF("id", "grp", "pay")
     val r = FeatherMutations.merge(spark, path, src, Seq("id"))
     assert(r.filesTouched === 0, s"insert-only merge must touch nothing: $r")
+    assert(r.filesPlanned === 0, s"keys above every range plan no file: $r")
     assert(r.filesKept === 4)
     assert(spark.read.format("feather").load(path).count() === 102)
   }
@@ -655,17 +657,19 @@ class FeatherMutationsSpec extends AnyFunSuite {
       (51 to 100).map(i => (i.toLong, s"b_$i")).toDF("id", "pay")
         .repartition(1), s"$path/batch2", overwrite = true)
     FeatherSnapshots.adopt(fsOf(path), new Path(path))
+    // the refusal first: the delete's rewrite lands its parts at the
+    // root, after which only the untouched nesting would remain
+    val e = intercept[IllegalArgumentException] {
+      FeatherMutations.merge(spark, path,
+        Seq((1L, "x")).toDF("id", "pay"), Seq("id"))
+    }
+    assert(e.getMessage.contains("non-hive"))
     val r = FeatherMutations.deleteByKey(spark, path,
       keysOf(Seq(5L, 60L)), Seq("id"))
     assert(r.version === 2L)
     val after = spark.read.format("feather").load(path)
     assert(after.count() === 98)
     assert(after.where(col("id").isin(5L, 60L)).count() === 0)
-    val e = intercept[IllegalArgumentException] {
-      FeatherMutations.merge(spark, path,
-        Seq((1L, "x")).toDF("id", "pay"), Seq("id"))
-    }
-    assert(e.getMessage.contains("non-hive"))
   }
 
 
@@ -696,4 +700,93 @@ class FeatherMutationsSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("source columns"))
   }
 
+  test("merge: two source rows on one matched key fail the statement " +
+       "(MERGE_CARDINALITY_VIOLATION) and publish nothing") {
+    val path = tmp("merge_dup")
+    writeTable(path, 40, 2)
+    import spark.implicits._
+    val src = Seq((5L, "gX", "a"), (5L, "gY", "b"), (41L, "gZ", "n"))
+      .toDF("id", "grp", "pay")
+    Seq[() => FeatherMutations.Result](
+        () => FeatherMutations.merge(spark, path, src, Seq("id")),
+        () => FeatherMutations.mergeDV(spark, path, src, Seq("id")))
+      .foreach { run =>
+        val e = intercept[org.apache.spark.SparkThrowable](run())
+        assert(e.getCondition === "MERGE_CARDINALITY_VIOLATION")
+      }
+    assert(FeatherSnapshots.latestVersion(fsOf(path), new Path(path))
+      === Some(1L))
+    // duplicates among UNMATCHED keys insert, as an INSERT would
+    FeatherMutations.merge(spark, path,
+      Seq((50L, "gX", "a"), (50L, "gY", "b")).toDF("id", "grp", "pay"),
+      Seq("id"))
+    assert(spark.read.format("feather").load(path)
+      .where(col("id") === 50L).count() === 2)
+  }
+
+  test("a merge or CDC batch that changes nothing publishes no version") {
+    val path = tmp("noop_batches")
+    writeTable(path, 40, 2)
+    import spark.implicits._
+    val fs = fsOf(path)
+    def head = FeatherSnapshots.latestVersion(fs, new Path(path)).get
+    // an empty upsert batch
+    val empty = Seq.empty[(Long, String, String)].toDF("id", "grp", "pay")
+    assert(FeatherMutations.merge(spark, path, empty, Seq("id")).version
+      === 1L)
+    // tombstones for absent keys, copy-on-write and merge-on-read
+    val gone = Seq((99L, null: String, null: String, true))
+      .toDF("id", "grp", "pay", "_deleted")
+    val r = FeatherMutations.applyCdc(spark, path, gone, Seq("id"))
+    assert(r.version === 1L && r.filesTouched === 0, s"got $r")
+    assert(FeatherMutations.applyCdcDV(spark, path, gone, Seq("id")).version
+      === 1L)
+    assert(head === 1L)
+    assert(spark.read.format("feather").load(path).count() === 40)
+  }
+
+  test("an evolving merge commits its ADD COLUMNS first: a merge that " +
+       "then fails leaves the new column and no row change") {
+    val path = tmp("evolve_fail")
+    writeTable(path, 40, 2)
+    import spark.implicits._
+    val dup = Seq((5L, "gX", "a", 0.5), (5L, "gY", "b", 0.7))
+      .toDF("id", "grp", "pay", "score")
+    val e = intercept[org.apache.spark.SparkThrowable] {
+      FeatherMutations.merge(spark, path, dup, Seq("id"), evolveSchema = true)
+    }
+    assert(e.getCondition === "MERGE_CARDINALITY_VIOLATION")
+    val fs = fsOf(path)
+    assert(FeatherSnapshots.latestVersion(fs, new Path(path)) === Some(2L))
+    val back = spark.read.format("feather")
+      .option("mergeSchema", "true").load(path)
+    assert(back.columns.toSeq === Seq("id", "grp", "pay", "score"))
+    assert(back.count() === 40)
+    assert(back.where(col("score").isNotNull).count() === 0)
+    assert(back.where(col("id") === 5L).select("pay").head().getString(0)
+      === "p_5")
+  }
+
+  test("applyCdc with evolveSchema adds the change batch's new columns, " +
+       "never the tombstone") {
+    val path = tmp("cdc_evolve")
+    writeTable(path, 40, 2)
+    import spark.implicits._
+    val changes = Seq(
+      (5L, "gX", "u5", Option(0.5), false),
+      (6L, null: String, null: String, Option.empty[Double], true),
+      (41L, "gN", "n41", Option(0.9), false))
+      .toDF("id", "grp", "pay", "score", "_deleted")
+    FeatherMutations.applyCdc(spark, path, changes, Seq("id"),
+      evolveSchema = true)
+    val back = spark.read.format("feather")
+      .option("mergeSchema", "true").load(path)
+    assert(back.columns.toSeq === Seq("id", "grp", "pay", "score"))
+    assert(back.count() === 40)
+    assert(back.where(col("id") === 6L).count() === 0)
+    assert(back.where(col("id") === 5L).select("score").head()
+      .getDouble(0) === 0.5)
+    assert(back.where(col("id") === 41L).select("pay").head()
+      .getString(0) === "n41")
+  }
 }

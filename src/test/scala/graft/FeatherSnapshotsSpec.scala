@@ -751,7 +751,8 @@ class FeatherSnapshotsSpec extends AnyFunSuite {
     // history() describes all four commits
     val h = FeatherSnapshots.history(fs, new Path(path))
     assert(h.map(_._1) === Seq(1L, 2L, 3L, 4L))
-    assert(h.map(_._3) === Seq("overwrite", "append", "delete", "restore"))
+    assert(h.map(_._3) ===
+      Seq("overwrite", "append", "rowlevel_delete", "restore"))
     assert(h.head._5 === h.last._5, "restore references v1's exact files")
     // a restore whose target is expired is loud
     FeatherSnapshots.expire(fs, new Path(path), keepLast = 1)

@@ -60,7 +60,7 @@ class SqlMaintenanceSpec extends AnyFunSuite {
     val h = spark.sql(s"SELECT version, op FROM graft_history('$path') " +
       "ORDER BY version").collect()
     assert(h.map(r => (r.getLong(0), r.getString(1))).toSeq ===
-      Seq((1L, "overwrite"), (2L, "delete")))
+      Seq((1L, "overwrite"), (2L, "rowlevel_delete")))
   }
 
   test("graft_optimize compacts through SQL and reports the rewrite") {
