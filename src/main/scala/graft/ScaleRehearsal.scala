@@ -1520,29 +1520,9 @@ object ScaleRehearsal {
       val rb = graft.io.FeatherMutations.deleteByKey(
         spark, dir, inBandAbsent, Seq("id"))
       val bloomProbeSec = (System.nanoTime() - t3) / 1e9
-      // the blooms are advisory (fpp 0.001): the probe must plan exactly
-      // the files whose range covers a probe key AND whose bloom admits
-      // one — zero unless a bloom answers a false positive
-      val conf = spark.sparkContext.hadoopConfiguration
-      val probeKeys = (lo + 1000L) until (lo + 1200L)
-      val admitted = graft.sources.FeatherSnapshots
-        .resolve(fs, new org.apache.hadoop.fs.Path(dir), None).get.files
-        .map { case (rel, len) => (s"$dir/$rel", len) }
-        .count { case (abs, len) =>
-          graft.io.FeatherStats.loadForFiles(conf, Seq((abs, len)))
-            .getOrElse(abs, None).forall { batches =>
-              val rs = batches.flatMap(_.get("id")).collect {
-                case graft.io.FeatherStats.ColStat.Longs(a, b) => (a, b) }
-              rs.isEmpty || probeKeys.exists(k =>
-                rs.map(_._1).min <= k && k <= rs.map(_._2).max)
-            } &&
-            graft.io.FeatherBloom.load(conf, abs, len, "id")
-              .forall(bf => probeKeys.exists(bf.mightContainLong(_)))
-        }
-      require(rb.filesPlanned == admitted && rb.filesTouched == 0,
-        s"bloom must prune an in-range absent-key delete to the files " +
-          s"whose bloom admits a key ($admitted): $rb")
-      println(f"""{"mutation_rows":$n,"parts":$parts,"del_planned":${rd.filesPlanned},"del_touched":${rd.filesTouched},"del_sec":$delSec%.2f,"merge_planned":${rm.filesPlanned},"merge_touched":${rm.filesTouched},"merge_sec":$mrgSec%.2f,"bloom_files":$nb,"bloom_build_sec":$bloomBuildSec%.2f,"no_bloom_planned":${rNoBloom.filesPlanned},"bloom_planned":${rb.filesPlanned},"bloom_false_positive_files":$admitted,"bloom_probe_sec":$bloomProbeSec%.2f}""")
+      require(rb.filesPlanned == 0 && rb.filesTouched == 0,
+        s"bloom must prune an in-range absent-key delete to zero: $rb")
+      println(f"""{"mutation_rows":$n,"parts":$parts,"del_planned":${rd.filesPlanned},"del_touched":${rd.filesTouched},"del_sec":$delSec%.2f,"merge_planned":${rm.filesPlanned},"merge_touched":${rm.filesTouched},"merge_sec":$mrgSec%.2f,"bloom_files":$nb,"bloom_build_sec":$bloomBuildSec%.2f,"no_bloom_planned":${rNoBloom.filesPlanned},"bloom_planned":${rb.filesPlanned},"bloom_probe_sec":$bloomProbeSec%.2f}""")
       (delSec, mrgSec)
     }
     println(f"""{"mutation_tier":"feather","table_ratio":10,"del_wall_ratio":${results(1)._1 / results(0)._1}%.2f,"merge_wall_ratio":${results(1)._2 / results(0)._2}%.2f}""")

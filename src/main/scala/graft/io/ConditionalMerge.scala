@@ -54,8 +54,10 @@ import graft.sources.{FeatherPartitions, FeatherSnapshots, KeyedMerge, RowLevelC
   * ([[graft.catalog.GraftTable.withKeyedMerge]]) and its scans drop
   * them, so both strategies plan — and a concurrent commit is checked
   * against — only the candidates, at any key count. A file committed
-  * after the probe is planned. The copy-on-write rewrite then keeps only
-  * the files that hold a match (the runtime `_file` filter); a
+  * after the probe is planned. The source is persisted for the
+  * statement (unless the caller already did), so the probe and the
+  * statement's reads evaluate it once. The copy-on-write rewrite then
+  * keeps only the files that hold a match (the runtime `_file` filter); a
   * `whenNotMatchedBySource` clause rewrites every file, and a merge that
   * evolves the schema plans every file (Spark reloads the table after
   * its ADD COLUMNS, a handle without the verdict). Merge-on-read masks
@@ -253,41 +255,49 @@ final case class ConditionalMerge(
         source.columns.exists(c => !in(table.fieldNames)(c)) ||
       (matched.collect { case (_, Update(set)) => set.keys }.flatten ++
         notMatched.flatMap(_._2.keys)).exists(fresh))
-    val cleared: Set[String] = snap match {
-      case Some(s) if bySource.isEmpty && !evolving =>
-        val tableKeys =
-          keyCols.map(FeatherMutations.canonicalName(table, caseSensitive))
-        val keys = source.select(keyCols.zip(tableKeys).map { case (k, t) =>
-          source(k).as(t) }: _*)
-        val absFiles = s.files.map { case (r, len) =>
-          (new Path(root, r).toString, len) }
-        val touched = FeatherMutations.probeTouched(spark, absFiles, table,
-          keys, tableKeys)
-        s.files.indices.filterNot(touched).map(s.files(_)._1).toSet
-      case _ => Set.empty
-    }
-    val rel =
-      if (cleared.isEmpty && writesRows) rel0
-      else rel0.copy(table = rel0.table.asInstanceOf[GraftTable]
-        .withKeyedMerge(KeyedMerge(cleared, deleteOnly = !writesRows)))
-    def expr(c: Column) = Bridge.convertedExpression(spark, c)
-    def assign(set: Map[String, Column]) = set.toSeq.map { case (c, e) =>
-      Assignment(UnresolvedAttribute.quoted(c), expr(e)) }
-    def action(cond: Option[Column], a: MatchedAction): MergeAction = a match {
-      case Update(set) => UpdateAction(cond.map(expr), assign(set), false)
-      case UpdateAll => UpdateStarAction(cond.map(expr))
-      case Delete => DeleteAction(cond.map(expr))
-    }
-    val plan = MergeIntoTable(SubqueryAlias("target", rel),
-      SubqueryAlias("source", source.queryExecution.analyzed), on,
-      matched.map { case (c, a) => action(c, a) },
-      notMatched.map {
-        case (c, values) if values.isEmpty => InsertStarAction(c.map(expr))
-        case (c, values) => InsertAction(c.map(expr), assign(values))
-      },
-      bySource.map { case (c, a) => action(c, a) },
-      evolveSchema)
-    PredicateMutations.commitReport(spark, plan, s"merge on $path")
+    // the source is evaluated once: the probe reads it, and so does the
+    // statement — twice on copy-on-write (the runtime filter's
+    // matching-rows query, then the rewrite). A foreachBatch source
+    // built from an expensive plan must not re-execute per pass.
+    val (src, ownSrc) = ConnectorFace.pinIfUncached(source)
+    try {
+      val cleared: Set[String] = snap match {
+        case Some(s) if bySource.isEmpty && !evolving =>
+          val tableKeys =
+            keyCols.map(FeatherMutations.canonicalName(table, caseSensitive))
+          val keys = src.select(keyCols.zip(tableKeys).map { case (k, t) =>
+            src(k).as(t) }: _*)
+          val absFiles = s.files.map { case (r, len) =>
+            (new Path(root, r).toString, len) }
+          val touched = FeatherMutations.probeTouched(spark, absFiles, table,
+            keys, tableKeys)
+          s.files.indices.filterNot(touched).map(s.files(_)._1).toSet
+        case _ => Set.empty
+      }
+      val rel =
+        if (cleared.isEmpty && writesRows) rel0
+        else rel0.copy(table = rel0.table.asInstanceOf[GraftTable]
+          .withKeyedMerge(KeyedMerge(cleared, deleteOnly = !writesRows)))
+      def expr(c: Column) = Bridge.convertedExpression(spark, c)
+      def assign(set: Map[String, Column]) = set.toSeq.map { case (c, e) =>
+        Assignment(UnresolvedAttribute.quoted(c), expr(e)) }
+      def action(cond: Option[Column], a: MatchedAction): MergeAction =
+        a match {
+          case Update(set) => UpdateAction(cond.map(expr), assign(set), false)
+          case UpdateAll => UpdateStarAction(cond.map(expr))
+          case Delete => DeleteAction(cond.map(expr))
+        }
+      val plan = MergeIntoTable(SubqueryAlias("target", rel),
+        SubqueryAlias("source", src.queryExecution.analyzed), on,
+        matched.map { case (c, a) => action(c, a) },
+        notMatched.map {
+          case (c, values) if values.isEmpty => InsertStarAction(c.map(expr))
+          case (c, values) => InsertAction(c.map(expr), assign(values))
+        },
+        bySource.map { case (c, a) => action(c, a) },
+        evolveSchema)
+      PredicateMutations.commitReport(spark, plan, s"merge on $path")
+    } finally if (ownSrc) src.unpersist()
   }
 }
 

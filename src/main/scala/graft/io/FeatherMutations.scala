@@ -89,8 +89,9 @@ object FeatherMutations {
   }
 
   /** Drop every table row whose `keyCols` tuple appears in `keys`,
-    * copy-on-write. Any layout: a delete writes no row, so nested
-    * non-hive directories are fine. */
+    * copy-on-write. Any layout: a delete writes no new row, so nested
+    * non-hive directories are fine — though the rewritten survivors of
+    * a non-hive leaf land as parts at the table root. */
   def deleteByKey(spark: SparkSession, path: String, keys: DataFrame,
                   keyCols: Seq[String]): Result =
     Result.of(keyedDelete(spark, path, keys, keyCols).report("graft"))

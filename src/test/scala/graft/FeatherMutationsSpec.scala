@@ -657,19 +657,30 @@ class FeatherMutationsSpec extends AnyFunSuite {
       (51 to 100).map(i => (i.toLong, s"b_$i")).toDF("id", "pay")
         .repartition(1), s"$path/batch2", overwrite = true)
     FeatherSnapshots.adopt(fsOf(path), new Path(path))
-    // the refusal first: the delete's rewrite lands its parts at the
-    // root, after which only the untouched nesting would remain
-    val e = intercept[IllegalArgumentException] {
-      FeatherMutations.merge(spark, path,
-        Seq((1L, "x")).toDF("id", "pay"), Seq("id"))
-    }
+    def merge() = FeatherMutations.merge(spark, path,
+      Seq((1L, "x")).toDF("id", "pay"), Seq("id"))
+    val e = intercept[IllegalArgumentException](merge())
     assert(e.getMessage.contains("non-hive"))
+    // the delete reads any layout
     val r = FeatherMutations.deleteByKey(spark, path,
       keysOf(Seq(5L, 60L)), Seq("id"))
-    assert(r.version === 2L)
+    assert(r.version === 2L && r.filesTouched === 2)
     val after = spark.read.format("feather").load(path)
     assert(after.count() === 98)
     assert(after.where(col("id").isin(5L, 60L)).count() === 0)
+    // both leaves held a key: the copy-on-write rewrite replaced each
+    // leaf's one file with parts at the table root, so no nested
+    // directory is left in the manifest
+    val files = FeatherSnapshots.resolve(fsOf(path), new Path(path), None)
+      .get.files.map(_._1)
+    assert(files.nonEmpty && files.forall(!_.contains("/")),
+      s"rewritten parts land at the root: ${files.mkString(", ")}")
+    // so the refusal no longer applies: a flat table routes clause
+    // output, and the merge runs
+    assert(merge().version === 3L)
+    val merged = spark.read.format("feather").load(path)
+    assert(merged.count() === 98)
+    assert(merged.where(col("id") === 1L).head().getString(1) === "x")
   }
 
 
@@ -743,6 +754,31 @@ class FeatherMutationsSpec extends AnyFunSuite {
       === 1L)
     assert(head === 1L)
     assert(spark.read.format("feather").load(path).count() === 40)
+  }
+
+  test("a merge evaluates its source once: the key probe and both " +
+       "strategies' reads share one pinned evaluation") {
+    Seq(false, true).foreach { dv =>
+      val path = tmp(s"source_once_$dv")
+      writeTable(path, 40, 2)
+      // deterministic, so the merge accepts it; counts every evaluation
+      val evals = spark.sparkContext.longAccumulator(s"source_evals_$dv")
+      val tagged = udf { (id: Long) => evals.add(1); id }
+      val src = spark.range(30, 50).select(tagged(col("id")).as("id"))
+        .select(col("id"), concat(lit("g"), col("id") % 3).as("grp"),
+          concat(lit("new_"), col("id")).as("pay"))
+      val r =
+        if (dv) FeatherMutations.mergeDV(spark, path, src, Seq("id"))
+        else FeatherMutations.merge(spark, path, src, Seq("id"))
+      assert(r.version === 2L, s"dv=$dv: $r")
+      assert(evals.value === 20L,
+        s"dv=$dv: the source ran ${evals.value / 20.0} times")
+      val after = spark.read.format("feather").load(path)
+      assert(after.count() === 49)
+      assert(after.where(col("pay").startsWith("new_")).count() === 20)
+      assert(src.storageLevel ===
+        org.apache.spark.storage.StorageLevel.NONE, "unpinned after")
+    }
   }
 
   test("an evolving merge commits its ADD COLUMNS first: a merge that " +
