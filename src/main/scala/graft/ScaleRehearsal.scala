@@ -264,7 +264,8 @@ object ScaleRehearsal {
 
   /** IO tier: the hand-rolled sources (GraftAvro, GraftFeather) against
     * parquet on the documents corpus at sf0.1 and 10× — write wall, read
-    * wall, and read-task parallelism. The scale claims under test: both
+    * wall (feather with its default LZ4 codec and with `codec=none`), and
+    * read-task parallelism. The scale claims under test: both
     * custom sinks write one part per partition (so writes parallelize like
     * parquet), and both readers SPLIT (sync-marker ranges / footer-indexed
     * batches), so reads never serialize into one task even on few files. */
@@ -282,6 +283,9 @@ object ScaleRehearsal {
       val wp = med3(() => docs.write.mode("overwrite").parquet(s"$out/p"))
       val wa = med3(() => graft.io.GraftAvro.write(docs, s"$out/a", overwrite = true))
       val wf = med3(() => graft.io.GraftFeather.write(docs, s"$out/f", overwrite = true))
+      // the same corpus uncompressed: the codec's share of feather IO
+      val wn = med3(() => graft.io.GraftFeather.write(docs, s"$out/fn",
+        codec = "none", overwrite = true))
       def noop(df: org.apache.spark.sql.DataFrame): Unit =
         df.write.format("noop").mode("overwrite").save()
       val rp = med3(() => noop(spark.read.parquet(s"$out/p")))
@@ -291,11 +295,13 @@ object ScaleRehearsal {
         maxSplitBytes = 4L << 20)))
       val rf = med3(() => noop(graft.io.GraftFeather.read(spark, s"$out/f",
         maxSplitBytes = 4L << 20)))
+      val rn = med3(() => noop(graft.io.GraftFeather.read(spark, s"$out/fn",
+        maxSplitBytes = 4L << 20)))
       val tasksA = graft.io.GraftAvro.read(spark, s"$out/a",
         maxSplitBytes = 4L << 20).rdd.getNumPartitions
       val tasksF = graft.io.GraftFeather.read(spark, s"$out/f",
         maxSplitBytes = 4L << 20).rdd.getNumPartitions
-      println(f"""{"io_tier":"$tag","write_parquet_sec":$wp%.2f,"write_avro_sec":$wa%.2f,"write_feather_sec":$wf%.2f,"read_parquet_sec":$rp%.2f,"read_avro_sec":$ra%.2f,"read_feather_sec":$rf%.2f,"avro_read_tasks":$tasksA,"feather_read_tasks":$tasksF}""")
+      println(f"""{"io_tier":"$tag","write_parquet_sec":$wp%.2f,"write_avro_sec":$wa%.2f,"write_feather_sec":$wf%.2f,"read_parquet_sec":$rp%.2f,"read_avro_sec":$ra%.2f,"read_feather_sec":$rf%.2f,"write_feather_none_sec":$wn%.2f,"read_feather_none_sec":$rn%.2f,"avro_read_tasks":$tasksA,"feather_read_tasks":$tasksF}""")
     }
   }
 

@@ -33,12 +33,13 @@ import org.apache.spark.sql.types._
   * — same contract as the reference's feather passthrough, which also
   * materializes whole record batches.
   *
-  * Compressed buffer support (LZ4_FRAME / ZSTD — what pandas
-  * `to_feather` emits by default) comes from the bundled
-  * arrow libs (LZ4 routed through the bundled lz4-java —
-  * `GraftArrowCompression` — the stock commons-compress LZ4 measured
-  * ~20× slow) on the read side and
-  * the `ArrowFileWriter` codec constructor on the write side.
+  * Compressed buffers (LZ4_FRAME / ZSTD — pandas `to_feather` emits
+  * LZ4_FRAME by default) go through [[GraftArrowCompression]] in both
+  * directions: LZ4 frames are built and parsed over the bundled
+  * lz4-java's block API straight between Arrow buffers (the
+  * commons-compress LZ4 of the stock factory measured ~20× slow, and
+  * lz4-java's frame streams allocate 8 MB of heap per buffer); pyarrow's
+  * linked-block frames over 64 KB and ZSTD go to the stock factory.
   *
   * Unsigned integer columns widen exactly like the parquet unsigned
   * ingest path (SURVEY §1.2): UINT8→Short, UINT16→Int, UINT32→Long,

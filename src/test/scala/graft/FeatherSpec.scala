@@ -23,6 +23,17 @@ class FeatherSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private def tmp(n: String) = s"${sys.props("java.io.tmpdir")}/graft_feather_test/$n"
 
+  /** Copies a test resource `<name>.feather` to a temp file. */
+  private def resourceFile(name: String): String = {
+    val res = getClass.getResourceAsStream(s"/$name.feather")
+    assert(res != null, "fixture missing from test classpath")
+    val f = java.io.File.createTempFile(name, ".feather")
+    f.deleteOnExit()
+    java.nio.file.Files.copy(res, f.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    f.getAbsolutePath
+  }
+
   private def allTypesDf = {
     import spark.implicits._
     val rows = (1 to 500).map { i =>
@@ -186,13 +197,7 @@ class FeatherSpec extends AnyFunSuite {
     // compression) — third-party provenance, not our writer. Columns:
     // int64, uint16, nullable string, double-with-NaN, bool,
     // datetime64[ns], date32, list<int64>.
-    val res = getClass.getResourceAsStream("/pandas_foreign.feather")
-    assert(res != null, "fixture missing from test classpath")
-    val f = java.io.File.createTempFile("pandas_foreign", ".feather")
-    f.deleteOnExit()
-    java.nio.file.Files.copy(res, f.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val df = GraftFeather.read(spark, f.getAbsolutePath)
+    val df = GraftFeather.read(spark, resourceFile("pandas_foreign"))
     assert(df.schema.map(x => (x.name, x.dataType)) === Seq(
       ("id", LongType), ("u16", IntegerType), ("name", StringType),
       ("score", DoubleType), ("flag", BooleanType),
@@ -215,6 +220,27 @@ class FeatherSpec extends AnyFunSuite {
     assert(rows(0).getDouble(3) === 1.0 / 3.0)
     // pandas None string IS null
     assert(rows(8).isNullAt(2))
+  }
+
+  test("reads pyarrow's linked-block LZ4 frames (buffers over 64 KB)") {
+    // src/test/resources/pyarrow_linked.feather: emitted once by
+    // pyarrow 16.1 `feather.write_feather(compression='lz4')` over three
+    // record batches (8400, 1000, 600 rows) of k = i / 100 (int64) and
+    // s = f"key_{i % 500:03d}_of_the_fixture" (utf8), i in 0 until 10000 —
+    // third-party provenance, not our writer. The first batch's k (67 200
+    // bytes) and s data (184 800 bytes) buffers exceed 64 KB, so pyarrow
+    // wrote them as linked-block frames (FLG 0x40, 64 KB blocks) whose
+    // later blocks copy from earlier ones.
+    val df = GraftFeather.read(spark, resourceFile("pyarrow_linked"))
+    val r = df.agg(count(lit(1)), sum("k"), countDistinct("s"),
+      sum(length(col("s")))).head()
+    assert(r.getLong(0) === 10000L)
+    assert(r.getLong(1) === 495000L)
+    assert(r.getLong(2) === 500L)
+    assert(r.getLong(3) === 220000L)
+    val edge = df.where(col("k") === 83 || col("k") === 99).orderBy("s").collect()
+    assert(edge.head === Row(83L, "key_300_of_the_fixture"))
+    assert(edge.last === Row(99L, "key_499_of_the_fixture"))
   }
 
   test("a part file missing a projected column fails with the FILE name") {
