@@ -841,10 +841,13 @@ object ScaleRehearsal {
     *      slice, not the table;
     *  (b) dynamic INSERT OVERWRITE replaces exactly the leaves the
     *      query's rows land in, same untouched-leaf requirement —
-    *      re-running one day's job at 100 TB swaps one day's files. */
+    *      re-running one day's job at 100 TB swaps one day's files.
+    * It opens with the 64-leaf feather write timing
+    * ([[partitionedWrites]]). */
   def replaceOverwriteTier(spark: SparkSession, out: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    partitionedWrites(spark, s"$out/pw64")
     val days = 20
     def leafFiles(dir: String, day: Int): Set[(String, Long)] = {
       val d = new java.io.File(s"$dir/day=d$day")
@@ -920,6 +923,54 @@ object ScaleRehearsal {
       println(f"  n=$n%8d tableBytes=$total%11d replaceWhere=$rw%6.2fs " +
         f"newBytes=$rwB%9d dynOverwrite=$ov%6.2fs newBytes=$ovB%9d")
     }
+  }
+
+  /** Partitioned feather writes (the replovr tier's first receipt): a
+    * 1M-row CTAS into 64 `day` leaves, then one SQL INSERT of 64 000 rows
+    * touching all 64 — the statements whose commit-time routing cost
+    * grows with the leaf count. Prints seconds and Spark jobs for each;
+    * one part per leaf per statement is REQUIREd. */
+  private def partitionedWrites(spark: SparkSession, dir: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(conf)
+    fs.delete(root, true)
+    def timedJobs(stmt: String): (Double, Int) = {
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(): Unit
+      }
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+      sc.addSparkListener(l)
+      val t0 = System.nanoTime()
+      try {
+        spark.sql(stmt).collect()
+        org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+      } finally sc.removeSparkListener(l)
+      ((System.nanoTime() - t0) / 1e9, jobs.get())
+    }
+    def rows(lo: Long, hi: Long) =
+      "SELECT id, id * 3 AS v, concat('pay_', id) AS pay, " +
+        s"CAST(id % 64 AS INT) AS day FROM range($lo, $hi)"
+    def partsPerLeaf: Map[String, Int] =
+      graft.sources.FeatherSnapshots.resolve(fs, root, None).get.files
+        .groupBy { case (rel, _) => rel.substring(0, rel.lastIndexOf('/')) }
+        .map { case (leaf, fs) => leaf -> fs.size }
+    val (ctasSec, ctasJobs) = timedJobs(s"CREATE TABLE graft.`$dir` " +
+      s"USING feather PARTITIONED BY (day) AS ${rows(0L, 1000000L)}")
+    require(partsPerLeaf.size == 64 && partsPerLeaf.values.forall(_ == 1),
+      s"CTAS must land one part in each of 64 leaves: $partsPerLeaf")
+    val (insSec, insJobs) = timedJobs(
+      s"INSERT INTO graft.`$dir` ${rows(1000000L, 1064000L)}")
+    require(partsPerLeaf.size == 64 && partsPerLeaf.values.forall(_ == 2),
+      s"the INSERT must add one part to each of 64 leaves: $partsPerLeaf")
+    println(f"""{"partitioned_writes_leaves":64,"ctas_rows":1000000,""" +
+      f""""ctas_sec":$ctasSec%.2f,"ctas_jobs":$ctasJobs,""" +
+      f""""insert_rows":64000,"insert_sec":$insSec%.2f,""" +
+      f""""insert_jobs":$insJobs}""")
   }
 
   /** PREDICATE-DML tier (r14, PredicateMutations): the structural

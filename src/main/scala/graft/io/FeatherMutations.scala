@@ -275,13 +275,12 @@ object FeatherMutations {
   /** WALL-CLOCK pin of replaceWhere: rewrite clock functions in a user
     * expression to LITERALS of one per-statement instant. The statement
     * evaluates its expressions in several separate Spark jobs (pruning
-    * fold, limit-1 probe, survivor rewrite, and routePartitionedInserts'
-    * distinct() + per-leaf scans, where persist is only best-effort under
-    * eviction/task retry) — left unpinned,
+    * fold, limit-1 probe, survivor rewrite, where persist is only
+    * best-effort under eviction/task retry) — left unpinned,
     * current_timestamp()/current_date() would evaluate at a DIFFERENT
     * instant per job: pruning could drop files the executed predicate
-    * matches, and a routed write could route on one timestamp and write
-    * another. The clock functions arrive as UNRESOLVED nodes here —
+    * matches, and the rewrite could write rows the probe never saw. The
+    * clock functions arrive as UNRESOLVED nodes here —
     * functions.current_timestamp() lowers to UnresolvedFunction, the
     * bare SQL keyword to a one-part UnresolvedAttribute (claimed only
     * when no real column in `shadowNames` shadows the name, mirroring
@@ -357,11 +356,12 @@ object FeatherMutations {
 
   /** [[pinClock]] for a whole ANALYZED frame (the INSERT statement's
     * query): resolved clock calls anywhere in the plan pin to literals
-    * of one per-statement instant — the routed partitioned write
-    * evaluates the plan in several jobs (distinct() + per-leaf slices,
-    * persist best-effort), and `INSERT ... SELECT current_timestamp()`
-    * must write ONE instant, not one per leaf. Only the RESOLVED
-    * spellings appear in an analyzed plan. */
+    * of one per-statement instant — the insert evaluates the plan in
+    * two jobs (the emptiness probe and the write, whose persist is
+    * best-effort, so a partition the probe cached carries the probe's
+    * evaluation), and `INSERT ... SELECT current_timestamp()` must write
+    * ONE instant. Only the RESOLVED spellings appear in an analyzed
+    * plan. */
   private[io] def pinClockInPlan(spark: SparkSession, df: DataFrame,
                                  nowInstant: java.time.Instant): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions._
@@ -483,17 +483,21 @@ object FeatherMutations {
       (if (relDir.isEmpty) name else s"$relDir/$name", len)
     }
 
-  /** Partitioned insert routing shared by the row-level writes, the
-    * partitioned appends and replaceWhere:
-    * source rows land in the leaf THEIR partition values name (the hive
-    * contract: a matched key whose source row carries different
-    * partition values moves partitions — delete-here + insert-there,
-    * both inside the one manifest commit). The distinct partition tuples
-    * of the source collect to the driver: partition-count-sized (a
-    * correction batch touches few partitions), never row-count-sized.
-    * Returns the (rel path, len) parts written.
+  /** Partitioned insert routing for the DataFrame writers — CTAS and
+    * REPLACE ([[TableDdl]], the staged SQL CTAS / REPLACE included),
+    * [[TableInserts]] and replaceWhere: source rows land in the leaf
+    * THEIR partition values name (the hive contract — a matched
+    * key whose source row carries other partition values moves leaves).
+    * ONE distributed pass: the rows cluster by the partition columns,
+    * the task holding a leaf writes its parts ([[LeafParts]], the SQL
+    * writes' task writer), and the driver lands them ([[LeafWriter.land]])
+    * — no distinct pass, no per-leaf job, no persist of the source, and a
+    * row's leaf and content come from one evaluation of it. Tmp parts of
+    * a failed or losing task attempt are swept by the run prefix. Returns
+    * the (rel path, len, stats JSON) parts; the CALLER folds the merged
+    * stats after its manifest commit ([[LeafWriter.foldStats]]).
     *
-    * `partsFor(escapedRelDir)` sizes the write per leaf — 1 for insert
+    * `partsFor(escapedRelDir)` sizes a leaf's parts — 1 for insert
     * batches (the default; a correction batch per leaf is small), the
     * leaf's rewritten-file count for replaceWhere's survivor rewrite
     * (whose routed output carries every candidate row, not just the
@@ -501,64 +505,38 @@ object FeatherMutations {
     * stable). */
   private[graft] def routePartitionedInserts(op: String, face: ConnectorFace,
                                       fs: org.apache.hadoop.fs.FileSystem,
-                                      root: Path, src0: DataFrame,
+                                      root: Path, src: DataFrame,
                                       partCols: Seq[String],
                                       tableSchema: StructType,
                                       prefix: String, codec: String,
-                                      partsFor: String => Int = _ => 1)
-      : Seq[(String, Long)] = {
-    val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    // one source scan feeds the distinct() AND every per-tuple slice —
-    // an expensive upstream plan must not re-execute once per partition.
-    // A frame the caller already persisted (replaceWhere pins its data)
-    // is reused as-is; unpersisting it here would evict the caller's
-    // cache.
-    val (src, owned) = ConnectorFace.pinIfUncached(src0)
+                                      partsFor: Map[String, Int] = Map.empty)
+      : Seq[(String, Long, String)] = {
+    val spark = src.sparkSession
+    val rows = src.select((tableSchema.fieldNames.toSeq ++ partCols)
+        .map(col): _*)
+      .repartition(partCols.map(col): _*)
+      .sortWithinPartitions(partCols.map(col): _*)
+    val st = rows.schema
+    val sinks = PartSinks(spark, face,
+      StructType(st.fields.take(tableSchema.size)), codec)
+    val confMap = GraftHadoop.confBroadcast(spark)
+    val rootStr = root.toString
+    val stem = s".$prefix"
     try {
-      // Spark's Hive escaping — the SAME encoding the partitioned sink
-      // writes (ParquetTable) and every reader unescapes; URLEncoder's
-      // space→'+' would land key=a+b and read back the literal "a+b"
-      def enc(v: String) = graft.sources.FeatherPartitions.escapePath(v)
-      def leafOf(row: org.apache.spark.sql.Row): String =
-        partCols.zipWithIndex.map { case (c, i) =>
-          val v = row.get(i)
-          if (v != null &&
-              v.toString == graft.sources.FeatherPartitions.HiveNull)
-            throw new IllegalArgumentException(
-              s"$op: partition value for '$c' is the literal hive null " +
-                s"marker '${v.toString}' — it would be unreadable as " +
-                "anything but NULL; use an actual null")
-          s"${enc(c)}=${if (v == null)
-            graft.sources.FeatherPartitions.HiveNull else enc(v.toString)}"
-        }.mkString("/")
-      // deterministic leaf order keeps tuple → sub-prefix assignment
-      // stable within the run; a crashed attempt's residue (run-unique
-      // prefix) is vacuumOrphans work
-      val tuples = src.select(partCols.map(col): _*).distinct().collect()
-        .map(row => (leafOf(row), row)).sortBy(_._1)
-      tuples.zipWithIndex.foreach { case ((relDir, row), idx) =>
-        val leafDir = new Path(root, relDir)
-        fs.mkdirs(leafDir)
-        val slice = src.filter(partCols.zipWithIndex.map { case (c, i) =>
-            if (row.get(i) == null) col(c).isNull
-            else col(c) === lit(row.get(i))
-          }.reduce(_ && _))
-          .drop(partCols: _*)
-          .select(tableSchema.fieldNames.map(col).toSeq: _*)
-        // per-tuple sub-prefix: the pre-clean of one tuple's write must
-        // never delete this run's survivor parts OR a sibling tuple's
-        // fresh insert parts
-        val parts = face.writeParts(
-          slice.coalesce(math.max(1, partsFor(relDir))),
-          leafDir.toString, f"$prefix-ins$idx%04d", codec)
-        if (parts.nonEmpty)
-          FeatherStats.upsertMerged(fs, leafDir,
-            parts.map { case (name, len, js) =>
-              name -> (len, FeatherStats.fromJson(js)) }.toMap)
-        added ++= parts.map { case (name, len, _) => (s"$relDir/$name", len) }
-      }
-    } finally { if (owned) src.unpersist(blocking = false): Unit }
-    added.toSeq
+      val parts = rows.queryExecution.toRdd.mapPartitionsWithIndex {
+        (pid, it) =>
+          val attempt = org.apache.spark.TaskContext.get().taskAttemptId()
+          val w = new LeafParts(op, st, partCols, sinks,
+            GraftHadoop.execConf(confMap), new Path(rootStr),
+            f"$stem-$pid%05d-a$attempt", pid, sorted = true, partsFor)
+          try { it.foreach(w.write); w.commit().iterator }
+          catch { case e: Throwable => w.abort(); throw e }
+      }.collect().toSeq
+      LeafWriter.land(fs, root, parts, prefix, face.suffix)
+    } finally
+      fs.listStatus(root).iterator
+        .filter(e => !e.isDirectory && e.getPath.getName.startsWith(stem + "-"))
+        .foreach(e => fs.delete(e.getPath, false))
   }
 
   /** Failure-path unwind for parts that never published: delete the
@@ -573,21 +551,6 @@ object FeatherMutations {
         fs.delete(new Path(root, rel + ".stats.json"), false)
       } catch { case _: Exception => () }
       ()
-    }
-
-  /** Unwind twin of [[routePartitionedInserts]]'s per-leaf merged-stats
-    * fold (which runs BEFORE the caller's manifest commit): when that
-    * commit loses its conflict check, the routed parts are deleted and
-    * their cache entries must go too, or the merged file strands
-    * entries for parts that never published. */
-  private[graft] def unpublishLeafStats(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      rels: Seq[String]): Unit =
-    rels.groupBy(relDirOf).foreach { case (dir, names) =>
-      val leaf = if (dir.isEmpty) root else new Path(root, dir)
-      val base = names.map(n => n.substring(n.lastIndexOf('/') + 1)).toSet
-      try FeatherStats.upsertMerged(fs, leaf, Map.empty, remove = base)
-      catch { case _: Exception => () }
     }
 
   /** Write the DV sidecars and compute the manifest actions for one

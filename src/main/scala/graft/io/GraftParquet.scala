@@ -199,10 +199,15 @@ private[graft] object GraftParquet {
   private val microsSessions =
     new java.util.WeakHashMap[SparkSession,
       (Map[String, String], java.lang.ref.WeakReference[SparkSession])]()
-  private[graft] def withOutputMicros(df: DataFrame): DataFrame = {
-    val parent = df.sparkSession
+  private[graft] def withOutputMicros(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.Bridge.ofRows(microsSession(df.sparkSession),
+      df.queryExecution.analyzed)
+
+  /** The cached micros-pinned clone of `parent` ([[withOutputMicros]]'s
+    * session; the task-side part sinks prepare their writes on it). */
+  private[graft] def microsSession(parent: SparkSession): SparkSession = {
     val fp = parent.conf.getAll
-    val clone = microsSessions.synchronized {
+    microsSessions.synchronized {
       Option(microsSessions.get(parent))
         .collect { case (f, ref) if f == fp => ref.get }
         .flatMap(Option(_))
@@ -214,8 +219,6 @@ private[graft] object GraftParquet {
           c
         }
     }
-    org.apache.spark.sql.graft.Bridge.ofRows(clone,
-      df.queryExecution.analyzed)
   }
 
   def writeParts(df: DataFrame, dir: String, prefix: String,

@@ -238,9 +238,8 @@ object PredicateMutations {
     *    a row outside the predicate would silently grow the replacement
     *    scope and make the backfill non-idempotent;
     *  - `cond` must be a deterministic boolean; `data`'s plan must be
-    *    deterministic too (the constraint probe, the routed write's
-    *    distinct() and its per-leaf slices each re-evaluate it; persist
-    *    is best-effort under eviction);
+    *    deterministic too (the constraint probe and the write each
+    *    evaluate it; persist is best-effort under eviction);
     *  - clock functions in both pin to one per-statement instant;
     *  - `data` aligns BY NAME under the lossless-or-exact cast rule;
     *    columns it does not supply read as NULL (partition columns must
@@ -280,12 +279,12 @@ object PredicateMutations {
           "probe, the survivor rewrite), so a nondeterministic predicate " +
           "can silently duplicate or lose rows; make it deterministic " +
           "(clock functions are pinned per statement automatically)")
-      // data's PLAN too: the routed write re-scans it per leaf
+      // data's PLAN too: the constraint probe and the write each scan it
       data.queryExecution.analyzed.find(p =>
           !p.expressions.forall(_.deterministic)).foreach(_ =>
         bad("the replacement data's plan is nondeterministic — the " +
-          "constraint probe and the routed write's per-leaf slices " +
-          "re-evaluate it (persist is best-effort under eviction), so " +
+          "constraint probe and the write each evaluate it (persist is " +
+          "best-effort under eviction), so " +
           "rand()/uuid()-shaped data can silently violate the predicate " +
           "or mis-route rows; materialize the data first (write it to a " +
           "staging path and read it back)"))
@@ -377,25 +376,19 @@ object PredicateMutations {
         // keeps, SQL semantics) — non-candidate files never rewrite
         val out = if (rewriting) cand.where(!fire).unionAll(ins) else ins
         val rewriteIdx = if (rewriting) candidateIdx else Seq.empty
-        val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-        if (r.partitioned) {
-          val candPerLeaf: Map[String, Int] = rewriteIdx
-            .map(i => FeatherMutations.relDirOf(snap.files(i)._1))
-            .groupBy(identity).map { case (k, v) => k -> v.size }
-          added ++= FeatherMutations.routePartitionedInserts(op, face, fs,
-            root, out, partCols, tableSchema, prefix, "lz4",
-            partsFor = relDir => candPerLeaf.getOrElse(relDir, 1))
-        } else {
-          val parts = face.writeParts(
+        val written: Seq[(String, Long, String)] =
+          if (r.partitioned)
+            FeatherMutations.routePartitionedInserts(op, face, fs, root, out,
+              partCols, tableSchema, prefix, "lz4",
+              partsFor = rewriteIdx
+                .map(i => FeatherMutations.relDirOf(snap.files(i)._1))
+                .groupBy(identity).map { case (k, v) => k -> v.size })
+          else face.writeParts(
             out.coalesce(math.max(1, rewriteIdx.size +
               (if (insEmpty) 0 else ConnectorFace.capWriteParts(ins)))),
             root.toString, prefix, "lz4")
-          if (parts.nonEmpty)
-            FeatherStats.upsertMerged(fs, root,
-              parts.map { case (name, len, js) =>
-                name -> (len, FeatherStats.fromJson(js)) }.toMap)
-          added ++= parts.map { case (name, len, _) => (name, len) }
-        }
+        val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+        added ++= written.map { case (rel, len, _) => (rel, len) }
         val removeRel: Set[String] =
           rewriteIdx.map(i => snap.files(i)._1).toSet
         if (added.isEmpty && snap.files.nonEmpty &&
@@ -420,6 +413,7 @@ object PredicateMutations {
             // mutation on non-candidate files commits beside this
             // backfill
             readRel = Some(removeRel))
+        LeafWriter.foldStats(fs, root, written)
         Result(committed, rewriteIdx.size,
           snap.files.size - rewriteIdx.size, added.size)
       } finally {

@@ -156,8 +156,8 @@ object TableDdl {
       writeByFace(spark, path, query, fmt, partitionCols)
     else {
       // feather/avro partitioned CTAS: rows route to their key=value
-      // leaves through the engine's shared insert routing (the same
-      // path every partitioned INSERT/MERGE takes), then ONE v1 commit
+      // leaves in one pass through the engine's leaf writer (the task
+      // writer every partitioned INSERT/MERGE uses), then ONE v1 commit
       val connFace =
         if (fmt == "graft-avro") ConnectorFace.AvroFace
         else ConnectorFace.FeatherFace
@@ -170,14 +170,14 @@ object TableDdl {
       fs.mkdirs(root)
       val prefix = FeatherSnapshots.runPrefix(1L, "ctas-")
       val parts = FeatherMutations.routePartitionedInserts(op, connFace,
-        fs, root, query, partitionCols, dataSchema, prefix,
-        connFace.codecFor("lz4"))
+        fs, root, query, partitionCols, dataSchema, prefix, "lz4")
       if (parts.isEmpty)
         bad("the query produced no rows — an empty frame cannot define " +
           "a partitioned table (no partition values to route)")
       FeatherSnapshots.publishDataCommit(fs, root, truncate = false,
-        Seq(connFace.suffix), parts,
+        Seq(connFace.suffix), parts.map { case (rel, len, _) => (rel, len) },
         stampPart = () => connFace.stamp(fs, root, prefix, dataSchema)): Unit
+      LeafWriter.foldStats(fs, root, parts)
     }
     val v1 = FeatherSnapshots.resolve(fs, root, None).get
     Result(v1.version, 0, 0, v1.files.size)
@@ -244,55 +244,45 @@ object TableDdl {
     val prefix = FeatherSnapshots.runPrefix(targetV, "rep-")
     val schema = schemaOrQuery.fold(identity, _.schema)
     if (schema.isEmpty) bad("no columns")
-    val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    if (partitionCols.nonEmpty) {
-      val q = schemaOrQuery.toOption.get
-      partitionCols.filterNot(q.columns.contains).headOption.foreach(
-        c => bad(s"PARTITIONED BY names '$c', which the query does not " +
-          s"produce (${q.columns.mkString(", ")})"))
-      val dataSchema = StructType(schema.fields.filterNot(f =>
-        partitionCols.contains(f.name)))
-      if (dataSchema.isEmpty)
-        bad("the query produces only the partition columns — a hive " +
-          "leaf's files hold the DATA columns")
-      added ++= FeatherMutations.routePartitionedInserts(op, connFace,
-        fs, root, q, partitionCols, dataSchema, prefix,
-        connFace.codecFor("lz4"))
-      if (added.isEmpty)
-        bad("the query produced no rows — an empty result cannot " +
-          "define a partitioned layout (TRUNCATE TABLE keeps the " +
-          "existing layout and removes the rows)")
-    } else schemaOrQuery.foreach { q =>
-      val parts = connFace.writeParts(
+    val written: Seq[(String, Long, String)] =
+      if (partitionCols.nonEmpty) {
+        val q = schemaOrQuery.toOption.get
+        partitionCols.filterNot(q.columns.contains).headOption.foreach(
+          c => bad(s"PARTITIONED BY names '$c', which the query does not " +
+            s"produce (${q.columns.mkString(", ")})"))
+        val dataSchema = StructType(schema.fields.filterNot(f =>
+          partitionCols.contains(f.name)))
+        if (dataSchema.isEmpty)
+          bad("the query produces only the partition columns — a hive " +
+            "leaf's files hold the DATA columns")
+        val parts = FeatherMutations.routePartitionedInserts(op, connFace,
+          fs, root, q, partitionCols, dataSchema, prefix, "lz4")
+        if (parts.isEmpty)
+          bad("the query produced no rows — an empty result cannot " +
+            "define a partitioned layout (TRUNCATE TABLE keeps the " +
+            "existing layout and removes the rows)")
+        parts
+      } else schemaOrQuery.toOption.toSeq.flatMap(q => connFace.writeParts(
         q.coalesce(ConnectorFace.capWriteParts(q)), root.toString,
-        prefix, "lz4")
-      if (parts.nonEmpty)
-        FeatherStats.upsertMerged(fs, root,
-          parts.map { case (name, len, js) =>
-            name -> (len, FeatherStats.fromJson(js)) }.toMap)
-      added ++= parts.map { case (name, len, _) => (name, len) }
-    }
+        prefix, "lz4"))
     // empty FLAT replace (schema-only, or a zero-row query): v+1 is one
     // schema stamp, the shared all-rows-gone shape
-    if (added.isEmpty)
-      added += connFace.stamp(fs, root, prefix, schema)
-    try {
-      val committed = FeatherSnapshots.commitMutation(fs, root, "replace",
-        snap, removeRel = snap.files.map(_._1).toSet, add = added.toSeq,
+    val added: Seq[(String, Long)] =
+      if (written.nonEmpty) written.map { case (rel, len, _) => (rel, len) }
+      else Seq(connFace.stamp(fs, root, prefix, schema))
+    val committed =
+      try FeatherSnapshots.commitMutation(fs, root, "replace", snap,
+        removeRel = snap.files.map(_._1).toSet, add = added,
         readRel = Some(snap.files.map(_._1).toSet),
         requireNoNewFiles = true)
-      Result(committed, snap.files.size, 0, added.size)
-    } catch { case e: Throwable =>
-      // a lost conflict check never published the new parts: delete
-      // them and unwind the eager merged-stats entries (flat and routed
-      // alike — the cache must not strand entries for parts that never
-      // published)
-      FeatherMutations.deletePartsAndSidecars(fs, root,
-        added.toSeq.map(_._1))
-      FeatherMutations.unpublishLeafStats(fs, root,
-        added.toSeq.map(_._1))
-      throw e
-    }
+      catch { case e: Throwable =>
+        // a lost conflict check never published the new parts: delete
+        // them (the merged stats fold runs only after a won commit)
+        FeatherMutations.deletePartsAndSidecars(fs, root, added.map(_._1))
+        throw e
+      }
+    LeafWriter.foldStats(fs, root, written)
+    Result(committed, snap.files.size, 0, added.size)
   }
 
   private def writeByFace(spark: SparkSession, path: String,

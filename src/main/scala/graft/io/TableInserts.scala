@@ -97,22 +97,13 @@ object TableInserts {
       }
       FeatherMutations.nullableAsTable(raw, f.nullable).as(f.name)
     }
-    // one statement, one instant: the routed write evaluates the query
-    // in several jobs (distinct() + per-leaf slices; persist is
-    // best-effort), so resolved clock calls pin to literals first
-    val out1 = FeatherMutations.pinClockInPlan(spark,
+    // one statement, one instant: the emptiness probe and the write are
+    // two jobs over a best-effort persist, so resolved clock calls pin to
+    // literals first. The routed write evaluates each row once: its leaf
+    // and its content come from the same evaluation, so a
+    // nondeterministic query needs no materialization
+    val out0 = FeatherMutations.pinClockInPlan(spark,
       q2.select(outCols: _*), java.time.Instant.now())
-    // a PARTITIONED append re-scans the query per leaf (the routed
-    // write's distinct() + slices), so a nondeterministic query could
-    // route a row by one evaluation and write another — MATERIALIZE:
-    // localCheckpoint severs the lineage eagerly, so every later job
-    // reads the one evaluated result (plain persist is best-effort under
-    // eviction — an evicted block would re-evaluate rand() differently)
-    val out0 =
-      if (r.partitioned && query.queryExecution.analyzed.exists(p =>
-            !p.expressions.forall(_.deterministic)))
-        out1.localCheckpoint()
-      else out1
 
     // ---- write + commit -----------------------------------------------------
     val prefix = FeatherSnapshots.runPrefix(snap.version + 1, tag)
@@ -120,26 +111,21 @@ object TableInserts {
     val (out, ownOut) = ConnectorFace.pinIfUncached(out0)
     try {
       if (out.limit(1).count() == 0) return noOp
-      val added: Seq[(String, Long)] =
+      val added: Seq[(String, Long, String)] =
         if (r.partitioned)
           FeatherMutations.routePartitionedInserts(op, face, fs, root, out,
             partCols, tableSchema, prefix, codec)
-        else {
-          val parts = face.writeParts(
-            out.coalesce(math.max(1, ConnectorFace.capWriteParts(out))),
-            root.toString, prefix, codec)
-          if (parts.nonEmpty)
-            FeatherStats.upsertMerged(fs, root,
-              parts.map { case (name, len, js) =>
-                name -> (len, FeatherStats.fromJson(js)) }.toMap)
-          parts.map { case (name, len, _) => (name, len) }
-        }
+        else face.writeParts(
+          out.coalesce(math.max(1, ConnectorFace.capWriteParts(out))),
+          root.toString, prefix, codec)
       if (added.isEmpty) return noOp
       // a blind append: commutes with concurrent mutations (the
       // publishDataCommit protocol ParquetTable.append rides)
       val committed = FeatherSnapshots.publishDataCommit(fs, root,
-        truncate = false, Seq(face.suffix), added,
+        truncate = false, Seq(face.suffix),
+        added.map { case (rel, len, _) => (rel, len) },
         stampPart = () => face.stamp(fs, root, prefix, tableSchema)).version
+      LeafWriter.foldStats(fs, root, added)
       Result(committed, 0, snap.files.size, added.size)
     } finally {
       if (ownOut) out.unpersist(blocking = false): Unit

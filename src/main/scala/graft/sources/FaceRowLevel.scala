@@ -6,13 +6,13 @@ import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedRe
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.execution.CommandResultExec
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats, GraftFeather, GraftHadoop}
+import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats, GraftFeather, GraftHadoop, LeafPart, LeafParts, LeafWriter, PartSinks}
 
 /** The DSv2 row-level machinery — the ONE SQL DML path for every graft
   * table: DELETE / UPDATE / MERGE, in every session, on EVERY face
@@ -31,15 +31,16 @@ import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats,
   *  - BATCH SKIPPING: delta scans drop stats-empty feather batches INSIDE
   *    kept files (positions are batch-absolute, so skipping never shifts
   *    them); COW scans stay whole-file (the group contract below).
-  *  - INSERTS: each task lands its rows as a TMP FEATHER part (the
-  *    engine's one universal task-side row writer). Flat feather tables
-  *    rename those parts in place — zero copy, the tmp format IS the
-  *    final format. Other faces convert them into final face parts in one
-  *    distributed pass ([[ConnectorFace.writeParts]]), and hive layouts
-  *    route rows to the leaf their partition VALUES name
-  *    ([[FeatherMutations.routePartitionedInserts]] — an UPDATE that
-  *    changes a partition column moves the row between leaves inside the
-  *    one atomic commit).
+  *  - INSERTS: one task writer ([[FaceConvert]], [[graft.io.LeafParts]]).
+  *    On a hive layout each task routes its rows to a part of the leaf
+  *    their partition VALUES name, in the face's own format (an UPDATE
+  *    that changes a partition column moves the row between leaves
+  *    inside the one atomic commit); the COW write clusters and orders
+  *    its rows by the partition columns first, so each touched leaf gains
+  *    one part. The commit only renames the parts into their leaves — no
+  *    Spark job. Flat feather tables rename their tmp feather parts in
+  *    place (the tmp format IS the final format); other flat faces
+  *    convert them in one distributed pass ([[ConnectorFace.writeParts]]).
   *
   * THE GROUP CONTRACT (what makes copy-on-write correct): the scan
   * defines the replacement granularity — whatever FILES it reads are the
@@ -96,12 +97,14 @@ import graft.io.{ConnectorFace, DeletionVectors, FeatherMutations, FeatherStats,
   * becomes. A merge-on-read commit refuses past
   * [[FaceRowLevel.MaxDvPositionsKey]] deleted positions.
   *
-  * Cost honesty: on the converting faces rewritten/inserted rows are
-  * written twice (tmp feather, then the face part) — bytes ∝ the
-  * statement's own output, never the table, and the conversion is one
-  * extra job per STATEMENT, not per file. Plain batch READS of the
-  * parquet face do not come here — [[FaceScanBuilder]] hands them to
-  * Spark's vectorized parquet reader ([[ParquetFaceBatchScan]]). */
+  * Cost honesty: on a flat table of a converting face rewritten/inserted
+  * rows are written twice (tmp feather, then the face part) — bytes ∝
+  * the statement's own output, never the table, and the conversion is
+  * one extra job per STATEMENT, not per file. A partitioned COW write
+  * pays one shuffle of its output for the leaf clustering. Plain batch
+  * READS of the parquet face do not come here — [[FaceScanBuilder]]
+  * hands them to Spark's vectorized parquet reader
+  * ([[ParquetFaceBatchScan]]). */
 private[graft] object FaceRowLevel {
   /** One operation per (command, strategy): group-based COW for the
     * `graft` catalog, delta (DV sidecars) for `graft_dv`. */
@@ -684,115 +687,128 @@ private[sources] final class SplicedRowReader(
 // writes
 // ---------------------------------------------------------------------------
 
-/** Driver-side insert finalization shared by both writes (and the unwind
-  * the generic batch write borrows): land the tasks' tmp feather parts as
-  * FINAL face parts — flat feather renames them in place (zero copy: the
-  * tmp format is the final format), other flat faces convert in one
-  * writeParts pass, hive layouts route rows to the leaf their partition
-  * values name. Returns the (rel name, len) parts plus the flat parts'
-  * merged-stats fold input — the CALLER upserts only AFTER its manifest
-  * commit succeeds, so a lost conflict check never strands cache entries
-  * for parts that were never published (per-part sidecars cover readers
-  * in the window; merged is a planning cache). Converted tmp parts are
-  * deleted here, success or not (they were never visible). */
+/** The insert side shared by the catalog writes ([[FaceBatchWrite]],
+  * [[FaceCowWrite]], the insert half of [[FaceDeltaWrite]]): one task
+  * writer ([[graft.io.LeafParts]]) and one driver finalization.
+  *
+  *  - a HIVE-PARTITIONED table's tasks route each row to a part of the
+  *    leaf its partition values name, in the face's own format, and the
+  *    commit only renames each part into its leaf under the run prefix
+  *    and writes its stats sidecar ([[graft.io.LeafWriter.land]]) — no
+  *    Spark job at commit;
+  *  - a FLAT feather table's tasks write feather parts the commit renames
+  *    in place the same way (the tmp format IS the final format);
+  *  - a FLAT table of another face lands tmp feather parts that the
+  *    commit converts into face parts in one writeParts pass, capped at
+  *    the cluster parallelism.
+  *
+  * The merged stats fold runs only after the manifest commit published
+  * the parts ([[graft.io.LeafWriter.foldStats]]), so a lost conflict
+  * check strands no cache entry (per-part sidecars cover readers in the
+  * window; merged is a planning cache). */
 private[sources] object FaceConvert {
-  def toFaceParts(op: String, face: ConnectorFace,
-                  fs: org.apache.hadoop.fs.FileSystem, path: String,
-                  tmpMsgs: Seq[FeatherCommitMessage],
-                  dataSchema: StructType, partCols: Seq[String],
-                  targetV: Long)
-      : (Seq[(String, Long)],
-         Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])]) = {
-    if (tmpMsgs.isEmpty) return (Seq.empty, Map.empty)
-    val prefix = FeatherSnapshots.runPrefix(targetV)
-    if ((face eq ConnectorFace.FeatherFace) && partCols.isEmpty) {
-      val renamed = renameParts(fs, path, tmpMsgs, prefix)
-      return (renamed.map { case (n, (len, _)) => (n, len) }.toSeq, renamed)
-    }
+  /** The writes' task-side factory: rows of `st` routed by `routeCols`
+    * into `face` parts, or (no route) into flat feather parts. `sorted`
+    * when the write declared the leaf clustering ([[LeafClustering]]). */
+  def writerFactory(op: String, face: ConnectorFace, st: StructType,
+                    routeCols: Seq[String], path: String,
+                    sorted: Boolean): LeafWriterFactory = {
     val spark = SparkSession.active
-    val root = new org.apache.hadoop.fs.Path(path)
-    val tmpFiles = tmpMsgs.map(m =>
-      (new org.apache.hadoop.fs.Path(path, m.tmpName).toString, m.bytes))
-    try {
-      val df = GraftFeather.readFiles(spark, tmpFiles)
-      if (partCols.isEmpty) {
-        // cap the write fan-out like the mutation tier: a 32-task insert
-        // must not fill the table with 32 near-empty parts per statement
-        val parts = face.writeParts(
-          df.select(dataSchema.fieldNames.toSeq.map(
-            org.apache.spark.sql.functions.col): _*)
-            .coalesce(ConnectorFace.capWriteParts(df)),
-          path, prefix, face.codecFor("lz4"))
-        (parts.map { case (n, len, _) => (n, len) },
-          parts.map { case (n, len, js) =>
-            n -> (len, FeatherStats.fromJson(js)) }.toMap)
-      } else {
-        // routed inserts fold their own per-leaf stats (the mutation
-        // tier's shared path)
-        (FeatherMutations.routePartitionedInserts(op, face, fs, root, df,
-          partCols, dataSchema, prefix, face.codecFor("lz4")), Map.empty)
-      }
-    } finally tmpMsgs.foreach { m =>
-      try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
-      catch { case _: Exception => () }
-    }
+    val sinks =
+      if (routeCols.isEmpty) PartSinks(spark, ConnectorFace.FeatherFace, st,
+        "lz4")
+      else PartSinks(spark, face, StructType(st.fields.filterNot(f =>
+        routeCols.exists(_.equalsIgnoreCase(f.name)))), "lz4")
+    new LeafWriterFactory(op, st, routeCols, sinks, path, sorted,
+      GraftHadoop.confBroadcast(spark))
   }
 
-  /** Rename tmp feather parts to finals under the run prefix (the
-    * mutation tier's `mut-v…` naming: collision-free beside retained
-    * generations, and vacuum never reclaims a part of a version newer
-    * than the head) + write their per-part stats sidecars; returns final
-    * name → (bytes, batch stats), the upsertMerged input shape. ZERO-ROW
-    * parts (empty batch stats — a task every row bypassed) are deleted,
-    * not renamed: publishing them would add one junk file per idle task
-    * to the manifest. */
-  private def renameParts(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                          committed: Seq[FeatherCommitMessage],
-                          prefix: String)
-      : Map[String, (Long, Seq[Map[String, FeatherStats.ColStat]])] =
-    committed.flatMap { m =>
-      val stats = FeatherStats.fromJson(m.statsJson)
-      val tmp = new org.apache.hadoop.fs.Path(path, m.tmpName)
-      if (stats.isEmpty) {
-        try fs.delete(tmp, false) catch { case _: Exception => () }
-        None
-      } else {
-        val fin = new org.apache.hadoop.fs.Path(path,
-          f"$prefix-part-${m.partitionId}%05d.feather")
-        require(fs.rename(tmp, fin), s"commit rename $tmp -> $fin failed")
-        val sc = fs.create(new org.apache.hadoop.fs.Path(path,
-          fin.getName + ".stats.json"), true)
-        try sc.write(m.statsJson.getBytes("UTF-8")) finally sc.close()
-        Some(fin.getName -> (m.bytes, stats))
-      }
-    }.toMap
+  /** Land the tasks' parts as FINAL face parts of version `targetV`'s
+    * run prefix; returns (rel path, len, stats JSON) — the caller commits
+    * them, then folds their stats. Converted tmp parts are deleted here,
+    * success or not (they were never visible). */
+  def toFaceParts(face: ConnectorFace, fs: org.apache.hadoop.fs.FileSystem,
+                  path: String, parts: Seq[LeafPart], dataSchema: StructType,
+                  partCols: Seq[String], targetV: Long)
+      : Seq[(String, Long, String)] = {
+    if (parts.isEmpty) return Seq.empty
+    val prefix = FeatherSnapshots.runPrefix(targetV)
+    val root = new org.apache.hadoop.fs.Path(path)
+    if (partCols.nonEmpty || (face eq ConnectorFace.FeatherFace))
+      return LeafWriter.land(fs, root, parts, prefix, face.suffix)
+    try {
+      val df = GraftFeather.readFiles(SparkSession.active, parts.map(p =>
+        (new org.apache.hadoop.fs.Path(path, p.tmpName).toString, p.bytes)))
+      // cap the write fan-out like the mutation tier: a 32-task insert
+      // must not fill the table with 32 near-empty parts per statement
+      face.writeParts(
+        df.select(dataSchema.fieldNames.toSeq.map(
+          org.apache.spark.sql.functions.col): _*)
+          .coalesce(ConnectorFace.capWriteParts(df)),
+        path, prefix, face.codecFor("lz4"))
+    } finally deleteTmp(fs, path, parts)
+  }
 
-  /** Failure-path unwind: delete finalized parts and their sidecars — a
-    * manifest commit that threw never made them visible. */
-  def deleteFinalized(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                      names: Seq[String]): Unit =
-    names.foreach { n =>
-      try {
-        fs.delete(new org.apache.hadoop.fs.Path(path, n), false)
-        fs.delete(new org.apache.hadoop.fs.Path(path, n + ".stats.json"),
-          false)
-      } catch { case _: Exception => () }
+  /** Delete tasks' tmp parts (abort, or parts a commit never lands). */
+  def deleteTmp(fs: org.apache.hadoop.fs.FileSystem, path: String,
+                parts: Seq[LeafPart]): Unit =
+    parts.foreach { p =>
+      try fs.delete(new org.apache.hadoop.fs.Path(path, p.tmpName), false)
+      catch { case _: Exception => () }
       ()
     }
-
-  /** Unwind twin of the routed inserts' per-leaf merged-stats fold —
-    * ONE definition in [[FeatherMutations.unpublishLeafStats]], shared
-    * with the partitioned REPLACE/CTAS commits. No-op for the flat path
-    * (its fold is already deferred past the commit). */
-  def unpublishLeafStats(fs: org.apache.hadoop.fs.FileSystem,
-                         path: String, rels: Seq[String]): Unit =
-    FeatherMutations.unpublishLeafStats(fs,
-      new org.apache.hadoop.fs.Path(path), rels)
 
   /** The write schema must round-trip through the tmp feather parts. */
   def requireFeatherMappable(st: StructType): Unit =
     st.fields.foreach(f =>
       GraftFeather.toArrowField(f.name, f.dataType, f.nullable))
+}
+
+/** What one write task landed. */
+private[sources] final case class LeafCommitMessage(parts: Seq[LeafPart])
+    extends WriterCommitMessage
+
+private[sources] final class LeafWriterFactory(
+    op: String, st: StructType, routeCols: Seq[String], sinks: PartSinks,
+    path: String, sorted: Boolean,
+    confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]])
+    extends DataWriterFactory {
+  /** The task's parts, under `.part-<partition>-task-<task>` tmp names. */
+  def parts(partitionId: Int, taskId: Long): LeafParts =
+    new LeafParts(op, st, routeCols, sinks, GraftHadoop.execConf(confMap),
+      new org.apache.hadoop.fs.Path(path),
+      f".part-$partitionId%05d-task-$taskId", partitionId, sorted)
+
+  override def createWriter(partitionId: Int, taskId: Long)
+      : DataWriter[InternalRow] = new DataWriter[InternalRow] {
+    private val w = parts(partitionId, taskId)
+    override def write(row: InternalRow): Unit = w.write(row)
+    override def commit(): WriterCommitMessage = LeafCommitMessage(w.commit())
+    override def abort(): Unit = w.abort()
+    override def close(): Unit = ()
+  }
+}
+
+/** The leaf clustering a routed write asks of Spark: rows clustered and
+  * ordered by the partition columns, so each leaf's rows reach one task,
+  * in one run — one open part per task, one part per touched leaf per
+  * statement (AQE coalesces the small shuffle). No clustering when the
+  * write routes nothing. */
+private[sources] trait LeafClustering
+    extends org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+  protected def clusterCols: Seq[String]
+  override def requiredDistribution()
+      : org.apache.spark.sql.connector.distributions.Distribution =
+    if (clusterCols.isEmpty)
+      org.apache.spark.sql.connector.distributions.Distributions.unspecified()
+    else org.apache.spark.sql.connector.distributions.Distributions.clustered(
+      clusterCols.map(c => Expressions.column(c)
+        : org.apache.spark.sql.connector.expressions.Expression).toArray)
+  override def requiredOrdering()
+      : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
+    clusterCols.map(c => Expressions.sort(Expressions.column(c),
+      org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
+      .toArray
 }
 
 /** What a table commit did, as DSv2 driver metrics: both row-level
@@ -879,27 +895,28 @@ private[graft] object RowLevelCommitMetrics {
 
 /** Group-based COW write (finalize first: a MERGE into a fully-pruned
   * table still publishes its NOT MATCHED inserts; no-read no-write
-  * statements publish NO version; unwind on a lost conflict check). */
+  * statements publish NO version; unwind on a lost conflict check). A
+  * hive-partitioned table's rewrite clusters by its partition columns
+  * ([[LeafClustering]]): each touched leaf gains one part. */
 private class FaceCowWrite(op: RowLevelHost,
                                     st: StructType,
                                     path: String, face: ConnectorFace,
                                     dataSchema: StructType,
                                     partCols: Seq[String])
-    extends WriteBuilder with Write with BatchWrite
+    extends WriteBuilder with Write with BatchWrite with LeafClustering
     with RowLevelCommitMetrics.Reporting {
   FaceConvert.requireFeatherMappable(st)
 
+  override protected def clusterCols: Seq[String] = partCols
   override def build(): Write = this
   override def toBatch: BatchWrite = this
   override def description(): String =
     s"graft COW ${op.command()} $path (${face.label})"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory = {
-    val spark = SparkSession.active
-    new FeatherWriterFactory(st, path, "lz4", 4096,
-      GraftHadoop.confBroadcast(spark))
-  }
+      : DataWriterFactory =
+    FaceConvert.writerFactory(op.opName, face, st, partCols, path,
+      sorted = true)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
@@ -908,23 +925,19 @@ private class FaceCowWrite(op: RowLevelHost,
     val state = op.scanState.getOrElse(throw new IllegalStateException(
       s"row-level ${op.command()} on $path: write committed before the " +
         "scan planned — the group set is unknown"))
-    val committed = messages.collect { case m: FeatherCommitMessage => m }
-    val (data, empty) = committed.partition(m =>
-      FeatherStats.fromJson(m.statsJson).nonEmpty)
+    val data = messages.toSeq.collect { case m: LeafCommitMessage => m }
+      .flatMap(_.parts)
     // a one-file DELETE that wrote back every live row of its group
     // deleted nothing (the scan offers no runtime filter on one counted
     // file): no version, at no extra job
-    def rows(m: FeatherCommitMessage): Long =
-      FeatherStats.fromJson(m.statsJson).flatMap(_.get(FeatherStats.RowCountKey))
+    def rows(p: LeafPart): Long =
+      FeatherStats.fromJson(p.statsJson).flatMap(_.get(FeatherStats.RowCountKey))
         .collect { case FeatherStats.ColStat.Count(n) => n }.sum
     val noneDeleted = op.command() == Command.DELETE &&
       state.keptRel.size == 1 &&
       FaceRowLevel.liveRows(root, state.snap, state.keptRel)
         .contains(data.map(rows).sum)
-    (if (noneDeleted) committed else empty).foreach { m =>
-      try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
-      catch { case _: Exception => () }
-    }
+    if (noneDeleted) FaceConvert.deleteTmp(fs, path, data)
     val opName = op.opName
     if (noneDeleted || state.keptRel.isEmpty && data.isEmpty) {
       // nothing replaced, nothing written: no version. The runtime group
@@ -940,10 +953,10 @@ private class FaceCowWrite(op: RowLevelHost,
       return
     }
     val targetV = state.snap.version + 1
-    val (parts, flatStats) = FaceConvert.toFaceParts(opName, face, fs, path,
-      data.toSeq, dataSchema, partCols, targetV)
+    val parts = FaceConvert.toFaceParts(face, fs, path, data, dataSchema,
+      partCols, targetV)
     val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    added ++= parts
+    added ++= parts.map { case (rel, len, _) => (rel, len) }
     if (added.isEmpty &&
         state.snap.files.forall { case (rel, _) => state.keptRel(rel) })
       added ++= FeatherMutations.stampLeaves(face, fs, root,
@@ -955,35 +968,31 @@ private class FaceCowWrite(op: RowLevelHost,
           removeRel = state.keptRel, add = added.toSeq,
           readRel = Some(state.readRel))
       catch { case e: Throwable =>
-        FaceConvert.deleteFinalized(fs, path, added.toSeq.map(_._1))
-        FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
+        FeatherMutations.deletePartsAndSidecars(fs, root, added.toSeq.map(_._1))
         throw e
       }
     report = Some(RowLevelCommitMetrics.Report(version, state.keptRel.size,
       state.snap.files.size - state.keptRel.size, added.size, 0,
       state.readRel.size))
-    if (flatStats.nonEmpty) FeatherStats.upsertMerged(fs, root, flatStats)
+    LeafWriter.foldStats(fs, root, parts)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    messages.collect { case m: FeatherCommitMessage => m }.foreach { m =>
-      try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
-      catch { case _: Exception => () }
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    FaceConvert.deleteTmp(new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration),
+      path, messages.toSeq.collect { case m: LeafCommitMessage => m }
+        .flatMap(_.parts))
 }
 
 /** Delta write: deleted rows → DV sidecars (per-face position encodings
   * ride the scans' `_pos` on the way in and the faces' DV-aware reads on
   * the way out), inserted rows → final parts through
   * [[FaceConvert.toFaceParts]], one atomic manifest commit, full unwind
-  * (parts, sidecars, fresh DVs, leaf-stats entries) when the conflict
-  * check loses. A file whose UNION'd vector covers every row
-  * (stats-proven) is dropped from the manifest instead of carrying a
-  * full mask ([[FeatherMutations.bindDvs]]). The commit refuses a statement whose
+  * (parts, sidecars, fresh DVs) when the conflict check loses. It asks
+  * for no clustering — a DELETE gains no shuffle — so the insert half
+  * routes unsorted rows: one part per leaf per task. A file whose
+  * UNION'd vector covers every row (stats-proven) is dropped from the
+  * manifest instead of carrying a full mask ([[FeatherMutations.bindDvs]]). The commit refuses a statement whose
   * deleted positions sum past [[FaceRowLevel.MaxDvPositionsKey]] before
   * it finalizes a part or writes a sidecar: the task commit messages
   * already brought the positions to the driver, so the cap bounds the
@@ -1009,9 +1018,9 @@ private class FaceDeltaWrite(op: RowLevelHost,
 
   override def createBatchWriterFactory(pinfo: PhysicalWriteInfo)
       : DeltaWriterFactory = {
-    val spark = SparkSession.active
-    new FaceDeltaWriterFactory(rowSchema, rowIdSchema, path,
-      GraftHadoop.confBroadcast(spark))
+    new FaceDeltaWriterFactory(rowIdSchema,
+      FaceConvert.writerFactory(op.opName, face, rowSchema, partCols, path,
+        sorted = false))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -1048,12 +1057,7 @@ private class FaceDeltaWrite(op: RowLevelHost,
         s"(${FaceRowLevel.MaxDvPositionsKey}) — use copy-on-write " +
         "(deleteWhere, or the `graft` catalog), where a delete this large " +
         "pays for its rewrite")
-    val (insertMsgs, emptyIns) = msgs.flatMap(_.insert).toSeq
-      .partition(m => FeatherStats.fromJson(m.statsJson).nonEmpty)
-    emptyIns.foreach { m =>
-      try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
-      catch { case _: Exception => () }
-    }
+    val insertMsgs = msgs.toSeq.flatMap(_.inserts)
     // nothing deleted, nothing inserted: a no-match statement publishes
     // NO version (replay-clean, the COW contract)
     if (byFid.isEmpty && insertMsgs.isEmpty) {
@@ -1063,8 +1067,8 @@ private class FaceDeltaWrite(op: RowLevelHost,
     }
     val targetV = state.snap.version + 1
     val opName = op.opName
-    val (parts, flatStats) = FaceConvert.toFaceParts(opName, face, fs, path,
-      insertMsgs, dataSchema, partCols, targetV)
+    val parts = FaceConvert.toFaceParts(face, fs, path, insertMsgs,
+      dataSchema, partCols, targetV)
     // exact row counts (stats sidecars) let fully-masked files DROP from
     // the manifest instead of carrying a 100%-coverage vector — loads
     // are bounded by the TOUCHED file set, not the table
@@ -1081,7 +1085,7 @@ private class FaceDeltaWrite(op: RowLevelHost,
       state.snap, targetV,
       byFid.view.mapValues(_.toArray).toMap, fileRowCount)
     val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    added ++= parts
+    added ++= parts.map { case (rel, len, _) => (rel, len) }
     // every file dropped and nothing inserted: schema stamps keep the
     // table readable (the mutation tier's shared all-rows-deleted shape)
     if (added.isEmpty && droppedRel.nonEmpty &&
@@ -1095,11 +1099,9 @@ private class FaceDeltaWrite(op: RowLevelHost,
           removeRel = droppedRel, add = added.toSeq, setDvs = bindings,
           readRel = Some(state.readRel))
       catch { case e: Throwable =>
-        // the publish failed (conflict): parts, stamps, leaf-stats
-        // entries, AND the freshly written DV sidecars were never
-        // visible — delete them all
-        FaceConvert.deleteFinalized(fs, path, added.toSeq.map(_._1))
-        FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
+        // the publish failed (conflict): parts, stamps AND the freshly
+        // written DV sidecars were never visible — delete them all
+        FeatherMutations.deletePartsAndSidecars(fs, root, added.toSeq.map(_._1))
         bindings.values.foreach { case (dvRel, _) =>
           try fs.delete(new org.apache.hadoop.fs.Path(root, dvRel), false)
           catch { case _: Exception => () }
@@ -1110,30 +1112,24 @@ private class FaceDeltaWrite(op: RowLevelHost,
     report = Some(RowLevelCommitMetrics.Report(version, droppedRel.size,
       state.snap.files.size - droppedRel.size - bindings.size, added.size,
       bindings.size, state.readRel.size))
-    if (flatStats.nonEmpty) FeatherStats.upsertMerged(fs, root, flatStats)
+    LeafWriter.foldStats(fs, root, parts)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    messages.collect { case m: FaceDeltaCommitMessage => m }
-      .flatMap(_.insert).foreach { m =>
-        try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
-        catch { case _: Exception => () }
-      }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    FaceConvert.deleteTmp(new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration),
+      path, messages.toSeq.collect { case m: FaceDeltaCommitMessage => m }
+        .flatMap(_.inserts))
 }
 
-/** One task's delta output: at most one insert part (tmp name + stats)
-  * plus its deleted positions grouped by ABSOLUTE data-file path. */
+/** One task's delta output: its insert parts plus its deleted positions
+  * grouped by ABSOLUTE data-file path. */
 private case class FaceDeltaCommitMessage(
-    insert: Option[FeatherCommitMessage],
+    inserts: Seq[LeafPart],
     deletes: Map[String, Array[Long]]) extends WriterCommitMessage
 
-private class FaceDeltaWriterFactory(
-    rowSchema: StructType, rowIdSchema: StructType, path: String,
-    confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]])
+private class FaceDeltaWriterFactory(rowIdSchema: StructType,
+                                     inserts: LeafWriterFactory)
     extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long)
@@ -1145,15 +1141,11 @@ private class FaceDeltaWriterFactory(
     // sharded across tasks here)
     private val deletes = scala.collection.mutable.HashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-    // the insert part writer opens lazily: a pure DELETE never creates
-    // a tmp file at all
-    private var insertPw
-        : org.apache.spark.sql.connector.write.DataWriter[InternalRow] = null
+    // the insert parts open lazily: a pure DELETE never creates a tmp
+    // file at all
+    private var insertPw: LeafParts = null
     private def insertWriter = {
-      if (insertPw == null)
-        insertPw = FeatherSourceWriters.dataWriter(rowSchema, path,
-          f".part-$partitionId%05d-task-$taskId.feather.tmp",
-          "lz4", 4096, partitionId, confMap)
+      if (insertPw == null) insertPw = inserts.parts(partitionId, taskId)
       insertPw
     }
 
@@ -1176,7 +1168,7 @@ private class FaceDeltaWriterFactory(
 
     override def commit(): WriterCommitMessage =
       FaceDeltaCommitMessage(
-        Option(insertPw).map(_.commit().asInstanceOf[FeatherCommitMessage]),
+        Option(insertPw).fold(Seq.empty[LeafPart])(_.commit()),
         deletes.view.mapValues(_.toArray).toMap)
 
     override def abort(): Unit = if (insertPw != null) insertPw.abort()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.StructType
 
-import graft.io.{ConnectorFace, FeatherMutations, FeatherStats, GraftFeather, GraftHadoop}
+import graft.io.{ConnectorFace, FeatherMutations, GraftFeather, LeafWriter}
 
 /** FACE-GENERIC catalog batch WRITE — the insert half of the catalog
   * surface ([[FaceScanBuilder]] is the read half): what runs SQL
@@ -12,14 +12,16 @@ import graft.io.{ConnectorFace, FeatherMutations, FeatherStats, GraftFeather, Gr
   * and overwrites) against tables the connector delegates cannot serve
   * — the parquet face (no DSv2 connector) and HIVE-PARTITIONED tables
   * on any face (the flat connector sinks refuse root appends into
-  * key=value layouts; this write routes each row to the leaf its
-  * partition values name, through the engine's shared
-  * [[FeatherMutations.routePartitionedInserts]]) — plus predicate and
-  * dynamic overwrites of flat connector-face tables.
+  * key=value layouts) — plus predicate and dynamic overwrites of flat
+  * connector-face tables.
   *
-  * Task rows land as tmp feather parts (the engine's universal task
-  * writer) and ONE driver-side conversion pass turns them into final
-  * face parts; the manifest commit then publishes:
+  * Parts land through [[FaceConvert]]'s one task writer: on a
+  * partitioned table Spark clusters and orders the rows by the partition
+  * columns ([[LeafClustering]]), each task writes one face part per leaf
+  * its rows name, and the commit renames them into their leaves (no Spark
+  * job at commit); a flat table's tasks write feather parts, renamed in
+  * place on the feather face and converted in one pass on the others.
+  * The manifest commit then publishes:
   *
   *  - append (`INSERT INTO`): add-only — commutes with every concurrent
   *    commit (empty read set); a zero-row insert publishes NO version.
@@ -42,7 +44,7 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
                                     dataSchema: StructType,
                                     partCols: Seq[String],
                                     writeSchema: StructType)
-    extends WriteBuilder with Write with BatchWrite
+    extends WriteBuilder with Write with BatchWrite with LeafClustering
     with org.apache.spark.sql.connector.write.SupportsOverwrite
     with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite
     with RowLevelCommitMetrics.Reporting {
@@ -115,29 +117,29 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
     }
   }
 
+  /** A predicate overwrite hands its rows to replaceWhere as one frame
+    * (which routes them itself): its tasks write flat parts. */
+  override protected def clusterCols: Seq[String] =
+    if (mode == "predicate") Nil else partCols
+
+  private def opName = if (mode == "append") "append" else "insert_overwrite"
+
   override def build(): Write = this
   override def toBatch: BatchWrite = this
   override def description(): String =
     s"graft $mode insert $path (${face.label})"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory = {
-    val spark = SparkSession.active
-    new FeatherWriterFactory(writeSchema, path, "lz4", 4096,
-      GraftHadoop.confBroadcast(spark))
-  }
+      : DataWriterFactory =
+    FaceConvert.writerFactory(opName, face, writeSchema,
+      clusterCols, path, sorted = true)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = messages.collect { case m: FeatherCommitMessage => m }
-    val (data, empty) = committed.partition(m =>
-      FeatherStats.fromJson(m.statsJson).nonEmpty)
-    empty.foreach { m =>
-      try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
-      catch { case _: Exception => () }
-    }
+    val data = messages.toSeq.collect { case m: LeafCommitMessage => m }
+      .flatMap(_.parts)
     if (mode == "predicate") {
       // replaceWhere reads the written rows back as one frame and owns
       // the whole commit; the tmp parts are never published themselves
@@ -146,7 +148,7 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
           if (data.isEmpty) spark.createDataFrame(
             java.util.Collections.emptyList[org.apache.spark.sql.Row](),
             writeSchema)
-          else GraftFeather.readFiles(spark, data.toSeq.map(m =>
+          else GraftFeather.readFiles(spark, data.map(m =>
             (new org.apache.hadoop.fs.Path(path, m.tmpName).toString,
               m.bytes)))
         val r = graft.io.PredicateMutations.replaceWhere(spark, path, rows,
@@ -166,13 +168,10 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
       report = Some(RowLevelCommitMetrics.noOp(snap))
       return
     }
-    val opName = mode match {
-      case "append" => "append"
-      case _ => "insert_overwrite"
-    }
     val targetV = snap.version + 1
-    val (parts, flatStats) = FaceConvert.toFaceParts(opName, face, fs,
-      path, data.toSeq, dataSchema, partCols, targetV)
+    val written = FaceConvert.toFaceParts(face, fs, path, data, dataSchema,
+      partCols, targetV)
+    val parts = written.map { case (rel, len, _) => (rel, len) }
     // which existing files does this statement replace?
     val removeRel: Set[String] = mode match {
       case "append" => Set.empty
@@ -239,22 +238,18 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
           removeRel = removeRel, add = added.toSeq,
           readRel = Some(removeRel))
       catch { case e: Throwable =>
-        FaceConvert.deleteFinalized(fs, path, added.toSeq.map(_._1))
-        FaceConvert.unpublishLeafStats(fs, path, added.toSeq.map(_._1))
+        FeatherMutations.deletePartsAndSidecars(fs, root,
+          added.toSeq.map(_._1))
         throw e
       }
     report = Some(RowLevelCommitMetrics.Report(version, removeRel.size,
       snap.files.size - removeRel.size, added.size, 0))
-    if (flatStats.nonEmpty) FeatherStats.upsertMerged(fs, root, flatStats)
+    LeafWriter.foldStats(fs, root, written)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    messages.collect { case m: FeatherCommitMessage => m }.foreach { m =>
-      try fs.delete(new org.apache.hadoop.fs.Path(path, m.tmpName), false)
-      catch { case _: Exception => () }
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    FaceConvert.deleteTmp(new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration),
+      path, messages.toSeq.collect { case m: LeafCommitMessage => m }
+        .flatMap(_.parts))
 }

@@ -220,4 +220,9 @@ object Bridge {
         outputTimestampType = org.apache.spark.sql.internal.SQLConf
           .ParquetOutputTimestampType.TIMESTAMP_MICROS)
       .convert(schema)
+
+  /** Wait until every posted listener event reached its listeners (the
+    * bus is private[spark]) — job counts read right after an action. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }
