@@ -16,10 +16,20 @@ object GraftSession {
     // SPARK_GRAFT_CPUS overrides for debugging at lower parallelism
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    SparkSession.builder()
+    configure(SparkSession.builder())
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
+      .getOrCreate()
+  }
+
+  /** The engine's session settings: everything but the master, the app
+    * name and the shuffle width, which each builder picks for its
+    * machine. The harness mains ([[build]]) and the test session apply
+    * this one definition, so tests run on the engine's FileSystem,
+    * catalogs and store policy. */
+  def configure(b: SparkSession.Builder): SparkSession.Builder =
+    b
       // AQE right-sizes the 32-way shuffles at small SF (and re-plans skew
       // at large SF); letting it also repartition cached plans keeps the
       // iterative queries (connected components) from paying 32 near-empty
@@ -63,6 +73,8 @@ object GraftSession {
       .config("spark.sql.catalog.graft_dv.warehouse",
         s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_tables")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+      // table IO on `file:` sets file modes through the JDK instead of
+      // forking `chmod` per created file and made directory
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.io.GraftLocalFileSystem].getName)
 }

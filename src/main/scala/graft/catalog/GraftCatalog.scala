@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
@@ -593,7 +594,8 @@ private[graft] class GraftTable(
     StructType(dataSchema.fields ++ partSchema.fields)
 
   override def partitioning(): Array[Transform] =
-    partCols.map(Expressions.identity).toArray
+    partCols.map(c => Expressions.identity(QuotingUtils.quoteIdentifier(c)))
+      .toArray
 
   override def properties(): JMap[String, String] =
     Map(

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sources.FeatherSnapshots
@@ -213,7 +213,10 @@ object CopyInto {
   }
 
   /** List the source: recursive, hidden files skipped, optional GLOB
-    * on the file NAME. Returns (absolute path, byte length). */
+    * on the file NAME. Returns (absolute path, byte length). Walks with
+    * `listStatus`: `listFiles` builds a `LocatedFileStatus` per file,
+    * which loads its owner and mode — a forked `ls -ld` per source file
+    * on the local FS. */
   private def listSource(fs: FileSystem, src: Path,
                          pattern: Option[String]): Seq[(String, Long)] = {
     val glob = pattern.map(new org.apache.hadoop.fs.GlobPattern(_))
@@ -222,13 +225,18 @@ object CopyInto {
     // source root only — a source dir that itself lives under a
     // _staging/-style ancestor must not silently list empty
     val rootPrefix = fs.makeQualified(src).toString.stripSuffix("/") + "/"
-    val it = fs.listFiles(src, true)
-    while (it.hasNext) {
-      val st = it.next()
+    def hiddenName(n: String) = n.startsWith("_") || n.startsWith(".")
+    // every file under a hidden directory is hidden: those are not walked
+    def files(dir: Path): Iterator[FileStatus] =
+      fs.listStatus(dir).iterator.flatMap { st =>
+        if (!st.isDirectory) Iterator(st)
+        else if (hiddenName(st.getPath.getName)) Iterator.empty
+        else files(st.getPath)
+      }
+    for (st <- files(src)) {
       val name = st.getPath.getName
       val rel = st.getPath.toString.stripPrefix(rootPrefix)
-      val hidden = rel.split('/').exists(s =>
-        s.startsWith("_") || s.startsWith("."))
+      val hidden = rel.split('/').exists(hiddenName)
       // the graft writers' skipping-index sidecars
       // (`<part>.<data-ext>.stats.json`) are service files riding beside
       // the data parts — listing them as batch files would feed JSON to

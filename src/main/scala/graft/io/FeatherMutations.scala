@@ -3,6 +3,7 @@ package graft.io
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
@@ -512,10 +513,12 @@ object FeatherMutations {
                                       partsFor: Map[String, Int] = Map.empty)
       : Seq[(String, Long, String)] = {
     val spark = src.sparkSession
+    // quoted: a column named `the d.ay` is one name, not a nested field
+    def named(c: String) = col(QuotingUtils.quoteIdentifier(c))
     val rows = src.select((tableSchema.fieldNames.toSeq ++ partCols)
-        .map(col): _*)
-      .repartition(partCols.map(col): _*)
-      .sortWithinPartitions(partCols.map(col): _*)
+        .map(named): _*)
+      .repartition(partCols.map(named): _*)
+      .sortWithinPartitions(partCols.map(named): _*)
     val st = rows.schema
     val sinks = PartSinks(spark, face,
       StructType(st.fields.take(tableSchema.size)), codec)

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
@@ -797,16 +798,18 @@ private[sources] final class LeafWriterFactory(
 private[sources] trait LeafClustering
     extends org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
   protected def clusterCols: Seq[String]
+  // one-part references: a partition column named `the d.ay` is one name
+  private def clusterRefs: Seq[NamedReference] =
+    clusterCols.map(c => Expressions.column(QuotingUtils.quoteIdentifier(c)))
   override def requiredDistribution()
       : org.apache.spark.sql.connector.distributions.Distribution =
     if (clusterCols.isEmpty)
       org.apache.spark.sql.connector.distributions.Distributions.unspecified()
     else org.apache.spark.sql.connector.distributions.Distributions.clustered(
-      clusterCols.map(c => Expressions.column(c)
-        : org.apache.spark.sql.connector.expressions.Expression).toArray)
+      clusterRefs.toArray[org.apache.spark.sql.connector.expressions.Expression])
   override def requiredOrdering()
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    clusterCols.map(c => Expressions.sort(Expressions.column(c),
+    clusterRefs.map(r => Expressions.sort(r,
       org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
       .toArray
 }

@@ -204,4 +204,27 @@ class PartitionedWriteSpec extends AnyFunSuite {
     assert(back === Map(Some("a b") -> 12L, Some("a/b") -> 12L,
       Some("k=v") -> 12L, None -> 12L))
   }
+
+  test("a partition column named with a space and a dot takes a CTAS, an " +
+       "INSERT and an UPDATE") {
+    val p = tmp("dotted")
+    spark.sql(s"CREATE TABLE graft.`$p` USING feather " +
+      "PARTITIONED BY (`the d.ay`) AS SELECT id, id AS v, " +
+      "CAST(id % 3 AS INT) AS `the d.ay` FROM range(30)").collect()
+    spark.sql(s"INSERT INTO graft.`$p` VALUES (30, 30, 0), (31, 31, 1)")
+      .collect()
+    spark.sql(s"UPDATE graft.`$p` SET v = -v WHERE `the d.ay` = 1").collect()
+    val back = spark.sql(s"SELECT id, v, `the d.ay` FROM graft.`$p`")
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getAs[Number](2).intValue))
+      .toSeq.sortBy(_._1)
+    val want = (0L to 31L).map { i =>
+      val d = if (i >= 30) (i - 30).toInt else (i % 3).toInt
+      (i, if (d == 1) -i else i, d)
+    }
+    assert(back === want)
+    assert(new java.io.File(p).listFiles().filter(_.isDirectory)
+      .map(_.getName).filter(_.startsWith("the d.ay=")).toSet ===
+      Set("the d.ay=0", "the d.ay=1", "the d.ay=2"))
+  }
 }
