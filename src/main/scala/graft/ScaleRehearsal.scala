@@ -842,8 +842,8 @@ object ScaleRehearsal {
     *  (b) dynamic INSERT OVERWRITE replaces exactly the leaves the
     *      query's rows land in, same untouched-leaf requirement —
     *      re-running one day's job at 100 TB swaps one day's files.
-    * It opens with the 64-leaf feather write timing
-    * ([[partitionedWrites]]). */
+    * It opens with the 64-leaf feather and parquet write timing
+    * ([[partitionedWrites]]), and prints each build's seconds. */
   def replaceOverwriteTier(spark: SparkSession, out: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -858,18 +858,20 @@ object ScaleRehearsal {
     }
     def tableBytes(dir: String): Long =
       (0 until days).map(d => leafFiles(dir, d).map(_._2).sum).sum
-    def build(dir: String, n: Long): Unit = {
+    def build(dir: String, n: Long): Double = {
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+      val t0 = System.nanoTime()
       graft.io.ParquetTable.write(
         spark.range(n).select(col("id"),
           concat(lit("pay_"), col("id")).as("pay"),
           concat(lit("d"), col("id") % days).as("day"))
           .repartition(col("id") % days),
         dir, partitionBy = Seq("day"))
+      (System.nanoTime() - t0) / 1e9
     }
     val results = Seq(1000000L, 4000000L).map { n =>
       val dir = s"$out/ro_$n"
-      build(dir, n)
+      val buildSec = build(dir, n)
       val before = (0 until days).map(d => d -> leafFiles(dir, d)).toMap
       val total = tableBytes(dir)
       // (a) leaf-aligned replaceWhere: recompute day d7 and swap it
@@ -915,26 +917,30 @@ object ScaleRehearsal {
         "dynamic overwrite must replace exactly the named leaves")
       val ovNew = leafFiles(dir, 3).map(_._2).sum +
         leafFiles(dir, 11).map(_._2).sum
-      (n, total, rwSec, rwNew, ovSec, ovNew)
+      (n, buildSec, total, rwSec, rwNew, ovSec, ovNew)
     }
     println("REPLOVR tier (leaf-aligned backfill: bytes ∝ the replaced " +
       "slice, untouched leaves byte-identical — required, not observed):")
-    results.foreach { case (n, total, rw, rwB, ov, ovB) =>
-      println(f"  n=$n%8d tableBytes=$total%11d replaceWhere=$rw%6.2fs " +
+    results.foreach { case (n, b, total, rw, rwB, ov, ovB) =>
+      println(f"  n=$n%8d build=$b%6.2fs tableBytes=$total%11d " +
+        f"replaceWhere=$rw%6.2fs " +
         f"newBytes=$rwB%9d dynOverwrite=$ov%6.2fs newBytes=$ovB%9d")
     }
   }
 
-  /** Partitioned feather writes (the replovr tier's first receipt): a
-    * 1M-row CTAS into 64 `day` leaves, then one SQL INSERT of 64 000 rows
-    * touching all 64 — the statements whose commit-time routing cost
-    * grows with the leaf count. Prints seconds and Spark jobs for each;
-    * one part per leaf per statement is REQUIREd. */
+  /** Partitioned writes (the replovr tier's first receipt): a 1M-row
+    * feather CTAS into 64 `day` leaves, then one SQL INSERT of 64 000
+    * rows touching all 64 — the statements whose commit-time routing
+    * cost grows with the leaf count — and the same CTAS `USING parquet`.
+    * Prints seconds and Spark jobs for each; one part per leaf per
+    * statement is REQUIREd. */
   private def partitionedWrites(spark: SparkSession, dir: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(conf)
+    val pqDir = s"$dir-pq"
     fs.delete(root, true)
+    fs.delete(new org.apache.hadoop.fs.Path(pqDir), true)
     def timedJobs(stmt: String): (Double, Int) = {
       val sc = spark.sparkContext
       val jobs = new java.util.concurrent.atomic.AtomicInteger()
@@ -955,22 +961,32 @@ object ScaleRehearsal {
     def rows(lo: Long, hi: Long) =
       "SELECT id, id * 3 AS v, concat('pay_', id) AS pay, " +
         s"CAST(id % 64 AS INT) AS day FROM range($lo, $hi)"
-    def partsPerLeaf: Map[String, Int] =
-      graft.sources.FeatherSnapshots.resolve(fs, root, None).get.files
+    def partsPerLeaf(d: String): Map[String, Int] =
+      graft.sources.FeatherSnapshots
+        .resolve(fs, new org.apache.hadoop.fs.Path(d), None).get.files
         .groupBy { case (rel, _) => rel.substring(0, rel.lastIndexOf('/')) }
         .map { case (leaf, fs) => leaf -> fs.size }
-    val (ctasSec, ctasJobs) = timedJobs(s"CREATE TABLE graft.`$dir` " +
-      s"USING feather PARTITIONED BY (day) AS ${rows(0L, 1000000L)}")
-    require(partsPerLeaf.size == 64 && partsPerLeaf.values.forall(_ == 1),
-      s"CTAS must land one part in each of 64 leaves: $partsPerLeaf")
+    def ctas(face: String, d: String): (Double, Int) = {
+      val r = timedJobs(s"CREATE TABLE graft.`$d` USING $face " +
+        s"PARTITIONED BY (day) AS ${rows(0L, 1000000L)}")
+      val ppl = partsPerLeaf(d)
+      require(ppl.size == 64 && ppl.values.forall(_ == 1),
+        s"the $face CTAS must land one part in each of 64 leaves: $ppl")
+      r
+    }
+    val (ctasSec, ctasJobs) = ctas("feather", dir)
     val (insSec, insJobs) = timedJobs(
       s"INSERT INTO graft.`$dir` ${rows(1000000L, 1064000L)}")
-    require(partsPerLeaf.size == 64 && partsPerLeaf.values.forall(_ == 2),
-      s"the INSERT must add one part to each of 64 leaves: $partsPerLeaf")
+    require(partsPerLeaf(dir).size == 64 &&
+        partsPerLeaf(dir).values.forall(_ == 2),
+      s"the INSERT must add one part to each of 64 leaves: " +
+        s"${partsPerLeaf(dir)}")
+    val (pqSec, pqJobs) = ctas("parquet", pqDir)
     println(f"""{"partitioned_writes_leaves":64,"ctas_rows":1000000,""" +
       f""""ctas_sec":$ctasSec%.2f,"ctas_jobs":$ctasJobs,""" +
       f""""insert_rows":64000,"insert_sec":$insSec%.2f,""" +
-      f""""insert_jobs":$insJobs}""")
+      f""""insert_jobs":$insJobs,"parquet_ctas_sec":$pqSec%.2f,""" +
+      f""""parquet_ctas_jobs":$pqJobs}""")
   }
 
   /** PREDICATE-DML tier (r14, PredicateMutations): the structural

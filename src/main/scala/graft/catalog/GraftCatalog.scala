@@ -227,8 +227,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   // ---- StagingTableCatalog -------------------------------------------------
   // Atomic CREATE / REPLACE / CREATE OR REPLACE (plain and AS SELECT):
   // Spark stages the table, writes the query through the staged table's
-  // DSv2 writer (tmp parts, invisible), and ONE manifest publish at
-  // commitStagedChanges makes everything visible — replace keeps prior
+  // DSv2 writer (the face's parts, leaf-routed, in a hidden staging
+  // directory), and ONE manifest publish at commitStagedChanges makes
+  // everything visible — replace keeps prior
   // versions time-travelable, and the strictest conflict contract in
   // the tier aborts on ANY concurrent commit (see FeatherStagedTable).
 
@@ -261,9 +262,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       s"$op $catalogName.$ident: $msg")
     validateTableClauses(op, ident, properties.asScala.toMap, bad)
     // identity transforms only — same rule as the non-staged CREATE;
-    // the staged publish routes rows into key=value leaves through the
-    // engine's own CTAS/REPLACE lowering (every face), so PARTITIONED
-    // BY carries straight through
+    // the staged write's tasks route rows into key=value leaves (every
+    // face), so PARTITIONED BY carries straight through
     val partCols = partitions.map {
       case t if t.name == "identity" && t.references.length == 1 &&
           t.references.head.fieldNames.length == 1 =>

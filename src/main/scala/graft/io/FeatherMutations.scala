@@ -484,9 +484,10 @@ object FeatherMutations {
       (if (relDir.isEmpty) name else s"$relDir/$name", len)
     }
 
-  /** Partitioned insert routing for the DataFrame writers — CTAS and
-    * REPLACE ([[TableDdl]], the staged SQL CTAS / REPLACE included),
-    * [[TableInserts]] and replaceWhere: source rows land in the leaf
+  /** Partitioned insert routing for the DataFrame writers —
+    * [[TableInserts]] (COPY INTO's commit, whose crash-heal finds it by
+    * the `copy-<digest>-` part-name tag), replaceWhere and
+    * [[ParquetTable]]'s partitioned write / append: source rows land in the leaf
     * THEIR partition values name (the hive contract — a matched
     * key whose source row carries other partition values moves leaves).
     * ONE distributed pass: the rows cluster by the partition columns,
@@ -523,19 +524,20 @@ object FeatherMutations {
     val sinks = PartSinks(spark, face,
       StructType(st.fields.take(tableSchema.size)), codec)
     val confMap = GraftHadoop.confBroadcast(spark)
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
     val rootStr = root.toString
     val stem = s".$prefix"
     try {
       val parts = rows.queryExecution.toRdd.mapPartitionsWithIndex {
         (pid, it) =>
           val attempt = org.apache.spark.TaskContext.get().taskAttemptId()
-          val w = new LeafParts(op, st, partCols, sinks,
+          val w = new LeafParts(op, st, partCols, tz, sinks,
             GraftHadoop.execConf(confMap), new Path(rootStr),
             f"$stem-$pid%05d-a$attempt", pid, sorted = true, partsFor)
           try { it.foreach(w.write); w.commit().iterator }
           catch { case e: Throwable => w.abort(); throw e }
       }.collect().toSeq
-      LeafWriter.land(fs, root, parts, prefix, face.suffix)
+      LeafWriter.land(fs, root, root, parts, prefix, face.suffix)
     } finally
       fs.listStatus(root).iterator
         .filter(e => !e.isDirectory && e.getPath.getName.startsWith(stem + "-"))

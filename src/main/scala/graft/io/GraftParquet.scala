@@ -255,13 +255,9 @@ private[graft] object GraftParquet {
   /** Land staged parquet files into `destDir` under the run prefix: one
     * footer read per file derives the stats sidecar AND filters
     * zero-row files (Spark's FLAT sink keeps partition 0's file even
-    * when empty; the no-op guards upstream key on an empty parts list —
-    * the partitioned sink emits no empty files, so the filter is a
-    * no-op there). ONE definition for the flat writeParts and the
-    * partitioned table writer — the landing protocol (skip rule, name
-    * shape, sidecar format) must not drift between them. Skipped files
-    * stay in the staging dir for the caller's cleanup. */
-  private[graft] def landStaged(fs: FileSystem, staged: Seq[Path],
+    * when empty; the no-op guards upstream key on an empty parts list).
+    * Skipped files stay in the staging dir for the caller's cleanup. */
+  private def landStaged(fs: FileSystem, staged: Seq[Path],
                                 destDir: Path, prefix: String)
       : Seq[(String, Long, String)] = {
     val withStats = staged.map(p =>

@@ -6,10 +6,10 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.sources.FeatherPartitions
 
@@ -132,17 +132,20 @@ private[graft] object PartSinks {
 
 /** One write task's open parts, routed by hive leaf — the task side of
   * every partitioned write (the SQL writes' DataWriters and
-  * [[LeafWriter.route]]) and of the SQL writes' flat parts. Rows arrive
-  * in `rowSchema` order; `partCols` name the routing columns (none:
-  * every row lands in the root). Parts open on a leaf's first row, so a
-  * task no row reached writes nothing. With `sorted` input (clustered
-  * and ordered by the partition columns) a leaf's parts close when the
-  * next leaf starts, so the task holds one open part at a time, as
-  * Spark's own dynamic-partition writer does; unsorted input keeps every
-  * leaf it has seen open. `partsFor(leaf)` > 1 spreads that leaf over as
-  * many parts by row hash (a retried task re-derives the same split). */
+  * [[FeatherMutations.routePartitionedInserts]]) and of the SQL writes'
+  * flat parts. Rows arrive in `rowSchema` order; `partCols` name the
+  * routing columns (none: every row lands in the root), whose values
+  * cast to string at `timeZone`, the session's, as Spark's partitioned
+  * sink casts them. Parts open on a leaf's first row, so a task no row
+  * reached writes nothing. With `sorted` input (clustered and ordered by
+  * the partition columns) a leaf's parts close when the next leaf
+  * starts, so the task holds one open part at a time, as Spark's own
+  * dynamic-partition writer does; unsorted input keeps every leaf it has
+  * seen open. `partsFor(leaf)` > 1 spreads that leaf over as many parts
+  * by row hash (a retried task re-derives the same split). */
 private[graft] final class LeafParts(op: String, rowSchema: StructType,
-                                     partCols: Seq[String], sinks: PartSinks,
+                                     partCols: Seq[String], timeZone: String,
+                                     sinks: PartSinks,
                                      conf: Configuration, root: Path,
                                      tmpStem: String, partitionId: Int,
                                      sorted: Boolean,
@@ -153,8 +156,12 @@ private[graft] final class LeafParts(op: String, rowSchema: StructType,
       s"rows (${rowSchema.fieldNames.mkString(", ")})")
     i
   }
-  private val partConv: Seq[Any => Any] = partIdx.map(i =>
-    CatalystTypeConverters.createToScalaConverter(rowSchema(i).dataType))
+  private val partVals: InternalRow => UnsafeRow = {
+    val proj = UnsafeProjection.create(partIdx.map(i => Cast(BoundReference(i,
+      rowSchema(i).dataType, rowSchema(i).nullable), StringType,
+      Some(timeZone))))
+    proj(_)
+  }
   private val dataOf: InternalRow => InternalRow =
     if (partIdx.isEmpty) identity
     else {
@@ -170,21 +177,18 @@ private[graft] final class LeafParts(op: String, rowSchema: StructType,
     .empty[String, Array[Slot]]
   private val written = scala.collection.mutable.ArrayBuffer.empty[Path]
   private val done = scala.collection.mutable.ArrayBuffer.empty[LeafPart]
-  private var lastVals: Seq[Any] = null
+  private var lastVals: UnsafeRow = null
   private var lastLeaf: String = null
   private var current: String = null
 
   private def leafOf(row: InternalRow): String =
     if (partIdx.isEmpty) ""
     else {
-      val vals = partIdx.indices.map { k =>
-        val i = partIdx(k)
-        if (row.isNullAt(i)) null
-        else partConv(k)(row.get(i, rowSchema(i).dataType))
-      }
+      val vals = partVals(row)
       if (vals != lastVals) {
-        lastVals = vals
-        lastLeaf = LeafWriter.leafOf(op, partCols, vals)
+        lastVals = vals.copy()
+        lastLeaf = LeafWriter.leafOf(op, partCols, partIdx.indices.map(k =>
+          if (vals.isNullAt(k)) null else vals.getUTF8String(k).toString))
       }
       lastLeaf
     }
@@ -238,33 +242,33 @@ private[graft] final class LeafParts(op: String, rowSchema: StructType,
   * commit, so a commit that loses its conflict check strands no cache
   * entry. */
 private[graft] object LeafWriter {
-  /** THE leaf a row's partition values name: Spark's Hive escaping (the
-    * encoding the partitioned sink writes and every reader unescapes —
-    * URLEncoder's space→'+' would land key=a+b and read back "a+b"), a
-    * null value in the hive-null leaf, and the literal hive-null marker
-    * refused (it would read back as NULL). */
-  def leafOf(op: String, partCols: Seq[String], values: Seq[Any]): String =
+  /** THE leaf a row's partition values (cast to string) name, spelled
+    * as Spark's partitioned sink spells it (`getPartitionPathString`):
+    * Hive escaping, which every reader unescapes, and NULL and `""` in
+    * the hive-null leaf. The literal hive-null marker is refused (it
+    * would read back as NULL). */
+  def leafOf(op: String, partCols: Seq[String], values: Seq[String]): String =
     partCols.zip(values).map { case (c, v) =>
-      if (v != null && v.toString == FeatherPartitions.HiveNull)
+      if (v == FeatherPartitions.HiveNull)
         throw new IllegalArgumentException(
           s"$op: partition value for '$c' is the literal hive null " +
-            s"marker '${v.toString}' — it would be unreadable as " +
-            "anything but NULL; use an actual null")
-      s"${FeatherPartitions.escapePath(c)}=${if (v == null)
-        FeatherPartitions.HiveNull else FeatherPartitions.escapePath(v.toString)}"
+            s"marker '$v' — it would be unreadable as anything but " +
+            "NULL; use an actual null")
+      ExternalCatalogUtils.getPartitionPathString(c, v)
     }.mkString("/")
 
-  /** Rename each task part into its leaf as
+  /** Rename each task part from `src`, the directory its tasks wrote
+    * into, into its leaf under `root` as
     * `<prefix>-part-<partition>-<seq><suffix>` and write its per-part
     * stats sidecar. Returns (root-relative path, len, stats JSON). */
-  def land(fs: FileSystem, root: Path, parts: Seq[LeafPart], prefix: String,
-           suffix: String): Seq[(String, Long, String)] = {
+  def land(fs: FileSystem, src: Path, root: Path, parts: Seq[LeafPart],
+           prefix: String, suffix: String): Seq[(String, Long, String)] = {
     parts.map(_.leaf).distinct.filter(_.nonEmpty)
       .foreach(l => fs.mkdirs(new Path(root, l)))
     parts.map { p =>
       val dir = if (p.leaf.isEmpty) root else new Path(root, p.leaf)
       val name = f"$prefix-part-${p.partitionId}%05d-${p.seq}%04d$suffix"
-      val tmp = new Path(root, p.tmpName)
+      val tmp = new Path(src, p.tmpName)
       val fin = new Path(dir, name)
       require(fs.rename(tmp, fin), s"commit rename $tmp -> $fin failed")
       val sc = fs.create(new Path(dir, name + ".stats.json"), true)

@@ -24,18 +24,19 @@ import graft.sources.{FeatherSnapshots, FeatherTimeTravel}
   * intact; deletion vectors filter via `_metadata.row_index` anti-joins
   * on the DV-bound minority of files only ([[GraftParquet.readFiles]]).
   *
-  * Layouts: [[write]]/[[append]] produce flat root-level tables (the
-  * sink contract the other faces share); an existing hive-partitioned
-  * parquet directory joins the tier via [[adopt]] — nothing is moved or
-  * rewritten, and [[read]] reconstructs its partition columns from the
-  * manifest paths through the scan's basePath, so partition pruning
-  * keeps working. */
+  * Layouts: [[write]]/[[append]] produce flat root-level tables, or,
+  * with `partitionBy`, hive `key=value` leaves written by the engine's
+  * one leaf writer ([[LeafParts]], one part per leaf); an existing
+  * hive-partitioned parquet directory joins the tier via [[adopt]] —
+  * nothing is moved or rewritten. [[read]] reconstructs the partition
+  * columns from the manifest paths through the scan's basePath, so
+  * partition pruning keeps working. */
 object ParquetTable {
 
   val Suffixes: Seq[String] = Seq(GraftParquet.Suffix)
 
   /** Overwrite `path` with `df` as a snapshotted parquet table: parts
-    * land via Spark's parquet sink + rename, then ONE manifest commit
+    * land via Spark's parquet writer + rename, then ONE manifest commit
     * publishes the swap (op=overwrite — prior versions keep reading
     * their files until expire). Returns the committed version.
     * Codecs: snappy (default), zstd, gzip, none; "lz4" is the shared
@@ -108,14 +109,20 @@ object ParquetTable {
     // pre-clean) each other; a crashed run's parts are unreferenced
     // orphans vacuumOrphans reclaims after the grace window
     val prefix = s"pq-${java.util.UUID.randomUUID().toString.take(12)}"
-    val parts: Seq[(String, Long)] =
+    val written: Seq[(String, Long, String)] =
       if (partitionBy.isEmpty)
         GraftParquet.writeParts(df, path, prefix,
           ConnectorFace.ParquetFace.codecFor(codec))
-          .map { case (name, len, _) => (name, len) }
-      else writePartitionedParts(df, root, fs, prefix,
-        GraftParquet.normCodec(ConnectorFace.ParquetFace.codecFor(codec)),
-        partitionBy)
+      else
+        // partition values live in the directory chain, never in the
+        // files — the table tier's contract
+        FeatherMutations.routePartitionedInserts(
+          if (truncate) "ParquetTable.write" else "ParquetTable.append",
+          ConnectorFace.ParquetFace, fs, root, df, partitionBy,
+          org.apache.spark.sql.types.StructType(
+            df.schema.fields.filterNot(f => partitionBy.contains(f.name))),
+          prefix, codec)
+    val parts = written.map { case (rel, len, _) => (rel, len) }
     // an empty frame cannot DEFINE a partitioned table (no partition
     // values to route) — but an empty APPEND to an existing one is the
     // idempotent-replay shape and must no-op like the flat path
@@ -125,69 +132,13 @@ object ParquetTable {
     require(partitionBy.isEmpty || parts.nonEmpty || tableDefined,
       "ParquetTable: an empty frame cannot define a partitioned table " +
         "(no partition values to route)")
-    FeatherSnapshots.publishDataCommit(fs, root, truncate, Suffixes,
-      parts,
+    val version = FeatherSnapshots.publishDataCommit(fs, root, truncate,
+      Suffixes, parts,
       stampPart = () =>
         GraftParquet.stampSchemaOnly(fs, root, s"$prefix-empty.parquet",
           df.schema)).version
-  }
-
-  /** Hive-partitioned part landing: Spark's own partitioned sink writes
-    * into a run-unique staging tree, each `key=value` leaf's files
-    * rename into the table's matching leaf under the run prefix, and
-    * footer-derived stats sidecars land beside them — the same
-    * mechanics as the flat writeParts, per leaf. Spark's partitionBy
-    * already strips the partition columns from the file contents, which
-    * IS the table tier's contract (values live in the directory chain).
-    * Returns the (relative path, len) parts for the manifest commit. */
-  private def writePartitionedParts(df: DataFrame, root: Path,
-                                    fs: org.apache.hadoop.fs.FileSystem,
-                                    prefix: String, codec: String,
-                                    partitionBy: Seq[String])
-      : Seq[(String, Long)] = {
-    val staging = new Path(root, s"_tmp-$prefix")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    GraftParquet.withOutputMicros(df).write.mode("overwrite")
-      .partitionBy(partitionBy: _*)
-      .option("compression", codec).parquet(staging.toString)
-    try {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      def walk(dir: Path, relChain: String): Unit = {
-        val entries = fs.listStatus(dir)
-        entries.filter(e => e.isDirectory &&
-            e.getPath.getName.indexOf('=') > 0).foreach { e =>
-          val seg = e.getPath.getName
-          walk(e.getPath,
-            if (relChain.isEmpty) seg else s"$relChain/$seg")
-        }
-        val files = entries.filter { e =>
-          val n = e.getPath.getName
-          !e.isDirectory && n.endsWith(GraftParquet.Suffix) &&
-            !n.startsWith(".") && !n.startsWith("_")
-        }.map(_.getPath).sortBy(_.getName)
-        if (files.nonEmpty) {
-          require(relChain.nonEmpty,
-            "ParquetTable: partitioned staging left root-level files")
-          val leafDir = new Path(root, relChain)
-          fs.mkdirs(leafDir)
-          // the shared landing protocol (footer stats, zero-row filter,
-          // rename shape, sidecar format) — one definition with the
-          // flat writeParts
-          val landed = GraftParquet.landStaged(fs, files.toSeq, leafDir,
-            prefix)
-          if (landed.nonEmpty)
-            FeatherStats.upsertMerged(fs, leafDir,
-              landed.map { case (name, len, js) =>
-                name -> (len, FeatherStats.fromJson(js)) }.toMap)
-          out ++= landed.map { case (name, len, _) =>
-            (s"$relChain/$name", len) }
-        }
-      }
-      walk(staging, "")
-      out.toSeq
-    } finally {
-      fs.delete(staging, true): Unit
-    }
+    if (partitionBy.nonEmpty) LeafWriter.foldStats(fs, root, written)
+    version
   }
 
   /** Adopt an existing listing-based parquet directory (flat or hive

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import graft.sources.FeatherSnapshots
+import graft.sources.{FaceConvert, FeatherSnapshots}
 
 /** The DDL statements a snapshot table takes — reached from SQL through
   * [[graft.catalog.GraftCatalog]] (CREATE / CTAS / REPLACE / TRUNCATE /
@@ -35,17 +35,41 @@ object TableDdl {
     * a provider (Spark fills an omitted USING with its own
     * spark.sql.sources.default — parquet unless reconfigured); the
     * direct API defaults to feather, the engine's native format. */
-  private def faceFormat(provider: Option[String],
-                         bad: String => Nothing): String =
+  private[graft] def faceOf(provider: Option[String],
+                            bad: String => Nothing): ConnectorFace =
     provider.map(_.toLowerCase(java.util.Locale.ROOT))
       .getOrElse("feather") match {
-      case "feather" => "feather"
-      case "parquet" => "parquet"
-      case "avro" | "graft-avro" => "graft-avro"
+      case "feather" => ConnectorFace.FeatherFace
+      case "parquet" => ConnectorFace.ParquetFace
+      case "avro" | "graft-avro" => ConnectorFace.AvroFace
       case other => bad(s"USING $other — a graft table's face is one " +
         "of feather (default), parquet, avro (spelled `graft-avro` in " +
         "SQL: Spark's own provider lookup runs first)")
     }
+
+  /** What a staged `... AS SELECT` wrote: the query's `schema`, and the
+    * parts its write tasks left in `staging` (routed by leaf on a
+    * partitioned table) — none when the query produced no rows. */
+  private[graft] final case class StagedRows(schema: StructType,
+                                             staging: Path,
+                                             parts: Seq[LeafPart])
+
+  /** The data schema of an `AS SELECT` routed by `partitionCols`: every
+    * partition column must be the query's, and a data column must be
+    * left beside them. */
+  private def routedDataSchema(schema: StructType, partitionCols: Seq[String],
+                               bad: String => Nothing): StructType = {
+    partitionCols.filterNot(schema.fieldNames.contains).headOption.foreach(
+      c => bad(s"PARTITIONED BY names '$c', which the query does not " +
+        s"produce (${schema.fieldNames.mkString(", ")})"))
+    val dataSchema = StructType(schema.fields.filterNot(f =>
+      partitionCols.contains(f.name)))
+    if (partitionCols.nonEmpty && dataSchema.isEmpty)
+      bad("the query produces only the partition columns — a hive " +
+        "leaf's files hold the DATA columns (values live in the " +
+        "directory chain)")
+    dataSchema
+  }
 
   /** `CREATE TABLE graft.`/t` (cols) [USING face]` — an EMPTY snapshot
     * table: v1 is the schema stamp, so the table reads (zero rows,
@@ -61,7 +85,7 @@ object TableDdl {
     val op = "CREATE TABLE"
     def bad(msg: String): Nothing =
       throw new IllegalArgumentException(s"$op graft.`$path`: $msg")
-    val fmt = faceFormat(provider, bad)
+    val connFace = faceOf(provider, bad)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (FeatherSnapshots.enabled(fs, root)) {
@@ -85,11 +109,6 @@ object TableDdl {
     // counts data files by the `<prefix>-empty.<ext>` stamp naming, and
     // an empty CREATE routed through a face's ordinary writer would
     // land a part-…​ file that miscounts as data
-    val connFace = fmt match {
-      case "parquet" => ConnectorFace.ParquetFace
-      case "graft-avro" => ConnectorFace.AvroFace
-      case _ => ConnectorFace.FeatherFace
-    }
     fs.mkdirs(root)
     val prefix = FeatherSnapshots.runPrefix(1L, "create-")
     val stamp = connFace.stamp(fs, root, prefix, schema)
@@ -126,61 +145,44 @@ object TableDdl {
 
   /** `CREATE TABLE graft.`/t` [USING face] [PARTITIONED BY (cols)]
     * AS SELECT ...` — create-and-fill in one statement; the schema
-    * comes from the query. Partitioned CTAS rides the parquet face's
-    * partitioned writer (the other faces' partitioned layouts arrive
-    * via adopt); IF NOT EXISTS no-ops WITHOUT running the query. */
-  def createTableAs(spark: SparkSession, path: String,
-                    query: org.apache.spark.sql.DataFrame,
-                    provider: Option[String], partitionCols: Seq[String],
-                    ifNotExists: Boolean): Result = {
+    * comes from the query. The staged write's tasks already wrote the
+    * rows in the face's parts (or, flat and not feather, tmp feather
+    * parts converted here in one pass, as an INSERT's are), routed to
+    * their key=value leaves on a partitioned table: this renames them
+    * into the fresh table and publishes ONE v1 commit. */
+  private[graft] def createTableAs(spark: SparkSession, path: String,
+                                   rows: StagedRows,
+                                   provider: Option[String],
+                                   partitionCols: Seq[String]): Result = {
     val op = "CREATE TABLE AS SELECT"
     def bad(msg: String): Nothing =
       throw new IllegalArgumentException(s"$op graft.`$path`: $msg")
-    val fmt = faceFormat(provider, bad)
+    val connFace = faceOf(provider, bad)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (FeatherSnapshots.enabled(fs, root)) {
-      if (!ifNotExists)
-        bad("the table already exists — INSERT INTO/OVERWRITE to add " +
-          "or replace content, or CREATE TABLE IF NOT EXISTS to no-op")
-      val snap = FeatherSnapshots.resolve(fs, root, None).get
-      return Result(snap.version, 0, snap.files.size, 0)
-    }
-    partitionCols.filterNot(query.columns.contains).headOption.foreach(
-      c => bad(s"PARTITIONED BY names '$c', which the query does not " +
-        s"produce (${query.columns.mkString(", ")})"))
+    if (FeatherSnapshots.enabled(fs, root))
+      bad("the table already exists — INSERT INTO/OVERWRITE to add " +
+        "or replace content, or CREATE TABLE IF NOT EXISTS to no-op")
+    val dataSchema = routedDataSchema(rows.schema, partitionCols, bad)
+    if (partitionCols.nonEmpty && rows.parts.isEmpty)
+      bad("the query produced no rows — an empty frame cannot define " +
+        "a partitioned table (no partition values to route)")
     requireFreshDir(fs, root, bad)
-    if (partitionCols.isEmpty || fmt == "parquet")
-      // flat any-face, and parquet-face partitioned (Spark's own
-      // partitioned sink through ParquetTable.write)
-      writeByFace(spark, path, query, fmt, partitionCols)
-    else {
-      // feather/avro partitioned CTAS: rows route to their key=value
-      // leaves in one pass through the engine's leaf writer (the task
-      // writer every partitioned INSERT/MERGE uses), then ONE v1 commit
-      val connFace =
-        if (fmt == "graft-avro") ConnectorFace.AvroFace
-        else ConnectorFace.FeatherFace
-      val dataSchema = StructType(query.schema.fields.filterNot(f =>
-        partitionCols.contains(f.name)))
-      if (dataSchema.isEmpty)
-        bad("the query produces only the partition columns — a hive " +
-          "leaf's files hold the DATA columns (values live in the " +
-          "directory chain)")
-      fs.mkdirs(root)
-      val prefix = FeatherSnapshots.runPrefix(1L, "ctas-")
-      val parts = FeatherMutations.routePartitionedInserts(op, connFace,
-        fs, root, query, partitionCols, dataSchema, prefix, "lz4")
-      if (parts.isEmpty)
-        bad("the query produced no rows — an empty frame cannot define " +
-          "a partitioned table (no partition values to route)")
-      FeatherSnapshots.publishDataCommit(fs, root, truncate = false,
+    fs.mkdirs(root)
+    val prefix = FeatherSnapshots.runPrefix(1L, "ctas-")
+    val parts = FaceConvert.toFaceParts(connFace, fs, rows.staging, root,
+      rows.parts, dataSchema, partitionCols, prefix)
+    val report =
+      try FeatherSnapshots.publishDataCommit(fs, root, truncate = false,
         Seq(connFace.suffix), parts.map { case (rel, len, _) => (rel, len) },
-        stampPart = () => connFace.stamp(fs, root, prefix, dataSchema)): Unit
-      LeafWriter.foldStats(fs, root, parts)
-    }
-    val v1 = FeatherSnapshots.resolve(fs, root, None).get
-    Result(v1.version, 0, 0, v1.files.size)
+        stampPart = () => connFace.stamp(fs, root, prefix, dataSchema))
+      catch { case e: Throwable =>
+        // a lost exactly-once v1 never published the parts
+        FeatherMutations.deletePartsAndSidecars(fs, root, parts.map(_._1))
+        throw e
+      }
+    LeafWriter.foldStats(fs, root, parts)
+    Result(report.version, 0, 0, report.partsAdded)
   }
 
   /** `[CREATE OR] REPLACE TABLE graft.`/t` [USING face] [AS SELECT ...]`
@@ -200,22 +202,22 @@ object TableDdl {
     * `orCreate=false` (REPLACE TABLE) requires the table to exist.
     *
     * PARTITIONED BY replaces the table WITH a hive layout (any face):
-    * the query's rows route to their key=value leaves through the
-    * shared insert routing, and the one commit swaps every old file for
+    * the staged write's tasks routed the rows to their key=value leaves
+    * ([[StagedRows]]), and the one commit swaps every old file for
     * the new leaves — the layout itself may change (flat→partitioned,
     * different keys, different face). A partitioned replace needs ROWS:
     * schema-only / zero-row shapes refuse (no partition values to
     * route; TRUNCATE keeps the existing layout and removes the rows). */
-  def replaceTable(spark: SparkSession, path: String,
-                   schemaOrQuery: Either[StructType,
-                     org.apache.spark.sql.DataFrame],
-                   provider: Option[String], partitionCols: Seq[String],
-                   orCreate: Boolean): Result = {
+  private[graft] def replaceTable(spark: SparkSession, path: String,
+                                  schemaOrRows: Either[StructType, StagedRows],
+                                  provider: Option[String],
+                                  partitionCols: Seq[String],
+                                  orCreate: Boolean): Result = {
     val op = if (orCreate) "CREATE OR REPLACE TABLE" else "REPLACE TABLE"
     def bad(msg: String): Nothing =
       throw new IllegalArgumentException(s"$op graft.`$path`: $msg")
-    val fmt = faceFormat(provider, bad)
-    if (partitionCols.nonEmpty && schemaOrQuery.isLeft)
+    val connFace = faceOf(provider, bad)
+    if (partitionCols.nonEmpty && schemaOrRows.isLeft)
       bad(s"PARTITIONED BY (${partitionCols.mkString(", ")}) without " +
         "AS SELECT — a hive layout derives from rows; REPLACE ... AS " +
         "SELECT routes them (TRUNCATE TABLE keeps the existing layout)")
@@ -225,46 +227,27 @@ object TableDdl {
       if (!orCreate)
         bad("no snapshot table at this path — REPLACE TABLE requires " +
           "one (CREATE OR REPLACE TABLE creates it)")
-      return schemaOrQuery match {
-        case Right(q) =>
-          createTableAs(spark, path, q, provider, partitionCols,
-            ifNotExists = false)
+      return schemaOrRows match {
+        case Right(rows) =>
+          createTableAs(spark, path, rows, provider, partitionCols)
         case Left(schema) =>
           createTable(spark, path, schema, provider, Nil,
             ifNotExists = false)
       }
     }
     val snap = FeatherSnapshots.resolve(fs, root, None).get
-    val connFace = fmt match {
-      case "parquet" => ConnectorFace.ParquetFace
-      case "graft-avro" => ConnectorFace.AvroFace
-      case _ => ConnectorFace.FeatherFace
-    }
     val targetV = snap.version + 1
     val prefix = FeatherSnapshots.runPrefix(targetV, "rep-")
-    val schema = schemaOrQuery.fold(identity, _.schema)
+    val schema = schemaOrRows.fold(identity, _.schema)
     if (schema.isEmpty) bad("no columns")
-    val written: Seq[(String, Long, String)] =
-      if (partitionCols.nonEmpty) {
-        val q = schemaOrQuery.toOption.get
-        partitionCols.filterNot(q.columns.contains).headOption.foreach(
-          c => bad(s"PARTITIONED BY names '$c', which the query does not " +
-            s"produce (${q.columns.mkString(", ")})"))
-        val dataSchema = StructType(schema.fields.filterNot(f =>
-          partitionCols.contains(f.name)))
-        if (dataSchema.isEmpty)
-          bad("the query produces only the partition columns — a hive " +
-            "leaf's files hold the DATA columns")
-        val parts = FeatherMutations.routePartitionedInserts(op, connFace,
-          fs, root, q, partitionCols, dataSchema, prefix, "lz4")
-        if (parts.isEmpty)
-          bad("the query produced no rows — an empty result cannot " +
-            "define a partitioned layout (TRUNCATE TABLE keeps the " +
-            "existing layout and removes the rows)")
-        parts
-      } else schemaOrQuery.toOption.toSeq.flatMap(q => connFace.writeParts(
-        q.coalesce(ConnectorFace.capWriteParts(q)), root.toString,
-        prefix, "lz4"))
+    val dataSchema = routedDataSchema(schema, partitionCols, bad)
+    val rows = schemaOrRows.toOption
+    if (partitionCols.nonEmpty && rows.exists(_.parts.isEmpty))
+      bad("the query produced no rows — an empty result cannot " +
+        "define a partitioned layout (TRUNCATE TABLE keeps the " +
+        "existing layout and removes the rows)")
+    val written = rows.toSeq.flatMap(r => FaceConvert.toFaceParts(connFace,
+      fs, r.staging, root, r.parts, dataSchema, partitionCols, prefix))
     // empty FLAT replace (schema-only, or a zero-row query): v+1 is one
     // schema stamp, the shared all-rows-gone shape
     val added: Seq[(String, Long)] =
@@ -284,17 +267,6 @@ object TableDdl {
     LeafWriter.foldStats(fs, root, written)
     Result(committed, snap.files.size, 0, added.size)
   }
-
-  private def writeByFace(spark: SparkSession, path: String,
-                          df: org.apache.spark.sql.DataFrame,
-                          fmt: String, partitionCols: Seq[String]): Unit =
-    fmt match {
-      case "parquet" =>
-        ParquetTable.write(df, path, partitionBy = partitionCols)
-      case f =>
-        df.write.format(f).mode("overwrite")
-          .option("snapshots", "true").save(path)
-    }
 
   /** Everything `DESCRIBE TABLE graft.`/t`` prints: the merged schema
     * split into data and partition columns, plus the head's face /

@@ -707,10 +707,11 @@ private[sources] final class SplicedRowReader(
   * the parts ([[graft.io.LeafWriter.foldStats]]), so a lost conflict
   * check strands no cache entry (per-part sidecars cover readers in the
   * window; merged is a planning cache). */
-private[sources] object FaceConvert {
+private[graft] object FaceConvert {
   /** The writes' task-side factory: rows of `st` routed by `routeCols`
-    * into `face` parts, or (no route) into flat feather parts. `sorted`
-    * when the write declared the leaf clustering ([[LeafClustering]]). */
+    * into `face` parts under `path`, or (no route) into flat feather
+    * parts. `sorted` when the write declared the leaf clustering
+    * ([[LeafClustering]]). */
   def writerFactory(op: String, face: ConnectorFace, st: StructType,
                     routeCols: Seq[String], path: String,
                     sorted: Boolean): LeafWriterFactory = {
@@ -720,34 +721,35 @@ private[sources] object FaceConvert {
         "lz4")
       else PartSinks(spark, face, StructType(st.fields.filterNot(f =>
         routeCols.exists(_.equalsIgnoreCase(f.name)))), "lz4")
-    new LeafWriterFactory(op, st, routeCols, sinks, path, sorted,
+    new LeafWriterFactory(op, st, routeCols,
+      spark.sessionState.conf.sessionLocalTimeZone, sinks, path, sorted,
       GraftHadoop.confBroadcast(spark))
   }
 
-  /** Land the tasks' parts as FINAL face parts of version `targetV`'s
-    * run prefix; returns (rel path, len, stats JSON) — the caller commits
-    * them, then folds their stats. Converted tmp parts are deleted here,
-    * success or not (they were never visible). */
+  /** Land the tasks' parts, written into `src`, as FINAL face parts of
+    * the table at `root` under the run `prefix`; returns (rel path, len,
+    * stats JSON) — the caller commits them, then folds their stats.
+    * Converted tmp parts are deleted here, success or not (they were
+    * never visible). */
   def toFaceParts(face: ConnectorFace, fs: org.apache.hadoop.fs.FileSystem,
-                  path: String, parts: Seq[LeafPart], dataSchema: StructType,
-                  partCols: Seq[String], targetV: Long)
-      : Seq[(String, Long, String)] = {
+                  src: org.apache.hadoop.fs.Path,
+                  root: org.apache.hadoop.fs.Path, parts: Seq[LeafPart],
+                  dataSchema: StructType, partCols: Seq[String],
+                  prefix: String): Seq[(String, Long, String)] = {
     if (parts.isEmpty) return Seq.empty
-    val prefix = FeatherSnapshots.runPrefix(targetV)
-    val root = new org.apache.hadoop.fs.Path(path)
     if (partCols.nonEmpty || (face eq ConnectorFace.FeatherFace))
-      return LeafWriter.land(fs, root, parts, prefix, face.suffix)
+      return LeafWriter.land(fs, src, root, parts, prefix, face.suffix)
     try {
       val df = GraftFeather.readFiles(SparkSession.active, parts.map(p =>
-        (new org.apache.hadoop.fs.Path(path, p.tmpName).toString, p.bytes)))
+        (new org.apache.hadoop.fs.Path(src, p.tmpName).toString, p.bytes)))
       // cap the write fan-out like the mutation tier: a 32-task insert
       // must not fill the table with 32 near-empty parts per statement
       face.writeParts(
         df.select(dataSchema.fieldNames.toSeq.map(
           org.apache.spark.sql.functions.col): _*)
           .coalesce(ConnectorFace.capWriteParts(df)),
-        path, prefix, face.codecFor("lz4"))
-    } finally deleteTmp(fs, path, parts)
+        root.toString, prefix, face.codecFor("lz4"))
+    } finally deleteTmp(fs, src.toString, parts)
   }
 
   /** Delete tasks' tmp parts (abort, or parts a commit never lands). */
@@ -770,13 +772,14 @@ private[sources] final case class LeafCommitMessage(parts: Seq[LeafPart])
     extends WriterCommitMessage
 
 private[sources] final class LeafWriterFactory(
-    op: String, st: StructType, routeCols: Seq[String], sinks: PartSinks,
-    path: String, sorted: Boolean,
+    op: String, st: StructType, routeCols: Seq[String], timeZone: String,
+    sinks: PartSinks, path: String, sorted: Boolean,
     confMap: org.apache.spark.broadcast.Broadcast[Map[String, String]])
     extends DataWriterFactory {
   /** The task's parts, under `.part-<partition>-task-<task>` tmp names. */
   def parts(partitionId: Int, taskId: Long): LeafParts =
-    new LeafParts(op, st, routeCols, sinks, GraftHadoop.execConf(confMap),
+    new LeafParts(op, st, routeCols, timeZone, sinks,
+      GraftHadoop.execConf(confMap),
       new org.apache.hadoop.fs.Path(path),
       f".part-$partitionId%05d-task-$taskId", partitionId, sorted)
 
@@ -956,8 +959,8 @@ private class FaceCowWrite(op: RowLevelHost,
       return
     }
     val targetV = state.snap.version + 1
-    val parts = FaceConvert.toFaceParts(face, fs, path, data, dataSchema,
-      partCols, targetV)
+    val parts = FaceConvert.toFaceParts(face, fs, root, root, data,
+      dataSchema, partCols, FeatherSnapshots.runPrefix(targetV))
     val added = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     added ++= parts.map { case (rel, len, _) => (rel, len) }
     if (added.isEmpty &&
@@ -991,9 +994,10 @@ private class FaceCowWrite(op: RowLevelHost,
   * ride the scans' `_pos` on the way in and the faces' DV-aware reads on
   * the way out), inserted rows → final parts through
   * [[FaceConvert.toFaceParts]], one atomic manifest commit, full unwind
-  * (parts, sidecars, fresh DVs) when the conflict check loses. It asks
-  * for no clustering — a DELETE gains no shuffle — so the insert half
-  * routes unsorted rows: one part per leaf per task. A file whose
+  * (parts, sidecars, fresh DVs) when the conflict check loses. UPDATE and
+  * MERGE, which insert, ask for the leaf clustering ([[LeafClustering]]):
+  * each touched leaf gains one part. A DELETE inserts nothing and asks
+  * for none, so it gains no shuffle. A file whose
   * UNION'd vector covers every row (stats-proven) is dropped from the
   * manifest instead of carrying a full mask ([[FeatherMutations.bindDvs]]). The commit refuses a statement whose
   * deleted positions sum past [[FaceRowLevel.MaxDvPositionsKey]] before
@@ -1006,7 +1010,7 @@ private class FaceDeltaWrite(op: RowLevelHost,
                                       dataSchema: StructType,
                                       partCols: Seq[String])
     extends DeltaWriteBuilder with DeltaWrite with DeltaBatchWrite
-    with RowLevelCommitMetrics.Reporting {
+    with LeafClustering with RowLevelCommitMetrics.Reporting {
 
   private val rowSchema: StructType = info.schema()
   private val rowIdSchema: StructType = info.rowIdSchema().orElseThrow(() =>
@@ -1014,6 +1018,9 @@ private class FaceDeltaWrite(op: RowLevelHost,
       s"delta ${op.command()} on $path: Spark supplied no rowId schema"))
   FaceConvert.requireFeatherMappable(rowSchema)
 
+  private val inserts = op.command() != Command.DELETE
+  override protected def clusterCols: Seq[String] =
+    if (inserts) partCols else Nil
   override def build(): DeltaWrite = this
   override def toBatch(): DeltaBatchWrite = this
   override def description(): String =
@@ -1023,7 +1030,7 @@ private class FaceDeltaWrite(op: RowLevelHost,
       : DeltaWriterFactory = {
     new FaceDeltaWriterFactory(rowIdSchema,
       FaceConvert.writerFactory(op.opName, face, rowSchema, partCols, path,
-        sorted = false))
+        sorted = inserts))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -1070,8 +1077,8 @@ private class FaceDeltaWrite(op: RowLevelHost,
     }
     val targetV = state.snap.version + 1
     val opName = op.opName
-    val parts = FaceConvert.toFaceParts(face, fs, path, insertMsgs,
-      dataSchema, partCols, targetV)
+    val parts = FaceConvert.toFaceParts(face, fs, root, root, insertMsgs,
+      dataSchema, partCols, FeatherSnapshots.runPrefix(targetV))
     // exact row counts (stats sidecars) let fully-masked files DROP from
     // the manifest instead of carrying a 100%-coverage vector — loads
     // are bounded by the TOUCHED file set, not the table

@@ -169,8 +169,8 @@ private[graft] class FaceBatchWrite(path: String, face: ConnectorFace,
       return
     }
     val targetV = snap.version + 1
-    val written = FaceConvert.toFaceParts(face, fs, path, data, dataSchema,
-      partCols, targetV)
+    val written = FaceConvert.toFaceParts(face, fs, root, root, data,
+      dataSchema, partCols, FeatherSnapshots.runPrefix(targetV))
     val parts = written.map { case (rel, len, _) => (rel, len) }
     // which existing files does this statement replace?
     val removeRel: Set[String] = mode match {

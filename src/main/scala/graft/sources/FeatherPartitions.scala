@@ -23,9 +23,8 @@ private[graft] object FeatherPartitions {
 
   /** THE partition-path escaping, everywhere: Spark's own Hive escaping
     * (`ExternalCatalogUtils`) — the encoding Spark's partitioned sink
-    * writes (`ParquetTable.writePartitionedParts` lands its staging tree
-    * through that sink verbatim). Every graft-side leaf WRITER
-    * (mutation insert routing) and every leaf READER (discovery,
+    * writes, and the one leaf writer ([[graft.io.LeafParts]]) spells
+    * its leaves exactly as that sink does. Every leaf READER (discovery,
     * manifest parsing, layout checks) must go through these two, or a
     * value like `"a b"` lands under one spelling and reads back under
     * another, silently splitting one logical partition across two

@@ -227,4 +227,148 @@ class PartitionedWriteSpec extends AnyFunSuite {
       .map(_.getName).filter(_.startsWith("the d.ay=")).toSet ===
       Set("the d.ay=0", "the d.ay=1", "the d.ay=2"))
   }
+
+  /** Leaf directory chains holding data files under `p`, root-relative. */
+  private def leafChains(p: String, suffix: String): Set[String] = {
+    val root = new java.io.File(p).toPath
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(p)).filter(f => f.getName.endsWith(suffix) &&
+        !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .map(f => root.relativize(f.getParentFile.toPath).toString).toSet
+  }
+
+  test("timestamp, decimal and string partition values spell their leaves " +
+       "as Spark's partitioned sink does on every face, and a SQL INSERT " +
+       "of the same values lands in the same leaves") {
+    val vals = "VALUES " +
+      "(1L, TIMESTAMP'2024-01-01 00:00:00', 0.0000001BD, 'a'), " +
+      "(2L, TIMESTAMP'2024-01-01 12:30:45.5', 2.5BD, ''), " +
+      "(3L, TIMESTAMP'2024-01-02 00:00:00', -1BD, 'a b') " +
+      "AS v(id, ts, dec0, s)"
+    val src = s"SELECT id, ts, CAST(dec0 AS DECIMAL(10,7)) AS dec, s FROM $vals"
+    // Spark's own partitioned sink over the same frames
+    val sinkTs = tmp("spell_sink_ts")
+    spark.sql(src).select("id", "ts", "s").write.partitionBy("ts", "s")
+      .parquet(sinkTs)
+    val sinkDec = tmp("spell_sink_dec")
+    spark.sql(src).select("id", "dec").write.partitionBy("dec")
+      .parquet(sinkDec)
+    val wantTs = leafChains(sinkTs, ".parquet")
+    val wantDec = leafChains(sinkDec, ".parquet")
+    assert(wantTs.size === 3 && wantDec.size === 3, s"$wantTs $wantDec")
+    val wantRows = Seq((1L, "2024-01-01 00:00:00", "a"),
+      (2L, "2024-01-01 12:30:45.5", null), (3L, "2024-01-02 00:00:00", "a b"))
+    for ((using, suffix) <- Seq("feather" -> ".feather",
+        "parquet" -> ".parquet", "`graft-avro`" -> ".avro")) {
+      val p = tmp(s"spell_ts_${suffix.drop(1)}")
+      spark.sql(s"CREATE TABLE graft.`$p` USING $using " +
+        s"PARTITIONED BY (ts, s) AS SELECT id, ts, s FROM ($src)").collect()
+      assert(leafChains(p, suffix) === wantTs, using)
+      spark.sql(s"INSERT INTO graft.`$p` (id, ts, s) " +
+        s"SELECT id + 10, ts, s FROM ($src)").collect()
+      assert(leafChains(p, suffix) === wantTs, s"$using after INSERT")
+      assert(spark.sql(s"SELECT count(DISTINCT ts) FROM graft.`$p`")
+        .head().getLong(0) === 3L, using)
+      val back = spark.sql(s"SELECT id, CAST(ts AS STRING), s " +
+        s"FROM graft.`$p`").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+        .toSeq.sortBy(_._1)
+      assert(back === wantRows ++ wantRows.map { case (i, t, v) =>
+        (i + 10, t, v) }, using)
+      // the decimal partition reads back as DOUBLE, and STRICT refuses an
+      // INSERT of the DECIMAL value into it, so the decimal spelling is
+      // pinned on the CTAS
+      val d = tmp(s"spell_dec_${suffix.drop(1)}")
+      spark.sql(s"CREATE TABLE graft.`$d` USING $using " +
+        s"PARTITIONED BY (dec) AS SELECT id, dec FROM ($src)").collect()
+      assert(leafChains(d, suffix) === wantDec, using)
+      val decs = spark.sql(s"SELECT id, CAST(dec AS DECIMAL(10,7)) " +
+        s"FROM graft.`$d`").collect()
+        .map(r => r.getLong(0) -> r.getDecimal(1)).toSeq.sortBy(_._1)
+      assert(decs.map { case (i, v) => (i, v.toPlainString) } === Seq(
+        1L -> "0.0000001", 2L -> "2.5000000", 3L -> "-1.0000000"), using)
+    }
+  }
+
+  test("a failed write task of a partitioned CTAS and of a partitioned " +
+       "REPLACE ... AS SELECT leaves no staging directory, no target file " +
+       "and no version; the REPLACE keeps the old head readable") {
+    val base = tmp("staged_abort")
+    new java.io.File(base).mkdirs()
+    val p = s"$base/t"
+    def staging = new java.io.File(base).list().toSeq
+      .filter(_.contains("-staged-"))
+    def files(dir: String): Set[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      if (!new java.io.File(dir).exists()) Set.empty
+      else walk(new java.io.File(dir)).map(_.getPath).toSet
+    }
+    // the literal hive-null marker fails its task while the sibling
+    // leaves' tasks write their parts
+    val failing = "SELECT id, CAST(id AS STRING) AS s, CASE WHEN id = 13 " +
+      "THEN '__HIVE_DEFAULT_PARTITION__' ELSE concat('d', id % 4) END " +
+      "AS day FROM range(0, 40, 1, 4)"
+    val e = intercept[Exception] {
+      spark.sql(s"CREATE TABLE graft.`$p` USING feather " +
+        s"PARTITIONED BY (day) AS $failing").collect()
+    }
+    assert(causes(e).exists(_.getMessage.contains("literal hive null")),
+      e.toString)
+    assert(staging.isEmpty, staging.toString)
+    assert(files(p).isEmpty, files(p).toString)
+    assert(!FeatherSnapshots.enabled(fsOf(p), new Path(p)))
+    // the publish's refusals leave the same nothing behind
+    for ((query, needle) <- Seq(
+        "SELECT concat('d', id % 4) AS day FROM range(8)" ->
+          "only the partition columns",
+        "SELECT id, concat('d', id % 4) AS day FROM range(0)" ->
+          "produced no rows")) {
+      val r = intercept[Exception] {
+        spark.sql(s"CREATE TABLE graft.`$p` USING feather " +
+          s"PARTITIONED BY (day) AS $query").collect()
+      }
+      assert(causes(r).exists(_.getMessage.contains(needle)), r.toString)
+      assert(staging.isEmpty, staging.toString)
+      assert(files(p).isEmpty, files(p).toString)
+    }
+
+    spark.sql(s"CREATE TABLE graft.`$p` USING feather PARTITIONED BY (day) " +
+      "AS SELECT id, CAST(id AS STRING) AS s, concat('d', id % 4) AS day " +
+      "FROM range(40)").collect()
+    val v0 = head(p).version
+    val expected = rows2(p)
+    val before = files(p)
+    val e2 = intercept[Exception] {
+      spark.sql(s"CREATE OR REPLACE TABLE graft.`$p` USING parquet " +
+        s"PARTITIONED BY (day) AS $failing").collect()
+    }
+    assert(causes(e2).exists(_.getMessage.contains("literal hive null")),
+      e2.toString)
+    assert(staging.isEmpty, staging.toString)
+    assert(files(p) === before)
+    assert(head(p).version === v0)
+    assert(rows2(p) === expected)
+  }
+
+  test("a multi-task graft_dv UPDATE over three leaves adds one part per " +
+       "touched leaf") {
+    val p = tmp("dv_update")
+    createDayTable(p)
+    // two more parts per leaf, so the scan reads each leaf in three tasks
+    for (k <- 1 to 2)
+      spark.sql(s"INSERT INTO graft.`$p` SELECT id, id AS v, " +
+        s"CAST(id % 4 AS INT) AS day FROM range(${k * 1000}, " +
+        s"${k * 1000 + 400})").collect()
+    assert(partsPerLeaf(p) === (0 until 4).map(d => s"day=$d" -> 3).toMap)
+    val before = head(p)
+    spark.sql(s"UPDATE graft_dv.`$p` SET v = -v WHERE day < 3").collect()
+    assert(addedPerLeaf(p, before) ===
+      Map("day=0" -> 1, "day=1" -> 1, "day=2" -> 1))
+    val back = rows(p)
+    assert(back.size === 1200)
+    assert(back.forall { case (i, v, d) => v == (if (d < 3) -i else i) })
+    assert(tmpResidue(p).isEmpty, tmpResidue(p).toString)
+  }
 }
